@@ -183,7 +183,6 @@ def bench_pipeline(
     n_convs: int,
     turns_base: int = 5000,
     input_dir: str | None = None,
-    bucketed: bool | None = None,
 ) -> tuple[float, int]:
     """North-star path: transcripts (parquet) -> series -> segments ->
     1m -> 1h -> 1d (all forced). Input synthesis happens once, to a
@@ -191,65 +190,18 @@ def bench_pipeline(
     deterministic, so every run and parallelism level reads identical
     bytes); the timed pipeline starts at the storage read, like a real
     job. turns_base=5000 with the generator's Zipf skew yields roughly
-    50 * n_convs turns with a 15k-turn hot head conversation.
-
-    bucketed (default OFF; MDBS_PIPELINE_BUCKETED=1 to opt in): stage
-    the input as a bucket(128, conv_id) table — the north rule's Iceberg
-    input layout, reproduced on plain parquet (sources/bucketed.py) —
-    and compress with pre_partitioned=True, so the whole compress stage
-    runs shuffle-FREE (scan -> in-task sort -> Arrow kernel). Output is
-    bit-identical to the shuffled path (tests/test_pipeline.py). Why the
-    local default is the SHUFFLED path: a warm quiet-window A/B on this
-    box (18.6M turns, local[16], steal <=1%) measured legacy 24.3-28.0 s
-    vs bucketed 35.9-36.3 s (29.7-33.9 s with the coalesce-to-2xcores
-    read) — a single-JVM "shuffle" is an in-memory copy, so eliminating
-    it buys ~nothing here, while the bucketed scan's fixed one-task-per-
-    bucket granularity forfeits AQE's balanced partitions and multiplies
-    downstream per-(map x reduce) zstd stream setup. On a real cluster
-    the same exchange is 12.2 B/turn ACROSS THE NETWORK (~12 TB moved
-    twice at 10^12 turns, BENCH.md round-4 headline) and the bucketed
-    scan wins; the trade is per-deployment, both paths are tested, and
-    the full A/B table is in BENCH.md."""
+    50 * n_convs turns with a 15k-turn hot head conversation."""
     import tempfile
 
     from modelardb_dynamic_spark.operators.compress import compress_transcripts
     from modelardb_dynamic_spark.operators.rollup import downsample, gap_fill, rollup
     from modelardb_dynamic_spark.sources.transcripts import generate_transcripts
 
-    if bucketed is None:
-        bucketed = os.environ.get("MDBS_PIPELINE_BUCKETED", "0") == "1"
     base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    suffix = "_b128" if bucketed else ""
     path = input_dir or os.path.join(
-        base, f"mdbs_bench_input_{n_convs}_{turns_base}{suffix}"
+        base, f"mdbs_bench_input_{n_convs}_{turns_base}"
     )
-    n_buckets = 128
-    if bucketed:
-        from modelardb_dynamic_spark.sources.bucketed import (
-            read_bucketed,
-            register_bucketed,
-            write_bucketed,
-        )
-
-        table = f"mdbs_bench_in_{n_convs}_{turns_base}_b{n_buckets}"
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            if spark.catalog.tableExists(table):
-                spark.sql(f"DROP TABLE `{table}`")
-            write_bucketed(
-                generate_transcripts(
-                    spark, n_convs=n_convs, turns_base=turns_base
-                ),
-                path,
-                table,
-                bucket_col="conv_id",
-                n_buckets=n_buckets,
-                sort_cols=("conv_id", "ts"),
-            )
-        else:
-            register_bucketed(
-                spark, path, table, "conv_id", n_buckets, ("conv_id", "ts")
-            )
-    elif not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # fixed 64-file layout regardless of the generating session's core
         # count: scan parallelism must not be capped by whoever staged the
         # input (8 files would cap the read stage at 8 tasks)
@@ -259,26 +211,18 @@ def bench_pipeline(
     n_turns = spark.read.parquet(path).count()
 
     t0 = time.time()
-    tr = (
-        read_bucketed(
-            spark, table, n_buckets,
-            coalesce_to=2 * spark.sparkContext.defaultParallelism,
-        )
-        if bucketed
-        else spark.read.parquet(path)
-    )
-    # fused derive+compress: one narrow exchange, or ZERO on the bucketed
-    # path (bit-identical to the staged series path, asserted in tests)
-    # length_bound 256 (reference default 50 is an in-memory JVM buffer
-    # constraint; the vectorized kernel has none): +37% ratio on the noisy
-    # token_rate series at identical error bound, same reconstruction
+    tr = spark.read.parquet(path)
+    # fused derive+compress: one narrow exchange (bit-identical to the
+    # staged series path, asserted in tests). length_bound 256 (reference
+    # default 50 is an in-memory JVM buffer constraint; the vectorized
+    # kernel has none): +37% ratio on the noisy token_rate series at
+    # identical error bound, same reconstruction
     segs = compress_transcripts(
         tr,
         EngineConfig(
             error_bound=10.0, length_bound=256, sampling_interval_ms=60_000
         ),
         salt_span_points=1 << 16,
-        pre_partitioned=bucketed,
     ).persist()
     # segs is persisted above: the rollup branches re-read the cache
     m1 = rollup(segs, 60_000, materialize=False)
@@ -387,8 +331,9 @@ def main() -> None:
     # (r4 VERDICT #4). Queries that don't touch the segment table are
     # unaffected; their warm number is just one more repetition. ONE pass
     # (memoized timings vary far less than cold ones, and the suite
-    # already ran 2x by now — the JVM is hot); the 1.6x tiebreak still
-    # reruns any noise-hit query.
+    # already ran 2x by now — the JVM is hot). With one sample per query
+    # the 1.6x tiebreak never fires, so a noise-hit warm query stays
+    # noisy.
     os.environ["MDBS_BENCH_MEMO_SEGMENTS"] = "1"
     _force(registry["seg_count_s"](spark, sf_dir))  # builds the memo once
     warm_timings = run_passes(1)

@@ -43,7 +43,6 @@ check between passes (SegmentGenerator.java:109-136).
 
 from __future__ import annotations
 
-import os
 import struct
 from dataclasses import dataclass, field
 
@@ -735,9 +734,7 @@ class GroupEngine:
         use_windows: bool = True,
     ):
         self.maximum_latency = int(maximum_latency)
-        self.use_windows = use_windows and not os.environ.get(
-            "MDBS_NO_GROUP_WINDOWS"
-        )
+        self.use_windows = use_windows
         self._win_ok: bool | None = None  # lazy gate (needs ckernel.load)
         self._topo_gen = 0  # bumped on split/join: invalidates window cache
         self._win_cap = _WINDOW_CHUNK0  # eligibility-build chunk (doubles)

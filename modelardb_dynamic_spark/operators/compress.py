@@ -2,18 +2,17 @@
 
 Spark shape:
     series.repartition(hash(sid[, salt]))
-          .sortWithinPartitions(sid, metric[, salt], ts_ms)
+          .sortWithinPartitions(sid, metric, ts_ms)
           .mapInArrow(kernel)                          ->  segments
 
 mapInArrow over sorted partitions (rather than per-group applyInPandas)
 amortizes the Python round trip over whole 64k-row batches AND keeps the
 key columns as Arrow arrays end to end — converting 10^7 string keys to
 Python objects via pandas measured 33x slower than Arrow-native batches.
-Group boundaries are found with numpy on dictionary-encoded key codes;
-each group's (ts, value) vectors are zero-copy numpy slices. A group that
-spans batch boundaries is carried over. The numpy cascade in models.kernels
-does the actual compression (no per-row Python anywhere). Replaces the
-reference's per-group SegmentGenerator threads driven by WorkingSets
+operators/keyruns.py:key_runs turns the sorted batches into per-series
+numpy slices; the numpy cascade in models.kernels does the actual
+compression (no per-row Python anywhere). Replaces the reference's
+per-group SegmentGenerator threads driven by WorkingSets
 (core/WorkingSet.java:87-189) with Spark's own scheduling.
 
 Skew / salting (the 10^12-turn concern): a single hot series must not pin a
@@ -34,16 +33,16 @@ engines/spark/SparkUDAF.scala:348-401):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from modelardb_dynamic_spark.config import EngineConfig
 from modelardb_dynamic_spark.models.kernels import compress_series
+from modelardb_dynamic_spark.operators.keyruns import key_runs
 
 SEGMENT_SCHEMA = (
     "sid string, metric string, start_ts long, end_ts long, si int, "
@@ -124,148 +123,64 @@ def _emit_group(
         out.vsum.append(s.vsum)
 
 
-def _key_codes(col: pa.Array) -> np.ndarray:
-    """Per-batch integer codes for boundary detection (values equal <=>
-    codes equal within the batch)."""
-    if pa.types.is_integer(col.type):
-        return col.to_numpy(zero_copy_only=False)
-    return pc.dictionary_encode(col).indices.to_numpy(zero_copy_only=False)
+def _segments(
+    df: DataFrame, cfg: EngineConfig, keys: tuple[str, ...],
+    cols: dict[str, type], span_ms: int | None, emit: Callable[..., None],
+) -> DataFrame:
+    """Cluster df by series and mapInArrow it into segment rows:
+    emit(out, key, *slices) runs once per key run (operators/keyruns.py).
 
-
-def _make_map_fn(cfg: EngineConfig, span_ms: int | None):
-    """Group-and-compress over sorted Arrow batches.
-
-    Boundary detection keys are (sid, metric[, salt]); the salt is derived
-    in-kernel from the ts-sorted timestamps (salt = ts // span is monotone
-    within a (sid, metric) run) so it never crosses the shuffle; emitted
-    rows carry only (sid, metric) — a salt edge forces a segment boundary
-    exactly like a gap flush."""
+    Rows hash-partition on sid and the salt EXPRESSION ts_ms // span (the
+    column itself never ships), into 2x cores partitions: two waves of map
+    tasks so a straggler partition (skewed series mix) doesn't idle the
+    rest of the cluster. The kernel re-derives the salt from the sorted
+    timestamps (monotone within a run); emitted rows carry no salt — a
+    salt edge forces a segment boundary exactly like a gap flush."""
+    hash_exprs = [F.col("sid")]
+    if span_ms:
+        hash_exprs.append((F.col("ts_ms") / span_ms).cast("long"))
+    n_part = 2 * df.sparkSession.sparkContext.defaultParallelism
+    df = (
+        df.repartition(n_part, *hash_exprs)
+        .sortWithinPartitions(*keys, "ts_ms")
+        .select(*keys, *cols)
+    )
     si = cfg.sampling_interval_ms
 
     def map_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry_key: tuple | None = None
-        carry_t: list[np.ndarray] = []
-        carry_v: list[np.ndarray] = []
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
+        for groups in key_runs(batches, keys, cols, span_ms):
             out = _Out()
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            for k in ("sid", "metric"):
-                codes = _key_codes(rb.column(k))
-                change[1:] |= codes[1:] != codes[:-1]
-            t_all = rb.column("ts_ms").to_numpy(zero_copy_only=False).astype(np.int64)
-            if span_ms:
-                salt_all = t_all // span_ms
-                change[1:] |= salt_all[1:] != salt_all[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], n)
-            v_all = (
-                rb.column("value").to_numpy(zero_copy_only=False).astype(np.float32)
-            )
-            # group keys as python scalars: one lookup per group, not per row
-            keycols = [rb.column("sid"), rb.column("metric")]
-            for gi, (a, b) in enumerate(zip(starts.tolist(), ends.tolist())):
-                key = tuple(kc[a].as_py() for kc in keycols) + (
-                    (int(salt_all[a]),) if span_ms else ()
-                )
-                is_last = gi == len(starts) - 1
-                if carry_key is not None and key != carry_key:
-                    # flush the carried group: it ended at a batch boundary
-                    _emit_group(
-                        out, carry_key[0], carry_key[1],
-                        np.concatenate(carry_t), np.concatenate(carry_v), cfg,
-                    )
-                    carry_key, carry_t, carry_v = None, [], []
-                if is_last or carry_key == key:
-                    # accumulate: group may continue into the next batch
-                    carry_key = key
-                    carry_t.append(t_all[a:b])
-                    carry_v.append(v_all[a:b])
-                else:
-                    _emit_group(out, key[0], key[1], t_all[a:b], v_all[a:b], cfg)
-            batch = out.to_batch(si)
-            if batch is not None:
-                yield batch
-        if carry_key is not None:
-            out = _Out()
-            _emit_group(
-                out, carry_key[0], carry_key[1],
-                np.concatenate(carry_t), np.concatenate(carry_v), cfg,
-            )
+            for key, arrs in groups:
+                emit(out, key, *arrs)
             batch = out.to_batch(si)
             if batch is not None:
                 yield batch
 
-    return map_fn
+    return df.mapInArrow(map_fn, schema=SEGMENT_SCHEMA)
 
 
 def compress(
     series: DataFrame,
     cfg: EngineConfig,
     salt_span_points: int | None = None,
-    num_partitions: int | None = None,
-    enforce_grid: bool = False,
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """series (sid, metric, ts_ms, value) -> segment DataFrame.
 
     INPUT CONTRACT: timestamps lie on the cfg.sampling_interval_ms grid and
     are unique per (sid, metric) — the series builders
     (sources/timeseries.py) guarantee this by construction (groupBy
-    bucket). For raw/unvetted inputs pass enforce_grid=True: off-grid
-    timestamps snap DOWN to the grid and duplicate timestamps keep the
-    first arrival — the SAME normalization the streaming path applies
-    (streaming/ingest.py dedup), so batch and streaming diverge
-    identically or not at all.
+    bucket).
 
     salt_span_points: split each series into ranges of that many sampling
     intervals so hot series parallelize (flush-at-boundary semantics above).
-
-    pre_partitioned=True: the caller guarantees each sid's rows already
-    share an input partition (bucketed/Iceberg-bucket scan via
-    sources.bucketed.read_bucketed) — the exchange is skipped and the
-    stage is shuffle-free; see compress_transcripts for the contract.
     """
-    df = series
-    if enforce_grid:
-        si = int(cfg.sampling_interval_ms)
-        df = (
-            df.withColumn(
-                "ts_ms", (F.floor(F.col("ts_ms") / si) * si).cast("long")
-            )
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("sid", "metric", "ts_ms").orderBy(
-                        F.monotonically_increasing_id()
-                    )
-                ),
-            )
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
     span_ms = (
         salt_span_points * cfg.sampling_interval_ms if salt_span_points else None
     )
-    if pre_partitioned:
-        df = df.sortWithinPartitions("sid", "metric", "ts_ms")
-    else:
-        if span_ms:
-            # partition on the salt EXPRESSION; the column itself never ships
-            hash_exprs = [F.col("sid"), (F.col("ts_ms") / span_ms).cast("long")]
-        else:
-            hash_exprs = [F.col("sid")]
-        # 2x cores: two waves of map tasks so a straggler partition (skewed
-        # series mix) doesn't idle the rest of the cluster
-        n_part = num_partitions or 2 * series.sparkSession.sparkContext.defaultParallelism
-        df = df.repartition(n_part, *hash_exprs).sortWithinPartitions(
-            "sid", "metric", "ts_ms"
-        )
-    return df.select("sid", "metric", "ts_ms", "value").mapInArrow(
-        _make_map_fn(cfg, span_ms=span_ms), schema=SEGMENT_SCHEMA
+    return _segments(
+        series, cfg, ("sid", "metric"),
+        {"ts_ms": np.int64, "value": np.float32}, span_ms,
+        lambda out, key, t, v: _emit_group(out, key[0], key[1], t, v, cfg),
     )
 
 
@@ -288,8 +203,6 @@ def compress_transcripts(
     transcripts: DataFrame,
     cfg: EngineConfig,
     salt_span_points: int | None = None,
-    num_partitions: int | None = None,
-    pre_partitioned: bool = False,
 ) -> DataFrame:
     """Fused transcript -> series -> segments operator.
 
@@ -302,19 +215,7 @@ def compress_transcripts(
     bottleneck (memory-bound, poor multicore scaling); the fused path
     shuffles only (conv_id, ts_ms, tokens) rows and aggregates per
     conversation in vectorized code. Output is bit-identical to the
-    unfused path (asserted in tests/test_pipeline.py).
-
-    pre_partitioned=True drops even that one exchange: the caller
-    guarantees every conv_id's rows already live in one input partition
-    (a bucket(N, conv_id) Iceberg/bucketed table scanned via
-    sources.bucketed.read_bucketed, which asserts the guarantee). The
-    stage then plans as scan -> in-task sort -> kernel with ZERO shuffles;
-    output stays bit-identical because segment content depends only on
-    each conversation's own sorted rows, never on which task compresses
-    it. The in-kernel salt (segment-boundary flush) semantics are
-    unchanged; what salting can no longer do on this path is spread ONE
-    hot conversation across tasks — see sources/bucketed.py for when that
-    trade is wrong."""
+    unfused path (asserted in tests/test_pipeline.py)."""
     si = cfg.sampling_interval_ms
     df = transcripts.select(
         F.col("conv_id").alias("sid"),
@@ -327,82 +228,14 @@ def compress_transcripts(
             "tokens"
         ),
     ).where(F.col("ts_ms").isNotNull())
-    # the salt never crosses the wire: partitioning and sorting use the
-    # ts_ms expression directly and the kernel re-derives salt = ts//span
-    # from the shuffled ts_ms — 8 fewer bytes per shuffled turn row
     span_ms = salt_span_points * si if salt_span_points else None
-    if pre_partitioned:
-        df = df.sortWithinPartitions("sid", "ts_ms")
-    else:
-        if span_ms:
-            salt_expr = (F.col("ts_ms") / span_ms).cast("long")
-            hash_exprs = [F.col("sid"), salt_expr]
-        else:
-            hash_exprs = [F.col("sid")]
-        n_part = (
-            num_partitions
-            or 2 * transcripts.sparkSession.sparkContext.defaultParallelism
-        )
-        df = df.repartition(n_part, *hash_exprs).sortWithinPartitions(
-            "sid", "ts_ms"
-        )
-
-    def map_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry_key: tuple | None = None
-        carry_t: list[np.ndarray] = []
-        carry_tok: list[np.ndarray] = []
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            out = _Out()
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            codes = _key_codes(rb.column("sid"))
-            change[1:] |= codes[1:] != codes[:-1]
-            t_all = rb.column("ts_ms").to_numpy(zero_copy_only=False).astype(np.int64)
-            if span_ms:
-                # rows are ts-sorted within sid, so the derived salt is
-                # monotone within each sid run: diffs mark range edges
-                salt_all = t_all // span_ms
-                change[1:] |= salt_all[1:] != salt_all[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], n)
-            tok_all = rb.column("tokens").to_numpy(zero_copy_only=False).astype(np.int64)
-            sidcol = rb.column("sid")
-            for gi, (a, b) in enumerate(zip(starts.tolist(), ends.tolist())):
-                key = (sidcol[a].as_py(), int(salt_all[a])) if span_ms else (
-                    sidcol[a].as_py(),
-                )
-                is_last = gi == len(starts) - 1
-                if carry_key is not None and key != carry_key:
-                    _derive_and_compress_group(
-                        out, carry_key[0], np.concatenate(carry_t),
-                        np.concatenate(carry_tok), cfg,
-                    )
-                    carry_key, carry_t, carry_tok = None, [], []
-                if is_last or carry_key == key:
-                    carry_key = key
-                    carry_t.append(t_all[a:b])
-                    carry_tok.append(tok_all[a:b])
-                else:
-                    _derive_and_compress_group(
-                        out, key[0], t_all[a:b], tok_all[a:b], cfg
-                    )
-            batch = out.to_batch(si)
-            if batch is not None:
-                yield batch
-        if carry_key is not None:
-            out = _Out()
-            _derive_and_compress_group(
-                out, carry_key[0], np.concatenate(carry_t),
-                np.concatenate(carry_tok), cfg,
-            )
-            batch = out.to_batch(si)
-            if batch is not None:
-                yield batch
-
-    return df.mapInArrow(map_fn, schema=SEGMENT_SCHEMA)
+    return _segments(
+        df, cfg, ("sid",),
+        {"ts_ms": np.int64, "tokens": np.int64}, span_ms,
+        lambda out, key, t, tok: _derive_and_compress_group(
+            out, key[0], t, tok, cfg
+        ),
+    )
 
 
 def compression_stats(segments: DataFrame) -> DataFrame:

@@ -15,8 +15,8 @@ Arrow-native batches 33x faster than pandas keys for many small groups):
     blobs.mapInArrow(decode_rows)           -> (key, seq, ts)
 
 Both directions are Arrow-batched with numpy kernels per group — no
-per-row Python. A group spanning batch boundaries is carried over, so
-the result is independent of Arrow batch size. Scale: one blob per key
+per-row Python. Encode groups come from operators/keyruns.py:key_runs,
+so the result is independent of Arrow batch size. Scale: one blob per key
 (~0.25-4.25 B/point) makes the archive orders smaller than the raw
 column; keys shuffle once, and restore is embarrassingly parallel (each
 blob decodes alone, no shuffle).
@@ -32,16 +32,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from modelardb_dynamic_spark.models.dod import decode_ts, encode_ts
-
-
-def _key_codes(col: pa.Array) -> np.ndarray:
-    if pa.types.is_integer(col.type):
-        return col.to_numpy(zero_copy_only=False)
-    return pc.dictionary_encode(col).indices.to_numpy(zero_copy_only=False)
+from modelardb_dynamic_spark.operators.keyruns import key_runs
 
 
 def compress_times(df: DataFrame, key_col: str, ts_col: str) -> DataFrame:
@@ -58,61 +52,15 @@ def compress_times(df: DataFrame, key_col: str, ts_col: str) -> DataFrame:
     )
 
     def encode_groups(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry_key = None
-        carry_t: list[np.ndarray] = []
-
-        def emit_into(keys, ns, blobs, key, parts):
-            t = np.concatenate(parts) if len(parts) > 1 else parts[0]
-            t = np.sort(t, kind="stable")
-            keys.append(key)
-            ns.append(len(t))
-            blobs.append(encode_ts(t))
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+        for groups in key_runs(batches, (key_col,), {ts_col: np.int64}):
+            if not groups:
                 continue
-            keys: list = []
-            ns: list[int] = []
-            blobs: list[bytes] = []
-            codes = _key_codes(rb.column(key_col))
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            change[1:] = codes[1:] != codes[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], n)
-            t_all = (
-                rb.column(ts_col).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            kc = rb.column(key_col)
-            for gi, (a, b) in enumerate(zip(starts.tolist(), ends.tolist())):
-                key = kc[a].as_py()
-                is_last = gi == len(starts) - 1
-                if carry_key is not None and key != carry_key:
-                    emit_into(keys, ns, blobs, carry_key, carry_t)
-                    carry_key, carry_t = None, []
-                if is_last or carry_key == key:
-                    carry_key = key
-                    carry_t.append(t_all[a:b])
-                else:
-                    emit_into(keys, ns, blobs, key, [t_all[a:b]])
-            if keys:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(keys, type=key_pa),
-                        pa.array(ns, type=pa.int64()),
-                        pa.array(blobs, type=pa.binary()),
-                    ],
-                    schema=arrow_schema,
-                )
-        if carry_key is not None:
-            keys, ns, blobs = [], [], []
-            emit_into(keys, ns, blobs, carry_key, carry_t)
+            ts = [np.sort(t, kind="stable") for _, (t,) in groups]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(keys, type=key_pa),
-                    pa.array(ns, type=pa.int64()),
-                    pa.array(blobs, type=pa.binary()),
+                    pa.array([k for (k,), _ in groups], type=key_pa),
+                    pa.array([len(t) for t in ts], type=pa.int64()),
+                    pa.array([encode_ts(t) for t in ts], type=pa.binary()),
                 ],
                 schema=arrow_schema,
             )
@@ -205,75 +153,19 @@ def compress_points(
     def encode_groups(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
-        carry_key = None
-        carry_t: list[np.ndarray] = []
-        carry_v: list[np.ndarray] = []
-
-        def emit_into(keys, ns, tblobs, vblobs, key, t_parts, v_parts):
-            t = np.concatenate(t_parts) if len(t_parts) > 1 else t_parts[0]
-            v = np.concatenate(v_parts) if len(v_parts) > 1 else v_parts[0]
-            v = np.ascontiguousarray(v, dtype="<f8")
-            order = np.lexsort((v.view("<u8"), t))
-            t, v = t[order], v[order]
-            keys.append(key)
-            ns.append(len(t))
-            tblobs.append(encode_ts(t))
-            vblobs.append(encode_values(v))
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+        for groups in key_runs(
+            batches, (key_col,), {ts_col: np.int64, val_col: "<f8"}
+        ):
+            if not groups:
                 continue
-            keys: list = []
-            ns: list[int] = []
-            tblobs: list[bytes] = []
-            vblobs: list[bytes] = []
-            codes = _key_codes(rb.column(key_col))
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            change[1:] = codes[1:] != codes[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], n)
-            t_all = (
-                rb.column(ts_col)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            v_all = (
-                rb.column(val_col)
-                .to_numpy(zero_copy_only=False)
-                .astype("<f8")
-            )
-            kc = rb.column(key_col)
-            for gi, (a, b) in enumerate(zip(starts.tolist(), ends.tolist())):
-                key = kc[a].as_py()
-                is_last = gi == len(starts) - 1
-                if carry_key is not None and key != carry_key:
-                    emit_into(
-                        keys, ns, tblobs, vblobs, carry_key, carry_t, carry_v
-                    )
-                    carry_key, carry_t, carry_v = None, [], []
-                if is_last or carry_key == key:
-                    carry_key = key
-                    carry_t.append(t_all[a:b])
-                    carry_v.append(v_all[a:b])
-                else:
-                    emit_into(
-                        keys, ns, tblobs, vblobs, key, [t_all[a:b]], [v_all[a:b]]
-                    )
-            if keys:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(keys, type=key_pa),
-                        pa.array(ns, type=pa.int64()),
-                        pa.array(tblobs, type=pa.binary()),
-                        pa.array(vblobs, type=pa.binary()),
-                    ],
-                    schema=arrow_schema,
-                )
-        if carry_key is not None:
             keys, ns, tblobs, vblobs = [], [], [], []
-            emit_into(keys, ns, tblobs, vblobs, carry_key, carry_t, carry_v)
+            for (key,), (t, v) in groups:
+                order = np.lexsort((v.view("<u8"), t))
+                t, v = t[order], v[order]
+                keys.append(key)
+                ns.append(len(t))
+                tblobs.append(encode_ts(t))
+                vblobs.append(encode_values(v))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(keys, type=key_pa),

@@ -91,6 +91,7 @@ class Lineage:
             "rows": sum(m.rows for m in ms if m),
             "wall_s": sum(m.wall_s for m in ms if m),
             "high_water_ts": max(
-                (m.high_water_ts for m in ms if m and m.high_water_ts), default=None
+                (m.high_water_ts for m in ms if m and m.high_water_ts is not None),
+                default=None,
             ),
         }

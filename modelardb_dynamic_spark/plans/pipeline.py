@@ -883,9 +883,7 @@ class TierPipeline:
                     ts_col is not None and m.ts_col is not None
                     and actual.get(b, 0) > 0
                 )
-                hw_bad = hw_checkable and (
-                    (m.high_water_ts or None) != actual_hw.get(b)
-                )
+                hw_bad = hw_checkable and m.high_water_ts != actual_hw.get(b)
                 if m.rows != actual.get(b, 0) or hw_bad:
                     mismatches.append(
                         {

@@ -107,8 +107,12 @@ def test_spark_archive_roundtrip(spark):
 
 
 def test_spark_archive_string_keys_and_batch_spans(spark):
+    from pyspark.sql import functions as F
+
     from modelardb_dynamic_spark.operators.rawtier import (
+        compress_points,
         compress_times,
+        restore_points,
         restore_times,
     )
 
@@ -123,6 +127,15 @@ def test_spark_archive_string_keys_and_batch_spans(spark):
         a = sorted(map(tuple, df.collect()))
         b = sorted((r.conv_id, r.ts) for r in back.collect())
         assert a == b
+
+        pts = df.withColumn("v", (F.col("ts") % 97) / 8.0)
+        pblobs = compress_points(pts, "conv_id", "ts", "v")
+        assert sorted((r.conv_id, r.n_pts) for r in pblobs.collect()) == [
+            (f"conv-{i}", 500) for i in range(3)
+        ]
+        pback = restore_points(pblobs, "conv_id", val_name="v")
+        want = sorted(map(tuple, pts.collect()))
+        assert sorted((r.conv_id, r.ts, r.v) for r in pback.collect()) == want
     finally:
         if sp is not None:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", sp)

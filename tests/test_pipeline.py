@@ -4,6 +4,8 @@ composition, and kill-and-resume via per-bucket lineage."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,49 +155,23 @@ def test_raw_tier_text_equality(spark, transcripts, tmp_path):
 def test_fused_compress_transcripts_identical(spark, transcripts, series):
     """compress_transcripts (one-exchange fused derive+compress) must be
     bit-identical to compress(transcript_series(...)) — both plain and
-    salted."""
+    salted, at the default Arrow batch size and at 64-row batches, where
+    most series span batches and both kernels take the carried-group
+    path."""
     from modelardb_dynamic_spark.operators.compress import compress_transcripts
 
-    for salt in (None, 16):
-        fused = compress_transcripts(transcripts, CFG10, salt_span_points=salt)
-        unfused = compress(series, CFG10, salt_span_points=salt)
-        assert fused.exceptAll(unfused).count() == 0, f"salt={salt}"
-        assert unfused.exceptAll(fused).count() == 0, f"salt={salt}"
-
-
-def test_bucketed_compress_zero_shuffle_identical(spark, transcripts, tmp_path):
-    """The bucket(N, conv_id) input layout (north rule's Iceberg spec,
-    plain-parquet stand-in): compress_transcripts(pre_partitioned=True)
-    over a bucketed scan must (a) plan ZERO exchanges, (b) read bucketed
-    with one task per bucket (read_bucketed asserts both confs and scan),
-    (c) emit segments bit-identical to the shuffled path, salted and not,
-    and (d) survive catalog re-registration from bare files."""
-    from modelardb_dynamic_spark.operators.compress import compress_transcripts
-    from modelardb_dynamic_spark.sources.bucketed import (
-        read_bucketed,
-        register_bucketed,
-        write_bucketed,
-    )
-
-    path = str(tmp_path / "bucketed_in")
-    spark.sql("DROP TABLE IF EXISTS t_bucketed_in")
-    write_bucketed(
-        transcripts, path, "t_bucketed_in", "conv_id", 8, ("conv_id", "ts")
-    )
-    # simulate a fresh session's empty catalog: re-register from the files
-    spark.sql("DROP TABLE t_bucketed_in")
-    register_bucketed(spark, path, "t_bucketed_in", "conv_id", 8, ("conv_id", "ts"))
-    b = read_bucketed(spark, "t_bucketed_in", 8)
-    assert b.count() == transcripts.count()
-    for salt in (None, 16):
-        segs_b = compress_transcripts(b, CFG10, salt_span_points=salt,
-                                      pre_partitioned=True)
-        plan = segs_b._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
-        segs_s = compress_transcripts(transcripts, CFG10, salt_span_points=salt)
-        assert segs_b.exceptAll(segs_s).count() == 0, f"salt={salt}"
-        assert segs_s.exceptAll(segs_b).count() == 0, f"salt={salt}"
-    spark.sql("DROP TABLE t_bucketed_in")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    try:
+        for max_batch, salt in itertools.product((prev, "64"), (None, 16)):
+            spark.conf.set(conf, max_batch)
+            fused = compress_transcripts(transcripts, CFG10, salt_span_points=salt)
+            unfused = compress(series, CFG10, salt_span_points=salt)
+            tag = f"batch={max_batch} salt={salt}"
+            assert fused.exceptAll(unfused).count() == 0, tag
+            assert unfused.exceptAll(fused).count() == 0, tag
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_range_agg_real_time_tail(spark, transcripts, tmp_path):
@@ -1126,6 +1102,25 @@ def test_fsck_verifies_manifests_against_parquet(spark, transcripts, tmp_path):
     assert len(mm) == 1 and mm[0]["bucket"] == 2
     assert mm[0]["actual_rows"] == 0 and mm[0]["manifest_rows"] > 0
     assert rep2["segments"]["rows_actual"] < victim_rows
+
+
+def test_epoch_zero_high_water(spark, tmp_path):
+    """Every turn inside the first minute after epoch 0: the series,
+    segment and tier stages all have high-water 0 ms, which is a value,
+    not a missing mark — fsck must not report it as a mismatch and
+    Lineage.metrics must keep it."""
+    from modelardb_dynamic_spark.plans.checkpoint import Lineage
+
+    tr = generate_transcripts(spark, n_convs=6, turns_base=16).withColumn(
+        "ts", F.timestamp_millis((F.col("turn_idx") % 6000) * 10)
+    )
+    wh = Warehouse(str(tmp_path / "epoch0"), n_buckets=2)
+    p = TierPipeline(spark, wh, CFG10, chunk_buckets=2, salt_span_points=None)
+    p.run(tr)
+    for table, r in p.fsck().items():
+        assert r["mismatches"] == [], table
+    for stage in ("series", "segments", "tier_1m", "tier_1h", "tier_1d"):
+        assert Lineage(wh.path(stage)).metrics()["high_water_ts"] == 0, stage
 
 
 def test_purge_sketch_rebuild_drops_straddling_day(spark, tmp_path):

@@ -67,8 +67,10 @@ def _serve_http(engine, host: str, port: int) -> None:
         def log_message(self, *a):  # quiet
             pass
 
+    # bind before announcing: a client may connect as soon as it reads this
+    server = HTTPServer((host, port), Handler)
     print(f"listening on {host}:{port}", flush=True)
-    HTTPServer((host, port), Handler).serve_forever()
+    server.serve_forever()
 
 
 def _serve_socket(engine, host: str, port: int) -> None:
@@ -97,8 +99,9 @@ def _serve_socket(engine, host: str, port: int) -> None:
         allow_reuse_address = True
         daemon_threads = True
 
+    server = Server((host, port), Handler)
     print(f"listening on {host}:{port}", flush=True)
-    Server((host, port), Handler).serve_forever()
+    server.serve_forever()
 
 
 def _run_query_file(engine, path: str) -> None:

@@ -1,14 +1,13 @@
 #!/usr/bin/env python
 """Deterministic shuffle-byte accounting for the tier pipeline.
 
-Runs bench.bench_pipeline once (bucketed or legacy staged input) with the
-Spark UI's REST API enabled and sums per-stage shuffle read/write bytes —
-the BENCH.md "shuffle bytes per turn" evidence. Byte counts are
+Runs bench.bench_pipeline once with the Spark UI's REST API enabled and
+sums per-stage shuffle read/write bytes — the BENCH.md "shuffle bytes per
+turn" evidence. Byte counts are
 deterministic (same plan, same data, zstd), unlike wall time on this
 noisy-neighbor box, so ONE pass per configuration is a valid measurement.
 
     python tools/shuffle_probe.py --convs 265000 --turns-base 26000 --cpus 16
-    python tools/shuffle_probe.py ... --legacy     # MDBS_PIPELINE_BUCKETED=0
 """
 
 from __future__ import annotations
@@ -29,8 +28,6 @@ def main() -> None:
     ap.add_argument("--convs", type=int, default=265_000)
     ap.add_argument("--turns-base", type=int, default=26_000)
     ap.add_argument("--cpus", type=int, default=16)
-    ap.add_argument("--legacy", action="store_true",
-                    help="measure the shuffled (non-bucketed) path")
     args = ap.parse_args()
 
     os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus)
@@ -43,8 +40,7 @@ def main() -> None:
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4951"},
     )
     wall, n_turns = bench_pipeline(
-        spark, n_convs=args.convs, turns_base=args.turns_base,
-        bucketed=not args.legacy,
+        spark, n_convs=args.convs, turns_base=args.turns_base
     )
     app_id = spark.sparkContext.applicationId
     url = f"http://localhost:4951/api/v1/applications/{app_id}/stages"
@@ -54,7 +50,6 @@ def main() -> None:
     read_b = sum(s["shuffleReadBytes"] for s in done)
     top = sorted(done, key=lambda s: -s["shuffleWriteBytes"])[:5]
     print(json.dumps({
-        "mode": "legacy" if args.legacy else "bucketed",
         "n_turns": n_turns,
         "wall_s": round(wall, 2),
         "shuffle_write_bytes": write_b,
