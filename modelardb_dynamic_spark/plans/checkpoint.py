@@ -7,6 +7,13 @@ bucket's output is durably in place:
     {"bucket": K, "rows": n, "high_water_ts": ms, "input_fingerprint": ...,
      "wall_s": ..., "stage": ..., "committed_utc": ...}
 
+The rows and high-water mark come from the bucket's parquet footers (row
+counts and the row-group max of the event-time column;
+sources/catalog.py:footer_stats), so committing a manifest reads no data;
+only files without column statistics (legacy INT96 timestamps) are scanned.
+TierPipeline.fsck re-derives both with a Spark scan as the independent
+audit.
+
 On restart, buckets whose manifest exists AND whose input fingerprint is
 unchanged are skipped, so a killed job resumes mid-tier and re-does at most
 one in-flight chunk (idempotent: bucket directories are overwritten whole).

@@ -29,7 +29,12 @@ from modelardb_dynamic_spark.config import EngineConfig
 from modelardb_dynamic_spark.operators.compress import compress
 from modelardb_dynamic_spark.operators.rollup import downsample, gap_fill, rollup
 from modelardb_dynamic_spark.plans.checkpoint import Lineage
-from modelardb_dynamic_spark.sources.catalog import Warehouse, sid_bucket
+from modelardb_dynamic_spark.sources.catalog import (
+    Warehouse,
+    footer_rows,
+    footer_stats,
+    sid_bucket,
+)
 from modelardb_dynamic_spark.sources.timeseries import transcript_series
 
 MINUTE_MS = 60_000
@@ -37,6 +42,29 @@ HOUR_MS = 3_600_000
 DAY_MS = 86_400_000
 
 TIERS = (("tier_1m", MINUTE_MS), ("tier_1h", HOUR_MS), ("tier_1d", DAY_MS))
+
+
+def _scan_stats(df: DataFrame, ts_col: str | None) -> dict[int, tuple[int, int | None]]:
+    """{bucket: (rows, high-water ms)} by a Spark count + max-by-sbucket
+    scan — fsck's audit, and the fallback for footers without column
+    statistics. A timestamp or timestamp_ntz ts_col (NTZ reads in the
+    session timezone, pinned UTC) becomes epoch ms; a ts_col the frame
+    lacks gives no high-water."""
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    if ts_col is not None and ts_col in df.columns:
+        hw = (
+            F.unix_millis(F.col(ts_col).cast("timestamp"))
+            if dict(df.dtypes)[ts_col].startswith("timestamp")
+            else F.col(ts_col)
+        )
+        aggs.append(F.max(hw).alias("hw"))
+    return {
+        int(r["sbucket"]): (
+            int(r["rows"]),
+            int(r["hw"]) if len(aggs) > 1 and r["hw"] is not None else None,
+        )
+        for r in df.groupBy("sbucket").agg(*aggs).collect()
+    }
 
 
 class TierPipeline:
@@ -79,10 +107,14 @@ class TierPipeline:
         """build(bucket_ids) -> DataFrame carrying an sbucket column.
 
         Writes each chunk partitioned by sbucket, moves bucket dirs into the
-        stage table atomically, then commits one manifest per bucket.
-        fail_after_chunks injects a crash for resume tests. only_buckets
-        restricts the stage to a bucket subset (incremental append path) —
-        untouched buckets keep their existing data AND manifests.
+        stage table atomically, then commits one manifest per bucket. The
+        manifests' rows and high-water marks come from the chunk's parquet
+        footers (footer_stats), so no Spark job re-reads what was just
+        written; only files without column statistics (legacy INT96
+        timestamps) are scanned. fail_after_chunks injects a crash for
+        resume tests. only_buckets restricts the stage to a bucket subset
+        (incremental append path) — untouched buckets keep their existing
+        data AND manifests.
         """
         root = self.wh.path(stage)
         os.makedirs(root, exist_ok=True)
@@ -118,40 +150,11 @@ class TierPipeline:
                 .partitionBy("sbucket")
                 .parquet(tmp)
             )
-            stats = {}
-            # a rewrite can legitimately produce ZERO rows for a whole
-            # chunk (retain/purge to empty): partitionBy writes no part
-            # files then, and reading the bare tmp dir would fail schema
-            # inference — every pending bucket is simply empty
-            tmp_nonempty = any(
-                f.endswith(".parquet")
-                for d in (
-                    os.listdir(tmp) if os.path.isdir(tmp) else ()
-                )
-                if os.path.isdir(os.path.join(tmp, d))
-                for f in os.listdir(os.path.join(tmp, d))
-            )
-            if tmp_nonempty:
-                tmp_df = self.spark.read.parquet(tmp)
-                # timestamp OR timestamp_ntz (NTZ parquet reads interpret
-                # in the session tz, pinned UTC) -> epoch-ms high-water
-                # mark; anything else is already a long
-                hw_col = (
-                    F.unix_millis(F.col(ts_col).cast("timestamp"))
-                    if dict(tmp_df.dtypes)
-                    .get(ts_col, "")
-                    .startswith("timestamp")
-                    else F.col(ts_col)
-                )
-                for r in (
-                    tmp_df.groupBy("sbucket")
-                    .agg(
-                        F.count(F.lit(1)).alias("rows"),
-                        F.max(hw_col).alias("hw"),
-                    )
-                    .collect()
-                ):
-                    stats[r["sbucket"]] = (r["rows"], r["hw"])
+            # a chunk that wrote zero rows (retain/purge to empty) has no
+            # sbucket dirs: every pending bucket is simply empty
+            stats = footer_stats(tmp, ts_col)
+            if stats is None:
+                stats = _scan_stats(self.spark.read.parquet(tmp), ts_col)
             wall = time.time() - t0
             for b in pending:
                 src = os.path.join(tmp, f"sbucket={b}")
@@ -174,9 +177,16 @@ class TierPipeline:
 
     def _live_buckets(self, table: str, bucket_ids: list[int]) -> list[int]:
         """Buckets that actually hold parquet part files. A fully-retained
-        or never-written bucket leaves an empty dir (or none); feeding such
-        paths to spark.read.parquet fails schema inference, so every reader
-        of a bucket subset must filter through this first."""
+        or never-written bucket leaves an empty dir (or none), which holds
+        no rows to read, so every reader of a bucket subset filters through
+        this first. Stage tables are parquet-only (footers carry their
+        schema and lineage stats): an ORC table raises instead of reading
+        as all-empty."""
+        if self.wh._detect_format(table) != "parquet":
+            raise ValueError(
+                f"stage table {table!r} is not parquet; pipeline stages "
+                "read and write parquet only"
+            )
         root = self.wh.path(table)
         out = []
         for b in bucket_ids:
@@ -189,28 +199,15 @@ class TierPipeline:
 
     def _read_buckets(self, table: str, bucket_ids: list[int]) -> DataFrame:
         live = self._live_buckets(table, bucket_ids)
-        if not live:
-            # every requested bucket is committed-empty (e.g. a purge or
-            # retain emptied it): serve an empty frame with the table's
-            # schema taken from any live bucket — parquet schema inference
-            # needs at least one part file
-            any_live = self._live_buckets(
-                table, list(range(self.wh.n_buckets))
-            )
-            if not any_live:
-                raise ValueError(
-                    f"table {table!r} has no non-empty bucket to read"
-                )
-            live, limit0 = any_live[:1], True
-        else:
-            limit0 = False
-        df = self.spark.read.option("basePath", self.wh.path(table)).parquet(
-            *[
-                os.path.join(self.wh.path(table), f"sbucket={b}")
-                for b in live
-            ]
-        )
-        return df.limit(0) if limit0 else df
+        if live:
+            return self.wh.read(self.spark, table, buckets=live)
+        # every requested bucket is committed-empty (e.g. a purge or retain
+        # emptied it): serve an empty frame with the table's schema, read
+        # from any live bucket
+        any_live = self._live_buckets(table, list(range(self.wh.n_buckets)))
+        if not any_live:
+            raise ValueError(f"table {table!r} has no non-empty bucket to read")
+        return self.wh.read(self.spark, table, buckets=any_live[:1]).limit(0)
 
     # -- stages --------------------------------------------------------------
 
@@ -821,10 +818,13 @@ class TierPipeline:
     def fsck(self, tables: list[str] | None = None) -> dict:
         """Warehouse integrity audit: verify every committed bucket's
         lineage manifest against the parquet that is actually on disk —
-        row count per bucket, and the event-time high-water mark. The
-        filesystem-only status surface (warehouse_status) trusts the
-        manifests; this is the deep check an operator runs after a
-        suspicious crash, a manual copy, or a storage migration.
+        row count per bucket, and the event-time high-water mark. It is the
+        independent scan audit of the footer-derived manifests: _run_stage
+        takes rows and high-water from parquet footers, fsck recounts them
+        from the data with Spark. The filesystem-only status surface
+        (warehouse_status) trusts the manifests; this is the deep check an
+        operator runs after a suspicious crash, a manual copy, or a
+        storage migration.
 
         Returns {table: {"buckets_checked": n, "rows_manifest": n,
         "rows_actual": n, "mismatches": [{bucket, manifest_rows,
@@ -856,23 +856,12 @@ class TierPipeline:
                 (m.ts_col for m in manifests.values() if m and m.ts_col),
                 None,
             )
-            actual: dict[int, int] = {b: 0 for b in buckets}
-            actual_hw: dict[int, int | None] = {b: None for b in buckets}
             live = self._live_buckets(name, buckets)
-            if live:
-                df = self._read_buckets(name, live)
-                aggs = [F.count(F.lit(1)).alias("rows")]
-                if ts_col is not None and ts_col in df.columns:
-                    hw_col = (
-                        F.unix_millis(F.col(ts_col).cast("timestamp"))
-                        if dict(df.dtypes)[ts_col].startswith("timestamp")
-                        else F.col(ts_col)
-                    )
-                    aggs.append(F.max(hw_col).alias("hw"))
-                for r in df.groupBy("sbucket").agg(*aggs).collect():
-                    actual[int(r["sbucket"])] = int(r["rows"])
-                    if len(aggs) > 1 and r["hw"] is not None:
-                        actual_hw[int(r["sbucket"])] = int(r["hw"])
+            scanned = (
+                _scan_stats(self._read_buckets(name, live), ts_col) if live else {}
+            )
+            actual = {b: scanned.get(b, (0, None))[0] for b in buckets}
+            actual_hw = {b: scanned.get(b, (0, None))[1] for b in buckets}
             mismatches = []
             rows_m = rows_a = 0
             for b in buckets:
@@ -1044,9 +1033,7 @@ class TierPipeline:
         cold archive — shuffle-free (each blob pair decodes alone)."""
         from modelardb_dynamic_spark.operators.rawtier import restore_points
 
-        blobs = self.spark.read.parquet(self.wh.path("series_arch")).drop(
-            "sbucket", "hw_ts"
-        )
+        blobs = self.wh.read(self.spark, "series_arch").drop("sbucket", "hw_ts")
         pts = restore_points(blobs, "akey", "ts_ms", "value")
         sep = self._AKEY_SEP
         return pts.selectExpr(
@@ -1081,8 +1068,9 @@ class TierPipeline:
         dst -> dst.old, tmp -> dst, rm dst.old; a recovery pass at entry
         repairs any interrupted swap (dst missing + dst.old present ->
         restore; both present -> drop the stale .old). A row-count check
-        against the bucket's lineage manifest guards the swap: a
-        mismatched rewrite is abandoned loudly instead of installed.
+        (the rewrite's parquet footers) against the bucket's lineage
+        manifest guards the swap: a mismatched rewrite is abandoned loudly
+        instead of installed.
         """
         root = self.wh.path(table)
         lineage = Lineage(root)
@@ -1105,7 +1093,7 @@ class TierPipeline:
             if len(files) <= target_files:
                 continue
             m = lineage.get(b)
-            df = self.spark.read.parquet(dst)
+            df = self.wh.read(self.spark, table, buckets=[b]).drop("sbucket")
             if zorder_on is not None:
                 from modelardb_dynamic_spark.operators.zorder import zorder_keys
 
@@ -1121,7 +1109,7 @@ class TierPipeline:
                     df = df.sortWithinPartitions(*sort_cols)
             tmp = dst + "." + uuid.uuid4().hex[:8] + ".tmp"
             df.write.mode("overwrite").parquet(tmp)
-            got = self.spark.read.parquet(tmp).count()
+            got = footer_rows(tmp)
             if m is not None and got != m.rows:
                 shutil.rmtree(tmp, ignore_errors=True)
                 raise RuntimeError(

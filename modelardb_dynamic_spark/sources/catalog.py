@@ -15,18 +15,119 @@ iceberg-spark on the classpath.
 The bucket layout mirrors the reference's Cassandra physical model —
 PRIMARY KEY (gid, start_time): all segments of one series live in one
 bucket, clustered by time (storage/CassandraStorage.scala:78).
+
+Metadata comes from the parquet footers on the driver, never from a Spark
+job: `footer_schema` gives the Spark schema every read passes to
+`spark.read.schema`, and `footer_stats` gives the per-bucket row counts and
+event-time high-water marks the lineage manifests record — the role of
+ModelarDB's per-segment metadata, and of the per-file row counts and
+column bounds an Iceberg manifest plans from.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 DEFAULT_BUCKETS = 32
+
+# footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_MS_PER_UNIT = {"milliseconds": 1, "microseconds": 1_000, "nanoseconds": 1_000_000}
+
+
+def _part_files(d: str) -> list[str]:
+    return sorted(
+        e.path for e in os.scandir(d) if e.is_file() and e.name.endswith(".parquet")
+    )
+
+
+def _bucket_dirs(root: str) -> dict[int, str]:
+    """{K: path} of the sbucket=K directories directly under root."""
+    out = {}
+    if not os.path.isdir(root):
+        return out
+    for e in os.scandir(root):
+        name = e.name
+        if e.is_dir() and name.startswith("sbucket=") and name[8:].isdigit():
+            out[int(name[8:])] = e.path
+    return dict(sorted(out.items()))
+
+
+def footer_rows(path: str) -> int:
+    """Rows in the parquet part files directly under path, from footers."""
+    return sum(pq.read_metadata(f).num_rows for f in _part_files(path))
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The Spark schema of the parquet table at path, from the footer of one
+    part file (Spark's writer stores it under SPARK_SCHEMA_KEY), with
+    `sbucket int` appended when the files sit in sbucket=K directories.
+    None when there is no part file or the key is missing (a file not
+    written by Spark); callers then let Spark infer."""
+    if not os.path.isdir(path):
+        return None
+    files, bucketed = _part_files(path), False
+    if not files:
+        for d in _bucket_dirs(path).values():
+            files = _part_files(d)
+            if files:
+                bucketed = True
+                break
+    if not files:
+        return None
+    raw = (pq.read_metadata(files[0]).metadata or {}).get(SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    schema = StructType.fromJson(json.loads(raw))
+    return schema.add("sbucket", IntegerType()) if bucketed else schema
+
+
+def footer_stats(chunk_dir: str, ts_col: str) -> dict[int, tuple[int, int | None]] | None:
+    """{bucket: (rows, high-water ms)} for the sbucket=K directories under
+    chunk_dir, from parquet footers alone. Rows are the files' num_rows;
+    the high-water is the largest row-group max of ts_col, floor-divided
+    to ms for a TIMESTAMP column (UTC-adjusted or NTZ) — unix_millis'
+    rounding, before epoch 0 too. All-null row groups are skipped, so an
+    all-null bucket has high-water None. Returns None when ts_col is
+    missing or a row group has no min/max statistics (INT96 timestamps
+    never do): the caller must then scan."""
+    out = {}
+    for b, d in _bucket_dirs(chunk_dir).items():
+        rows, hw = 0, None
+        for f in _part_files(d):
+            md = pq.read_metadata(f)
+            rows += md.num_rows
+            paths = [md.schema.column(j).path for j in range(md.num_columns)]
+            if ts_col not in paths:
+                return None
+            j = paths.index(ts_col)
+            col = md.schema.column(j)
+            if col.physical_type == "INT96":
+                return None
+            div = 1
+            if col.logical_type is not None and col.logical_type.type == "TIMESTAMP":
+                div = _MS_PER_UNIT[json.loads(col.logical_type.to_json())["timeUnit"]]
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                st = rg.column(j).statistics
+                if rg.num_rows == 0 or (
+                    st is not None and st.has_null_count and st.null_count == rg.num_rows
+                ):
+                    continue
+                if st is None or not st.has_min_max:
+                    return None
+                v = st.max_raw // div
+                hw = v if hw is None else max(hw, v)
+        out[b] = (rows, hw)
+    return out
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -111,11 +212,26 @@ class Warehouse:
                     return "parquet"
         return "parquet"
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        fmt = self._detect_format(table)
-        if fmt == "orc":
-            return spark.read.orc(self.path(table))
-        return spark.read.parquet(self.path(table))
+    def read(
+        self, spark: SparkSession, table: str, buckets: list[int] | None = None
+    ) -> DataFrame:
+        """The table, or only its sbucket=K directories for K in buckets
+        (sbucket still a column). Parquet reads take their schema from the
+        footers (footer_schema), so no Spark job infers it."""
+        root = self.path(table)
+        if self._detect_format(table) == "orc":
+            if buckets is not None:
+                raise ValueError(
+                    f"table {table!r} is ORC; bucket reads are parquet-only"
+                )
+            return spark.read.orc(root)
+        reader = spark.read.option("basePath", root)
+        schema = footer_schema(root)
+        if schema is not None:
+            reader = reader.schema(schema)
+        if buckets is None:
+            return reader.parquet(root)
+        return reader.parquet(*[os.path.join(root, f"sbucket={b}") for b in buckets])
 
     def drop(self, table: str) -> None:
         if os.path.exists(self.path(table)):

@@ -736,6 +736,29 @@ def test_compact_preserves_rows_manifests_and_resume(
     n_files_before = len(glob.glob(f"{root}/sbucket=*/*.parquet"))
     assert n_files_before > 4, "need multi-file buckets for the test"
 
+    # the row check (footer num_rows vs manifest) abandons a rewrite that
+    # disagrees with the lineage, leaving the bucket as it was
+    import json
+
+    multi = min(
+        int(d.rsplit("=", 1)[1])
+        for d in glob.glob(f"{root}/sbucket=*")
+        if len(glob.glob(f"{d}/*.parquet")) > 1
+    )
+    man = os.path.join(root, "_lineage", f"bucket={multi}.json")
+    with open(man) as f:
+        good = f.read()
+    doc = json.loads(good)
+    doc["rows"] += 1
+    with open(man, "w") as f:
+        json.dump(doc, f)
+    with pytest.raises(RuntimeError, match="rewrite abandoned"):
+        p.compact(table, target_files=1)
+    with open(man, "w") as f:
+        f.write(good)
+    assert sorted(map(tuple, wh.read(spark, table).collect())) == before
+    assert not glob.glob(f"{root}/*.tmp")
+
     st = p.compact(table, target_files=1)
     assert st["buckets_compacted"] >= 1
     assert st["files_after"] == st["buckets_compacted"]
@@ -1121,6 +1144,186 @@ def test_epoch_zero_high_water(spark, tmp_path):
         assert r["mismatches"] == [], table
     for stage in ("series", "segments", "tier_1m", "tier_1h", "tier_1d"):
         assert Lineage(wh.path(stage)).metrics()["high_water_ts"] == 0, stage
+    _assert_footers_equal_scan(spark, wh)
+
+
+def _assert_footers_equal_scan(spark, wh, tables=None):
+    """For every stage table of wh: footer_stats equals the Spark
+    count/max-by-bucket scan (and the lineage manifests), and the
+    footer_schema read has exactly the inferred schema."""
+    import os
+
+    from modelardb_dynamic_spark.plans.checkpoint import Lineage
+    from modelardb_dynamic_spark.plans.pipeline import _scan_stats
+    from modelardb_dynamic_spark.sources.catalog import footer_schema, footer_stats
+
+    names = tables or sorted(
+        n for n in os.listdir(wh.root)
+        if os.path.isdir(os.path.join(wh.path(n), "_lineage"))
+    )
+    assert names
+    for t in names:
+        path = wh.path(t)
+        lin = Lineage(path)
+        ts_col = lin.get(lin.completed_buckets()[0]).ts_col
+        inferred = spark.read.parquet(path)
+        scanned = _scan_stats(inferred, ts_col)
+        footer = footer_stats(path, ts_col)
+        assert footer is not None, t
+        assert {b: v for b, v in footer.items() if v[0]} == scanned, t
+        for b in lin.completed_buckets():
+            m = lin.get(b)
+            assert footer.get(b, (0, None)) == (m.rows, m.high_water_ts), (t, b)
+        schema = footer_schema(path)
+        assert [(f.name, f.dataType) for f in schema.fields] == [
+            (f.name, f.dataType) for f in inferred.schema.fields
+        ], t
+        assert spark.read.schema(schema).parquet(path).schema == inferred.schema, t
+        assert wh.read(spark, t).schema == inferred.schema, t
+
+
+def test_footers_equal_scan_and_build_never_scans(spark, transcripts, tmp_path,
+                                                  monkeypatch):
+    """A build_session warehouse (INT64 micros timestamps) with sketch
+    tiers and a series archive commits every manifest from parquet
+    footers: the scan fallback is never reached, yet every table's
+    footer stats and schema equal what a Spark scan and schema inference
+    give, and fsck is clean."""
+    from modelardb_dynamic_spark.plans import pipeline as pl
+    from modelardb_dynamic_spark.sources.catalog import footer_schema
+
+    def no_scan(*a, **k):
+        raise AssertionError("lineage scan fallback reached")
+
+    wh = Warehouse(str(tmp_path / "foot"), n_buckets=4)
+    p = TierPipeline(spark, wh, CFG10, chunk_buckets=2, salt_span_points=None)
+    monkeypatch.setattr(pl, "_scan_stats", no_scan)
+    p.run(transcripts, sketches=True)
+    lo = wh.read(spark, "series").agg(F.min("ts_ms")).first()[0]
+    p.archive_series(lo + 2 * HOUR_MS)
+    monkeypatch.undo()
+
+    _assert_footers_equal_scan(spark, wh)
+    for table, r in p.fsck().items():
+        assert r["mismatches"] == [], table
+
+    # an unbucketed table: the footer schema has no sbucket column
+    wh.write(transcripts, "flat")
+    assert "sbucket" not in footer_schema(wh.path("flat")).fieldNames()
+    assert wh.read(spark, "flat").schema == spark.read.parquet(wh.path("flat")).schema
+
+
+def test_footer_stats_edge_inputs(spark, tmp_path):
+    """footer_stats against the Spark scan on hand-made chunks: a bucket
+    whose latest event is 1 us before epoch 0 (-> -1 ms, unix_millis'
+    floor), epoch 0 itself, an all-null bucket, a bucket mixing nulls and
+    values, a file of three row groups whose middle one is all null, and
+    the same instants as a TIMESTAMP_NTZ column. INT96 timestamps have no
+    statistics: None."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from modelardb_dynamic_spark.plans.pipeline import _scan_stats
+    from modelardb_dynamic_spark.sources.catalog import footer_stats
+
+    us = (
+        F.when(F.col("b") == 0, -1 - F.col("id") * 1000)
+        .when(F.col("b") == 1, F.lit(None))
+        .when(F.col("b") == 2, F.when(F.col("id") < 900, F.lit(None))
+              .otherwise(F.col("id") * 7_777))
+        .otherwise((3 - F.col("id")) * 1000)  # bucket 3: max is epoch 0
+    )
+    df = (
+        spark.range(0, 4000)
+        .withColumn("b", (F.col("id") % 4).cast("int"))
+        .withColumn("ts", F.timestamp_micros(us))
+        .select(
+            F.col("b").alias("sbucket"), "ts",
+            F.col("ts").cast("timestamp_ntz").alias("tsn"),
+        )
+    )
+
+    def write(path):
+        df.write.partitionBy("sbucket").parquet(path)
+        # bucket 4: row groups [values], [all null], [values]
+        vals = [-5_000_123 + 1000 * i for i in range(100)]
+        col = vals + [None] * 100 + [v - 10**9 for v in vals]
+        os.makedirs(f"{path}/sbucket=4")
+        pq.write_table(
+            pa.table({
+                "ts": pa.array(col, pa.timestamp("us", tz="UTC")),
+                "tsn": pa.array(col, pa.timestamp("us")),
+            }),
+            f"{path}/sbucket=4/part-rg.parquet", row_group_size=100,
+        )
+        return spark.read.parquet(path)
+
+    path = str(tmp_path / "edge")
+    read = write(path)
+    assert dict(read.dtypes)["tsn"] == "timestamp_ntz"
+    md = pq.read_metadata(f"{path}/sbucket=4/part-rg.parquet")
+    assert md.num_row_groups == 3
+    assert md.row_group(1).column(0).statistics.null_count == 100
+    for col in ("ts", "tsn"):
+        got = footer_stats(path, col)
+        assert got == _scan_stats(read, col), col
+        assert got[0] == (1000, -1) and got[1] == (1000, None), col
+        assert got[2] == (1000, 3998 * 7_777 // 1000), col
+        assert got[3] == (1000, 0), col
+        assert got[4] == (300, (-5_000_123 + 99_000) // 1000), col
+
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        legacy = str(tmp_path / "int96")
+        write(legacy)
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    assert footer_stats(legacy, "ts") is None
+    assert footer_stats(legacy, "tsn") == footer_stats(path, "tsn")
+
+
+def test_int96_raw_stage_falls_back_to_scan(spark, transcripts, tmp_path):
+    """A raw stage written as a legacy warehouse would be (INT96 ts, no
+    column statistics) still commits manifests equal to the scan, through
+    the scan fallback, and fsck is clean."""
+    from modelardb_dynamic_spark.plans.checkpoint import Lineage
+    from modelardb_dynamic_spark.plans.pipeline import _scan_stats
+    from modelardb_dynamic_spark.sources.catalog import footer_stats
+
+    wh = Warehouse(str(tmp_path / "int96"), n_buckets=4)
+    p = TierPipeline(spark, wh, CFG10, chunk_buckets=2, salt_span_points=None)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        p.ingest_raw(transcripts)
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    assert footer_stats(wh.path("raw"), "ts") is None  # really stat-less
+    lin = Lineage(wh.path("raw"))
+    scanned = _scan_stats(spark.read.parquet(wh.path("raw")), "ts")
+    assert {
+        b: (lin.get(b).rows, lin.get(b).high_water_ts)
+        for b in lin.completed_buckets()
+    } == scanned
+    assert p.fsck(tables=["raw"])["raw"]["mismatches"] == []
+
+
+def test_orc_stage_table_fails_loudly(spark, transcripts, tmp_path):
+    """Stage tables are parquet-only: an ORC raw table must raise naming
+    the table, not read as empty buckets (purge would report removed=0)."""
+    wh = Warehouse(str(tmp_path / "orcstage"), n_buckets=2)
+    wh.write(transcripts, "raw", bucket_by="conv_id", format="orc")
+    p = TierPipeline(spark, wh, CFG10, chunk_buckets=2, salt_span_points=None)
+    with pytest.raises(ValueError, match="'raw'"):
+        p._live_buckets("raw", [0, 1])
+    with pytest.raises(ValueError, match="'raw'"):
+        p._read_buckets("raw", [0])
+    victim = transcripts.select("conv_id").first()[0]
+    with pytest.raises(ValueError, match="'raw'"):
+        p.purge([victim], batch_id="orc")
+    with pytest.raises(ValueError, match="'raw'"):
+        wh.read(spark, "raw", buckets=[0])
 
 
 def test_purge_sketch_rebuild_drops_straddling_day(spark, tmp_path):
