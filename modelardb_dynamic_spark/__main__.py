@@ -33,7 +33,8 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--salt-span-points", type=int, default=1 << 20)
     ap.add_argument("--retain-raw-after-ms", type=int, default=None)
     ap.add_argument("--sketches", action="store_true",
-                    help="also build the hist_1h/hist_1d/hll_1d sketch tiers")
+                    help="also build the sketch tiers (hist_1h/hist_1d, "
+                         "hll_1d, cms_1d, kmv_1d, bloom_1d)")
     ap.add_argument("--retain", action="append", default=[],
                     metavar="TABLE:HORIZON_MS",
                     help="drop TABLE rows older than HORIZON_MS after the "
@@ -101,8 +102,7 @@ def main(argv: list[str] | None = None) -> None:
         return
 
     from modelardb_dynamic_spark.config import EngineConfig
-    from modelardb_dynamic_spark.plans.checkpoint import Lineage
-    from modelardb_dynamic_spark.plans.pipeline import TierPipeline
+    from modelardb_dynamic_spark.plans.pipeline import TierPipeline, warehouse_status
     from modelardb_dynamic_spark.sources.catalog import Warehouse
 
     active = SparkSession.getActiveSession()
@@ -170,11 +170,10 @@ def main(argv: list[str] | None = None) -> None:
         out["compact"] = pipe.compact(table, target_files=int(n) if n else 1)
     if args.fsck:
         out["fsck"] = pipe.fsck()
-    metrics = {
-        stage: Lineage(wh.path(stage)).metrics()
-        for stage in ["raw", "series", "segments", "tier_1m", "tier_1h", "tier_1d"]
-    }
-    out.update({"wall_s": round(time.time() - t0, 3), "stages": metrics})
+    out.update({
+        "wall_s": round(time.time() - t0, 3),
+        "stages": warehouse_status(wh.root)["tables"],
+    })
     if args.range_agg:
         lo, hi, w = (int(x) for x in args.range_agg.split(":"))
         rows = pipe.range_agg(lo, hi, w).collect()

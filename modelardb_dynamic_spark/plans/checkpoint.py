@@ -16,19 +16,57 @@ audit.
 
 On restart, buckets whose manifest exists AND whose input fingerprint is
 unchanged are skipped, so a killed job resumes mid-tier and re-does at most
-one in-flight chunk (idempotent: bucket directories are overwritten whole).
-This replaces the reference's rename-log crash-recovery protocol
-(storage/FileStorage.scala:176-259); on an Iceberg deployment the bucket
-overwrite becomes overwrite-by-filter on the bucket partition and the
-manifest doubles as the job's own progress/metrics record.
+one in-flight chunk.
+
+A rewritten bucket directory is installed by swap_in, a rename journal in
+the manner of the reference's rename log (storage/FileStorage.scala:176-259):
+dst -> dst.old, new -> dst, rm dst.old, then the manifest commit. A crash
+at any step leaves the bucket whole in dst or in dst.old, never in neither:
+stages that rebuild a bucket from its own rows (append's raw merge, purge,
+retain, the rows kept below a retention floor) would otherwise rebuild from
+an emptied bucket and commit the loss. recover_swaps, run before the
+pipeline reads or rewrites a stage table, restores dst.old when dst is
+missing (crash before the install) and drops it when dst is present (crash
+after). The resumed stage then
+redoes the bucket, whose manifest still carries the old fingerprint; every
+such rebuild is idempotent on its own output. On an Iceberg deployment the
+swap becomes overwrite-by-filter on the bucket partition and the manifest
+doubles as the job's own progress/metrics record.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import asdict, dataclass
+
+
+def swap_in(src: str | None, dst: str) -> None:
+    """Install directory src (None: an empty directory) as dst through the
+    rename journal dst -> dst.old, src -> dst, rm dst.old."""
+    old = dst + ".old"
+    if os.path.exists(dst):
+        os.rename(dst, old)
+    if src is None:
+        os.makedirs(dst)
+    else:
+        os.rename(src, dst)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def recover_swaps(root: str) -> None:
+    """Finish every swap_in under root that a crash interrupted: restore
+    X.old as X when X is missing, else drop the stale X.old."""
+    for name in sorted(os.listdir(root)):
+        if not name.endswith(".old"):
+            continue
+        old, dst = os.path.join(root, name), os.path.join(root, name[:-4])
+        if os.path.exists(dst):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, dst)
 
 
 @dataclass

@@ -7,6 +7,11 @@ place — so a killed pipeline resumes mid-tier, skipping completed buckets
 (plans/checkpoint.py). Chunks keep many buckets per Spark job so the
 cluster stays fully parallel while bounding re-work after a crash.
 
+STAGES below is the one place a stage is declared: its event-time column,
+purge key, grid, source, and whether it is sid-keyed or an sbucket-merged
+sketch. The sketch builds, append's retention floors, purge, retain, and
+the routed reads all walk it instead of naming stages themselves.
+
 Tiers (FIXTURES.md §4): tier_1m is rolled up from segments analytically;
 tier_1h and tier_1d are pure columnar downsamples of the previous tier.
 Retention: drop raw/segment data older than a horizon once the coarser
@@ -17,10 +22,12 @@ overwrite-by-filter / partition drop).
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import time
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,20 +35,67 @@ from pyspark.sql import functions as F
 from modelardb_dynamic_spark.config import EngineConfig
 from modelardb_dynamic_spark.operators.compress import compress
 from modelardb_dynamic_spark.operators.rollup import downsample, gap_fill, rollup
-from modelardb_dynamic_spark.plans.checkpoint import Lineage
+from modelardb_dynamic_spark.plans.checkpoint import Lineage, recover_swaps, swap_in
 from modelardb_dynamic_spark.sources.catalog import (
     Warehouse,
     footer_rows,
     footer_stats,
     sid_bucket,
 )
-from modelardb_dynamic_spark.sources.timeseries import transcript_series
+from modelardb_dynamic_spark.sources.timeseries import to_ms, transcript_series
 
 MINUTE_MS = 60_000
 HOUR_MS = 3_600_000
 DAY_MS = 86_400_000
 
-TIERS = (("tier_1m", MINUTE_MS), ("tier_1h", HOUR_MS), ("tier_1d", DAY_MS))
+AKEY_SEP = "\x1f"  # series_arch key: sid AKEY_SEP metric
+
+
+@dataclass(frozen=True)
+class Stage:
+    name: str
+    ts_col: str  # event time: manifest high-water, retain's filter
+    # SQL expression of the conversation id purge() anti-joins on; None for
+    # an sbucket-merged sketch, which cannot subtract a member and is
+    # rebuilt from the purged raw instead
+    key: str | None
+    grid: int | None  # bucket width in ms; series: the engine's sampling grid
+    source: str | None  # the stage it is built from
+    # (operators/sketches.py tier function, value column) over raw turns
+    sketch: tuple[str, str] | None = None
+
+
+# build order; purge keeps it (raw, the other sid-keyed stages, then the
+# merged sketches rebuilt from the purged raw)
+STAGES = (
+    Stage("raw", "ts", "conv_id", None, None),
+    Stage("series", "ts_ms", "sid", None, "raw"),
+    Stage("segments", "end_ts", "sid", None, "series"),
+    Stage("tier_1m", "bucket_ts", "sid", MINUTE_MS, "segments"),
+    Stage("tier_1h", "bucket_ts", "sid", HOUR_MS, "tier_1m"),
+    Stage("tier_1d", "bucket_ts", "sid", DAY_MS, "tier_1h"),
+    Stage("series_arch", "hw_ts", f"substring_index(akey, '{AKEY_SEP}', 1)",
+          None, "series"),
+    # p50/p90/p99 turn length per conv per hour/day (hist_quantiles)
+    Stage("hist_1h", "bucket_ts", "sid", HOUR_MS, "raw", ("hist_tier", "tokens")),
+    Stage("hist_1d", "bucket_ts", "sid", DAY_MS, "hist_1h"),
+    # distinct turn contents per conv per day (repetition signal)
+    Stage("hll_1d", "bucket_ts", "sid", DAY_MS, "raw", ("hll_tier", "text")),
+    # The merged sketches summarise the ACTIVE CONVERSATION SET per day,
+    # keyed by sbucket: sid_bucket partitions conversations disjointly, so
+    # each warehouse bucket holds a valid partial sketch of ITS convs and
+    # append() recomputes only touched buckets. cms_1d: Count-Min counters
+    # (hot-conversation audit; sum across sbuckets). kmv_1d: bottom-64
+    # (day-over-day overlap, which HLL registers cannot express; the
+    # re-ranked union across sbuckets IS the global bottom-k). bloom_1d:
+    # membership ("was conv X active on day D", no false negatives; a
+    # probe consults only its own bucket's filter).
+    Stage("cms_1d", "bucket_ts", None, DAY_MS, "raw", ("cms_tier", "sid")),
+    Stage("kmv_1d", "bucket_ts", None, DAY_MS, "raw", ("kmv_tier", "sid")),
+    Stage("bloom_1d", "bucket_ts", None, DAY_MS, "raw", ("bloom_tier", "sid")),
+)
+STAGE = {s.name: s for s in STAGES}
+TIERS = tuple((s.name, s.grid) for s in STAGES if s.name.startswith("tier_"))
 
 
 def _scan_stats(df: DataFrame, ts_col: str | None) -> dict[int, tuple[int, int | None]]:
@@ -100,24 +154,28 @@ class TierPipeline:
         stage: str,
         fingerprint: str,
         build: "callable",
-        ts_col: str,
         fail_after_chunks: int | None = None,
         only_buckets: list[int] | None = None,
     ) -> None:
         """build(bucket_ids) -> DataFrame carrying an sbucket column.
 
-        Writes each chunk partitioned by sbucket, moves bucket dirs into the
-        stage table atomically, then commits one manifest per bucket. The
-        manifests' rows and high-water marks come from the chunk's parquet
-        footers (footer_stats), so no Spark job re-reads what was just
-        written; only files without column statistics (legacy INT96
-        timestamps) are scanned. fail_after_chunks injects a crash for
-        resume tests. only_buckets restricts the stage to a bucket subset
-        (incremental append path) — untouched buckets keep their existing
-        data AND manifests.
+        Writes each chunk partitioned by sbucket, installs each bucket dir
+        in the stage table with the journaled swap_in (a crash at any step
+        leaves the bucket whole; _recover finishes an interrupted swap
+        before anything is read or rewritten), then commits one manifest per
+        bucket. The manifests' rows and high-water marks (of the stage's
+        STAGES ts_col) come from the chunk's parquet footers
+        (footer_stats), so no Spark job re-reads what was just written;
+        only files without column statistics (legacy INT96 timestamps) are
+        scanned. fail_after_chunks injects a crash for resume tests.
+        only_buckets restricts the stage to a bucket subset (incremental
+        append path) — untouched buckets keep their existing data AND
+        manifests.
         """
+        ts_col = STAGE[stage].ts_col
         root = self.wh.path(stage)
         os.makedirs(root, exist_ok=True)
+        self._recover()
         lineage = Lineage(root)
         if only_buckets is not None and not lineage.metrics().get("buckets"):
             # a stage that has never been built has nothing to restrict to:
@@ -158,13 +216,10 @@ class TierPipeline:
             wall = time.time() - t0
             for b in pending:
                 src = os.path.join(tmp, f"sbucket={b}")
-                dst = os.path.join(root, f"sbucket={b}")
-                if os.path.exists(dst):
-                    shutil.rmtree(dst)
-                if os.path.exists(src):
-                    os.rename(src, dst)
-                else:
-                    os.makedirs(dst, exist_ok=True)  # empty bucket
+                swap_in(
+                    src if os.path.exists(src) else None,
+                    os.path.join(root, f"sbucket={b}"),
+                )
                 rows, hw = stats.get(b, (0, None))
                 lineage.commit(
                     stage, b, rows, hw, fingerprint, wall / len(pending),
@@ -174,6 +229,14 @@ class TierPipeline:
             done_chunks += 1
             if fail_after_chunks is not None and done_chunks >= fail_after_chunks:
                 raise RuntimeError(f"injected failure after {done_chunks} chunks")
+
+    def _recover(self) -> None:
+        """Finish every bucket swap a crash interrupted, in every stage
+        table (checkpoint.recover_swaps): a table read mid-swap would miss
+        the bucket."""
+        for st in STAGES:
+            if os.path.isdir(self.wh.path(st.name)):
+                recover_swaps(self.wh.path(st.name))
 
     def _live_buckets(self, table: str, bucket_ids: list[int]) -> list[int]:
         """Buckets that actually hold parquet part files. A fully-retained
@@ -209,6 +272,26 @@ class TierPipeline:
             raise ValueError(f"table {table!r} has no non-empty bucket to read")
         return self.wh.read(self.spark, table, buckets=any_live[:1]).limit(0)
 
+    def _floor(self, raw_horizon: int, stage: str) -> int:
+        """The one rounding rule for retention floors: the raw horizon
+        rounded UP to the stage's grid. Raw holds every bucket of the stage
+        from the floor on completely, so a stage rebuilt from retained raw
+        recomputes from the floor and keeps its own rows below it."""
+        grid = STAGE[stage].grid or self.cfg.sampling_interval_ms
+        return -(-raw_horizon // grid) * grid
+
+    def _keep_below(
+        self, new: DataFrame, stage: str, bucket_ids: list[int], floor: int
+    ) -> DataFrame:
+        """new plus the stage's existing rows below floor in these
+        buckets (sbucket kept only if new carries it)."""
+        old = self._read_buckets(stage, bucket_ids).where(
+            F.col(STAGE[stage].ts_col) < floor
+        )
+        if "sbucket" not in new.columns:
+            old = old.drop("sbucket")
+        return new.unionByName(old)
+
     # -- stages --------------------------------------------------------------
 
     def ingest_raw(
@@ -240,8 +323,7 @@ class TierPipeline:
                 .sortWithinPartitions("sbucket")
             )
 
-        self._run_stage("raw", fingerprint, build, ts_col="ts",
-                        only_buckets=only_buckets)
+        self._run_stage("raw", fingerprint, build, only_buckets=only_buckets)
 
     def build_series(
         self,
@@ -258,23 +340,15 @@ class TierPipeline:
         below preserve_below, which append() rejects."""
 
         def build(bucket_ids: list[int]) -> DataFrame:
-            from modelardb_dynamic_spark.sources.timeseries import to_ms
-
             raw = self._read_buckets("raw", bucket_ids)
             if preserve_below is not None:
                 raw = raw.where(to_ms("ts") >= preserve_below)
             s = transcript_series(raw, self.cfg.sampling_interval_ms)
             if preserve_below is not None:
-                old = (
-                    self._read_buckets("series", bucket_ids)
-                    .drop("sbucket")
-                    .where(f"ts_ms < {preserve_below}")
-                )
-                s = s.unionByName(old)
+                s = self._keep_below(s, "series", bucket_ids, preserve_below)
             return s.withColumn("sbucket", sid_bucket(F.col("sid"), self.wh.n_buckets))
 
-        self._run_stage("series", fingerprint, build, ts_col="ts_ms",
-                        only_buckets=only_buckets)
+        self._run_stage("series", fingerprint, build, only_buckets=only_buckets)
 
     def build_segments(
         self,
@@ -304,8 +378,7 @@ class TierPipeline:
         self._run_stage(
             "segments",
             fingerprint + ("+zorder" if self.segment_layout == "zorder" else ""),
-            build, ts_col="end_ts",
-            fail_after_chunks=fail_after_chunks, only_buckets=only_buckets,
+            build, fail_after_chunks=fail_after_chunks, only_buckets=only_buckets,
         )
 
     def build_tiers(
@@ -313,8 +386,9 @@ class TierPipeline:
         fingerprint: str = "tiers-v1",
         only_buckets: list[int] | None = None,
     ) -> None:
-        prev = "segments"
         for tier_name, bucket_ms in TIERS:
+            prev = STAGE[tier_name].source
+
             def build(bucket_ids: list[int], prev=prev, bucket_ms=bucket_ms) -> DataFrame:
                 src = self._read_buckets(prev, bucket_ids)
                 # src is a storage scan: re-scanning it in the two rollup
@@ -328,59 +402,56 @@ class TierPipeline:
                     "sbucket", sid_bucket(F.col("sid"), self.wh.n_buckets)
                 )
 
-            self._run_stage(tier_name, fingerprint, build, ts_col="bucket_ts",
-                            only_buckets=only_buckets)
-            prev = tier_name
+            self._run_stage(tier_name, fingerprint, build, only_buckets=only_buckets)
+
+    def _sketch_build(self, stage: str, floor: int | None, keep_old: bool):
+        """The one builder of a STAGES sketch over raw turns: per sid for a
+        sid-keyed stage, per sbucket for a merged one, on the stage's grid.
+        With a floor only raw turns at/after it are sketched; keep_old
+        keeps the stage's own rows below it (append after raw retention),
+        otherwise they are dropped (purge's rebuild of a merged sketch)."""
+        from modelardb_dynamic_spark.operators import sketches
+
+        st = STAGE[stage]
+        tier_fn, value_col = getattr(sketches, st.sketch[0]), st.sketch[1]
+        nb = self.wh.n_buckets
+
+        def build(bucket_ids: list[int]) -> DataFrame:
+            src = self._raw_turns(bucket_ids)
+            if floor is not None:
+                src = src.where(f"ts_ms >= {floor}")
+            if st.key is None:
+                src = src.withColumn("sbucket", sid_bucket(F.col("sid"), nb))
+            t = tier_fn(
+                src, [st.key or "sbucket"], value_col,
+                f"(ts_ms DIV {st.grid}) * {st.grid}",
+            )
+            if floor is not None and keep_old:
+                t = self._keep_below(t, stage, bucket_ids, floor)
+            if st.key is None:
+                return t
+            return t.withColumn("sbucket", sid_bucket(F.col("sid"), nb))
+
+        return build
 
     def build_sketch_tiers(
         self,
         fingerprint: str = "sketch-v1",
         only_buckets: list[int] | None = None,
-        preserve_below_hour: int | None = None,
-        preserve_below_day: int | None = None,
+        raw_horizon: int | None = None,
     ) -> None:
         """Mergeable sketch tiers beside the cnt/vsum/vmin/vmax tiers
-        (operators/sketches.py): per conversation,
-        - hist_1h / hist_1d — HDR log2x4 histogram of per-turn token
-          counts (p50/p90/p99 turn length per conv per hour/day straight
-          from the tier, hist_quantiles);
-        - hll_1d — HLL-256 distinct turn contents per conv per day
-          (repetition/degeneracy signal);
-        - kmv_1d — KMV bottom-64 of the active conversation set per day
-          keyed by sbucket (day-over-day overlap/churn, overlap_convs);
-        - bloom_1d — Bloom membership filter of the active conversation
-          set per day keyed by sbucket ("was conv X active on day D"
-          point probes, active_convs).
+        (operators/sketches.py), one per STAGES entry with a sketch plus
+        hist_1d, the day downsample of hist_1h: HDR histograms of per-turn
+        token counts (hist_1h/hist_1d, range_quantiles), HLL distinct turn
+        contents (hll_1d, range_distinct), and the per-sbucket Count-Min,
+        KMV and Bloom sketches of the active conversation set (cms_1d,
+        kmv_1d, bloom_1d: range_heavy, overlap_convs, active_convs).
         Built from the raw stage per bucket chunk like every other stage:
-        lineage manifests, resume, and incremental append() all apply."""
-        from modelardb_dynamic_spark.operators.sketches import (
-            cms_tier,
-            hist_downsample,
-            hist_tier,
-            hll_tier,
-        )
-
-        _turns = self._raw_turns
-
-        def build_hist_1h(bucket_ids: list[int]) -> DataFrame:
-            src = _turns(bucket_ids)
-            if preserve_below_hour is not None:
-                src = src.where(f"ts_ms >= {preserve_below_hour}")
-            t = hist_tier(
-                src, ["sid"], "tokens",
-                f"(ts_ms DIV {HOUR_MS}) * {HOUR_MS}",
-            )
-            if preserve_below_hour is not None:
-                old = (
-                    self._read_buckets("hist_1h", bucket_ids)
-                    .drop("sbucket")
-                    .where(f"bucket_ts < {preserve_below_hour}")
-                )
-                t = t.unionByName(old)
-            return t.withColumn("sbucket", sid_bucket(F.col("sid"), self.wh.n_buckets))
-
-        self._run_stage("hist_1h", fingerprint, build_hist_1h,
-                        ts_col="bucket_ts", only_buckets=only_buckets)
+        lineage manifests, resume, and incremental append() all apply.
+        raw_horizon (append after raw retention): each stage keeps its rows
+        below its floor (_floor) and sketches raw only from there on."""
+        from modelardb_dynamic_spark.operators.sketches import hist_downsample
 
         def build_hist_1d(bucket_ids: list[int]) -> DataFrame:
             t = hist_downsample(
@@ -389,115 +460,18 @@ class TierPipeline:
             )
             return t.withColumn("sbucket", sid_bucket(F.col("sid"), self.wh.n_buckets))
 
-        self._run_stage("hist_1d", fingerprint, build_hist_1d,
-                        ts_col="bucket_ts", only_buckets=only_buckets)
-
-        def build_hll_1d(bucket_ids: list[int]) -> DataFrame:
-            src = _turns(bucket_ids)
-            if preserve_below_day is not None:
-                src = src.where(f"ts_ms >= {preserve_below_day}")
-            t = hll_tier(
-                src, ["sid"], "text",
-                f"(ts_ms DIV {DAY_MS}) * {DAY_MS}",
-            )
-            if preserve_below_day is not None:
-                old = (
-                    self._read_buckets("hll_1d", bucket_ids)
-                    .drop("sbucket")
-                    .where(f"bucket_ts < {preserve_below_day}")
+        for st in STAGES:
+            if st.sketch is not None:
+                floor = (
+                    self._floor(raw_horizon, st.name)
+                    if raw_horizon is not None else None
                 )
-                t = t.unionByName(old)
-            return t.withColumn("sbucket", sid_bucket(F.col("sid"), self.wh.n_buckets))
-
-        self._run_stage("hll_1d", fingerprint, build_hll_1d,
-                        ts_col="bucket_ts", only_buckets=only_buckets)
-
-        def build_cms_1d(bucket_ids: list[int]) -> DataFrame:
-            # Count-Min counters of conv_id activity per day (hot-
-            # conversation audit). Keyed by sbucket so each warehouse
-            # bucket holds a valid partial sketch of ITS conversations —
-            # counters merge by sum, so range queries just sum across
-            # sbuckets, and append() recomputes only touched buckets.
-            src = _turns(bucket_ids)
-            if preserve_below_day is not None:
-                src = src.where(f"ts_ms >= {preserve_below_day}")
-            t = cms_tier(
-                src.withColumn(
-                    "sbucket", sid_bucket(F.col("sid"), self.wh.n_buckets)
-                ),
-                ["sbucket"], "sid",
-                f"(ts_ms DIV {DAY_MS}) * {DAY_MS}",
-            )
-            if preserve_below_day is not None:
-                old = self._read_buckets("cms_1d", bucket_ids).where(
-                    f"bucket_ts < {preserve_below_day}"
-                )
-                t = t.unionByName(old)
-            return t
-
-        self._run_stage("cms_1d", fingerprint, build_cms_1d,
-                        ts_col="bucket_ts", only_buckets=only_buckets)
-
-        def build_kmv_1d(bucket_ids: list[int]) -> DataFrame:
-            # KMV bottom-64 sketch of the ACTIVE CONVERSATION SET per
-            # day, keyed by sbucket: the sid_bucket hash partitions
-            # conversations disjointly, so each warehouse bucket's
-            # sketch is the exact bottom-k of ITS convs and a global
-            # day sketch is just the re-ranked union across sbuckets.
-            # Unlike hll_1d this supports INTERSECTION — day-over-day
-            # active-set overlap/churn (overlap_convs) — which HLL
-            # registers cannot express.
-            from modelardb_dynamic_spark.operators.sketches import kmv_tier
-
-            src = _turns(bucket_ids)
-            if preserve_below_day is not None:
-                src = src.where(f"ts_ms >= {preserve_below_day}")
-            t = kmv_tier(
-                src.withColumn(
-                    "sbucket", sid_bucket(F.col("sid"), self.wh.n_buckets)
-                ),
-                ["sbucket"], "sid",
-                f"(ts_ms DIV {DAY_MS}) * {DAY_MS}",
-            )
-            if preserve_below_day is not None:
-                old = self._read_buckets("kmv_1d", bucket_ids).where(
-                    f"bucket_ts < {preserve_below_day}"
-                )
-                t = t.unionByName(old)
-            return t
-
-        self._run_stage("kmv_1d", fingerprint, build_kmv_1d,
-                        ts_col="bucket_ts", only_buckets=only_buckets)
-
-        def build_bloom_1d(bucket_ids: list[int]) -> DataFrame:
-            # Bloom filter of the ACTIVE CONVERSATION SET per day, keyed
-            # by sbucket (each warehouse bucket's filter covers exactly
-            # ITS conversations — sid_bucket partitions them disjointly,
-            # so a probe consults only its own bucket's 512 words). The
-            # MEMBERSHIP question beside kmv_1d's intersection and
-            # cms_1d's frequency: "was conv X active on day D" as a
-            # point probe with no false negatives.
-            from modelardb_dynamic_spark.operators.sketches import bloom_tier
-
-            src = _turns(bucket_ids)
-            if preserve_below_day is not None:
-                src = src.where(f"ts_ms >= {preserve_below_day}")
-            t = bloom_tier(
-                src.withColumn(
-                    "sbucket", sid_bucket(F.col("sid"), self.wh.n_buckets)
-                ),
-                ["sbucket"], "sid",
-                f"(ts_ms DIV {DAY_MS}) * {DAY_MS}",
-            )
-            if preserve_below_day is not None:
-                old = self._read_buckets("bloom_1d", bucket_ids).where(
-                    f"bucket_ts < {preserve_below_day}"
-                )
-                t = t.unionByName(old)
-            return t
-
-        self._run_stage("bloom_1d", fingerprint, build_bloom_1d,
-                        ts_col="bucket_ts", only_buckets=only_buckets)
+                build = self._sketch_build(st.name, floor, keep_old=True)
+            elif st.name == "hist_1d":
+                build = build_hist_1d
+            else:
+                continue
+            self._run_stage(st.name, fingerprint, build, only_buckets=only_buckets)
 
     def run(self, transcripts: DataFrame, sketches: bool = False) -> None:
         self.ingest_raw(transcripts)
@@ -531,12 +505,10 @@ class TierPipeline:
         nb = self.wh.n_buckets
         cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
         # retention interaction: raw below the horizon is GONE, so stages
-        # rebuilt from raw must preserve their old pre-horizon rows and
-        # new turns may not land below the retention floor (a retained
-        # TSDB rejects below-horizon inserts). The floor is the horizon
-        # rounded UP to the coarsest maintained bucket (day when sketch
-        # tiers exist, else the engine grid) so no straddling bucket ever
-        # needs data that only existed pre-retention.
+        # rebuilt from raw keep their old rows below their own floor
+        # (_floor) and new turns may not land below the highest of those
+        # floors (a retained TSDB rejects below-horizon inserts), so no
+        # straddling bucket ever needs data that only existed pre-retention.
         if self.retention_horizon("series") is not None:
             raise ValueError(
                 "append() cannot incrementally maintain a warehouse whose "
@@ -546,13 +518,12 @@ class TierPipeline:
             )
         raw_h = self.retention_horizon("raw")
         rejected = 0
-        si = self.cfg.sampling_interval_ms
         sketches = os.path.exists(self.wh.path("hist_1h"))
         if raw_h is not None:
-            from modelardb_dynamic_spark.sources.timeseries import to_ms
-
-            unit = DAY_MS if sketches else si
-            floor_ms = ((raw_h + unit - 1) // unit) * unit
+            floor_ms = max(
+                self._floor(raw_h, st.name) for st in STAGES
+                if st.source == "raw" and (sketches or st.sketch is None)
+            )
             n0 = new_transcripts.count()
             new_transcripts = new_transcripts.where(to_ms("ts") >= floor_ms)
             rejected = n0 - new_transcripts.count()
@@ -604,29 +575,19 @@ class TierPipeline:
                 "sbucket", sid_bucket(F.col("conv_id"), nb)
             )
 
-        self._run_stage(
-            "raw", f"raw+{batch_id}", build, ts_col="ts", only_buckets=aff
-        )
-        pb_si = (
-            ((raw_h + si - 1) // si) * si if raw_h is not None else None
-        )
+        self._run_stage("raw", f"raw+{batch_id}", build, only_buckets=aff)
         self.build_series(
             fingerprint=f"series+{batch_id}", only_buckets=aff,
-            preserve_below=pb_si,
+            preserve_below=(
+                self._floor(raw_h, "series") if raw_h is not None else None
+            ),
         )
         self.build_segments(fingerprint=f"segments+{batch_id}", only_buckets=aff)
         self.build_tiers(fingerprint=f"tiers+{batch_id}", only_buckets=aff)
         if sketches:
             self.build_sketch_tiers(
                 fingerprint=f"sketch+{batch_id}", only_buckets=aff,
-                preserve_below_hour=(
-                    ((raw_h + HOUR_MS - 1) // HOUR_MS) * HOUR_MS
-                    if raw_h is not None else None
-                ),
-                preserve_below_day=(
-                    ((raw_h + DAY_MS - 1) // DAY_MS) * DAY_MS
-                    if raw_h is not None else None
-                ),
+                raw_horizon=raw_h,
             )
         return {
             "affected_buckets": aff, "n_buckets": nb,
@@ -659,7 +620,8 @@ class TierPipeline:
           and the loss is reported in the metrics.
 
         Idempotent + resumable like every stage: fingerprints carry
-        batch_id, a crashed purge resumes past completed buckets.
+        batch_id, a crashed purge resumes past completed buckets, and
+        rows_removed still counts the whole purge (_purge_snapshot).
         Iceberg deployment: the filter rewrites become DELETE FROM ...
         WHERE on the bucket partition; lineage stays the progress record.
 
@@ -682,7 +644,6 @@ class TierPipeline:
             .distinct()
             .collect()
         )
-        removed: dict[str, int] = {}
         # the fingerprint carries BOTH the batch id and a digest of the
         # purge set: re-running the same batch_id with a different victim
         # list must force a rewrite, not silently no-op against buckets
@@ -691,109 +652,48 @@ class TierPipeline:
             batch_id,
             hashlib.sha256(",".join(ids).encode("utf-8")).hexdigest()[:12],
         )
-
-        def _filter_stage(stage: str, key_expr: str, ts_col: str) -> None:
-            root = self.wh.path(stage)
-            if not os.path.exists(root):
-                return
+        self._recover()
+        before = self._purge_snapshot(pfp, aff)
+        removed: dict[str, int] = {}
+        for st in STAGES:
+            if st.key is None or st.name not in before:
+                continue
             # a fully-retained stage leaves empty bucket dirs (no parquet
-            # part files) — nothing to purge there, and reading them
-            # would fail schema inference
-            live = self._live_buckets(stage, aff)
-            if not live:
-                removed[stage] = 0
-                return
-            # "before" comes from the pre-purge lineage manifests, not a
-            # count inside build(): build() is skipped for buckets already
-            # committed under this fingerprint, so a resumed/re-run purge
-            # would otherwise understate (or negate) rows_removed — and
-            # the manifests save a count() job per chunk
-            before = sum(
-                rows for b, (rows, _) in self._bucket_stats(stage, live).items()
-            )
+            # part files): nothing to purge there, and nothing to read
+            live = self._live_buckets(st.name, aff)
+            if live:
 
-            def build(bucket_ids: list[int]) -> DataFrame:
-                return self._read_buckets(stage, bucket_ids).join(
-                    F.broadcast(id_df),
-                    F.expr(key_expr) == F.col("purge_id"),
-                    "left_anti",
-                )
-
-            self._run_stage(
-                stage, pfp, build, ts_col=ts_col,
-                only_buckets=live,
-            )
-            after = sum(
-                rows for b, (rows, _) in self._bucket_stats(stage, live).items()
-            )
-            removed[stage] = before - after
-
-        _filter_stage("raw", "conv_id", "ts")
-        _filter_stage("series", "sid", "ts_ms")
-        _filter_stage("segments", "sid", "end_ts")
-        for tier_name, _ in TIERS:
-            _filter_stage(tier_name, "sid", "bucket_ts")
-        _filter_stage(
-            "series_arch",
-            f"substring_index(akey, '{self._AKEY_SEP}', 1)",
-            "hw_ts",
-        )
-        for sk in ("hist_1h", "hist_1d", "hll_1d"):
-            _filter_stage(sk, "sid", "bucket_ts")
-
-        # sbucket-merged sketches: rebuild affected buckets from the
-        # now-purged raw (no preserve floor — see docstring)
-        dropped_below_floor = 0
-        if os.path.exists(self.wh.path("cms_1d")):
-            from modelardb_dynamic_spark.operators.sketches import (
-                bloom_tier,
-                cms_tier,
-                kmv_tier,
-            )
-
-            raw_h = self.retention_horizon("raw")
-            floor = (
-                ((raw_h + DAY_MS - 1) // DAY_MS) * DAY_MS
-                if raw_h is not None else None
-            )
-            for sk, tier_fn in (
-                ("cms_1d", cms_tier),
-                ("kmv_1d", kmv_tier),
-                ("bloom_1d", bloom_tier),
-            ):
-                if not os.path.exists(self.wh.path(sk)):
-                    continue
-                if floor is not None:
-                    live_sk = self._live_buckets(sk, aff)
-                    if live_sk:
-                        dropped_below_floor += (
-                            self._read_buckets(sk, live_sk)
-                            .where(f"bucket_ts < {floor}")
-                            .count()
-                        )
-
-                def build(
-                    bucket_ids: list[int], tier_fn=tier_fn
-                ) -> DataFrame:
-                    src = self._raw_turns(bucket_ids)
-                    if floor is not None:
-                        # the raw tier has already dropped sub-floor turns,
-                        # so a straddling day can only be PARTIALLY rebuilt
-                        # — drop it entirely (documented conservative
-                        # behavior; the rows are counted above)
-                        src = src.where(f"ts_ms >= {floor}")
-                    return tier_fn(
-                        src.withColumn(
-                            "sbucket", sid_bucket(F.col("sid"), nb)
-                        ),
-                        ["sbucket"], "sid",
-                        f"(ts_ms DIV {DAY_MS}) * {DAY_MS}",
+                def build(bucket_ids: list[int], st=st) -> DataFrame:
+                    return self._read_buckets(st.name, bucket_ids).join(
+                        F.broadcast(id_df),
+                        F.expr(st.key) == F.col("purge_id"),
+                        "left_anti",
                     )
 
-                self._run_stage(
-                    sk, pfp, build, ts_col="bucket_ts",
-                    only_buckets=aff,
-                )
+                self._run_stage(st.name, pfp, build, only_buckets=live)
+            removed[st.name] = before[st.name] - self._manifest_rows(st.name, aff)
+
+        # sbucket-merged sketches: rebuild affected buckets from the
+        # now-purged raw, dropping their rows below the floor (docstring)
+        dropped_below_floor = 0
+        raw_h = self.retention_horizon("raw")
+        for st in STAGES:
+            if st.key is not None or not os.path.exists(self.wh.path(st.name)):
+                continue
+            floor = self._floor(raw_h, st.name) if raw_h is not None else None
+            if floor is not None:
+                live = self._live_buckets(st.name, aff)
+                if live:
+                    dropped_below_floor += (
+                        self._read_buckets(st.name, live)
+                        .where(F.col(st.ts_col) < floor)
+                        .count()
+                    )
+            self._run_stage(
+                st.name, pfp, self._sketch_build(st.name, floor, keep_old=False),
+                only_buckets=aff,
+            )
+        os.remove(self._purge_snapshot_path())
         return {
             "affected_buckets": aff,
             "n_buckets": nb,
@@ -802,16 +702,34 @@ class TierPipeline:
             "sketch_rows_dropped_below_floor": dropped_below_floor,
         }
 
-    def _bucket_stats(self, stage: str, buckets: list[int]) -> dict:
-        """Post-rewrite row counts per bucket from the lineage manifests
-        (no rescan)."""
+    def _purge_snapshot_path(self) -> str:
+        return os.path.join(self.wh.root, "_purge.json")
+
+    def _purge_snapshot(self, fingerprint: str, buckets: list[int]) -> dict:
+        """{sid-keyed stage: rows in buckets} before the purge `fingerprint`
+        rewrote anything, from the manifests. Written once per purge and
+        removed when it completes, so a crashed-and-resumed purge reports
+        the rows the whole purge removed, not only its last invocation's."""
+        path = self._purge_snapshot_path()
+        if os.path.exists(path):
+            with open(path) as f:
+                snap = json.load(f)
+            if snap["fingerprint"] == fingerprint:
+                return snap["rows"]
+        rows = {
+            st.name: self._manifest_rows(st.name, buckets)
+            for st in STAGES
+            if st.key is not None and os.path.exists(self.wh.path(st.name))
+        }
+        with open(path + ".tmp", "w") as f:
+            json.dump({"fingerprint": fingerprint, "rows": rows}, f)
+        os.replace(path + ".tmp", path)
+        return rows
+
+    def _manifest_rows(self, stage: str, buckets: list[int]) -> int:
+        """Committed rows of these buckets, from the lineage manifests."""
         lineage = Lineage(self.wh.path(stage))
-        out = {}
-        for b in buckets:
-            m = lineage.get(b)
-            if m is not None:
-                out[b] = (m.rows, m.high_water_ts)
-        return out
+        return sum(m.rows for m in map(lineage.get, buckets) if m is not None)
 
     # -- integrity audit ------------------------------------------------------
 
@@ -893,8 +811,6 @@ class TierPipeline:
 
     # -- retention -----------------------------------------------------------
 
-    _TS_COLS = {"raw": "ts", "series": "ts_ms"}  # tiers use bucket_ts
-
     def retain(
         self, table: str, horizon_ms: int, fingerprint_suffix: str = ""
     ) -> None:
@@ -912,8 +828,6 @@ class TierPipeline:
         fingerprint DOES resurrect history; the stale marker then makes
         range_agg conservatively refuse sub-horizon queries — delete the
         marker to re-enable them."""
-        import json
-
         existing = self.retention_horizon(table)
         horizon_ms = max(horizon_ms, existing or horizon_ms)
         marker = os.path.join(self.wh.path(table), "_retention.json")
@@ -922,12 +836,10 @@ class TierPipeline:
             json.dump({"horizon_ms": horizon_ms}, f)
         os.replace(marker + ".tmp", marker)
 
-        ts_col = self._TS_COLS.get(table, "bucket_ts")
+        ts_col = STAGE[table].ts_col
         fingerprint = f"{table}-retained-{horizon_ms}{fingerprint_suffix}"
 
         def build(bucket_ids: list[int]) -> DataFrame:
-            from modelardb_dynamic_spark.sources.timeseries import to_ms
-
             df = self._read_buckets(table, bucket_ids)
             cond = (
                 to_ms("ts") >= horizon_ms
@@ -936,11 +848,9 @@ class TierPipeline:
             )
             return df.where(cond)
 
-        self._run_stage(table, fingerprint, build, ts_col=ts_col)
+        self._run_stage(table, fingerprint, build)
 
     def retention_horizon(self, table: str) -> int | None:
-        import json
-
         marker = os.path.join(self.wh.path(table), "_retention.json")
         if not os.path.exists(marker):
             return None
@@ -951,8 +861,6 @@ class TierPipeline:
         self.retain("raw", horizon_ms, fingerprint_suffix)
 
     # -- cold archive (series tier) -------------------------------------------
-
-    _AKEY_SEP = "\x1f"
 
     def archive_series(self, horizon_ms: int) -> dict:
         """Retention that DEMOTES instead of deletes: sub-horizon series
@@ -986,7 +894,7 @@ class TierPipeline:
         have_arch = bool(Lineage(arch_root).metrics().get("buckets")) if (
             os.path.exists(arch_root)
         ) else False
-        sep = self._AKEY_SEP
+        sep = AKEY_SEP
 
         def build(bucket_ids: list[int]) -> DataFrame:
             cur = (
@@ -1018,12 +926,7 @@ class TierPipeline:
                 ),
             )
 
-        self._run_stage(
-            "series_arch",
-            f"series-arch-{horizon_ms}",
-            build,
-            ts_col="hw_ts",
-        )
+        self._run_stage("series_arch", f"series-arch-{horizon_ms}", build)
         self.retain("series", horizon_ms)
         m = Lineage(arch_root).metrics()
         return {"blobs": m.get("rows", 0), "horizon_ms": horizon_ms}
@@ -1035,7 +938,7 @@ class TierPipeline:
 
         blobs = self.wh.read(self.spark, "series_arch").drop("sbucket", "hw_ts")
         pts = restore_points(blobs, "akey", "ts_ms", "value")
-        sep = self._AKEY_SEP
+        sep = AKEY_SEP
         return pts.selectExpr(
             f"substring_index(akey, '{sep}', 1) AS sid",
             f"substring_index(akey, '{sep}', -1) AS metric",
@@ -1064,25 +967,15 @@ class TierPipeline:
         `rewrite_data_files(strategy => 'sort')` with a z-order);
         `sort_cols` is the plain-sort alternative.
 
-        Crash-safe via a rename journal: each swap goes
-        dst -> dst.old, tmp -> dst, rm dst.old; a recovery pass at entry
-        repairs any interrupted swap (dst missing + dst.old present ->
-        restore; both present -> drop the stale .old). A row-count check
-        (the rewrite's parquet footers) against the bucket's lineage
-        manifest guards the swap: a mismatched rewrite is abandoned loudly
-        instead of installed.
+        Crash-safe via the same rename journal as every stage rewrite
+        (checkpoint.swap_in; recover_swaps at entry repairs an interrupted
+        swap). A row-count check (the rewrite's parquet footers) against
+        the bucket's lineage manifest guards the swap: a mismatched
+        rewrite is abandoned loudly instead of installed.
         """
         root = self.wh.path(table)
         lineage = Lineage(root)
-        # recovery pass for swaps interrupted by a crash
-        for name in sorted(os.listdir(root)):
-            if not name.endswith(".old"):
-                continue
-            old, dst = os.path.join(root, name), os.path.join(root, name[:-4])
-            if os.path.exists(dst):
-                shutil.rmtree(old)  # crashed after install: stale backup
-            else:
-                os.rename(old, dst)  # crashed mid-swap: restore original
+        recover_swaps(root)
         stats = {"buckets_compacted": 0, "files_before": 0, "files_after": 0,
                  "rows": 0}
         import glob as _glob
@@ -1116,9 +1009,7 @@ class TierPipeline:
                     f"compaction of {table} bucket {b} produced {got} rows, "
                     f"manifest says {m.rows}; rewrite abandoned"
                 )
-            os.rename(dst, dst + ".old")
-            os.rename(tmp, dst)
-            shutil.rmtree(dst + ".old")
+            swap_in(tmp, dst)
             stats["buckets_compacted"] += 1
             stats["files_before"] += len(files)
             stats["files_after"] += len(
@@ -1142,49 +1033,69 @@ class TierPipeline:
         rebuild (new fingerprint), not the planner. Result == aggregating
         the series table directly, pinned by tests/test_pipeline.py and
         the `tiered_agg` oracle row."""
-        from modelardb_dynamic_spark.plans.planner import (
-            tiered_agg,
-            validate_cover,
-        )
+        from modelardb_dynamic_spark.plans.planner import tiered_agg
 
-        series = self.wh.read(self.spark, "series")
-        tiers, hw, lw = [], {}, {}
-        for tier_name, w in TIERS:
-            tiers.append((self.wh.read(self.spark, tier_name), w))
-            m = Lineage(self.wh.path(tier_name)).metrics()
-            if m.get("high_water_ts") is not None:
-                hw[w] = int(m["high_water_ts"])
-            rh = self.retention_horizon(tier_name)
-            if rh is not None:
-                lw[w] = rh
-        raw_low = self.retention_horizon("series")
-        validate_cover(
-            [w for _, w in TIERS], lo_ms, hi_ms, bucket_ms,
-            high_water=hw, low_water=lw, raw_low_ms=raw_low,
-            grid_ms=self.cfg.sampling_interval_ms,
+        tiers, hw, lw = self._cover(
+            [n for n, _ in TIERS], lo_ms, hi_ms, bucket_ms, edge="series"
         )
         return tiered_agg(
-            series, tiers, lo_ms, hi_ms, bucket_ms,
+            self.wh.read(self.spark, "series"), tiers, lo_ms, hi_ms, bucket_ms,
             high_water=hw, low_water=lw,
         )
 
-    def _sketch_route_bounds(self, names_widths):
+    def _cover(
+        self, names: list[str], lo_ms: int, hi_ms: int, bucket_ms: int,
+        edge: str = "raw",
+    ) -> tuple[list[tuple[DataFrame, int]], dict[int, int], dict[int, int]]:
+        """The routed stages' [(frame, grid)] and their {grid: high_water}
+        (lineage) and {grid: low_water} (retention), once validate_cover
+        has checked that they and the `edge` table (the raw rows the
+        routed read falls back to) can answer [lo, hi) @ bucket_ms."""
+        from modelardb_dynamic_spark.plans.planner import validate_cover
+
         hw, lw = {}, {}
-        for name, w in names_widths:
+        for name in names:
+            w = STAGE[name].grid
             m = Lineage(self.wh.path(name)).metrics()
             if m.get("high_water_ts") is not None:
                 hw[w] = int(m["high_water_ts"])
             rh = self.retention_horizon(name)
             if rh is not None:
                 lw[w] = rh
-        return hw, lw
+        validate_cover(
+            [STAGE[n].grid for n in names], lo_ms, hi_ms, bucket_ms,
+            high_water=hw, low_water=lw,
+            raw_low_ms=self.retention_horizon(edge),
+            grid_ms=self.cfg.sampling_interval_ms,
+        )
+        tiers = [
+            (self.wh.read(self.spark, n).drop("sbucket"), STAGE[n].grid)
+            for n in names
+        ]
+        return tiers, hw, lw
+
+    def _sealed_day(self, stage: str, day_ms: int, op: str) -> bool:
+        """Whether the day bucket starting at day_ms is sealed in the
+        day-grained sketch stage (below its lineage high-water, at or above
+        its retention low-water), so op may read it from the stage. An
+        unsealed day falls back to raw: raises if retention dropped it."""
+        hw = Lineage(self.wh.path(stage)).metrics().get("high_water_ts")
+        lw = self.retention_horizon(stage)
+        if hw is not None and day_ms < hw and (lw is None or day_ms >= lw):
+            return True
+        raw_low = self.retention_horizon("raw")
+        if raw_low is not None and day_ms < raw_low:
+            raise ValueError(
+                f"{op}: day {day_ms} is past the {stage} cover "
+                f"(high_water={hw}, low_water={lw}) "
+                f"and raw is retained away below {raw_low}"
+            )
+        return False
 
     def _raw_turns(self, bucket_ids: list[int] | None = None) -> DataFrame:
         """The ONE (sid, ts_ms, tokens, text) projection both the sketch
         tier builds and the range sketch queries use — the routed==direct
         equality depends on these staying byte-identical."""
-        from modelardb_dynamic_spark.sources.timeseries import to_ms
-
         if not self._live_buckets("raw", list(range(self.wh.n_buckets))):
             # retention/purge can legitimately empty the whole raw tier;
             # the projection's schema is pinned, so serve it empty
@@ -1212,22 +1123,11 @@ class TierPipeline:
         build_sketch_tiers) with lineage high-water + retention low-water,
         raw turns histogrammed on the fly at the edges — range_agg's twin
         for the quantile question."""
-        from modelardb_dynamic_spark.operators.sketches import (
-            tiered_hist_quantiles,
-        )
-        from modelardb_dynamic_spark.plans.planner import validate_cover
+        from modelardb_dynamic_spark.operators.sketches import tiered_hist_quantiles
 
-        names = [("hist_1h", HOUR_MS), ("hist_1d", DAY_MS)]
-        hw, lw = self._sketch_route_bounds(names)
-        raw_low = self.retention_horizon("raw")
-        validate_cover(
-            [w for _, w in names], lo_ms, hi_ms, bucket_ms,
-            high_water=hw, low_water=lw, raw_low_ms=raw_low,
-            grid_ms=self.cfg.sampling_interval_ms,
+        tiers, hw, lw = self._cover(
+            ["hist_1h", "hist_1d"], lo_ms, hi_ms, bucket_ms
         )
-        tiers = [
-            (self.wh.read(self.spark, n).drop("sbucket"), w) for n, w in names
-        ]
         return tiered_hist_quantiles(
             self._raw_turns(), ["sid"], "tokens", tiers,
             lo_ms, hi_ms, bucket_ms, high_water=hw, qs=qs, low_water=lw,
@@ -1238,22 +1138,9 @@ class TierPipeline:
     ) -> DataFrame:
         """Distinct turn contents per conversation over [lo, hi) per
         bucket via the hll_1d sketch tier + raw-edge sketching."""
-        from modelardb_dynamic_spark.operators.sketches import (
-            tiered_hll_summary,
-        )
-        from modelardb_dynamic_spark.plans.planner import validate_cover
+        from modelardb_dynamic_spark.operators.sketches import tiered_hll_summary
 
-        names = [("hll_1d", DAY_MS)]
-        hw, lw = self._sketch_route_bounds(names)
-        raw_low = self.retention_horizon("raw")
-        validate_cover(
-            [w for _, w in names], lo_ms, hi_ms, bucket_ms,
-            high_water=hw, low_water=lw, raw_low_ms=raw_low,
-            grid_ms=self.cfg.sampling_interval_ms,
-        )
-        tiers = [
-            (self.wh.read(self.spark, n).drop("sbucket"), w) for n, w in names
-        ]
+        tiers, hw, lw = self._cover(["hll_1d"], lo_ms, hi_ms, bucket_ms)
         return tiered_hll_summary(
             self._raw_turns(), ["sid"], "text", tiers,
             lo_ms, hi_ms, bucket_ms, high_water=hw, low_water=lw,
@@ -1268,22 +1155,9 @@ class TierPipeline:
         audit without touching per-conv rows). CMS counters merge by sum,
         so the per-sbucket partial sketches and the routed cover compose
         in the same groupBy."""
-        from modelardb_dynamic_spark.operators.sketches import (
-            tiered_cms_estimates,
-        )
-        from modelardb_dynamic_spark.plans.planner import validate_cover
+        from modelardb_dynamic_spark.operators.sketches import tiered_cms_estimates
 
-        names = [("cms_1d", DAY_MS)]
-        hw, lw = self._sketch_route_bounds(names)
-        raw_low = self.retention_horizon("raw")
-        validate_cover(
-            [w for _, w in names], lo_ms, hi_ms, bucket_ms,
-            high_water=hw, low_water=lw, raw_low_ms=raw_low,
-            grid_ms=self.cfg.sampling_interval_ms,
-        )
-        tiers = [
-            (self.wh.read(self.spark, n).drop("sbucket"), w) for n, w in names
-        ]
+        tiers, hw, lw = self._cover(["cms_1d"], lo_ms, hi_ms, bucket_ms)
         return tiered_cms_estimates(
             self._raw_turns(), [], "sid", probes, tiers,
             lo_ms, hi_ms, bucket_ms, high_water=hw, low_water=lw,
@@ -1307,29 +1181,15 @@ class TierPipeline:
             kmv_tier,
         )
 
-        hw, lw = self._sketch_route_bounds([("kmv_1d", DAY_MS)])
-        hw_ts, lw_ts = hw.get(DAY_MS), lw.get(DAY_MS)
-        raw_low = self.retention_horizon("raw")
         tier = self.wh.read(self.spark, "kmv_1d")
 
         def day_sketch(day_ms: int) -> DataFrame:
             day_ms = (day_ms // DAY_MS) * DAY_MS
-            sealed = (
-                hw_ts is not None
-                and day_ms < hw_ts
-                and (lw_ts is None or day_ms >= lw_ts)
-            )
-            if sealed:
+            if self._sealed_day("kmv_1d", day_ms, "overlap_convs"):
                 rows = tier.where(F.col("bucket_ts") == day_ms).select(
                     F.lit(1).alias("g"), "h"
                 )
             else:
-                if raw_low is not None and day_ms < raw_low:
-                    raise ValueError(
-                        f"overlap_convs: day {day_ms} is past the kmv_1d "
-                        f"cover (high_water={hw_ts}, low_water={lw_ts}) "
-                        f"and raw is retained away below {raw_low}"
-                    )
                 src = self._raw_turns().where(
                     f"ts_ms >= {day_ms} AND ts_ms < {day_ms + DAY_MS}"
                 )
@@ -1363,16 +1223,8 @@ class TierPipeline:
         from modelardb_dynamic_spark.operators.sketches import bloom_membership
 
         day_ms = (day_ms // DAY_MS) * DAY_MS
-        hw, lw = self._sketch_route_bounds([("bloom_1d", DAY_MS)])
-        hw_ts, lw_ts = hw.get(DAY_MS), lw.get(DAY_MS)
-        raw_low = self.retention_horizon("raw")
         probes = list(dict.fromkeys(probes))
-        sealed = (
-            hw_ts is not None
-            and day_ms < hw_ts
-            and (lw_ts is None or day_ms >= lw_ts)
-        )
-        if sealed:
+        if self._sealed_day("bloom_1d", day_ms, "active_convs"):
             # probe sbuckets via the same JVM hash the stage used
             # (bounded: one tiny job over len(probes) rows)
             pdf = self.spark.createDataFrame(
@@ -1394,12 +1246,6 @@ class TierPipeline:
             }
             rows = [(p, day_ms, p in hits, False) for p in probes]
         else:
-            if raw_low is not None and day_ms < raw_low:
-                raise ValueError(
-                    f"active_convs: day {day_ms} is past the bloom_1d "
-                    f"cover (high_water={hw_ts}, low_water={lw_ts}) "
-                    f"and raw is retained away below {raw_low}"
-                )
             active = {
                 r["sid"]
                 for r in self._raw_turns()
@@ -1425,8 +1271,7 @@ class TierPipeline:
     def tier(self, name: str, gap_filled: bool = False) -> DataFrame:
         df = self.wh.read(self.spark, name)
         if gap_filled:
-            bucket_ms = dict(TIERS)[name]
-            df = gap_fill(df.drop("sbucket"), bucket_ms)
+            df = gap_fill(df.drop("sbucket"), STAGE[name].grid)
         return df
 
 
@@ -1440,10 +1285,6 @@ def warehouse_status(root: str) -> dict:
     if one is recorded. The north rule's "per-partition lineage +
     metrics" as a queryable surface (CLI: --status).
     """
-    import json as _json
-
-    from modelardb_dynamic_spark.plans.checkpoint import Lineage
-
     tables = {}
     for name in sorted(os.listdir(root)) if os.path.isdir(root) else []:
         tdir = os.path.join(root, name)
@@ -1465,7 +1306,7 @@ def warehouse_status(root: str) -> dict:
         if os.path.exists(marker):
             with open(marker) as f:
                 entry["retention_horizon_ms"] = int(
-                    _json.load(f)["horizon_ms"]
+                    json.load(f)["horizon_ms"]
                 )
         tables[name] = entry
     return {"warehouse": root, "tables": tables}

@@ -7,6 +7,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """SPARK_DRIVER_MEMORY if set, else half the host's physical RAM in
+    whole GiB (at least 1g, at most 24g). In local mode the driver JVM
+    hosts every executor too, and a heap sized past the host's RAM lets
+    it grow until the kernel kills it instead of spilling."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24, max(1, ram // 2 // (1 << 30)))}g"
+
+
 def build_session(
     app_name: str = "modelardb_dynamic_spark",
     master: str | None = None,
@@ -56,7 +68,7 @@ def build_session(
         # require microseconds anyway
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
     )
     # shuffle files / spills on tmpfs: opt-in via MDBS_TMPFS_LOCAL_DIR=1
     # (the bench sets it; a RAM-backed local dir can exhaust memory on a

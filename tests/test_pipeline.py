@@ -657,7 +657,7 @@ def test_overlap_convs_matches_python_kmv_replay(spark, transcripts, tmp_path):
     # a day past the tier's unsealed high-water falls back to raw and
     # still matches (same replay); a retained-away day fails loudly is
     # covered by the validate_cover tests for the other sketch queries.
-    hw = p._sketch_route_bounds([("kmv_1d", DAY)])[0].get(DAY)
+    hw = p._cover(["kmv_1d"], da, da + DAY, DAY)[1].get(DAY)
     assert hw is not None
     unsealed = (hw // DAY) * DAY
     if unsealed in days:
@@ -819,7 +819,7 @@ def test_active_convs_bloom_membership(spark, transcripts, tmp_path):
         for r in turns.selectExpr(f"(ts_ms DIV {DAY}) * {DAY} AS d")
         .distinct().collect()
     )
-    hw = p._sketch_route_bounds([("bloom_1d", DAY)])[0].get(DAY)
+    hw = p._cover(["bloom_1d"], days[0], days[0] + DAY, DAY)[1].get(DAY)
     assert hw is not None
     sealed_days = [d for d in days if d < hw]
     assert sealed_days, "fixture must have at least one sealed day"
@@ -990,8 +990,18 @@ def test_purge_removes_every_trace(spark, transcripts, tmp_path):
         ).select(sid_bucket(F.col("c"), 8).alias("b")).distinct().collect()
     )
     untouched = [b for b in range(8) if b not in aff_expect]
+    # every stage table on disk, so a stage added to the pipeline cannot
+    # escape the checks below
+    tables = sorted(
+        n for n in os.listdir(wh.root)
+        if os.path.isdir(os.path.join(wh.path(n), "_lineage"))
+    )
+    assert set(tables) >= {
+        "raw", "series", "segments", "tier_1m", "tier_1h", "tier_1d",
+        "hist_1h", "hist_1d", "hll_1d", "cms_1d", "kmv_1d", "bloom_1d",
+    }
     pre = {}
-    for stage in ("raw", "segments", "tier_1d", "hll_1d", "bloom_1d"):
+    for stage in tables:
         lin = Lineage(wh.path(stage))
         pre[stage] = {b: lin.get(b).committed_utc for b in untouched
                       if lin.get(b) is not None}
@@ -1001,14 +1011,16 @@ def test_purge_removes_every_trace(spark, transcripts, tmp_path):
     assert m["rows_removed"]["raw"] > 0
     assert m["sketch_rows_dropped_below_floor"] == 0
 
-    # 1. no sid-keyed stage contains a victim
-    for stage, key in (
-        ("raw", "conv_id"), ("series", "sid"), ("segments", "sid"),
-        ("tier_1m", "sid"), ("tier_1h", "sid"), ("tier_1d", "sid"),
-        ("hist_1h", "sid"), ("hist_1d", "sid"), ("hll_1d", "sid"),
-    ):
+    # 1. no stage keyed by conversation contains a victim (the merged
+    # sketches carry no conversation column; 3. checks them)
+    keyed = 0
+    for stage in tables:
         df = wh.read(spark, stage)
-        assert df.where(F.col(key).isin(victims)).count() == 0, stage
+        key = next((c for c in ("conv_id", "sid") if c in df.columns), None)
+        if key is not None:
+            keyed += 1
+            assert df.where(F.col(key).isin(victims)).count() == 0, stage
+    assert keyed >= 9
 
     # 2. untouched buckets' manifests byte-identical (not re-committed)
     for stage, mans in pre.items():
@@ -1022,9 +1034,7 @@ def test_purge_removes_every_trace(spark, transcripts, tmp_path):
     p_c = TierPipeline(spark, wh_c, CFG10, chunk_buckets=8,
                        salt_span_points=None)
     p_c.run(clean, sketches=True)
-    for table in ("raw", "series", "segments", "tier_1m", "tier_1h",
-                  "tier_1d", "hist_1h", "hist_1d", "hll_1d", "cms_1d",
-                  "kmv_1d", "bloom_1d"):
+    for table in tables:
         a = wh.read(spark, table).drop("sbucket")
         b = wh_c.read(spark, table).drop("sbucket")
         assert a.exceptAll(b).count() == 0, table
@@ -1475,3 +1485,205 @@ def test_warehouse_orc_segment_sink_roundtrip(spark, series, tmp_path):
     assert b.count() == segs.count() > 0
     with pytest.raises(ValueError, match="format"):
         wh.write(segs, "bad", format="avro")
+
+
+def _warehouse_state(spark, wh):
+    """{table: (sorted row reprs, {bucket: manifest rows/hw/fingerprint/
+    ts_col})} of every stage table."""
+    import os
+
+    from modelardb_dynamic_spark.plans.checkpoint import Lineage
+
+    out = {}
+    for t in sorted(os.listdir(wh.root)):
+        if not os.path.isdir(os.path.join(wh.path(t), "_lineage")):
+            continue
+        lin = Lineage(wh.path(t))
+        rows = wh.read(spark, t).collect()
+        out[t] = (
+            sorted(repr(tuple(r)) for r in rows),
+            {
+                b: (m.rows, m.high_water_ts, m.input_fingerprint, m.ts_col)
+                for b in lin.completed_buckets() for m in [lin.get(b)]
+            },
+        )
+    return out
+
+
+class _Crash(Exception):
+    pass
+
+
+# (call, n, when): crash before/after the n-th rename into the target
+# stage, or before its n-th manifest commit
+_CRASH_POINTS = [
+    ("rename", 1, "before"), ("rename", 1, "after"),
+    ("rename", 2, "before"), ("rename", 2, "after"),
+    ("commit", 1, "before"),
+]
+
+
+def _inject_crash(monkeypatch, root, stage, point):
+    import os
+
+    from modelardb_dynamic_spark.plans.checkpoint import Lineage
+
+    call, n, when = point
+    seen = {"rename": 0, "commit": 0}
+    real_rename, real_commit = os.rename, Lineage.commit
+
+    def fires(kind):
+        if kind != call:
+            return False
+        seen[kind] += 1
+        return seen[kind] == n
+
+    def rename(src, dst, *a, **k):
+        if not str(dst).startswith(root + os.sep) or not fires("rename"):
+            return real_rename(src, dst, *a, **k)
+        if when == "before":
+            raise _Crash(point)
+        real_rename(src, dst, *a, **k)
+        raise _Crash(point)
+
+    def commit(self, stage_, *a, **k):
+        if stage_ == stage and fires("commit"):
+            raise _Crash(point)
+        return real_commit(self, stage_, *a, **k)
+
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(Lineage, "commit", commit)
+
+
+@pytest.fixture(scope="module")
+def crash_base(spark, transcripts, tmp_path_factory):
+    """A 2-bucket warehouse with sketch tiers, raw retained below its
+    first hour, built without the turns of the last two hours (the append
+    batch)."""
+    from modelardb_dynamic_spark.sources.timeseries import to_ms
+
+    lo, hi = transcripts.agg(F.min(to_ms("ts")), F.max(to_ms("ts"))).first()
+    late = to_ms("ts") >= hi - 2 * HOUR_MS
+    root = str(tmp_path_factory.mktemp("crash") / "base")
+    wh = Warehouse(root, n_buckets=2)
+    p = TierPipeline(spark, wh, CFG10, chunk_buckets=1, salt_span_points=None)
+    p.run(transcripts.where(~late), sketches=True)
+    p.retain_raw(lo + HOUR_MS)
+    victims = [r.conv_id for r in
+               transcripts.select("conv_id").distinct().orderBy("conv_id")
+               .limit(3).collect()]
+    ops = {
+        "retain_raw": lambda p: p.retain_raw(lo + 5 * HOUR_MS),
+        "purge": lambda p: p.purge(victims, batch_id="crash"),
+        "append": lambda p: p.append(transcripts.where(late), batch_id="crash"),
+    }
+    return root, ops
+
+
+@pytest.mark.parametrize("op", ["retain_raw", "purge", "append"])
+def test_crash_at_every_swap_step_resumes_to_clean_run(
+    spark, crash_base, tmp_path, monkeypatch, op
+):
+    """A crash before or after either rename of a bucket swap, or before
+    its manifest commit, then a resume, leaves every table's rows and
+    manifests equal to an uninterrupted run, and fsck clean. The first
+    stage each op rewrites (raw) rebuilds its buckets from their own rows,
+    so a swap that deleted the old bucket before installing the new one
+    would lose it and commit the loss."""
+    import shutil
+
+    base, ops = crash_base
+
+    def fresh(name):
+        root = str(tmp_path / name)
+        shutil.copytree(base, root)
+        wh = Warehouse(root, n_buckets=2)
+        return wh, TierPipeline(spark, wh, CFG10, chunk_buckets=1,
+                                salt_span_points=None)
+
+    wh_c, p_c = fresh("clean")
+    want_out = ops[op](p_c)
+    want = _warehouse_state(spark, wh_c)
+    if op == "append":  # the batch really lands above the retention floor
+        assert want_out["affected_buckets"]
+        assert want_out["rejected_below_retention"] == 0
+    if op == "purge":
+        assert want_out["rows_removed"]["raw"] > 0
+
+    for i, point in enumerate(_CRASH_POINTS):
+        wh, p = fresh(f"crash{i}")
+        _inject_crash(monkeypatch, wh.path("raw"), "raw", point)
+        with pytest.raises(_Crash):
+            ops[op](p)
+        monkeypatch.undo()
+        out = ops[op](p)  # resume
+        if op != "retain_raw":
+            assert out == want_out, point
+        assert _warehouse_state(spark, wh) == want, point
+        for table, r in p.fsck().items():
+            assert r["mismatches"] == [], (point, table)
+
+
+def test_resumed_purge_reports_whole_rows_removed(
+    spark, transcripts, tmp_path, monkeypatch
+):
+    """A purge that crashes after its first chunk and is then resumed
+    reports the same rows_removed as an uninterrupted purge: the
+    pre-purge counts are snapshotted before the first rewrite."""
+    import shutil
+
+    from modelardb_dynamic_spark.sources.catalog import sid_bucket
+
+    wh = Warehouse(str(tmp_path / "rs"), n_buckets=4)
+    p = TierPipeline(spark, wh, CFG10, chunk_buckets=1, salt_span_points=None)
+    p.run(transcripts)
+    shutil.copytree(wh.root, str(tmp_path / "rs2"))
+    # victims in two buckets, so the raw stage has a second chunk
+    convs = transcripts.select("conv_id").distinct().select(
+        "conv_id", sid_bucket(F.col("conv_id"), 4).alias("b")
+    ).collect()
+    by_b = {}
+    for r in sorted(convs):
+        by_b.setdefault(r.b, r.conv_id)
+    victims = sorted(by_b.values())[:2]
+    want = p.purge(victims, batch_id="r1")
+    assert len(want["affected_buckets"]) == 2
+
+    wh2 = Warehouse(str(tmp_path / "rs2"), n_buckets=4)
+    p2 = TierPipeline(spark, wh2, CFG10, chunk_buckets=1, salt_span_points=None)
+    real = TierPipeline._run_stage
+
+    def crash_after_first_chunk(self, *a, **k):
+        monkeypatch.setattr(TierPipeline, "_run_stage", real)
+        return real(self, *a, **{**k, "fail_after_chunks": 1})
+
+    monkeypatch.setattr(TierPipeline, "_run_stage", crash_after_first_chunk)
+    with pytest.raises(RuntimeError, match="injected failure after 1 chunks"):
+        p2.purge(victims, batch_id="r1")
+    got = p2.purge(victims, batch_id="r1")
+    assert got["rows_removed"]["raw"] > 0
+    assert got == want
+    # the snapshot is gone once the purge completes: a re-run counts 0
+    again = p2.purge(victims, batch_id="r1")
+    assert all(v == 0 for v in again["rows_removed"].values())
+
+
+def test_cli_reports_every_stage(spark, tmp_path, capsys):
+    """The CLI's "stages" entry lists every table the run built, sketch
+    tiers and the series archive included."""
+    import json
+
+    from modelardb_dynamic_spark.__main__ import main
+
+    main([
+        "--warehouse", str(tmp_path / "cli"), "--input=-synth:6",
+        "--buckets", "2", "--sketches", "--archive-series", "0",
+    ])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert set(out["stages"]) == {
+        "raw", "series", "segments", "tier_1m", "tier_1h", "tier_1d",
+        "hist_1h", "hist_1d", "hll_1d", "cms_1d", "kmv_1d", "bloom_1d",
+        "series_arch",
+    }
+    assert out["stages"]["hll_1d"]["buckets"] == 2
+    assert out["stages"]["raw"]["rows"] > 0
