@@ -55,7 +55,8 @@ def main(argv: list[str] | None = None) -> None:
                          "with it; reruns with the same id are no-ops)")
     ap.add_argument("--range-agg", default=None, metavar="LO:HI:BUCKET_MS",
                     help="after the build, answer a range aggregate via "
-                         "the tier-selection planner and print the rows")
+                         "the tier-selection planner and print the rows "
+                         "and its cover (the tiers read, whether raw is)")
     ap.add_argument("--range-heavy", default=None,
                     metavar="LO:HI:BUCKET_MS:CONV[,CONV...]",
                     help="after a --sketches build, estimate the probe "
@@ -180,6 +181,7 @@ def main(argv: list[str] | None = None) -> None:
         out["range_agg"] = {
             "n_rows": len(rows),
             "sample": [r.asDict() for r in rows[:5]],
+            "cover": pipe.range_cover(lo, hi, w),
         }
     if args.range_heavy:
         lo, hi, w, probes_csv = args.range_heavy.split(":", 3)

@@ -392,21 +392,25 @@ def _routed_sketch(
 ):
     """Shared route -> union -> merge shape for both sketch families;
     the cover itself is plans/planner.py route_tiers (ONE implementation
-    of the exactly-once algebra, shared with tiered_agg)."""
-    from modelardb_dynamic_spark.plans.planner import route_tiers
+    of the exactly-once algebra, shared with tiered_agg). Only the
+    branches the cover keeps are built: raw may be None when it needs no
+    raw rows, and a tier frame None when it drops that level."""
+    from modelardb_dynamic_spark.plans.planner import bucket_sql, route_tiers
 
     routed, raw_pred = route_tiers(
         tiers, lo_ms, hi_ms, bucket_ms, high_water, low_water
     )
+    rb = bucket_sql("bucket_ts", bucket_ms)
     parts = [
         t.selectExpr(*keys, f"{rb} AS bucket_ts", *sketch_cols)
-        for t, rb in routed
+        for t, _ in routed
     ]
-    parts.append(
-        raw_tier_fn(
-            raw.where(raw_pred), f"((ts_ms) DIV {bucket_ms}) * {bucket_ms}"
+    if raw_pred is not None:
+        if raw is None:
+            raise ValueError("the cover needs raw rows")
+        parts.append(
+            raw_tier_fn(raw.where(raw_pred), bucket_sql("ts_ms", bucket_ms))
         )
-    )
     u = parts[0]
     for p_ in parts[1:]:
         u = u.unionByName(p_)
@@ -415,10 +419,10 @@ def _routed_sketch(
 
 
 def tiered_hll_summary(
-    raw: DataFrame,
+    raw: DataFrame | None,
     keys: list[str],
     value_col: str,
-    tiers: list[tuple[DataFrame, int]],
+    tiers: list[tuple[DataFrame | None, int]],
     lo_ms: int,
     hi_ms: int,
     bucket_ms: int,
@@ -438,10 +442,10 @@ def tiered_hll_summary(
 
 
 def tiered_hist_quantiles(
-    raw: DataFrame,
+    raw: DataFrame | None,
     keys: list[str],
     value_expr: str,
-    tiers: list[tuple[DataFrame, int]],
+    tiers: list[tuple[DataFrame | None, int]],
     lo_ms: int,
     hi_ms: int,
     bucket_ms: int,
@@ -641,11 +645,11 @@ def duck_cms_estimates_sql(
 
 
 def tiered_cms_estimates(
-    raw: DataFrame,
+    raw: DataFrame | None,
     keys: list[str],
     value_col: str,
     probes: list[str],
-    tiers: list[tuple[DataFrame, int]],
+    tiers: list[tuple[DataFrame | None, int]],
     lo_ms: int,
     hi_ms: int,
     bucket_ms: int,

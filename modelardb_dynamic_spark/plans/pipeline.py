@@ -1030,28 +1030,41 @@ class TierPipeline:
         START: it and everything after are re-answered from finer tiers /
         the series table (real-time continuous aggregation). Out-of-order
         rows landing in buckets strictly before the high-water need a tier
-        rebuild (new fingerprint), not the planner. Result == aggregating
-        the series table directly, pinned by tests/test_pipeline.py and
-        the `tiered_agg` oracle row."""
+        rebuild (new fingerprint), not the planner. Only the tiers the
+        cover uses are read, and the series table only when some of the
+        window falls through to raw rows (range_cover says which). Result
+        == aggregating the series table directly, pinned by
+        tests/test_pipeline.py and the `tiered_agg` oracle row."""
         from modelardb_dynamic_spark.plans.planner import tiered_agg
 
-        tiers, hw, lw = self._cover(
+        tiers, hw, lw, raw = self._cover(
             [n for n, _ in TIERS], lo_ms, hi_ms, bucket_ms, edge="series"
         )
         return tiered_agg(
-            self.wh.read(self.spark, "series"), tiers, lo_ms, hi_ms, bucket_ms,
-            high_water=hw, low_water=lw,
+            self.wh.read(self.spark, "series") if raw else None,
+            tiers, lo_ms, hi_ms, bucket_ms, high_water=hw, low_water=lw,
         )
 
-    def _cover(
+    def range_cover(self, lo_ms: int, hi_ms: int, bucket_ms: int) -> dict:
+        """What range_agg(lo, hi, bucket_ms) reads, from lineage alone:
+        {"tiers": [tier tables, coarse -> fine], "raw": whether the series
+        table is read too}."""
+        names = {w: n for n, w in TIERS}
+        _, _, used, raw = self._plan(
+            list(names.values()), lo_ms, hi_ms, bucket_ms, "series"
+        )
+        return {"tiers": [names[w] for w in used], "raw": raw}
+
+    def _plan(
         self, names: list[str], lo_ms: int, hi_ms: int, bucket_ms: int,
-        edge: str = "raw",
-    ) -> tuple[list[tuple[DataFrame, int]], dict[int, int], dict[int, int]]:
-        """The routed stages' [(frame, grid)] and their {grid: high_water}
-        (lineage) and {grid: low_water} (retention), once validate_cover
-        has checked that they and the `edge` table (the raw rows the
-        routed read falls back to) can answer [lo, hi) @ bucket_ms."""
-        from modelardb_dynamic_spark.plans.planner import validate_cover
+        edge: str,
+    ) -> tuple[dict[int, int], dict[int, int], list[int], bool]:
+        """The routed stages' {grid: high_water} (lineage) and {grid:
+        low_water} (retention), once validate_cover has checked that they
+        and the `edge` table (the raw rows the routed read falls back to)
+        can answer [lo, hi) @ bucket_ms; then planner.cover_plan's grids
+        that contribute and whether raw rows do."""
+        from modelardb_dynamic_spark.plans.planner import cover_plan, validate_cover
 
         hw, lw = {}, {}
         for name in names:
@@ -1062,17 +1075,33 @@ class TierPipeline:
             rh = self.retention_horizon(name)
             if rh is not None:
                 lw[w] = rh
+        grids = [STAGE[n].grid for n in names]
         validate_cover(
-            [STAGE[n].grid for n in names], lo_ms, hi_ms, bucket_ms,
+            grids, lo_ms, hi_ms, bucket_ms,
             high_water=hw, low_water=lw,
             raw_low_ms=self.retention_horizon(edge),
             grid_ms=self.cfg.sampling_interval_ms,
         )
+        return (hw, lw, *cover_plan(grids, lo_ms, hi_ms, bucket_ms, hw, lw))
+
+    def _cover(
+        self, names: list[str], lo_ms: int, hi_ms: int, bucket_ms: int,
+        edge: str = "raw",
+    ) -> tuple[list[tuple[DataFrame | None, int]], dict[int, int],
+               dict[int, int], bool]:
+        """_plan's marks with the routed stages' [(frame, grid)] — frame
+        None for a stage the cover drops, so it is never read — and
+        whether the routed read needs the raw rows."""
+        hw, lw, used, raw = self._plan(names, lo_ms, hi_ms, bucket_ms, edge)
         tiers = [
-            (self.wh.read(self.spark, n).drop("sbucket"), STAGE[n].grid)
+            (
+                self.wh.read(self.spark, n).drop("sbucket")
+                if STAGE[n].grid in used else None,
+                STAGE[n].grid,
+            )
             for n in names
         ]
-        return tiers, hw, lw
+        return tiers, hw, lw, raw
 
     def _sealed_day(self, stage: str, day_ms: int, op: str) -> bool:
         """Whether the day bucket starting at day_ms is sealed in the
@@ -1125,11 +1154,11 @@ class TierPipeline:
         for the quantile question."""
         from modelardb_dynamic_spark.operators.sketches import tiered_hist_quantiles
 
-        tiers, hw, lw = self._cover(
+        tiers, hw, lw, raw = self._cover(
             ["hist_1h", "hist_1d"], lo_ms, hi_ms, bucket_ms
         )
         return tiered_hist_quantiles(
-            self._raw_turns(), ["sid"], "tokens", tiers,
+            self._raw_turns() if raw else None, ["sid"], "tokens", tiers,
             lo_ms, hi_ms, bucket_ms, high_water=hw, qs=qs, low_water=lw,
         )
 
@@ -1140,9 +1169,9 @@ class TierPipeline:
         bucket via the hll_1d sketch tier + raw-edge sketching."""
         from modelardb_dynamic_spark.operators.sketches import tiered_hll_summary
 
-        tiers, hw, lw = self._cover(["hll_1d"], lo_ms, hi_ms, bucket_ms)
+        tiers, hw, lw, raw = self._cover(["hll_1d"], lo_ms, hi_ms, bucket_ms)
         return tiered_hll_summary(
-            self._raw_turns(), ["sid"], "text", tiers,
+            self._raw_turns() if raw else None, ["sid"], "text", tiers,
             lo_ms, hi_ms, bucket_ms, high_water=hw, low_water=lw,
         )
 
@@ -1157,9 +1186,9 @@ class TierPipeline:
         in the same groupBy."""
         from modelardb_dynamic_spark.operators.sketches import tiered_cms_estimates
 
-        tiers, hw, lw = self._cover(["cms_1d"], lo_ms, hi_ms, bucket_ms)
+        tiers, hw, lw, raw = self._cover(["cms_1d"], lo_ms, hi_ms, bucket_ms)
         return tiered_cms_estimates(
-            self._raw_turns(), [], "sid", probes, tiers,
+            self._raw_turns() if raw else None, [], "sid", probes, tiers,
             lo_ms, hi_ms, bucket_ms, high_water=hw, low_water=lw,
         )
 

@@ -26,6 +26,17 @@ losslessly (count/sum/min/max; avg = vsum/cnt at the end), so the result
 is identical to aggregating raw rows directly — which is what the DuckDB
 oracle (queries.py `tiered_agg`) and the differential pytest check.
 
+Pruning: the driver knows the whole cover before any data is read.
+cover_plan turns the window, bucket_ms and each tier's high/low-water
+marks into the set of levels that can hold a USED row and whether any
+part of [lo, hi) falls through to raw rows; route_tiers builds only
+those branches (their USED predicates still exclude via EVERY coarser
+level, dropped ones included, so the algebra above is unchanged), and
+the callers read only the tables the cover uses. When one tier of width
+bucket_ms answers the whole window, tiered_agg returns that tier's
+filtered projection with no union and no shuffle: tier rows are unique
+per (sid, metric, bucket_ts), so the merge would be an identity.
+
 Scale notes (100 TB): the interior of a large range is answered from the
 1d tier (hi-lo)/86_400_000 rows per series instead of raw turns — the
 scan volume drops by the tier's compression factor (~1440x minute->day);
@@ -33,9 +44,10 @@ only O(edges + tail-past-high-water) touches finer data. Every branch is
 a filtered parquet scan with an explicit bucket_ts/ts_ms range conjunct
 (pushed to row-group stats; the DIV alignment test rides on top), a
 unionByName, and ONE shuffle for the final groupBy on (sid, metric,
-bucket_ts). No reference counterpart — ModelarDB answers every query from
-the segment store (engines/spark/SparkUDAF.scala); this operator is the
-continuous-aggregate routing layer a tiered deployment needs.
+bucket_ts) — none at all when a single tier answers. No reference
+counterpart — ModelarDB answers every query from the segment store
+(engines/spark/SparkUDAF.scala); this operator is the continuous-aggregate
+routing layer a tiered deployment needs.
 
 Timestamps must be non-negative epoch ms (DIV truncates toward zero).
 """
@@ -46,6 +58,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TIER_COLS = ("cnt", "vsum", "vmin", "vmax")
+
+
+def bucket_sql(col: str, w: int, div: str = "DIV") -> str:
+    """SQL for the start of the width-w bucket holding timestamp col."""
+    return f"(({col}) {div} {w}) * {w}"
 
 
 def _inside_sql(
@@ -85,28 +102,90 @@ def _used_sql(
     (width, high_water, low_water) levels."""
     parts = [_inside_sql(col, w, lo, hi, bucket_ms, hw, div, lw)]
     for cw, chw, clw in coarser:
-        parent = f"(({col}) {div} {cw}) * {cw}"
+        parent = bucket_sql(col, cw, div)
         parts.append(
             f"NOT {_inside_sql(parent, cw, lo, hi, bucket_ms, chw, div, clw)}"
         )
     return " AND ".join(parts)
 
 
+def _inside_span(
+    w: int, lo: int, hi: int, bucket_ms: int, hw: int | None, lw: int | None,
+) -> tuple[int, int] | None:
+    """The time span [a, b) the INSIDE buckets of the width-w level cover,
+    or None when it is not one interval (w < bucket_ms and w does not
+    divide it: some buckets straddle a result boundary). A width that
+    divides bucket_ms never straddles one, so its inside buckets are every
+    w-aligned bucket in [max(lo, lw), min(hi, hw)); a width wider than
+    bucket_ms always straddles one, so it covers nothing."""
+    if w > bucket_ms:
+        return (lo, lo)
+    if bucket_ms % w:
+        return None
+    a = lo if lw is None else max(lo, lw)
+    b = hi if hw is None else min(hi, hw)
+    return -(-a // w) * w, (b // w) * w
+
+
+def _covers(spans: list[tuple[int, int]], a: int, b: int) -> bool:
+    """Whether the union of spans contains every ms of [a, b)."""
+    for s, e in sorted(spans):
+        if s > a:
+            break
+        a = max(a, e)
+    return a >= b
+
+
+def cover_plan(
+    widths: list[int],
+    lo_ms: int,
+    hi_ms: int,
+    bucket_ms: int,
+    high_water: dict[int, int] | None = None,
+    low_water: dict[int, int] | None = None,
+) -> tuple[list[int], bool]:
+    """Driver-side and data-free: the level widths (coarse -> fine) that
+    can contribute a USED row to [lo_ms, hi_ms) @ bucket_ms, and whether
+    any raw row can. A level contributes iff its inside span minus the
+    spans of the coarser levels is non-empty; raw contributes iff some ms
+    of [lo, hi) lies in no span (continuous ms, not grid points: sketch
+    raw turns are off the grid). A level whose span is not one interval
+    (_inside_span None) is kept and subtracts nothing, so the plan only
+    ever keeps a superset of the exact one. An empty window plans the raw
+    branch alone, which selects nothing."""
+    hw = high_water or {}
+    lw = low_water or {}
+    used, spans = [], []
+    for w in sorted(widths, reverse=True):
+        span = _inside_span(w, lo_ms, hi_ms, bucket_ms, hw.get(w), lw.get(w))
+        if span is None:
+            used.append(w)
+        elif span[0] < span[1]:
+            if not _covers(spans, *span):
+                used.append(w)
+            spans.append(span)
+    return used, not used or not _covers(spans, lo_ms, hi_ms)
+
+
 def route_tiers(
-    tiers: list[tuple[DataFrame, int]],
+    tiers: list[tuple[DataFrame | None, int]],
     lo_ms: int,
     hi_ms: int,
     bucket_ms: int,
     high_water: dict[int, int] | None,
     low_water: dict[int, int] | None = None,
-) -> tuple[list[tuple[DataFrame, str]], str]:
+) -> tuple[list[tuple[DataFrame, int]], str | None]:
     """THE cover routing, shared by every tiered reader (tiered_agg here,
     the sketch routers in operators/sketches.py): validates that tier
-    widths nest, filters each tier to its USED rows (range conjunct first
-    so it pushes to the scan), and returns [(filtered_tier, result-bucket
-    SQL expr)] coarse->fine plus the raw-row predicate for the residue.
-    One implementation so a fix to the cover algebra propagates to every
-    consumer (it is the exactly-once core the fuzz suite pins).
+    widths nest, keeps only the levels cover_plan says contribute, filters
+    each to its USED rows (range conjunct first so it pushes to the scan),
+    and returns [(filtered_tier, width)] coarse->fine plus the raw-row
+    predicate for the residue — None when cover_plan finds no residue.
+    A dropped level's frame may be None (callers that plan first read
+    only what the cover uses); its (w, hw, lw) still enters every finer
+    level's exclusion. One implementation so a fix to the cover algebra
+    propagates to every consumer (it is the exactly-once core the fuzz
+    suite pins).
 
     low_water: {width: inclusive_ms} — buckets BEFORE a tier's mark were
     dropped by retention (TierPipeline.retain); the cover treats them as
@@ -128,27 +207,32 @@ def route_tiers(
                 f"tier widths must nest: {coarse_w} is not a multiple "
                 f"of {fine_w}"
             )
-    rb = f"((bucket_ts) DIV {bucket_ms}) * {bucket_ms}"
+    used, raw = cover_plan(widths, lo_ms, hi_ms, bucket_ms, hw, lw)
     branches, coarser = [], []
     for tier, w in ordered:
-        pred = _used_sql(
-            "bucket_ts", w, coarser, lo_ms, hi_ms, bucket_ms, hw.get(w),
-            lw=lw.get(w),
-        )
-        branches.append(
-            (
-                tier
-                # explicit range conjunct first: this is the pushable part
-                .where(f"bucket_ts >= {lo_ms} AND bucket_ts < {hi_ms}")
-                .where(pred),
-                rb,
+        if w in used:
+            if tier is None:
+                raise ValueError(f"the cover needs the width-{w} tier")
+            pred = _used_sql(
+                "bucket_ts", w, coarser, lo_ms, hi_ms, bucket_ms, hw.get(w),
+                lw=lw.get(w),
             )
-        )
+            branches.append(
+                (
+                    tier
+                    # explicit range conjunct first: the pushable part
+                    .where(f"bucket_ts >= {lo_ms} AND bucket_ts < {hi_ms}")
+                    .where(pred),
+                    w,
+                )
+            )
         coarser.append((w, hw.get(w), lw.get(w)))
+    if not raw:
+        return branches, None
     raw_pred = " AND ".join(
         [f"ts_ms >= {lo_ms} AND ts_ms < {hi_ms}"]
         + [
-            f"NOT {_inside_sql(f'((ts_ms) DIV {cw}) * {cw}', cw, lo_ms, hi_ms, bucket_ms, chw, lw=clw)}"
+            f"NOT {_inside_sql(bucket_sql('ts_ms', cw), cw, lo_ms, hi_ms, bucket_ms, chw, lw=clw)}"
             for cw, chw, clw in coarser
         ]
     )
@@ -156,8 +240,8 @@ def route_tiers(
 
 
 def tiered_agg(
-    series: DataFrame,
-    tiers: list[tuple[DataFrame, int]],
+    series: DataFrame | None,
+    tiers: list[tuple[DataFrame | None, int]],
     lo_ms: int,
     hi_ms: int,
     bucket_ms: int,
@@ -168,32 +252,45 @@ def tiered_agg(
     """count/sum/min/max per (sid, metric) per bucket_ms-aligned bucket
     over [lo_ms, hi_ms), routed through the coarsest exact tier cover.
 
-    series: (sid, metric, ts_ms, <value_col>) — the finest (raw grid) rows.
+    series: (sid, metric, ts_ms, <value_col>) — the finest (raw grid) rows;
+            may be None when cover_plan needs no raw rows.
     tiers:  [(tier_df, width_ms), ...] any order; each tier_df has the
             TIER_SCHEMA columns (sid, metric, bucket_ts, cnt, vsum,
-            vmin, vmax) as built by operators/rollup.py.
+            vmin, vmax) as built by operators/rollup.py; may be None for
+            a level cover_plan drops.
     high_water: {width_ms: exclusive_complete_to_ms} — buckets at or past
             a tier's mark are treated as not-yet-materialized and the
             cover falls through to finer tiers / raw (late-arriving tail).
+
+    Only the branches route_tiers keeps are built. When that is a single
+    tier of width bucket_ms and no raw branch, its filtered projection is
+    the answer as it stands — one scan, no union, no shuffle — because
+    tier rows are unique per (sid, metric, bucket_ts).
     """
     routed, raw_pred = route_tiers(
         tiers, lo_ms, hi_ms, bucket_ms, high_water, low_water
     )
+    rb = bucket_sql("bucket_ts", bucket_ms)
     branches = [
         t.selectExpr("sid", "metric", f"{rb} AS bucket_ts", *TIER_COLS)
-        for t, rb in routed
+        for t, _ in routed
     ]
-    branches.append(
-        series.where(raw_pred).selectExpr(
-            "sid",
-            "metric",
-            f"((ts_ms) DIV {bucket_ms}) * {bucket_ms} AS bucket_ts",
-            "CAST(1 AS BIGINT) AS cnt",
-            f"CAST({value_col} AS DOUBLE) AS vsum",
-            f"CAST({value_col} AS FLOAT) AS vmin",
-            f"CAST({value_col} AS FLOAT) AS vmax",
+    if raw_pred is None and len(routed) == 1 and routed[0][1] == bucket_ms:
+        return branches[0]
+    if raw_pred is not None:
+        if series is None:
+            raise ValueError("the cover needs raw series rows")
+        branches.append(
+            series.where(raw_pred).selectExpr(
+                "sid",
+                "metric",
+                f"{bucket_sql('ts_ms', bucket_ms)} AS bucket_ts",
+                "CAST(1 AS BIGINT) AS cnt",
+                f"CAST({value_col} AS DOUBLE) AS vsum",
+                f"CAST({value_col} AS FLOAT) AS vmin",
+                f"CAST({value_col} AS FLOAT) AS vmax",
+            )
         )
-    )
     u = branches[0]
     for b in branches[1:]:
         u = u.unionByName(b)

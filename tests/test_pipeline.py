@@ -174,6 +174,24 @@ def test_fused_compress_transcripts_identical(spark, transcripts, series):
         spark.conf.set(conf, prev)
 
 
+def _direct_agg(series, lo, hi, w):
+    return sorted(
+        tuple(r)
+        for r in series.where(f"ts_ms >= {lo} AND ts_ms < {hi}")
+        .groupBy(
+            "sid", "metric",
+            F.expr(f"((ts_ms) DIV {w}) * {w}").alias("bucket_ts"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(F.col("value").cast("double")).alias("vsum"),
+            F.min(F.col("value").cast("float")).alias("vmin"),
+            F.max(F.col("value").cast("float")).alias("vmax"),
+        )
+        .collect()
+    )
+
+
 def test_range_agg_real_time_tail(spark, transcripts, tmp_path):
     """range_agg (tier-selection planner + lineage high-water): build the
     warehouse from the OLD 75% of the transcripts, then land the full set
@@ -198,24 +216,55 @@ def test_range_agg_real_time_tail(spark, transcripts, tmp_path):
     assert s_hi >= cut  # the scenario is real: series extends past the tiers
     lo = s_lo + 7 * 60_000
     hi = s_hi - 3 * 60_000
-    got = p.range_agg(lo, hi, HOUR_MS)
-    want = (
-        series.where(f"ts_ms >= {lo} AND ts_ms < {hi}")
-        .groupBy(
-            "sid", "metric",
-            F.expr(f"((ts_ms) DIV {HOUR_MS}) * {HOUR_MS}").alias("bucket_ts"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("value").cast("double")).alias("vsum"),
-            F.min(F.col("value").cast("float")).alias("vmin"),
-            F.max(F.col("value").cast("float")).alias("vmax"),
-        )
+    got = sorted(tuple(r) for r in p.range_agg(lo, hi, HOUR_MS).collect())
+    assert got == _direct_agg(series, lo, hi, HOUR_MS) and got
+    # the stale tiers plus the series rows past their high-water
+    cover = p.range_cover(lo, hi, HOUR_MS)
+    assert cover["raw"] and cover["tiers"], cover
+
+
+def test_tier_rows_unique_after_maintenance(spark, transcripts, tmp_path):
+    """The invariant that lets tiered_agg skip its merge when one tier of
+    width bucket_ms answers: after run, append, purge and retain, every
+    tier holds exactly one row per (sid, metric, bucket_ts). On the same
+    warehouse range_agg equals the direct aggregate of series both on
+    that groupBy-free path and on an unaligned window that crosses the
+    tiers' high-water (tiers plus raw)."""
+    late = F.col("conv_id").isin(["conv00000004", "conv00000019"]) & (
+        F.pmod(F.col("turn_idx"), F.lit(6)) == 1
     )
-    cols = ["sid", "metric", "bucket_ts", "cnt", "vsum", "vmin", "vmax"]
-    g = sorted(tuple(r) for r in got.select(cols).collect())
-    w = sorted(tuple(r) for r in want.select(cols).collect())
-    assert g == w and len(g) > 0
+    wh = Warehouse(str(tmp_path / "uniq"), n_buckets=4)
+    p = TierPipeline(spark, wh, CFG0, chunk_buckets=2, salt_span_points=None)
+    p.run(transcripts.where(~late))
+    p.append(transcripts.where(late), batch_id="late")
+    p.purge(["conv00000011"], batch_id="gone")
+    series = wh.read(spark, "series")
+    s_lo, s_hi = series.agg(F.min("ts_ms"), F.max("ts_ms")).collect()[0]
+    L = ((s_lo + (s_hi - s_lo) // 2) // HOUR_MS) * HOUR_MS
+    p.retain("tier_1m", L)
+    for table in ("tier_1m", "tier_1h", "tier_1d"):
+        t = wh.read(spark, table)
+        dup = t.groupBy("sid", "metric", "bucket_ts").count().where("count > 1")
+        assert t.count() > 0 and dup.count() == 0, table
+    assert transcripts.where("conv_id = 'conv00000011'").count() > 0
+    assert series.where("sid = 'conv00000011'").count() == 0
+
+    # hour-aligned window at the 1h tier's width: tier_1h alone
+    lo = L + HOUR_MS
+    hi = lo + 3 * HOUR_MS
+    assert p.range_cover(lo, hi, HOUR_MS) == {
+        "tiers": ["tier_1h"], "raw": False
+    }
+    got = sorted(tuple(r) for r in p.range_agg(lo, hi, HOUR_MS).collect())
+    assert got == _direct_agg(series, lo, hi, HOUR_MS) and got
+
+    # unaligned window above the 1m horizon, past every high-water
+    lo = L + 7 * 60_000 + 13_000
+    hi = s_hi + 1
+    cover = p.range_cover(lo, hi, HOUR_MS)
+    assert cover["raw"] and "tier_1h" in cover["tiers"], cover
+    got = sorted(tuple(r) for r in p.range_agg(lo, hi, HOUR_MS).collect())
+    assert got == _direct_agg(series, lo, hi, HOUR_MS) and got
 
 
 def test_compression_ratio_positive(spark, series):
@@ -379,27 +428,11 @@ def test_retention_aware_range_agg(spark, transcripts, tmp_path):
     # hour-aligned query spanning the horizon: 1h/1d serve the old side
     lo = (s_lo // HOUR_MS) * HOUR_MS
     hi = ((s_hi // HOUR_MS) + 1) * HOUR_MS
-    got = p.range_agg(lo, hi, HOUR_MS)
+    got = sorted(tuple(r) for r in p.range_agg(lo, hi, HOUR_MS).collect())
     # ground truth: the retained series lost pre-horizon history, so
     # recompute it from the original transcripts
     full_series = transcript_series(transcripts, 60_000)
-    want = (
-        full_series.where(f"ts_ms >= {lo} AND ts_ms < {hi}")
-        .groupBy(
-            "sid", "metric",
-            F.expr(f"((ts_ms) DIV {HOUR_MS}) * {HOUR_MS}").alias("bucket_ts"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("value").cast("double")).alias("vsum"),
-            F.min(F.col("value").cast("float")).alias("vmin"),
-            F.max(F.col("value").cast("float")).alias("vmax"),
-        )
-    )
-    cols = ["sid", "metric", "bucket_ts", "cnt", "vsum", "vmin", "vmax"]
-    g = sorted(tuple(r) for r in got.select(cols).collect())
-    w = sorted(tuple(r) for r in want.select(cols).collect())
-    assert g == w and len(g) > 0
+    assert got == _direct_agg(full_series, lo, hi, HOUR_MS) and got
 
     # sub-hour edges below the horizon: nobody can answer -> loud failure
     with pytest.raises(ValueError, match="retention horizon"):
@@ -1670,7 +1703,8 @@ def test_resumed_purge_reports_whole_rows_removed(
 
 def test_cli_reports_every_stage(spark, tmp_path, capsys):
     """The CLI's "stages" entry lists every table the run built, sketch
-    tiers and the series archive included."""
+    tiers and the series archive included; --range-agg reports its
+    cover."""
     import json
 
     from modelardb_dynamic_spark.__main__ import main
@@ -1687,3 +1721,14 @@ def test_cli_reports_every_stage(spark, tmp_path, capsys):
     }
     assert out["stages"]["hll_1d"]["buckets"] == 2
     assert out["stages"]["raw"]["rows"] > 0
+
+    # --range-agg on the built warehouse prints the planner's cover: an
+    # hour-aligned window below the 1h high-water reads tier_1h alone
+    hw = out["stages"]["tier_1h"]["high_water_ts"]
+    main([
+        "--warehouse", str(tmp_path / "cli"), "--input=-synth:6",
+        "--buckets", "2", "--range-agg", f"{hw - 3 * HOUR_MS}:{hw}:{HOUR_MS}",
+    ])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["range_agg"]["cover"] == {"tiers": ["tier_1h"], "raw": False}
+    assert out["range_agg"]["n_rows"] > 0

@@ -79,8 +79,8 @@ CASES = [
     # (lo, hi, bucket_ms) — offsets chosen to exercise every edge type
     (T0 + 90 * SI, T0 + 4 * DAY - 90 * SI, DAY),        # unaligned day agg
     (T0 + 7 * SI + 30_000, T0 + 3 * DAY + 5 * HOUR, 7 * HOUR),  # W !| day
-    (T0, T0 + 4 * DAY, DAY),                            # fully aligned
-    (T0 + HOUR + SI, T0 + HOUR + 50 * SI, 10 * SI),     # sub-hour range
+    (T0, T0 + 4 * DAY, DAY),                            # aligned: 1d, no merge
+    (T0 + HOUR + SI, T0 + HOUR + 50 * SI, 10 * SI),     # sub-hour: 1m, merged
 ]
 
 

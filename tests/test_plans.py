@@ -180,8 +180,12 @@ def test_grouped_datapoints_no_extra_exchange(spark):
 def test_tiered_agg_pushes_range_to_every_tier_scan(spark, tmp_path_factory):
     """plans/planner.py tiered_agg: each tier branch must reach its parquet
     scan with PushedFilters containing the bucket_ts range conjuncts (the
-    pushable part of the cover predicate), and exactly ONE Exchange (the
-    final groupBy) — the routing itself is shuffle-free."""
+    pushable part of the cover predicate), the raw branch with its ts_ms
+    range, and exactly ONE Exchange (the final groupBy) — the routing
+    itself is shuffle-free. The window [t0+90m+30s, t0+3d-90m) at day
+    buckets needs every level: a whole day from 1d, hour and minute
+    edges, and the sub-minute sliver at lo from raw. A window one tier of
+    width bucket_ms answers alone plans that one scan and no Exchange."""
     import numpy as np
     import pandas as pd
 
@@ -191,7 +195,7 @@ def test_tiered_agg_pushes_range_to_every_tier_scan(spark, tmp_path_factory):
 
     SI, HOUR, DAY = 60_000, 3_600_000, 86_400_000
     t0 = 1_704_067_200_000
-    t = t0 + np.arange(2 * 24 * 60, dtype=np.int64) * SI
+    t = t0 + np.arange(3 * 24 * 60, dtype=np.int64) * SI
     pdf = pd.DataFrame(
         {"sid": "s", "metric": "m", "ts_ms": t,
          "value": (np.arange(len(t)) % 9).astype("float32")}
@@ -209,13 +213,9 @@ def test_tiered_agg_pushes_range_to_every_tier_scan(spark, tmp_path_factory):
         p = str(base / name)
         df.write.mode("overwrite").parquet(p)
         paths[name] = spark.read.parquet(p)
-    lo, hi = t0 + 90 * SI, t0 + 2 * DAY - 90 * SI
-    out = tiered_agg(
-        paths["series"],
-        [(paths["t1m"], SI), (paths["t1h"], HOUR), (paths["t1d"], DAY)],
-        lo, hi, DAY,
-    )
-    plan = _formatted_plan(out)
+    tiers = [(paths["t1m"], SI), (paths["t1h"], HOUR), (paths["t1d"], DAY)]
+    lo, hi = t0 + 90 * SI + 30_000, t0 + 3 * DAY - 90 * SI
+    plan = _formatted_plan(tiered_agg(paths["series"], tiers, lo, hi, DAY))
     pushed = re.findall(r"PushedFilters: \[(.*?)\]", plan)
     tier_pushed = [p for p in pushed if "bucket_ts" in p]
     assert len(tier_pushed) == 3, plan[:3000]
@@ -225,6 +225,15 @@ def test_tiered_agg_pushes_range_to_every_tier_scan(spark, tmp_path_factory):
     raw_pushed = [p for p in pushed if "ts_ms" in p]
     assert raw_pushed and "GreaterThanOrEqual(ts_ms" in raw_pushed[0]
     assert plan.count("Exchange (") == 1, plan[:3000]
+
+    plan = _formatted_plan(
+        tiered_agg(paths["series"], tiers, t0, t0 + 2 * DAY, DAY)
+    )
+    pushed = re.findall(r"PushedFilters: \[(.*?)\]", plan)
+    assert len(pushed) == 1, plan[:3000]
+    assert "GreaterThanOrEqual(bucket_ts" in pushed[0], pushed
+    assert "LessThan(bucket_ts" in pushed[0], pushed
+    assert "Exchange" not in plan, plan[:3000]
 
 
 def test_cms_probe_join_broadcasts(spark):
