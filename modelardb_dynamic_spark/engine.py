@@ -21,8 +21,21 @@ Parity with the reference's two SQL-visible tables and its interface layer
   pushed below the Python decode barrier (Catalyst stops at mapInArrow) —
   the reference has the same problem and solves it with a filter rewrite
   (ViewDataPoint.scala:47-73); our equivalent is the datapoints(lo, hi)
-  method, which prunes segments by overlap BEFORE decoding. Use the method
-  for time-ranged point queries; the view for full scans / exploration.
+  method, which prunes segments by overlap (and a sid list to its hash
+  buckets) BEFORE decoding. Use the method for time-ranged or per-series
+  point queries; the view for full scans / exploration (it always decodes
+  in a distributed mapInArrow).
+- datapoints() plans its decode like a broadcast join: when Catalyst's
+  sizeInBytes for the pruned segment scan is at or below
+  spark.sql.autoBroadcastJoinThreshold, a JVM-only toArrow() job collects
+  the segments and the driver decodes them (no Python-worker round trip);
+  otherwise, or when the threshold is -1 or the plan is not a scan of
+  files or local rows (e.g. compress() output, whose size Spark cannot
+  bound through its Python UDF), the decode stays distributed. The
+  decoded points are bounded by the same threshold
+  (reconstruct.decode_on_driver). For a path-based parquet read the
+  estimate is the size of every file listed, before partition or
+  row-group pruning, so it errs toward the distributed path.
 - An HTTP endpoint equivalent lives in tools/serve.py (Interface.scala
   :9999 POST -> JSON rows).
 
@@ -39,8 +52,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from modelardb_dynamic_spark.config import EngineConfig
-from modelardb_dynamic_spark.operators.reconstruct import datapoint_view
+from modelardb_dynamic_spark.operators.reconstruct import (
+    datapoint_view,
+    decode_on_driver,
+    overlapping,
+)
 from modelardb_dynamic_spark.operators.rollup import calendar_agg, gap_fill, rollup
+from modelardb_dynamic_spark.sources.catalog import sid_bucket
 
 _SEGMENT_COLS = "sid, metric, start_ts, end_ts, si, mtid, model, cnt, vmin, vmax, vsum"
 
@@ -52,6 +70,26 @@ _UDAF_REWRITES = [
     (re.compile(r"AVG_S\s*\(\s*#\s*\)", re.I), "(SUM(vsum) / SUM(cnt))"),
     (re.compile(r"#"), _SEGMENT_COLS),
 ]
+
+# optimized-plan nodes of a pruned scan of files or of local rows, the only
+# plans whose sizeInBytes (the files' or the rows' size) bounds their output
+_SCAN_NODES = frozenset({"Filter", "Project", "LogicalRelation", "LocalRelation"})
+
+
+def _scan_size(df: DataFrame) -> int | None:
+    """Catalyst's sizeInBytes for df when its optimized plan is a pruned
+    scan of files or local rows, else None. Above any other node, e.g. the
+    Python UDF of compress() output, Spark passes its input's size through
+    unchanged, which says nothing about the rows the node returns."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() not in _SCAN_NODES:
+            return None
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return int(plan.stats().sizeInBytes())
 
 
 class ModelarEngine:
@@ -98,11 +136,33 @@ class ModelarEngine:
     ) -> DataFrame:
         """Pruned point reconstruction: segment overlap filter (pushed to
         the storage scan) -> decode -> exact re-filter (the reference's
-        two-phase ViewDataPoint shape)."""
+        two-phase ViewDataPoint shape).
+
+        A sid list also filters sbucket to the sids' hash buckets, a
+        partition filter, when the segments come from Warehouse.read
+        (its `sid` column carries {"n_buckets": N}). The decode is planned
+        like a broadcast: if the pruned scan's Catalyst size estimate is at
+        or below spark.sql.autoBroadcastJoinThreshold, the segments are
+        collected and decoded on the driver into a local DataFrame;
+        otherwise (threshold -1, a larger scan, or a plan that is not a
+        scan of files or local rows) the decode runs as a distributed
+        mapInArrow. The local path runs its collect job when called, and
+        decoded points above the same threshold go back through that
+        mapInArrow, so the driver never holds more."""
         segs = self.segments
         if sids is not None:
             segs = segs.where(F.col("sid").isin(sids))
-        return datapoint_view(segs, lo_ms=lo_ms, hi_ms=hi_ms)
+            n = segs.schema["sid"].metadata.get("n_buckets")
+            if n is not None and "sbucket" in segs.columns:
+                segs = segs.where(
+                    F.col("sbucket").isin([sid_bucket(F.lit(s), n) for s in sids])
+                )
+        limit = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        pruned = overlapping(segs, lo_ms, hi_ms)
+        size = _scan_size(pruned) if limit >= 0 else None
+        if size is not None and size <= limit:
+            return decode_on_driver(self.spark, pruned.toArrow(), lo_ms, hi_ms, limit)
+        return datapoint_view(segs, lo_ms, hi_ms)
 
     def rollup(self, bucket_ms: int, gap_filled: bool = False) -> DataFrame:
         tier = rollup(self.segments, bucket_ms)

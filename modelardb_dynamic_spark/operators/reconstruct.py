@@ -4,9 +4,19 @@ Two-phase prune-then-exact shape of the reference's point view
 (engines/spark/ViewDataPoint.scala:37-78): timestamp predicates are mapped
 to segment-overlap predicates (start_ts <= hi AND end_ts >= lo) which
 Catalyst pushes into the parquet scan (partition pruning + row-group
-min/max), segments are gridded with a vectorized mapInArrow, and the exact
-point-level filter is re-applied afterwards (the reference reports
-unhandledFilters = all for the same reason, ViewDataPoint.scala:35).
+min/max), segments are gridded, and the exact point-level filter is
+re-applied afterwards (the reference reports unhandledFilters = all for
+the same reason, ViewDataPoint.scala:35).
+
+There is one decoder, _grid_batch, and two places it runs: distributed,
+inside a mapInArrow (datapoint_view), or on the driver over segments a
+JVM-only toArrow() job collected (decode_on_driver), which saves the
+Python-worker round trip a small read would otherwise pay. The caller
+picks (ModelarEngine.datapoints, a broadcast-style size threshold).
+Decoding expands a segment up to length_bound times, so decode_on_driver
+first sizes the decoded points from start_ts, end_ts and si alone and,
+above its byte limit, ships the collected segments back through the
+mapInArrow instead.
 
 The gridding itself is vectorized ACROSS segments per Arrow batch: PMC and
 Swing values for every segment in the batch are produced by a single
@@ -20,7 +30,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from modelardb_dynamic_spark.config import (
@@ -33,6 +44,7 @@ from modelardb_dynamic_spark.models.gorilla import gorilla_decode_batch
 from modelardb_dynamic_spark.models.kernels import swing_decode
 
 DATAPOINT_SCHEMA = "sid string, metric string, ts_ms long, value float"
+_DECODE_COLS = ("sid", "metric", "start_ts", "end_ts", "si", "mtid", "model")
 
 
 _OUT_SCHEMA = pa.schema(
@@ -111,6 +123,19 @@ def _map_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             yield _grid_batch(rb)
 
 
+def overlapping(
+    segments: DataFrame, lo_ms: int | None = None, hi_ms: int | None = None
+) -> DataFrame:
+    """The segments that may hold a point in [lo_ms, hi_ms], projected to
+    the decode columns; the overlap predicate is pushed to the scan."""
+    df = segments
+    if lo_ms is not None:
+        df = df.where(F.col("end_ts") >= lo_ms)
+    if hi_ms is not None:
+        df = df.where(F.col("start_ts") <= hi_ms)
+    return df.select(*_DECODE_COLS)
+
+
 def datapoint_view(
     segments: DataFrame,
     lo_ms: int | None = None,
@@ -119,16 +144,54 @@ def datapoint_view(
     """Grid segments back to points, optionally restricted to
     [lo_ms, hi_ms]. The overlap predicate prunes segments BEFORE decoding
     (pushed to the scan); the exact predicate re-filters points after."""
-    df = segments
-    if lo_ms is not None:
-        df = df.where(F.col("end_ts") >= lo_ms)
-    if hi_ms is not None:
-        df = df.where(F.col("start_ts") <= hi_ms)
-    out = df.select(
-        "sid", "metric", "start_ts", "end_ts", "si", "mtid", "model"
-    ).mapInArrow(_map_fn, schema=DATAPOINT_SCHEMA)
+    out = overlapping(segments, lo_ms, hi_ms).mapInArrow(
+        _map_fn, schema=DATAPOINT_SCHEMA
+    )
     if lo_ms is not None:
         out = out.where(F.col("ts_ms") >= lo_ms)
     if hi_ms is not None:
         out = out.where(F.col("ts_ms") <= hi_ms)
     return out
+
+
+def decoded_nbytes(segs: pa.Table) -> int:
+    """Arrow bytes of the points _grid_batch makes from segs, before the
+    window filter, from start_ts, end_ts and si and the key lengths alone:
+    per point ts_ms (8) + value (4) + two string offsets (8) + the sid
+    and metric bytes of its segment."""
+    start, end, si = (
+        segs.column(c).to_numpy().astype(np.int64) for c in ("start_ts", "end_ts", "si")
+    )
+    keys = sum(
+        pc.binary_length(segs.column(c)).to_numpy(zero_copy_only=False).astype(np.int64)
+        for c in ("sid", "metric")
+    )
+    return int((((end - start) // si + 1) * (20 + keys)).sum())
+
+
+def decode_on_driver(
+    spark: SparkSession,
+    segs: pa.Table,
+    lo_ms: int | None,
+    hi_ms: int | None,
+    max_bytes: int,
+) -> DataFrame:
+    """The points of already overlap-pruned segments, decoded on the driver
+    by _grid_batch with datapoint_view's exact window filter, as a local
+    DataFrame with DATAPOINT_SCHEMA. When the decoded points would exceed
+    max_bytes (decoded_nbytes) the segments go back to Spark and through
+    datapoint_view's mapInArrow instead, so driver memory stays bounded by
+    max_bytes plus the collected segments."""
+    if decoded_nbytes(segs) > max_bytes:
+        return datapoint_view(spark.createDataFrame(segs), lo_ms, hi_ms)
+    pts = pa.Table.from_batches(
+        [_grid_batch(rb) for rb in segs.to_batches() if rb.num_rows],
+        schema=_OUT_SCHEMA,
+    )
+    if lo_ms is not None:
+        pts = pts.filter(pc.greater_equal(pts.column("ts_ms"), lo_ms))
+    if hi_ms is not None:
+        pts = pts.filter(pc.less_equal(pts.column("ts_ms"), hi_ms))
+    # one partition: the rows are already on the driver, and spreading them
+    # over the default parallelism only adds an exchange to any aggregate
+    return spark.createDataFrame(pts, DATAPOINT_SCHEMA).coalesce(1)

@@ -41,6 +41,7 @@ from modelardb_dynamic_spark.sources.catalog import (
     footer_rows,
     footer_stats,
     sid_bucket,
+    unannotated,
 )
 from modelardb_dynamic_spark.sources.timeseries import to_ms, transcript_series
 
@@ -203,7 +204,7 @@ class TierPipeline:
             df = build(pending)
             tmp = root + "." + uuid.uuid4().hex[:8] + ".tmp"
             (
-                df.where(F.col("sbucket").isin(pending))
+                unannotated(df).where(F.col("sbucket").isin(pending))
                 .write.mode("overwrite")
                 .partitionBy("sbucket")
                 .parquet(tmp)
@@ -1001,7 +1002,7 @@ class TierPipeline:
                 if sort_cols:
                     df = df.sortWithinPartitions(*sort_cols)
             tmp = dst + "." + uuid.uuid4().hex[:8] + ".tmp"
-            df.write.mode("overwrite").parquet(tmp)
+            unannotated(df).write.mode("overwrite").parquet(tmp)
             got = footer_rows(tmp)
             if m is not None and got != m.rows:
                 shutil.rmtree(tmp, ignore_errors=True)

@@ -146,6 +146,18 @@ def sid_bucket(col, n_buckets: int = DEFAULT_BUCKETS):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
+def unannotated(df: DataFrame) -> DataFrame:
+    """df without the n_buckets metadata Warehouse.read puts on `sid`: it
+    describes the table read, not what is written from it, so every
+    write strips it and the footers stay as Spark writes them."""
+    if "sid" not in df.columns:
+        return df
+    md = df.schema["sid"].metadata
+    if "n_buckets" not in md:
+        return df
+    return df.withMetadata("sid", {k: v for k, v in md.items() if k != "n_buckets"})
+
+
 class Warehouse:
     """A directory of bucketed parquet tables with atomic commits."""
 
@@ -184,6 +196,7 @@ class Warehouse:
             raise ValueError(f"unknown warehouse format {format!r}")
         final = self.path(table)
         tmp = final + "." + uuid.uuid4().hex[:8] + ".tmp"
+        df = unannotated(df)
         try:
             if bucket_by is not None:
                 out = df.withColumn("sbucket", sid_bucket(F.col(bucket_by), self.n_buckets))
@@ -217,21 +230,31 @@ class Warehouse:
     ) -> DataFrame:
         """The table, or only its sbucket=K directories for K in buckets
         (sbucket still a column). Parquet reads take their schema from the
-        footers (footer_schema), so no Spark job infers it."""
+        footers (footer_schema), so no Spark job infers it. On a bucketed
+        table the `sid` column carries {"n_buckets": N} metadata: sbucket
+        is sid_bucket(sid, N), so a reader holding only the DataFrame
+        (ModelarEngine.datapoints) can prune a sid list to its buckets.
+        Spark's file source drops metadata on the partition column itself,
+        so it sits on sid, where it survives where() and select()."""
         root = self.path(table)
         if self._detect_format(table) == "orc":
             if buckets is not None:
                 raise ValueError(
                     f"table {table!r} is ORC; bucket reads are parquet-only"
                 )
-            return spark.read.orc(root)
-        reader = spark.read.option("basePath", root)
-        schema = footer_schema(root)
-        if schema is not None:
-            reader = reader.schema(schema)
-        if buckets is None:
-            return reader.parquet(root)
-        return reader.parquet(*[os.path.join(root, f"sbucket={b}") for b in buckets])
+            df = spark.read.orc(root)
+        else:
+            reader = spark.read.option("basePath", root)
+            schema = footer_schema(root)
+            if schema is not None:
+                reader = reader.schema(schema)
+            paths = [root] if buckets is None else [
+                os.path.join(root, f"sbucket={b}") for b in buckets
+            ]
+            df = reader.parquet(*paths)
+        if "sbucket" in df.columns and "sid" in df.columns:
+            df = df.withMetadata("sid", {"n_buckets": self.n_buckets})
+        return df
 
     def drop(self, table: str) -> None:
         if os.path.exists(self.path(table)):

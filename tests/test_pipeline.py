@@ -1222,7 +1222,14 @@ def _assert_footers_equal_scan(spark, wh, tables=None):
             (f.name, f.dataType) for f in inferred.schema.fields
         ], t
         assert spark.read.schema(schema).parquet(path).schema == inferred.schema, t
-        assert wh.read(spark, t).schema == inferred.schema, t
+        # Warehouse.read annotates a bucketed table's sid with n_buckets;
+        # the annotation never reaches the footers of what is written
+        want = inferred
+        if "sid" in inferred.columns:
+            assert inferred.schema["sid"].metadata == {}, t
+            if "sbucket" in inferred.columns:
+                want = inferred.withMetadata("sid", {"n_buckets": wh.n_buckets})
+        assert wh.read(spark, t).schema == want.schema, t
 
 
 def test_footers_equal_scan_and_build_never_scans(spark, transcripts, tmp_path,
