@@ -25,16 +25,16 @@ Parity with the reference's two SQL-visible tables and its interface layer
   buckets) BEFORE decoding. Use the method for time-ranged or per-series
   point queries; the view for full scans / exploration (it always decodes
   in a distributed mapInArrow).
-- datapoints() plans its decode like a broadcast join: when Catalyst's
-  sizeInBytes for the pruned segment scan is at or below
+- datapoints() plans its decode like a broadcast join: when the pruned
+  segment scan's input size is at or below
   spark.sql.autoBroadcastJoinThreshold, a JVM-only toArrow() job collects
   the segments and the driver decodes them (no Python-worker round trip);
   otherwise, or when the threshold is -1 or the plan is not a scan of
   files or local rows (e.g. compress() output, whose size Spark cannot
   bound through its Python UDF), the decode stays distributed. The
   decoded points are bounded by the same threshold
-  (reconstruct.decode_on_driver). For a path-based parquet read the
-  estimate is the size of every file listed, before partition or
+  (reconstruct.decode_on_driver). For a parquet read the size is that of
+  the files left after partition pruning (a sid list's buckets), before
   row-group pruning, so it errs toward the distributed path.
 - An HTTP endpoint equivalent lives in tools/serve.py (Interface.scala
   :9999 POST -> JSON rows).
@@ -77,18 +77,29 @@ _SCAN_NODES = frozenset({"Filter", "Project", "LogicalRelation", "LocalRelation"
 
 
 def _scan_size(df: DataFrame) -> int | None:
-    """Catalyst's sizeInBytes for df when its optimized plan is a pruned
-    scan of files or local rows, else None. Above any other node, e.g. the
-    Python UDF of compress() output, Spark passes its input's size through
-    unchanged, which says nothing about the rows the node returns."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    todo = [plan]
+    """The input size of df when its optimized plan is a pruned scan of
+    files or local rows, else None. Above any other node, e.g. the Python
+    UDF of compress() output, Spark passes its input's size through
+    unchanged, which says nothing about the rows the node returns.
+
+    For local rows it is Catalyst's sizeInBytes. For files it is the size
+    of the files the physical scan selects after partition pruning, which
+    the driver lists while planning: sizeInBytes of a path-based read
+    counts every file of the table, so a one-sid read of one bucket would
+    be estimated at the whole table."""
+    qe = df._jdf.queryExecution()
+    plan = qe.optimizedPlan()
+    todo, names = [plan], set()
     while todo:
         node = todo.pop()
+        names.add(node.nodeName())
         if node.nodeName() not in _SCAN_NODES:
             return None
         kids = node.children()
         todo.extend(kids.apply(i) for i in range(kids.size()))
+    if "LogicalRelation" in names:
+        scan = qe.sparkPlan().collectLeaves().head()
+        return int(scan.selectedPartitions().totalFileSize())
     return int(plan.stats().sizeInBytes())
 
 
@@ -141,7 +152,7 @@ class ModelarEngine:
         A sid list also filters sbucket to the sids' hash buckets, a
         partition filter, when the segments come from Warehouse.read
         (its `sid` column carries {"n_buckets": N}). The decode is planned
-        like a broadcast: if the pruned scan's Catalyst size estimate is at
+        like a broadcast: if the pruned scan's input size (_scan_size) is at
         or below spark.sql.autoBroadcastJoinThreshold, the segments are
         collected and decoded on the driver into a local DataFrame;
         otherwise (threshold -1, a larger scan, or a plan that is not a

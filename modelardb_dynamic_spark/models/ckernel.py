@@ -23,10 +23,10 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import pkgutil
 import subprocess
 import tempfile
 
-_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_ckernel.c")
 _CFLAGS = ["-O2", "-shared", "-fPIC", "-ffp-contract=off", "-fno-math-errno"]
 
 _lib = None
@@ -43,8 +43,9 @@ def _cache_dir() -> str:
 
 
 def _compile() -> str | None:
-    with open(_SRC, "rb") as f:
-        src = f.read()
+    # read through the package's loader, not by path: under spark-submit
+    # the package is a --py-files zip
+    src = pkgutil.get_data(__name__.rpartition(".")[0], "_ckernel.c")
     tag = hashlib.sha256(src + b"|" + " ".join(_CFLAGS).encode()).hexdigest()[:16]
     so_path = os.path.join(_cache_dir(), f"ckernel-{tag}.so")
     if os.path.exists(so_path):
@@ -56,7 +57,8 @@ def _compile() -> str | None:
     os.close(fd)
     try:
         subprocess.run(
-            [cc, *_CFLAGS, "-o", tmp, _SRC],
+            [cc, *_CFLAGS, "-o", tmp, "-x", "c", "-"],
+            input=src,
             check=True,
             capture_output=True,
             timeout=120,

@@ -12,8 +12,11 @@ parameterized operators:
   SwingFilterModelType.java:220-248); Gorilla/Uncompressed decode once per
   segment and aggregate per bucket via np.*.reduceat. The mapInArrow emits
   per-(segment x bucket) partials (string keys fan out via Arrow take,
-  never via Python objects); a plain groupBy merges them (map-side
-  partial aggregation + one shuffle on (sid, metric, bucket_ts)).
+  never via Python objects). A partial whose bucket lies wholly inside its
+  segment is final; the others, at segment edges, merge in a groupBy.
+  When the caller passes the grid its segments lie on and the grid is a
+  multiple of bucket_ms (tier_1m over the sampling grid), every partial is
+  final and the rollup is one mapInArrow with no merge.
 - downsample(tier, k): tier k -> coarser tier by pure columnar groupBy
   (count/sum/min/max compose), no decode at all.
 - gap_fill(tier, bucket_ms): explicit gap materialization per series via
@@ -164,7 +167,21 @@ def _bucket_partials(
     # exclusivity: every grid slot of the bucket inside [start, end]
     excl = (bucket_ts >= st) & (bucket_ts + bucket_ms - s_i <= en)
     # keep only valid rows; string keys fan out via Arrow take (C++)
-    if keep == "interior":
+    if keep == "final":
+        # a segment whose points all lie on bucket_ms multiples puts at
+        # most one point in a bucket, and no other segment of its series
+        # can share that point, so all its partials are final; a non-final
+        # partial's segment is always off that grid
+        off = (start % bucket_ms != 0) | (si % bucket_ms != 0)
+        if off.any():
+            i = int(np.flatnonzero(off)[0])
+            raise ValueError(
+                f"one-pass rollup at {bucket_ms} ms met a segment off its "
+                f"grid (start_ts={start[i]}, si={si[i]}): its partials "
+                "would need a merge"
+            )
+        vrows = np.flatnonzero(valid)
+    elif keep == "interior":
         vrows = np.flatnonzero(valid & excl)
     elif keep == "boundary":
         vrows = np.flatnonzero(valid & ~excl)
@@ -187,35 +204,44 @@ def _bucket_partials(
 
 
 def rollup(
-    segments: DataFrame, bucket_ms: int, materialize: bool = True
+    segments: DataFrame,
+    bucket_ms: int,
+    materialize: bool = True,
+    grid_ms: int | None = None,
 ) -> DataFrame:
     """Segment table -> tier table at bucket_ms granularity.
 
-    Shuffle-minimal: a bucket wholly inside one segment's range can never
-    receive contributions from another segment (segments of a series are
-    disjoint contiguous runs), so those rows are FINAL when the kernel
-    emits them and bypass the merge aggregation. Only segment-EDGE buckets
-    (~2 per segment) go through the groupBy — for a fine tier
-    (bucket_ms == si) that is a ~0-row shuffle instead of every point,
-    measured 8x less shuffle volume on the 73.6M-point bench tier. The
-    interior rows equal what a single-row aggregate would produce, so the
-    union is value-identical to the full groupBy.
+    A bucket wholly inside one segment's range can never receive
+    contributions from another segment (segments of a series are disjoint
+    contiguous runs), so those rows are FINAL when the kernel emits them
+    and bypass the merge aggregation. Only segment-EDGE buckets (~2 per
+    segment) go through the groupBy. The interior rows equal what a
+    single-row aggregate would produce, so the union is value-identical
+    to the full groupBy.
+
+    One pass: grid_ms promises that every segment's start_ts and si are
+    multiples of it (the pipeline's segments lie on the epoch-anchored
+    sampling grid). When grid_ms is a multiple of bucket_ms, a bucket holds
+    at most one grid slot, so every partial is final, and the rollup is a
+    single mapInArrow with no merge. The kernel raises on a segment that
+    breaks the promise instead of dropping its merge. Without grid_ms, or
+    when bucket_ms does not divide it, the two-branch plan runs.
 
     Memory-traffic shape (matters at >=16 cores, where the pipeline is
     bandwidth-bound — BENCH.md): the two branches each re-scan the
     SEGMENTS (compact, ~16x fewer rows than the fine tier) and re-run the
     batched C decode (~28 M pts/s/core, negligible), instead of
     checkpointing the exploded per-bucket partials, which for a fine tier
-    materializes every point twice through the block store. r2 did the
-    opposite because decode was then the expensive step.
+    materializes every point twice through the block store.
 
-    materialize=False skips the segments checkpoint — pass it when the
-    input is already a storage scan or persisted (re-scanning is cheaper
-    than copying it into the block store)."""
+    materialize=False skips the two-branch plan's segments checkpoint —
+    pass it when the input is already a storage scan or persisted
+    (re-scanning is cheaper than copying it into the block store)."""
     src = segments.select(
         "sid", "metric", "start_ts", "end_ts", "si", "mtid", "model"
     )
-    if materialize:
+    one_pass = grid_ms is not None and grid_ms % bucket_ms == 0
+    if materialize and not one_pass:
         src = src.localCheckpoint(eager=False)
 
     def make_fn(keep: str):
@@ -227,6 +253,8 @@ def rollup(
         return map_fn
 
     out_schema = TIER_SCHEMA + ", excl boolean"
+    if one_pass:
+        return src.mapInArrow(make_fn("final"), schema=out_schema).drop("excl")
     interior = src.mapInArrow(make_fn("interior"), schema=out_schema).drop("excl")
     boundary = (
         src.mapInArrow(make_fn("boundary"), schema=out_schema)

@@ -5,7 +5,8 @@ bucket's output is durably in place:
 
     <warehouse>/<table>/_lineage/bucket=<K>.json
     {"bucket": K, "rows": n, "high_water_ts": ms, "input_fingerprint": ...,
-     "wall_s": ..., "stage": ..., "committed_utc": ...}
+     "wall_s": ..., "stage": ..., "committed_utc": ..., "bytes": b,
+     "files": f}
 
 The rows and high-water mark come from the bucket's parquet footers (row
 counts and the row-group max of the event-time column;
@@ -82,6 +83,10 @@ class BucketManifest:
     # audits (fsck) can recompute and compare it without a per-stage
     # schema registry; None on manifests written before this field existed
     ts_col: str | None = None
+    # the bucket's parquet part files: total size and count; None on
+    # manifests written before these fields existed
+    bytes: int | None = None
+    files: int | None = None
 
 
 class Lineage:
@@ -112,10 +117,12 @@ class Lineage:
         input_fingerprint: str,
         wall_s: float,
         ts_col: str | None = None,
+        nbytes: int | None = None,
+        files: int | None = None,
     ) -> None:
         m = BucketManifest(
             stage, bucket, rows, high_water_ts, input_fingerprint,
-            wall_s, time.time(), ts_col,
+            wall_s, time.time(), ts_col, nbytes, files,
         )
         tmp = self._path(bucket) + ".tmp"
         with open(tmp, "w") as f:
@@ -130,13 +137,21 @@ class Lineage:
         return sorted(out)
 
     def metrics(self) -> dict:
-        ms = [self.get(b) for b in self.completed_buckets()]
+        ms = [m for m in map(self.get, self.completed_buckets()) if m]
+
+        def total(field: str) -> int | None:
+            """Sum over the manifests, None if one predates the field."""
+            vals = [getattr(m, field) for m in ms]
+            return None if None in vals else sum(vals)
+
         return {
             "buckets": len(ms),
-            "rows": sum(m.rows for m in ms if m),
-            "wall_s": sum(m.wall_s for m in ms if m),
+            "rows": sum(m.rows for m in ms),
+            "bytes": total("bytes"),
+            "files": total("files"),
+            "wall_s": sum(m.wall_s for m in ms),
             "high_water_ts": max(
-                (m.high_water_ts for m in ms if m and m.high_water_ts is not None),
+                (m.high_water_ts for m in ms if m.high_water_ts is not None),
                 default=None,
             ),
         }

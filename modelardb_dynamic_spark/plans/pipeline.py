@@ -29,6 +29,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +39,7 @@ from modelardb_dynamic_spark.operators.rollup import downsample, gap_fill, rollu
 from modelardb_dynamic_spark.plans.checkpoint import Lineage, recover_swaps, swap_in
 from modelardb_dynamic_spark.sources.catalog import (
     Warehouse,
+    file_stats,
     footer_rows,
     footer_stats,
     sid_bucket,
@@ -122,6 +124,48 @@ def _scan_stats(df: DataFrame, ts_col: str | None) -> dict[int, tuple[int, int |
     }
 
 
+# SparkContext application id -> its Python worker warm-up thread
+_WARMUPS: dict[str, InheritableThread] = {}
+
+
+def _no_rows(batches):
+    yield from ()
+
+
+def _start_python_workers(spark: SparkSession) -> None:
+    """Start the Python workers on a background thread while the build
+    runs JVM-only stages, at most once per SparkContext: a one-row,
+    one-task SQL mapInArrow, so the worker daemon it starts is the one
+    compress's mapInArrow reuses (an RDD job would start a daemon of its
+    own). An InheritableThread carries the caller's job group, so a traced
+    build attributes the job to the stage that started it."""
+    app = spark.sparkContext.applicationId
+    if app in _WARMUPS:
+        return
+    errors: list[Exception] = []
+
+    def run() -> None:
+        try:
+            spark.range(0, 1, 1, 1).mapInArrow(_no_rows, "id long").collect()
+        except Exception as e:  # noqa: BLE001 -- re-raised at the join
+            errors.append(e)
+
+    t = InheritableThread(target=run, daemon=True)
+    t.errors = errors
+    t.start()
+    _WARMUPS[app] = t
+
+
+def _join_python_workers(spark: SparkSession) -> None:
+    """Wait for this SparkContext's warm-up and raise its failure, once:
+    a later stage call then runs its own Python job."""
+    t = _WARMUPS.get(spark.sparkContext.applicationId)
+    if t is not None:
+        t.join()
+        if t.errors:
+            raise RuntimeError("starting the Python workers failed") from t.errors.pop()
+
+
 class TierPipeline:
     def __init__(
         self,
@@ -166,7 +210,8 @@ class TierPipeline:
         before anything is read or rewritten), then commits one manifest per
         bucket. The manifests' rows and high-water marks (of the stage's
         STAGES ts_col) come from the chunk's parquet footers
-        (footer_stats), so no Spark job re-reads what was just written;
+        (footer_stats), and their bytes and file counts from the part
+        files (file_stats), so no Spark job re-reads what was just written;
         only files without column statistics (legacy INT96 timestamps) are
         scanned. fail_after_chunks injects a crash for resume tests.
         only_buckets restricts the stage to a bucket subset (incremental
@@ -214,6 +259,7 @@ class TierPipeline:
             stats = footer_stats(tmp, ts_col)
             if stats is None:
                 stats = _scan_stats(self.spark.read.parquet(tmp), ts_col)
+            sizes = file_stats(tmp)
             wall = time.time() - t0
             for b in pending:
                 src = os.path.join(tmp, f"sbucket={b}")
@@ -222,9 +268,10 @@ class TierPipeline:
                     os.path.join(root, f"sbucket={b}"),
                 )
                 rows, hw = stats.get(b, (0, None))
+                nbytes, files = sizes.get(b, (0, 0))
                 lineage.commit(
                     stage, b, rows, hw, fingerprint, wall / len(pending),
-                    ts_col=ts_col,
+                    ts_col=ts_col, nbytes=nbytes, files=files,
                 )
             shutil.rmtree(tmp, ignore_errors=True)
             done_chunks += 1
@@ -305,6 +352,8 @@ class TierPipeline:
         byte-identically; verified by tests under ORDER BY conv_id, turn_idx)."""
 
         def build(bucket_ids: list[int]) -> DataFrame:
+            # the Python workers start under this JVM-only stage
+            _start_python_workers(self.spark)
             # filter to the chunk, rebalance, and SORT each task by sbucket:
             # with unsorted input every scan task holds an open parquet
             # writer per bucket dir in the chunk simultaneously (writer
@@ -358,6 +407,7 @@ class TierPipeline:
         only_buckets: list[int] | None = None,
     ) -> None:
         def build(bucket_ids: list[int]) -> DataFrame:
+            _join_python_workers(self.spark)
             series = self._read_buckets("series", bucket_ids)
             segs = compress(series, self.cfg, salt_span_points=self.salt_span_points)
             segs = segs.withColumn(
@@ -392,10 +442,14 @@ class TierPipeline:
 
             def build(bucket_ids: list[int], prev=prev, bucket_ms=bucket_ms) -> DataFrame:
                 src = self._read_buckets(prev, bucket_ids)
-                # src is a storage scan: re-scanning it in the two rollup
-                # branches is cheaper than copying it into the block store
+                # segments lie on the sampling grid (transcript_series
+                # floors ts to it), so tier_1m rolls up in one pass; src is
+                # a storage scan, which needs no checkpoint
                 tier = (
-                    rollup(src, bucket_ms, materialize=False)
+                    rollup(
+                        src, bucket_ms, materialize=False,
+                        grid_ms=self.cfg.sampling_interval_ms,
+                    )
                     if prev == "segments"
                     else downsample(src, bucket_ms)
                 )
@@ -557,6 +611,7 @@ class TierPipeline:
             }
 
         def build(bucket_ids: list[int]) -> DataFrame:
+            _start_python_workers(self.spark)
             root = self.wh.path("raw")
             have = [
                 b
@@ -1310,7 +1365,8 @@ def warehouse_status(root: str) -> dict:
     retention markers ALONE — pure filesystem, no SparkSession, so an
     operator (or the scheduler deciding whether to resume) can inspect a
     10^12-turn warehouse in milliseconds: per table, committed buckets,
-    row totals, cumulative build wall time, event-time high water,
+    row, part-file byte and file totals (None when a manifest predates
+    bytes/files), cumulative build wall time, event-time high water,
     first/last commit wall-clock, stage name, and the retention horizon
     if one is recorded. The north rule's "per-partition lineage +
     metrics" as a queryable surface (CLI: --status).

@@ -30,6 +30,15 @@ def build_session(
     On a real cluster this module is bypassed: spark-submit provides the
     session and the same code runs unchanged (all operators take the
     session / DataFrames as parameters).
+
+    In local mode the Python workers fork from the package's own daemon
+    (spark.python.daemon.module = modelardb_dynamic_spark.daemon), which
+    imports pandas and the compress/rollup kernels once before it forks:
+    a fresh worker otherwise pays those imports itself after its fork, on
+    the first Python stage's critical path. The daemon starts before any
+    task ships the package, so the package's root on the driver (its
+    directory, or the --py-files zip under spark-submit) goes on the
+    workers' PYTHONPATH; a local worker shares the driver's filesystem.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
@@ -70,6 +79,13 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_memory())
     )
+    if master.startswith("local"):
+        import modelardb_dynamic_spark as pkg
+
+        root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
+        builder = builder.config(
+            "spark.python.daemon.module", "modelardb_dynamic_spark.daemon"
+        ).config("spark.executorEnv.PYTHONPATH", root)
     # shuffle files / spills on tmpfs: opt-in via MDBS_TMPFS_LOCAL_DIR=1
     # (the bench sets it; a RAM-backed local dir can exhaust memory on a
     # host with large spills, so it is never applied implicitly) and only

@@ -18,8 +18,9 @@ bucket, clustered by time (storage/CassandraStorage.scala:78).
 
 Metadata comes from the parquet footers on the driver, never from a Spark
 job: `footer_schema` gives the Spark schema every read passes to
-`spark.read.schema`, and `footer_stats` gives the per-bucket row counts and
-event-time high-water marks the lineage manifests record — the role of
+`spark.read.schema`, `footer_stats` gives the per-bucket row counts and
+event-time high-water marks the lineage manifests record, and `file_stats`
+their part-file bytes and counts — the role of
 ModelarDB's per-segment metadata, and of the per-file row counts and
 column bounds an Iceberg manifest plans from.
 """
@@ -127,6 +128,16 @@ def footer_stats(chunk_dir: str, ts_col: str) -> dict[int, tuple[int, int | None
                 v = st.max_raw // div
                 hw = v if hw is None else max(hw, v)
         out[b] = (rows, hw)
+    return out
+
+
+def file_stats(chunk_dir: str) -> dict[int, tuple[int, int]]:
+    """{bucket: (bytes, files)} of the parquet part files in the sbucket=K
+    directories under chunk_dir, from the filesystem alone."""
+    out = {}
+    for b, d in _bucket_dirs(chunk_dir).items():
+        sizes = [os.path.getsize(f) for f in _part_files(d)]
+        out[b] = (sum(sizes), len(sizes))
     return out
 
 

@@ -213,3 +213,23 @@ def test_decoded_nbytes_is_the_arrow_size(spark, eng):
     gap = sum(b.nbytes for b in batches) - decoded_nbytes(tbl)
     assert 0 <= gap <= slack, (gap, slack)
     assert decoded_nbytes(tbl.slice(0, 0)) == 0
+
+
+def test_one_sid_size_is_its_bucket(spark, wh, eng):
+    """A sid list's scan is sized after partition pruning: one sid's
+    estimate is its bucket's part-file bytes, not the table's, so a
+    threshold between the two sends that read to the driver path."""
+    from modelardb_dynamic_spark.sources.catalog import file_stats
+
+    sizes = {b: nbytes for b, (nbytes, _) in file_stats(wh.path("segments")).items()}
+    segs = wh.read(spark, "segments")
+    row = segs.where("sid = 's03'").select("sbucket").first()
+    one = overlapping(
+        segs.where("sid = 's03'").where(F.col("sbucket") == row["sbucket"])
+    )
+    assert _scan_size(one) == sizes[row["sbucket"]] < sum(sizes.values())
+    assert _scan_size(overlapping(segs)) == sum(sizes.values())
+    with _threshold(spark, str(sum(sizes.values()) - 1)):
+        assert _decodes_in_spark(eng.datapoints())
+        rows = _both(spark, eng, sids=["s03"])
+    assert len(rows) == 210 and {r[0] for r in rows} == {"s03"}

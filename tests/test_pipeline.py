@@ -924,6 +924,58 @@ def test_warehouse_status_surfaces_lineage_and_retention(
     assert hw("series") == int(lo) + 1
 
 
+def test_manifests_record_bytes_and_files(spark, transcripts, tmp_path):
+    """Every bucket manifest records its sbucket=K directory's part-file
+    bytes and count, after a build and after an append; --status sums
+    them per stage; a manifest written before the fields loads with
+    None, which the stage totals carry."""
+    import json
+    import os
+
+    from modelardb_dynamic_spark.plans.checkpoint import Lineage
+    from modelardb_dynamic_spark.plans.pipeline import STAGES, warehouse_status
+
+    def check(wh):
+        n = 0
+        for st in STAGES:
+            if not os.path.isdir(wh.path(st.name)):
+                continue
+            lin = Lineage(wh.path(st.name))
+            for b in lin.completed_buckets():
+                d = os.path.join(wh.path(st.name), f"sbucket={b}")
+                sizes = [
+                    os.path.getsize(os.path.join(d, f))
+                    for f in os.listdir(d) if f.endswith(".parquet")
+                ]
+                m = lin.get(b)
+                assert (m.bytes, m.files) == (sum(sizes), len(sizes)), (st.name, b)
+                n += 1
+        return n
+
+    wh = Warehouse(str(tmp_path / "mb"), n_buckets=4)
+    p = TierPipeline(spark, wh, CFG10, chunk_buckets=4)
+    in_batch = F.col("conv_id").isin(["conv00000005"]) & (F.col("turn_idx") % 5 == 1)
+    p.run(transcripts.where(~in_batch))
+    assert check(wh) == 6 * 4
+    p.append(transcripts.where(in_batch), batch_id="b1")
+    assert check(wh) == 6 * 4
+    tables = warehouse_status(wh.root)["tables"]
+    for st in ("raw", "series", "segments", "tier_1m", "tier_1h", "tier_1d"):
+        lin = Lineage(wh.path(st))
+        assert tables[st]["bytes"] == sum(lin.get(b).bytes for b in range(4)) > 0
+        assert tables[st]["files"] == sum(lin.get(b).files for b in range(4)) >= 4
+    # a manifest from before the fields existed
+    path = os.path.join(wh.path("raw"), "_lineage", "bucket=0.json")
+    with open(path) as f:
+        doc = json.load(f)
+    del doc["bytes"], doc["files"]
+    with open(path, "w") as f:
+        json.dump(doc, f)
+    assert Lineage(wh.path("raw")).get(0).bytes is None
+    raw = warehouse_status(wh.root)["tables"]["raw"]
+    assert raw["bytes"] is None and raw["files"] is None and raw["buckets"] == 4
+
+
 def test_archive_series_demotes_and_restores_exactly(spark, transcripts, tmp_path):
     """Cold archive: archive_series(h) writes blob pairs for every
     sub-horizon series point, drops the hot rows, and
