@@ -29,150 +29,6 @@ from modelardb_dynamic_spark import queries as Q  # noqa: E402
 from modelardb_dynamic_spark.config import EngineConfig  # noqa: E402
 from modelardb_dynamic_spark.session import build_session  # noqa: E402
 
-# queries() entries timed as-is (self-contained; include the compress step
-# where they use the segment table, which is exactly the engine's hot path)
-BENCH_QUERIES = [
-    "seg_count_s",
-    "seg_agg_s",
-    "dp_restore_range",
-    "rollup_1h_gapfill",
-    "tier_1d",
-    "agg_hour_of_day",
-    "segment_restrict",
-    "tpch_q1",
-    "topk_orders_per_cust",
-    "sessionize",
-    "asof_purchase",
-    "interval_join",
-    "dedup_exact",
-    "minhash_pairs",
-    "simhash_pairs",
-    "ngram_jaccard",
-    "dup_spans",
-    "novelty",
-    "bpe_merges",
-    "bpe_encode",
-    "bm25_search",
-    "token_stats",
-    "token_rarity",
-    "lm_xent",
-    "token_entropy",
-    "pmi_collocations",
-    "zipf_head",
-    "vocab_drift",
-    "hll_sliding",
-    "tfidf_keywords",
-    "alp_points",
-    "transition_entropy",
-    "sax_similar",
-    "source_health",
-    "hist_sliding",
-    "hist_psi",
-    "tool_affinity",
-    "trimmed_tokens",
-    "lang_id",
-    "fingerprint",
-    "winnow_fingerprints",
-    "rolling_fingerprint",
-    "embedding_dups",
-    "paraphrase_pairs",
-    "ann_topk",
-    "ann_ivf",
-    "ann_recall",
-    "wav_features",
-    "png_features",
-    "avi_features",
-    "decontaminate",
-    "stratified_sample",
-    "pack_documents",
-    "repetition_stats",
-    "pii_scrub",
-    "gopher_quality",
-    "corr_pairs",
-    "xcorr_leadlag",
-    "interp_10m",
-    "dod_times",
-    "tiered_agg",
-    "dup_clusters",
-    "leak_splits",
-    "curation_verdict",
-    "hll_distinct",
-    "kmv_distinct",
-    "kmv_overlap",
-    "turn_transitions",
-    "hist_quantile",
-    "rolling_zscore",
-    "mad_outliers",
-    "counter_rate",
-    "tiered_hll_range",
-    "cms_heavy",
-    "tiered_cms_range",
-    "ewma_backtest",
-    "holt_backtest",
-    "hw_backtest",
-    "cohort_retention",
-    "funnel_daily",
-    "m4_downsample",
-    "zorder_scan",
-    "gap_audit",
-    "acf_turnrate",
-    "sax_words",
-    "reply_latency",
-    "burst_episodes",
-    "cusum_shifts",
-    "interarrival",
-    "bloom_members",
-    "twa",
-    "trend_ols",
-    "theil_sen",
-    "seasonal_anom",
-    "seasonal_envelope",
-    "sliding_24h",
-    "context_growth",
-    "conv_summary",
-    "vocab_growth",
-    "tool_usage",
-    "agent_loops",
-    "tool_latency",
-    "tool_latency_pct",
-    "turn_echo",
-    "verbosity_latency",
-    "trending_terms",
-    "dispersion",
-    "peak_concurrency",
-    "flatline_runs",
-    "benford",
-    "decayed_counts",
-    "mann_kendall",
-    "slo_burn",
-    "pacf",
-    "temporal_entropy",
-    "stream_slo",
-    "stream_concurrency",
-    "concurrency_occupancy",
-    "graph_triangles",
-    "hist_ks",
-    "seasonal_strength",
-    "ljung_box",
-    "spectral_daily",
-    "forecast_league",
-    "ohlc_1h",
-    "anomaly_consensus",
-    "binseg_split",
-    "percentile_bands",
-    "locf_fill",
-    "latency_trend",
-    "type_hour_chi2",
-    "rate_shift",
-    "fk_audit",
-    "nation_revenue",
-    "order_percentiles",
-    "weighted_sample",
-    "hill_tail",
-    "ann_pq",
-]
-
-
 def _force(df) -> int:
     df.write.format("noop").mode("overwrite").save()
     return 0
@@ -298,7 +154,7 @@ def main() -> None:
     # single contaminated pass misreports capability by multiple x.
     # Repeats are INTERLEAVED (pass 1 of every query, then pass 2) so a
     # multi-minute steal window cannot contaminate both samples of one
-    # query — with 62 queries a full pass takes ~10 min, longer than the
+    # query — a full pass over the registry takes longer than the
     # observed windows. A query whose two samples still disagree >1.6x
     # gets one tiebreak rep (bounded extra cost, only where contamination
     # is evident).
@@ -306,9 +162,9 @@ def main() -> None:
 
     def run_passes(n_passes: int) -> dict[str, float]:
         out: dict[str, float] = {}
-        samples: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
+        samples: dict[str, list[float]] = {n: [] for n in registry}
         for _ in range(n_passes):
-            for name in BENCH_QUERIES:
+            for name in registry:
                 t0 = time.time()
                 _force(registry[name](spark, sf_dir))
                 samples[name].append(time.time() - t0)
@@ -321,23 +177,21 @@ def main() -> None:
         return out
 
     # COLD: every query self-contained (re-derives its own segment table
-    # from the events parquet) — methodology identical to rounds 1-4, so
-    # the headline stays comparable across BENCH_r*.json.
-    os.environ["MDBS_BENCH_MEMO_SEGMENTS"] = "0"
+    # from the events parquet), timed over the whole registry in its order.
     timings = run_passes(repeats)
     # WARM: the shared events->segments derivation memoized behind a
-    # localCheckpoint (queries._event_segments, opt-in env) — steady-state
-    # per-query cost with the ~1.5 s/query fixed re-compression removed
-    # (r4 VERDICT #4). Queries that don't touch the segment table are
-    # unaffected; their warm number is just one more repetition. ONE pass
-    # (memoized timings vary far less than cold ones, and the suite
-    # already ran 2x by now — the JVM is hot). With one sample per query
-    # the 1.6x tiebreak never fires, so a noise-hit warm query stays
-    # noisy.
-    os.environ["MDBS_BENCH_MEMO_SEGMENTS"] = "1"
-    _force(registry["seg_count_s"](spark, sf_dir))  # builds the memo once
-    warm_timings = run_passes(1)
-    os.environ["MDBS_BENCH_MEMO_SEGMENTS"] = "0"
+    # localCheckpoint (queries.memoize_segments) — steady-state per-query
+    # cost with the ~1.5 s/query fixed re-compression removed (r4 VERDICT
+    # #4). Queries that don't touch the segment table are unaffected;
+    # their warm number is just one more repetition. ONE pass (memoized
+    # timings vary far less than cold ones, and the suite already ran 2x
+    # by now — the JVM is hot). With one sample per query the 1.6x
+    # tiebreak never fires, so a noise-hit warm query stays noisy.
+    Q.memoize_segments(spark, sf_dir)
+    try:
+        warm_timings = run_passes(1)
+    finally:
+        Q.clear_segment_memo()
 
     pipe_best = None
     for _ in range(repeats):

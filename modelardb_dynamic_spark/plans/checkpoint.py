@@ -91,8 +91,9 @@ class BucketManifest:
 
 class Lineage:
     def __init__(self, table_root: str):
+        # created by the first commit, so a read-only probe of a stage that
+        # was never built leaves no trace (stage detection is by existence)
         self.dir = os.path.join(table_root, "_lineage")
-        os.makedirs(self.dir, exist_ok=True)
 
     def _path(self, bucket: int) -> str:
         return os.path.join(self.dir, f"bucket={bucket}.json")
@@ -124,12 +125,15 @@ class Lineage:
             stage, bucket, rows, high_water_ts, input_fingerprint,
             wall_s, time.time(), ts_col, nbytes, files,
         )
+        os.makedirs(self.dir, exist_ok=True)
         tmp = self._path(bucket) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(asdict(m), f)
         os.replace(tmp, self._path(bucket))  # atomic
 
     def completed_buckets(self) -> list[int]:
+        if not os.path.isdir(self.dir):
+            return []
         out = []
         for name in os.listdir(self.dir):
             if name.startswith("bucket=") and name.endswith(".json"):

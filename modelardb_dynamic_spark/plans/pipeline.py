@@ -1126,7 +1126,9 @@ class TierPipeline:
         for name in names:
             w = STAGE[name].grid
             m = Lineage(self.wh.path(name)).metrics()
-            if m.get("high_water_ts") is not None:
+            if not m["buckets"]:
+                hw[w] = -(1 << 62)  # never built: the raw rows answer
+            elif m["high_water_ts"] is not None:
                 hw[w] = int(m["high_water_ts"])
             rh = self.retention_horizon(name)
             if rh is not None:

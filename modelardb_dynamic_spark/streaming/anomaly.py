@@ -6,49 +6,40 @@ Same semantics, same bits: each point is scored against the TRAILING
 window_buckets points of its series (itself excluded), z = (v*n - s) /
 sqrt(n*ss - s^2) over exact int64 window sums, the flag the pure-integer
 comparison (v*n - s)^2 > k^2 * (n*ss - s^2). The state per series is the
-last window_buckets (ts, v) pairs — bounded, O(window) — carried by
+last window_buckets values — bounded, O(window) — carried by
 applyInPandasWithState; inside the handler the window sums are numpy
 cumsum differences (vectorized, never per-row Python loops), and the
 float steps are the SAME correctly-rounded IEEE ops the batch expression
 tree performs, so streamed rows equal the batch operator's rows exactly
 at the frontier (pinned in tests/test_streaming_anomaly.py).
 
-In-order contract: rows are processed in (ts_ms) order per series and a
-row at or before the series' high-water mark is DROPPED from scoring,
-mirroring the engine's batch ingest contract for late
-arrivals — every drop increments the per-series n_late_dropped
-counter carried on each emitted row, so lateness is observable, never
-silent (reference analog: the in-order segment generator,
-core/SegmentGenerator.java:152-304 — out-of-order input is a caller
-error there too). Use the watermarked continuous aggregate
+In-order contract: streaming/twins.py in_order (late rows dropped and
+counted in n_late_dropped). Use the watermarked continuous aggregate
 (streaming/rollup.py) when lateness tolerance matters more than alert
 latency.
 
 Scale notes: one shuffle on sid (the state key); state is
 window-bounded per series; all arithmetic is vectorized numpy inside
-Arrow batches. No timeouts: an idle series simply keeps its ring buffer
-(window_buckets rows) until traffic resumes.
+Arrow batches.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from modelardb_dynamic_spark.streaming.twins import in_order
 
 OUT_SCHEMA = (
     "sid string, ts_ms long, v long, n_w long, s_w long, ss_w long, "
     "z double, is_anomaly boolean, n_late_dropped long"
 )
-STATE_SCHEMA = "ts array<long>, v array<long>, hwm long, dropped long"
 
 
 def _score_block(
-    sid: str,
     buf_v: np.ndarray,
     new_ts: np.ndarray,
     new_v: np.ndarray,
@@ -82,7 +73,6 @@ def _score_block(
         flag[i] = num * num > k * k * var
     return pd.DataFrame(
         {
-            "sid": sid,
             "ts_ms": new_ts,
             "v": new_v,
             "n_w": n_w,
@@ -104,61 +94,13 @@ def stream_zscore(
     Returns the scored append stream with the batch operator's exact
     output schema and values."""
 
-    def handler(
-        key: Tuple[str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        sid = key[0]
-        if state.exists:
-            st_ts, st_v, hwm, dropped = state.get
-            buf_ts = list(st_ts)
-            buf_v = list(st_v)
-        else:
-            buf_ts, buf_v, hwm, dropped = [], [], -(1 << 62), 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values("ts_ms", kind="mergesort")
+    def step(state, batch, _hwm):
         ts = batch["ts_ms"].to_numpy(np.int64)
         vs = batch["v"].to_numpy(np.int64)
-        keep = ts > hwm  # in-order contract: late/dup rows dropped
-        dropped += int((~keep).sum())  # counted, never silent
-        ts, vs = ts[keep], vs[keep]
-        if len(ts):
-            out = _score_block(
-                sid,
-                np.asarray(buf_v, dtype=np.int64),
-                ts,
-                vs,
-                window_buckets,
-                min_periods,
-                k,
-            )
-            out["n_late_dropped"] = dropped
-            buf_ts = (buf_ts + [int(t) for t in ts])[-window_buckets:]
-            buf_v = (buf_v + [int(x) for x in vs])[-window_buckets:]
-            hwm = int(ts[-1])
-            state.update((buf_ts, buf_v, hwm, dropped))
-            yield out
-        elif state.exists:
-            state.update((buf_ts, buf_v, hwm, dropped))
+        buf_v = np.asarray(state[0], dtype=np.int64)
+        out = _score_block(buf_v, ts, vs, window_buckets, min_periods, k)
+        return (np.r_[buf_v, vs][-window_buckets:].tolist(),), out, int(ts[-1])
 
-    return points.groupBy("sid").applyInPandasWithState(
-        handler,
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return in_order(
+        points, ["sid"], "ts_ms", OUT_SCHEMA, "v array<long>", ([],), step
     )
-
-
-def stream_zscore_batch_twin(
-    points: DataFrame,
-    window_buckets: int = 24,
-    min_periods: int = 12,
-    k: int = 3,
-) -> DataFrame:
-    """The batch expression the stream must equal at the frontier —
-    re-exported so tests and docs name the contract in one place."""
-    from modelardb_dynamic_spark.operators.analytics import rolling_zscore
-
-    return rolling_zscore(points, window_buckets, min_periods, k)

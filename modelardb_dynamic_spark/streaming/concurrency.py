@@ -12,22 +12,20 @@ instant can't matter), the per-bucket peak is the max of the running
 count over the bucket's boundary instants, and the argmax is the first
 instant attaining it.
 
-Bucket-closing contract: a bucket's row is emitted when the first
-boundary of a LATER bucket arrives; the open frontier bucket is
-withheld. A boundary at or before the last processed instant is late:
-dropped from the count and tallied on every subsequent emitted row
-(n_late_dropped) — same in-order discipline as streaming/sloburn.py.
-NOTE a dropped late delta means the running count diverges from the
-true one from that point on (the stream is a gauge, not a ledger);
-the counter makes the divergence observable so the batch sweep can
-reconcile.
+In-order and bucket-closing contract: streaming/twins.py
+closing_buckets, with the whole stream as one key: a boundary at or
+before the last processed instant is late, dropped from the count and
+tallied per delta row in n_late_dropped. NOTE a dropped late delta
+means the running count diverges from the true one from that point on
+(the stream is a gauge, not a ledger); the counter makes the divergence
+observable so the batch sweep can reconcile.
 
 Scale notes: ONE global state cell (running count, open-bucket
-extremum, high-water mark — O(1)); each micro-batch collapses to net
-deltas per distinct instant with a vectorized pandas groupby before
-touching state. The global ordering requirement is inherent to a
-global gauge (same note as the batch operator: the window carries
-|distinct boundary instants|, bounded by time span).
+extremum, high-water mark — O(1)); each bucket's run of deltas
+collapses to net deltas per distinct instant with a vectorized pandas
+groupby before the per-instant sweep. The global ordering requirement
+is inherent to a global gauge (same note as the batch operator: the
+window carries |distinct boundary instants|, bounded by time span).
 
 Reference analog: none (live ops gauges are beyond the reference's
 scope).
@@ -35,65 +33,34 @@ scope).
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from modelardb_dynamic_spark.streaming.twins import closing_buckets
 
 OUT_SCHEMA = "bucket_ts long, peak long, peak_at_ms long, n_late_dropped long"
-STATE_SCHEMA = (
-    "c long, b long, m long, m_at long, hwm long, dropped long, has_open boolean"
-)
+
+
+def _fold(acc, run):
+    c, m, m_at = acc
+    for t, d in run.groupby("t", sort=True)["d"].sum().items():
+        c += int(d)
+        if c > m:
+            m, m_at = c, int(t)
+    return c, m, m_at
+
+
+def _start(acc, run):
+    # the bucket's extremum starts at its first instant, even one whose
+    # deltas net to zero; the running count carries over
+    return _fold((acc[0], -(1 << 62), 0), run)
 
 
 def stream_concurrency(deltas: DataFrame, bucket_ms: int) -> DataFrame:
     """deltas: STREAMING (t long, d int). Returns the append stream of
     closed-bucket (bucket_ts, peak, peak_at_ms, n_late_dropped) rows."""
-
-    def handler(
-        key: Tuple[int],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            c, b, m, m_at, hwm, dropped, has_open = state.get
-        else:
-            c, b, m, m_at, hwm, dropped, has_open = 0, 0, 0, 0, -(1 << 62), 0, False
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        net = batch.groupby("t", sort=True)["d"].sum()
-        out = []
-        for t, d in net.items():
-            t, d = int(t), int(d)
-            if t <= hwm:
-                dropped += 1  # late instant: count it, don't move the gauge
-                continue
-            nb = (t // bucket_ms) * bucket_ms
-            if has_open and nb != b:
-                out.append((b, m, m_at))
-                has_open = False
-            c += d
-            if not has_open or nb != b:
-                b, m, m_at, has_open = nb, c, t, True
-            elif c > m:
-                m, m_at = c, t
-            hwm = t
-        state.update((c, b, m, m_at, hwm, dropped, has_open))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "bucket_ts": [r[0] for r in out],
-                    "peak": [r[1] for r in out],
-                    "peak_at_ms": [r[2] for r in out],
-                    "n_late_dropped": dropped,
-                }
-            )
-
-    return deltas.withColumn("g", F.lit(1)).groupBy("g").applyInPandasWithState(
-        handler,
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return closing_buckets(
+        deltas.withColumn("g", F.lit(1)), ["g"], "t", bucket_ms, OUT_SCHEMA,
+        "c long, m long, m_at long", (0, 0, 0), _start, _fold,
+        lambda acc: {"peak": acc[1], "peak_at_ms": acc[2]},
     )

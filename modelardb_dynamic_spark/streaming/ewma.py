@@ -11,37 +11,26 @@ Python floats perform the identical correctly-rounded IEEE double ops
 as the batch SQL fold (the streaming/sloburn.py precedent), so
 streamed rows equal the batch operator's rows exactly at the frontier.
 
-Bucket-closing contract: a series' open bucket is emitted when the
-first row of a LATER bucket for that series arrives; the frontier
-bucket is withheld. Late rows (at or before the series' high-water
-mark) are dropped and tallied on every subsequent emitted row
-(n_late_dropped) — the in-order discipline shared by every streaming
-twin here.
+In-order and bucket-closing contract: streaming/twins.py
+closing_buckets (late rows dropped and counted in n_late_dropped; the
+frontier bucket is withheld).
 
-Scale notes: O(1) state per series (open bucket id, running level,
-count, sum, previous level); the per-row fold is inherently sequential
-WITHIN a bucket but runs over an Arrow batch's numpy arrays with a
-bucket-grouped loop, and buckets are bounded (<=60 rows for an hour
-bucket on the minute grid). Keyed by sid — the engine's universal
-hash partitioning.
+Scale notes: O(1) state per series (running level, count, sum, previous
+level); the per-row fold is inherently sequential WITHIN a bucket but
+runs over an Arrow batch's numpy arrays, and buckets are bounded (<=60
+rows for an hour bucket on the minute grid). Keyed by sid — the engine's
+universal hash partitioning.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from modelardb_dynamic_spark.streaming.twins import closing_buckets
 
 OUT_SCHEMA = (
     "sid string, bucket_ts long, n long, level double, forecast double, "
     "abs_err double, n_late_dropped long"
-)
-STATE_SCHEMA = (
-    "b long, lvl double, n long, s long, prev double, has_prev boolean, "
-    "hwm long, dropped long, has_open boolean"
 )
 
 
@@ -54,73 +43,29 @@ def stream_ewma(
     a = float(alpha)
     one_m = 1.0 - a
 
-    def handler(
-        key: Tuple[str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        sid = key[0]
-        if state.exists:
-            (b, lvl, n, s, prev, has_prev, hwm, dropped, has_open) = state.get
-        else:
-            b, lvl, n, s = 0, 0.0, 0, 0
-            prev, has_prev = 0.0, False
-            hwm, dropped, has_open = -(1 << 62), 0, False
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values("ts_ms", kind="mergesort")
-        ts = batch["ts_ms"].to_numpy(np.int64)
-        vs = batch["v"].to_numpy(np.int64)
-        keep = ts > hwm
-        dropped += int((~keep).sum())
-        ts, vs = ts[keep], vs[keep]
-        out = []
+    def fold(acc, run):
+        lvl, n, s, prev, has_prev = acc
+        for v in run["v"].tolist():
+            lvl = a * float(v) + one_m * lvl
+            n += 1
+            s += v
+        return lvl, n, s, prev, has_prev
 
-        def close():
-            fc = prev if has_prev else None
-            err = (
-                abs(float(s) / n - fc) if fc is not None else None
-            )
-            out.append((b, n, lvl, fc, err))
+    def start(acc, run):
+        # the previous bucket's level (none before the first bucket) is
+        # this bucket's forecast; the level seeds from the first value
+        lvl, n, _, _, _ = acc
+        v0 = int(run["v"].iloc[0])
+        return fold((float(v0), 1, v0, lvl, n > 0), run.iloc[1:])
 
-        if len(ts):
-            bk = (ts // bucket_ms) * bucket_ms
-            for nb, v in zip(bk, vs):
-                nb, v = int(nb), int(v)
-                if has_open and nb != b:
-                    close()
-                    prev, has_prev = lvl, True
-                    has_open = False
-                if not has_open:
-                    b, lvl, n, s, has_open = nb, float(v), 1, v, True
-                else:
-                    lvl = a * float(v) + one_m * lvl
-                    n += 1
-                    s += v
-            hwm = int(ts[-1])
-        state.update(
-            (b, lvl, n, s, prev, has_prev, hwm, dropped, has_open)
-        )
-        if out:
-            yield pd.DataFrame(
-                out, columns=["bucket_ts", "n", "level", "forecast", "abs_err"]
-            ).assign(sid=sid, n_late_dropped=dropped)[
-                ["sid", "bucket_ts", "n", "level", "forecast", "abs_err",
-                 "n_late_dropped"]
-            ]
+    def close(acc):
+        lvl, n, s, prev, has_prev = acc
+        fc = prev if has_prev else None
+        err = abs(float(s) / n - fc) if fc is not None else None
+        return {"n": n, "level": lvl, "forecast": fc, "abs_err": err}
 
-    return points.groupBy("sid").applyInPandasWithState(
-        handler,
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return closing_buckets(
+        points, ["sid"], "ts_ms", bucket_ms, OUT_SCHEMA,
+        "lvl double, n long, s long, prev double, has_prev boolean",
+        (0.0, 0, 0, 0.0, False), start, fold, close,
     )
-
-
-def stream_ewma_batch_twin(
-    points: DataFrame, bucket_ms: int, alpha: float = 0.3
-) -> DataFrame:
-    """The batch contract the stream must equal at the frontier."""
-    from modelardb_dynamic_spark.operators.analytics import ewma_levels
-
-    return ewma_levels(points, bucket_ms, alpha=alpha)

@@ -10,13 +10,12 @@ ARE IEEE doubles) on the same values as the batch expression tree, so
 streamed rows equal the batch operator's rows exactly over the closed
 buckets (pinned in tests/test_streaming_sloburn.py).
 
-Bucket-closing contract: a bucket's row is emitted when the first event
-of a LATER bucket arrives (the stream can't know an hour is over until
-something follows it); the still-open frontier bucket is withheld.
-Events for an already-emitted bucket are late: dropped from scoring and
-counted on every subsequent emitted row (n_late_dropped, never silent)
-— the same in-order discipline as streaming/anomaly.py and batch
-ingest.
+In-order contract: streaming/twins.py in_order on the hour index, with
+the whole stream as one key. A bucket's row is emitted when an event of
+a LATER bucket arrives; the still-open frontier bucket is withheld. The
+high-water is the last CLOSED bucket, so events for an emitted bucket
+are late (dropped and counted in n_late_dropped), while an older bucket
+that is still open accepts them.
 
 Scale notes: the state is ONE group (the pager is global, like the
 batch operator whose post-groupBy table is |buckets|-sized): a dict of
@@ -33,23 +32,17 @@ multi-window rule is the public SRE-workbook page policy.
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from modelardb_dynamic_spark.streaming.twins import in_order
 
 OUT_SCHEMA = (
     "bucket_ts long, err_s long, tot_s long, err_l long, tot_l long, "
     "burn_short double, burn_long double, page boolean, n_late_dropped long"
 )
-# open/ring buckets as parallel arrays (h ascending), plus the emit
-# high-water bucket and the late counter
-STATE_SCHEMA = (
-    "hs array<long>, errs array<long>, tots array<long>, "
-    "hwm long, dropped long"
-)
+# open/ring buckets as parallel arrays (h ascending)
+STATE_SCHEMA = "hs array<long>, errs array<long>, tots array<long>"
 
 
 def _emit_row(
@@ -104,34 +97,22 @@ def stream_slo_burn(
         F.expr(
             f"CASE WHEN event_type = '{error_type}' THEN 1 ELSE 0 END"
         ).alias("e"),
-        F.lit(1).alias("k"),
+        F.lit(1).alias("g"),  # the one global state key
     )
 
-    def handler(
-        key: Tuple[int],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            hs, errs, tots, hwm, dropped = state.get
-            ring = {int(h): [int(e), int(t)] for h, e, t in zip(hs, errs, tots)}
-        else:
-            ring, hwm, dropped = {}, -(1 << 62), 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
+    def step(state, batch, hwm):
+        hs, errs, tots = state
+        ring = {int(h): [int(e), int(t)] for h, e, t in zip(hs, errs, tots)}
         inc = batch.groupby("h", sort=True).agg(
             err=("e", "sum"), tot=("e", "size")
         )
-        out_rows = []
         for h, row in inc.iterrows():
-            h = int(h)
-            if h <= hwm:
-                dropped += int(row["tot"])  # late bucket: count, skip
-                continue
-            cur = ring.setdefault(h, [0, 0])
+            cur = ring.setdefault(int(h), [0, 0])
             cur[0] += int(row["err"])
             cur[1] += int(row["tot"])
         # close every complete bucket: all but the max open bucket
         open_hs = sorted(hh for hh in ring if hh > hwm)
+        out_rows = []
         for h in open_hs[:-1]:
             out_rows.append(
                 _emit_row(
@@ -142,27 +123,14 @@ def stream_slo_burn(
             )
             hwm = h
         # prune state outside the long window of the newest bucket
-        newest = open_hs[-1] if open_hs else hwm
-        ring = {
-            hh: v for hh, v in ring.items() if hh > newest - long_buckets
-        }
-        hs = sorted(ring)
-        state.update((
-            [int(h) for h in hs],
-            [int(ring[h][0]) for h in hs],
-            [int(ring[h][1]) for h in hs],
-            int(hwm),
-            int(dropped),
-        ))
-        if out_rows:
-            for r in out_rows:
-                r["n_late_dropped"] = dropped
-            yield pd.DataFrame(out_rows)
+        newest = open_hs[-1]
+        hs = sorted(hh for hh in ring if hh > newest - long_buckets)
+        return (
+            (hs, [ring[h][0] for h in hs], [ring[h][1] for h in hs]),
+            out_rows,
+            hwm,
+        )
 
-    return pre.withColumn("g", F.lit(1)).groupBy("g").applyInPandasWithState(
-        handler,
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return in_order(
+        pre, ["g"], "h", OUT_SCHEMA, STATE_SCHEMA, ([], [], []), step
     )

@@ -632,6 +632,46 @@ def test_append_backfills_stage_added_after_build(spark, transcripts, tmp_path):
     assert want.exceptAll(got).count() == 0
 
 
+def test_read_only_probes_create_no_stage(spark, transcripts, tmp_path):
+    """range_quantiles and a sealed-day probe on a warehouse built without
+    sketches leave no sketch-stage directory behind, so the next append
+    (which maintains the sketches only when hist_1h exists) builds none."""
+    import os
+
+    from modelardb_dynamic_spark.operators.sketches import hist_quantiles, hist_tier
+    from modelardb_dynamic_spark.sources.timeseries import to_ms
+
+    DAY = 86_400_000
+    in_batch = (F.col("conv_id") == "conv00000005") & (
+        F.pmod(F.col("turn_idx"), F.lit(5)) == 2
+    )
+    wh = Warehouse(str(tmp_path / "ro"), n_buckets=2)
+    p = TierPipeline(spark, wh, CFG10, chunk_buckets=2, salt_span_points=None)
+    p.run(transcripts.where(~in_batch))
+    sketch_dirs = [
+        wh.path(n)
+        for n in ("hist_1h", "hist_1d", "hll_1d", "cms_1d", "kmv_1d", "bloom_1d")
+    ]
+    turns = transcripts.where(~in_batch).select(
+        F.col("conv_id").alias("sid"),
+        to_ms("ts").alias("ts_ms"),
+        (1 + F.floor(F.length("text") / 4)).cast("long").alias("tokens"),
+    )
+    t_lo, t_hi = turns.agg(F.min("ts_ms"), F.max("ts_ms")).collect()[0]
+    # a never-built sketch tier covers nothing: the raw turns answer
+    got = p.range_quantiles(t_lo, t_hi + 1, HOUR_MS)
+    want = hist_quantiles(
+        hist_tier(turns, ["sid"], "tokens", f"(ts_ms DIV {HOUR_MS}) * {HOUR_MS}"),
+        ["sid"],
+    )
+    assert got.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert not p._sealed_day("kmv_1d", (t_lo // DAY) * DAY, "overlap_convs")
+    assert not any(map(os.path.exists, sketch_dirs))
+    p.append(transcripts.where(in_batch), batch_id="ro")
+    assert not any(map(os.path.exists, sketch_dirs))
+
+
 def test_overlap_convs_matches_python_kmv_replay(spark, transcripts, tmp_path):
     """overlap_convs: the kmv_1d sketch tier's day-over-day active-set
     overlap must equal a pure-Python KMV replay over the raw turns —

@@ -48,27 +48,24 @@ def to_sorted_rows(cols, rows):
     return [cols[i] for i in order], sorted(out, key=repr)
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    import os
-
-    # generated oracles (kmeans centroid literals) must train on the
-    # same sf dir the views point at
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
+def check(spark, sf_dir, names=()):
+    """Run each named queries() entry (every entry when names is empty) on
+    Spark and its oracle_sql() on DuckDB over sf_dir's parquet tables,
+    print one verdict line per query, and return the names that failed.
+    Generated oracles train on SPARK_GRAFT_ORACLE_SF_DIR, which must name
+    sf_dir."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    spark = build_session(app_name="check_oracles")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    failures = 0
+    failures = []
     for name, fn in qs.items():
-        if only and name not in only:
+        if names and name not in names:
             continue
         try:
             sdf = fn(spark, sf_dir)
@@ -76,7 +73,7 @@ def main():
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"[FAIL] {name}: spark error {type(e).__name__}: {e}")
-            failures += 1
+            failures.append(name)
             continue
         if name not in oracles:
             print(f"[rows-only] {name}: {len(srows)} rows, cols {scols}")
@@ -90,26 +87,39 @@ def main():
             orows = [tuple(d[c] for c in ocols) for d in tbl.to_pylist()]
         except Exception as e:
             print(f"[FAIL] {name}: duckdb error {e}")
-            failures += 1
+            failures.append(name)
             continue
         sc, sr = to_sorted_rows(scols, srows)
         oc, orr = to_sorted_rows(ocols, orows)
         if sc != oc:
             print(f"[FAIL] {name}: columns {sc} vs {oc}")
-            failures += 1
+            failures.append(name)
             continue
         if len(sr) != len(orr):
             print(f"[FAIL] {name}: rows {len(sr)} vs {len(orr)}")
-            failures += 1
+            failures.append(name)
             continue
         bad = [(a, b) for a, b in zip(sr, orr) if a != b]
         if bad:
             print(f"[FAIL] {name}: {len(bad)} differing rows; first: {bad[0]}")
-            failures += 1
+            failures.append(name)
             continue
         print(f"[OK]   {name}: {len(sr)} rows match")
+    con.close()
+    return failures
+
+
+def main():
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    import os
+
+    # generated oracles (kmeans centroid literals) must train on the
+    # same sf dir the views point at
+    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
+    spark = build_session(app_name="check_oracles")
+    failures = check(spark, sf_dir, set(sys.argv[2:]))
     spark.stop()
-    print(f"\n{failures} failures")
+    print(f"\n{len(failures)} failures")
     sys.exit(1 if failures else 0)
 
 
