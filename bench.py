@@ -5,21 +5,23 @@
      "queries": {name: sec, ...}, "sf": ..., "turns_per_sec": ...}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS   (default 32).
+     SPARK_GRAFT_CPUS   (default os.cpu_count()).
 
 Each timed query is forced end-to-end with a noop-format write (full
-computation on executors, no driver collect). The headline `pipeline`
-entry is the north-star path: synthetic transcript table -> per-conv
-series -> model compression -> 1m/1h/1d tiers with gap-fill; its
-turns/sec is reported separately. Scaling (local[8] vs local[32]) is
-measured by tools/scaling_bench.py and reported in BENCH.md.
+computation on executors, no driver collect). The `pipeline` entry times
+the product's ingestion path, TierPipeline.run (transcripts -> raw ->
+series -> segments -> 1m/1h/1d tiers) into a fresh warehouse; its
+turns/sec is reported separately. Scaling, N vs 4N pinned cores on the
+same pipeline, is measured by tools/scaling_bench.py (BENCH_SCALING.md).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -29,33 +31,27 @@ from modelardb_dynamic_spark import queries as Q  # noqa: E402
 from modelardb_dynamic_spark.config import EngineConfig  # noqa: E402
 from modelardb_dynamic_spark.session import build_session  # noqa: E402
 
+# staged inputs and bench warehouses: RAM-backed where the host has it
+_SCRATCH = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+
+
 def _force(df) -> int:
     df.write.format("noop").mode("overwrite").save()
     return 0
 
 
-def bench_pipeline(
-    spark,
-    n_convs: int,
-    turns_base: int = 5000,
-    input_dir: str | None = None,
-) -> tuple[float, int]:
-    """North-star path: transcripts (parquet) -> series -> segments ->
-    1m -> 1h -> 1d (all forced). Input synthesis happens once, to a
-    size-keyed parquet dir, OUTSIDE the timed window (the generator is
-    deterministic, so every run and parallelism level reads identical
-    bytes); the timed pipeline starts at the storage read, like a real
-    job. turns_base=5000 with the generator's Zipf skew yields roughly
-    50 * n_convs turns with a 15k-turn hot head conversation."""
-    import tempfile
-
-    from modelardb_dynamic_spark.operators.compress import compress_transcripts
-    from modelardb_dynamic_spark.operators.rollup import downsample, gap_fill, rollup
+def stage_input(
+    spark, n_convs: int, turns_base: int = 5000, input_dir: str | None = None
+) -> tuple[str, int]:
+    """Write the deterministic synthetic transcripts once, to a size-keyed
+    parquet dir (every run and parallelism level reads identical bytes),
+    and return (path, turns). turns_base=5000 with the generator's Zipf
+    skew yields roughly 50 * n_convs turns with a 15k-turn hot head
+    conversation."""
     from modelardb_dynamic_spark.sources.transcripts import generate_transcripts
 
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     path = input_dir or os.path.join(
-        base, f"mdbs_bench_input_{n_convs}_{turns_base}"
+        _SCRATCH, f"mdbs_bench_input_{n_convs}_{turns_base}"
     )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # fixed 64-file layout regardless of the generating session's core
@@ -64,78 +60,42 @@ def bench_pipeline(
         generate_transcripts(
             spark, n_convs=n_convs, turns_base=turns_base
         ).repartition(64).write.mode("overwrite").parquet(path)
-    n_turns = spark.read.parquet(path).count()
+    return path, spark.read.parquet(path).count()
 
-    t0 = time.time()
-    tr = spark.read.parquet(path)
-    # fused derive+compress: one narrow exchange (bit-identical to the
-    # staged series path, asserted in tests). length_bound 256 (reference
-    # default 50 is an in-memory JVM buffer constraint; the vectorized
-    # kernel has none): +37% ratio on the noisy token_rate series at
-    # identical error bound, same reconstruction
-    segs = compress_transcripts(
-        tr,
-        EngineConfig(
-            error_bound=10.0, length_bound=256, sampling_interval_ms=60_000
-        ),
-        salt_span_points=1 << 16,
-    ).persist()
-    # segs is persisted above: the rollup branches re-read the cache
-    m1 = rollup(segs, 60_000, materialize=False)
-    h1 = rollup(segs, 3_600_000, materialize=False).persist()
-    d1 = downsample(h1, 86_400_000)
-    _force(m1)
-    _force(gap_fill(h1, 3_600_000))
-    _force(d1)
-    wall = time.time() - t0
+
+def bench_pipeline(
+    spark,
+    n_convs: int,
+    turns_base: int = 5000,
+    input_dir: str | None = None,
+) -> tuple[float, int]:
+    """The product's ingestion path, timed: TierPipeline.run (raw ->
+    series -> segments -> 1m -> 1h -> 1d) with the CLI's defaults, from
+    the staged parquet (stage_input, outside the timed window) into a
+    fresh warehouse that is removed afterwards — a reused one would resume
+    as a lineage no-op. Returns (wall seconds, input turns)."""
     from modelardb_dynamic_spark.operators.compress import compression_stats
+    from modelardb_dynamic_spark.plans.pipeline import TierPipeline
+    from modelardb_dynamic_spark.sources.catalog import Warehouse
 
-    stats = compression_stats(segs).collect()[0].asDict()
+    path, n_turns = stage_input(spark, n_convs, turns_base, input_dir)
+    root = tempfile.mkdtemp(prefix="mdbs_bench_wh_", dir=_SCRATCH)
+    try:
+        wh = Warehouse(root, n_buckets=32)
+        t0 = time.time()
+        TierPipeline(
+            spark, wh, EngineConfig(), chunk_buckets=16, salt_span_points=1 << 20
+        ).run(spark.read.parquet(path))
+        wall = time.time() - t0
+        stats = compression_stats(wh.read(spark, "segments")).collect()[0]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
     bench_pipeline.last_stats = {
         "n_segments": stats["n_segments"],
         "n_points": stats["n_points"],
         "compression_ratio": round(stats["compression_ratio"], 2),
     }
-    segs.unpersist()
-    h1.unpersist()
     return wall, n_turns
-
-
-def smooth_control() -> dict:
-    """Kernel-level control on REDD-like data (integer watt readings, long
-    appliance states): pins down that the bench pipeline's modest corpus
-    ratio is DATA-bound (the synthetic transcript series inject hash noise
-    by design), not engine-bound — on reference-class smooth data the same
-    kernel exceeds the reference's REDD ratios (report Table 4.5: 38.8x at
-    10%) and its ~1 M pts/s/core scalar-Java ingest bar."""
-    import numpy as np
-
-    from modelardb_dynamic_spark.models.kernels import compress_series
-
-    rng = np.random.default_rng(5)
-    n = 1_000_000
-    t = np.arange(n, dtype=np.int64) * 60_000
-    v = np.empty(n, dtype=np.float32)
-    i = 0
-    levels = [0.0, 4.0, 85.0, 210.0, 1200.0]
-    while i < n:
-        run = min(int(rng.integers(60, 12 * 60)), n - i)
-        lvl = levels[int(rng.integers(0, len(levels)))]
-        v[i : i + run] = lvl + np.round(
-            rng.normal(0, max(lvl * 0.004, 0.0), run)
-        )
-        i += run
-    cfg = EngineConfig(error_bound=10.0, sampling_interval_ms=60_000)
-    dt = float("inf")
-    for _ in range(3):  # best-of-3: see the steal note in main()
-        t0 = time.time()
-        segs = compress_series(t, v, cfg)
-        dt = min(dt, time.time() - t0)
-    stored = sum(24 + len(s.model) for s in segs)
-    return {
-        "smooth_control_ratio_eb10": round(16.0 * n / stored, 1),
-        "smooth_control_mpts_per_core": round(n / dt / 1e6, 2),
-    }
 
 
 def main() -> None:
@@ -221,7 +181,6 @@ def main() -> None:
                 # error (ModelarDB-Dynamic_report.pdf Table 4.5); ratios are
                 # data-dependent
                 **getattr(bench_pipeline, "last_stats", {}),
-                **smooth_control(),
             }
         )
     )

@@ -1,5 +1,9 @@
 """Compression stage: regular series -> segment table.
 
+The one compression path: TierPipeline.build_segments (the CLI, the
+streaming maintenance, bench.bench_pipeline) and the registry's segment
+queries all run compress().
+
 Spark shape:
     series.repartition(hash(sid[, salt]))
           .sortWithinPartitions(sid, metric, ts_ms)
@@ -33,7 +37,7 @@ engines/spark/SparkUDAF.scala:348-401):
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -103,62 +107,6 @@ class _Out:
         )
 
 
-def _emit_group(
-    out: _Out, sid: str, metric: str, t: np.ndarray, v: np.ndarray,
-    cfg: EngineConfig,
-) -> None:
-    order = np.argsort(t, kind="stable")
-    t = t[order]
-    v = v[order]
-    for s in compress_series(t, v, cfg):
-        out.sid.append(sid)
-        out.metric.append(metric)
-        out.start_ts.append(s.start_ts)
-        out.end_ts.append(s.end_ts)
-        out.mtid.append(s.mtid)
-        out.model.append(s.model)
-        out.cnt.append(s.cnt)
-        out.vmin.append(s.vmin)
-        out.vmax.append(s.vmax)
-        out.vsum.append(s.vsum)
-
-
-def _segments(
-    df: DataFrame, cfg: EngineConfig, keys: tuple[str, ...],
-    cols: dict[str, type], span_ms: int | None, emit: Callable[..., None],
-) -> DataFrame:
-    """Cluster df by series and mapInArrow it into segment rows:
-    emit(out, key, *slices) runs once per key run (operators/keyruns.py).
-
-    Rows hash-partition on sid and the salt EXPRESSION ts_ms // span (the
-    column itself never ships), into 2x cores partitions: two waves of map
-    tasks so a straggler partition (skewed series mix) doesn't idle the
-    rest of the cluster. The kernel re-derives the salt from the sorted
-    timestamps (monotone within a run); emitted rows carry no salt — a
-    salt edge forces a segment boundary exactly like a gap flush."""
-    hash_exprs = [F.col("sid")]
-    if span_ms:
-        hash_exprs.append((F.col("ts_ms") / span_ms).cast("long"))
-    n_part = 2 * df.sparkSession.sparkContext.defaultParallelism
-    df = (
-        df.repartition(n_part, *hash_exprs)
-        .sortWithinPartitions(*keys, "ts_ms")
-        .select(*keys, *cols)
-    )
-    si = cfg.sampling_interval_ms
-
-    def map_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for groups in key_runs(batches, keys, cols, span_ms):
-            out = _Out()
-            for key, arrs in groups:
-                emit(out, key, *arrs)
-            batch = out.to_batch(si)
-            if batch is not None:
-                yield batch
-
-    return df.mapInArrow(map_fn, schema=SEGMENT_SCHEMA)
-
-
 def compress(
     series: DataFrame,
     cfg: EngineConfig,
@@ -173,69 +121,50 @@ def compress(
 
     salt_span_points: split each series into ranges of that many sampling
     intervals so hot series parallelize (flush-at-boundary semantics above).
+
+    Rows hash-partition on sid and the salt EXPRESSION ts_ms // span (the
+    column itself never ships), into 2x cores partitions: two waves of map
+    tasks so a straggler partition (skewed series mix) doesn't idle the
+    rest of the cluster. The kernel re-derives the salt from the sorted
+    timestamps (monotone within a run, operators/keyruns.py); emitted rows
+    carry no salt — a salt edge forces a segment boundary exactly like a
+    gap flush.
     """
-    span_ms = (
-        salt_span_points * cfg.sampling_interval_ms if salt_span_points else None
-    )
-    return _segments(
-        series, cfg, ("sid", "metric"),
-        {"ts_ms": np.int64, "value": np.float32}, span_ms,
-        lambda out, key, t, v: _emit_group(out, key[0], key[1], t, v, cfg),
-    )
-
-
-def _derive_and_compress_group(
-    out: _Out, sid: str, t_raw: np.ndarray, tok_raw: np.ndarray,
-    cfg: EngineConfig,
-) -> None:
-    """One conversation: bucket raw turn timestamps onto the SI grid and
-    compress the turn_rate / token_rate series (numpy throughout)."""
     si = cfg.sampling_interval_ms
-    bucket = (t_raw // si) * si
-    uniq, inv = np.unique(bucket, return_inverse=True)
-    counts = np.bincount(inv).astype(np.float32)
-    tokens = np.bincount(inv, weights=tok_raw.astype(np.float64)).astype(np.float32)
-    _emit_group(out, sid, "turn_rate", uniq, counts, cfg)
-    _emit_group(out, sid, "token_rate", uniq, tokens, cfg)
-
-
-def compress_transcripts(
-    transcripts: DataFrame,
-    cfg: EngineConfig,
-    salt_span_points: int | None = None,
-) -> DataFrame:
-    """Fused transcript -> series -> segments operator.
-
-    Equivalent to compress(transcript_series(transcripts, si), cfg) but
-    with ONE narrow exchange instead of [hash-agg exchange on
-    (conv_id, minute) -> stack -> repartition(sid) -> sort]: the per-minute
-    turn_rate / token_rate derivation is a numpy bincount inside the same
-    Arrow kernel that compresses. At 10^12 turns the JVM hash aggregation
-    over ~10^10 (conv, minute) string-keyed groups is the scaling
-    bottleneck (memory-bound, poor multicore scaling); the fused path
-    shuffles only (conv_id, ts_ms, tokens) rows and aggregates per
-    conversation in vectorized code. Output is bit-identical to the
-    unfused path (asserted in tests/test_pipeline.py)."""
-    si = cfg.sampling_interval_ms
-    df = transcripts.select(
-        F.col("conv_id").alias("sid"),
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
-        # null text counts as zero tokens; null ts rows are dropped below —
-        # the Arrow kernel's int64 casts would otherwise turn NaN into
-        # undefined values, diverging from the unfused path where F.sum
-        # skips nulls
-        F.coalesce(F.floor(F.length("text") / 4).cast("long"), F.lit(0)).alias(
-            "tokens"
-        ),
-    ).where(F.col("ts_ms").isNotNull())
     span_ms = salt_span_points * si if salt_span_points else None
-    return _segments(
-        df, cfg, ("sid",),
-        {"ts_ms": np.int64, "tokens": np.int64}, span_ms,
-        lambda out, key, t, tok: _derive_and_compress_group(
-            out, key[0], t, tok, cfg
-        ),
+    hash_exprs = [F.col("sid")]
+    if span_ms:
+        hash_exprs.append((F.col("ts_ms") / span_ms).cast("long"))
+    n_part = 2 * series.sparkSession.sparkContext.defaultParallelism
+    keys = ("sid", "metric")
+    cols = {"ts_ms": np.int64, "value": np.float32}
+    df = (
+        series.repartition(n_part, *hash_exprs)
+        .sortWithinPartitions(*keys, "ts_ms")
+        .select(*keys, *cols)
     )
+
+    def map_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for groups in key_runs(batches, keys, cols, span_ms):
+            out = _Out()
+            for (sid, metric, *_salt), (t, v) in groups:
+                order = np.argsort(t, kind="stable")
+                for s in compress_series(t[order], v[order], cfg):
+                    out.sid.append(sid)
+                    out.metric.append(metric)
+                    out.start_ts.append(s.start_ts)
+                    out.end_ts.append(s.end_ts)
+                    out.mtid.append(s.mtid)
+                    out.model.append(s.model)
+                    out.cnt.append(s.cnt)
+                    out.vmin.append(s.vmin)
+                    out.vmax.append(s.vmax)
+                    out.vsum.append(s.vsum)
+            batch = out.to_batch(si)
+            if batch is not None:
+                yield batch
+
+    return df.mapInArrow(map_fn, schema=SEGMENT_SCHEMA)
 
 
 def compression_stats(segments: DataFrame) -> DataFrame:

@@ -7,16 +7,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def half_ram(ram_bytes: int, share: int = 1) -> str:
+    """Half of ram_bytes split `share` ways, in whole GiB (at least 1g, at
+    most 24g): the heap of one of `share` local drivers on one host."""
+    return f"{min(24, max(1, ram_bytes // 2 // share // (1 << 30)))}g"
+
+
 def driver_memory() -> str:
-    """SPARK_DRIVER_MEMORY if set, else half the host's physical RAM in
-    whole GiB (at least 1g, at most 24g). In local mode the driver JVM
-    hosts every executor too, and a heap sized past the host's RAM lets
-    it grow until the kernel kills it instead of spilling."""
+    """SPARK_DRIVER_MEMORY if set, else half_ram of the host's physical
+    RAM. In local mode the driver JVM hosts every executor too, and a heap
+    sized past the host's RAM lets it grow until the kernel kills it
+    instead of spilling."""
     env = os.environ.get("SPARK_DRIVER_MEMORY")
     if env:
         return env
-    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{min(24, max(1, ram // 2 // (1 << 30)))}g"
+    return half_ram(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
 
 
 def build_session(

@@ -4,8 +4,6 @@ composition, and kill-and-resume via per-bucket lineage."""
 
 from __future__ import annotations
 
-import itertools
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -152,24 +150,20 @@ def test_raw_tier_text_equality(spark, transcripts, tmp_path):
     assert [r.asDict() for r in orig.collect()] == [r.asDict() for r in got.collect()]
 
 
-def test_fused_compress_transcripts_identical(spark, transcripts, series):
-    """compress_transcripts (one-exchange fused derive+compress) must be
-    bit-identical to compress(transcript_series(...)) — both plain and
-    salted, at the default Arrow batch size and at 64-row batches, where
-    most series span batches and both kernels take the carried-group
-    path."""
-    from modelardb_dynamic_spark.operators.compress import compress_transcripts
-
+def test_compress_identical_across_arrow_batch_sizes(spark, series):
+    """compress output at 64-row Arrow batches, where most series span
+    batches and the kernel takes key_runs' carried-group path, equals its
+    output at the default batch size — plain and salted."""
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(conf)
     try:
-        for max_batch, salt in itertools.product((prev, "64"), (None, 16)):
-            spark.conf.set(conf, max_batch)
-            fused = compress_transcripts(transcripts, CFG10, salt_span_points=salt)
-            unfused = compress(series, CFG10, salt_span_points=salt)
-            tag = f"batch={max_batch} salt={salt}"
-            assert fused.exceptAll(unfused).count() == 0, tag
-            assert unfused.exceptAll(fused).count() == 0, tag
+        for salt in (None, 16):
+            whole = compress(series, CFG10, salt_span_points=salt).localCheckpoint()
+            spark.conf.set(conf, "64")
+            small = compress(series, CFG10, salt_span_points=salt)
+            assert whole.exceptAll(small).count() == 0, salt
+            assert small.exceptAll(whole).count() == 0, salt
+            spark.conf.set(conf, prev)
     finally:
         spark.conf.set(conf, prev)
 

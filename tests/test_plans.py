@@ -74,24 +74,6 @@ def test_point_view_pushes_bound_filters_to_scan(spark, seg_parquet):
     assert "LessThanOrEqual(start_ts" in pushed, pushed
 
 
-def test_fused_pipeline_single_exchange_to_segments(spark):
-    """compress_transcripts: exactly ONE Exchange between the transcript
-    scan and the segment stream (the hash(sid, salt) repartition); the
-    series derivation is fused into the compress kernel, not a second
-    shuffle."""
-    from modelardb_dynamic_spark.operators.compress import compress_transcripts
-    from modelardb_dynamic_spark.sources.transcripts import generate_transcripts
-
-    tr = generate_transcripts(spark, n_convs=10, turns_base=16)
-    segs = compress_transcripts(tr, EngineConfig(error_bound=10.0,
-                                                 sampling_interval_ms=60_000))
-    plan = _formatted_plan(segs)
-    # generate_transcripts itself contains a window (one exchange); count
-    # exchanges AFTER the window: the full plan must have exactly 2
-    n_exchanges = plan.count("Exchange (")
-    assert n_exchanges <= 2, plan[:2000]
-
-
 def test_whole_stage_codegen_covers_signature_agg(spark):
     """The 64-permutation MinHash aggregate stays inside codegen (the
     default 100-field cutoff would silently drop it to interpreted mode;

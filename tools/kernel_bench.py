@@ -6,8 +6,8 @@ Corpora (all 60s grid, 1M points unless --n):
   mixed  — 40% constant runs / 30% linear ramps / 30% gaussian noise,
            interleaved in random-length runs: the adversarial case where
            every model family takes turns winning.
-  smooth — REDD-like integer watt levels (same generator as bench.py's
-           smooth_control): the reference-class case.
+  smooth — REDD-like integer watt levels (seed 5, eb 10): the
+           reference-class control for the transcript corpus ratio.
   noise  — pure gaussian: worst case, Gorilla carries everything.
   ramp   — pure linear: swing no-op fast path.
 

@@ -1,20 +1,43 @@
 #!/usr/bin/env python
-"""Two-cluster-size scaling evidence (north_rule): run the identical
-transcript tier pipeline at local[N] and local[4N] on the same input and
-report throughput at both plus scaling efficiency = thr(4N) / (4*thr(N)).
+"""Pipeline throughput and N -> 4N scaling of TierPipeline.run, the
+product's ingestion path (bench.bench_pipeline), every run pinned to its
+cores.
 
-A real cluster isn't available in this sandbox; two parallelism levels in
-local mode exercise the same partitioning/shuffle behavior (each local slot
-executes tasks exactly like an executor core; the plan, number of shuffle
-partitions, and task boundaries are identical to cluster mode). Each
-measurement subprocess is PINNED to exactly N CPUs with taskset — without
-pinning, the small-N config's JVM GC / shuffle-IO / Python workers ride
-free on the machine's idle cores (measured ~40%% flattering), which a real
-N-core executor host would not allow.
+Child mode (--cpus N): one session on N cores (the first N the process
+may use; the orchestrator's taskset picks which) and --passes calls of
+bench_pipeline, one JSON line per pass: wall_s, turns_per_sec and the
+steal fraction of its cores from /proc/stat. --passes 0 only stages the
+input.
 
-Usage:
-    python tools/scaling_bench.py                 # orchestrate N=4 vs 16
-    python tools/scaling_bench.py --cpus 8 --convs 4000   # one measurement
+Orchestrator mode (no --cpus): N = max(1, nproc // 4). Each pass runs
+three measurements, in reverse order on odd passes so host drift hits
+all three alike:
+
+    alone  one local[N] child on the first N-core slice, the rest idle
+    quad   four local[N] children at once on four disjoint N-core slices:
+           four Spark clusters that share nothing but the box, so their
+           summed throughput is the hardware ceiling with 4N cores busy
+    wide   one local[4N] child on all 4N cores
+
+plus a numpy triad bandwidth probe at N and 4N single-core processes.
+
+    E_total = wide / (4 * alone)   the one-box paired efficiency
+    E_hw    = quad / (4 * alone)   the hardware ceiling, no engine in it
+    E_spark = wide / quad          the engine's own N -> 4N scaling
+    E_total = E_hw * E_spark
+
+On a real N -> 4N cluster every node brings its own memory bus (E_hw ~ 1),
+so E_spark is the number that carries over. Each child keeps the best of
+two in-session builds (cold, then warm). The alone and quad children get
+a quarter of the driver-memory rule's heap and wide gets all of it, so
+heap per core is about equal. Writes BENCH_SCALING.md and SCALING_DECOMP.json.
+
+Shuffle bytes per turn of the same pipeline come from
+`python3 perfbench/run.py --workload build --trace 1`
+(compress.shuffle_write_bytes_per_turn, spark.<stage>.shuffle_write_bytes).
+
+    python tools/scaling_bench.py [--passes 2] [--convs 128] [--turns-base 1000]
+    python tools/scaling_bench.py --cpus 4 --passes 3 --convs 100000
 """
 
 from __future__ import annotations
@@ -22,148 +45,189 @@ from __future__ import annotations
 import argparse
 import json
 import os
-os.environ.setdefault("MDBS_TMPFS_LOCAL_DIR", "1")
+import statistics
 import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from modelardb_dynamic_spark.session import half_ram  # noqa: E402
 
-def measure(cpus: int, n_convs: int, turns_base: int, repeats: int = 1) -> dict:
+TRIAD = (
+    "import numpy as np, time\n"
+    "n = 128 * 1024 * 1024 // 8\n"
+    "b = np.ones(n); c = np.ones(n); a = np.empty(n); best = 0.0\n"
+    "for _ in range(3):\n"
+    "    t0 = time.time(); np.add(b, 2.0 * c, out=a)\n"
+    "    best = max(best, 3 * n * 8 / (time.time() - t0))\n"
+    "print(best)\n"
+)
+
+
+def plan(cores: list[int], ram_bytes: int) -> dict:
+    """N, the four disjoint N-core slices, the 4N cores, and the heap of a
+    quarter-host child (alone, quad) and of the whole-host child (wide)."""
+    n = max(1, len(cores) // 4)
+    return {
+        "n": n,
+        "slices": [cores[i * n:(i + 1) * n] for i in range(4)],
+        "wide": cores[:4 * n],
+        "heap": half_ram(ram_bytes, 4),
+        "wide_heap": half_ram(ram_bytes),
+    }
+
+
+def _steal_ticks(cores: set[int]) -> int:
+    with open("/proc/stat") as f:
+        names = {f"cpu{c}" for c in cores}
+        return sum(int(ln.split()[8]) for ln in f if ln.split()[0] in names)
+
+
+def child(cpus: int, passes: int, convs: int, turns_base: int) -> None:
+    cores = set(sorted(os.sched_getaffinity(0))[:cpus])
+    os.sched_setaffinity(0, cores)  # the JVM and its workers inherit it
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    from bench import bench_pipeline
+    from bench import bench_pipeline, stage_input
     from modelardb_dynamic_spark.session import build_session
 
-    spark = build_session(f"scaling-{cpus}", master=f"local[{cpus}]")
-
-    def _ident(it):
-        yield from it
-
-    # spawn + warm the Python UDF workers before the timed window
-    spark.range(0, cpus, 1, cpus).mapInPandas(_ident, schema="id long").count()
-    best = None
-    for _ in range(repeats):
-        wall, n_turns = bench_pipeline(spark, n_convs=n_convs, turns_base=turns_base)
-        if best is None or wall < best[0]:
-            best = (wall, n_turns)
+    spark = build_session(f"scaling-{cpus}-{os.getpid()}", master=f"local[{cpus}]")
+    stage_input(spark, convs, turns_base)
+    for p in range(passes):
+        s0, t0 = _steal_ticks(cores), time.time()
+        wall, n_turns = bench_pipeline(spark, convs, turns_base)
+        ticks = os.sysconf("SC_CLK_TCK") * cpus * (time.time() - t0)
+        print(json.dumps({
+            "pass": p, "cpus": cpus, "n_turns": n_turns,
+            "wall_s": round(wall, 2),
+            "turns_per_sec": round(n_turns / wall, 1),
+            "steal_frac": round((_steal_ticks(cores) - s0) / ticks, 3),
+        }), flush=True)
     spark.stop()
-    wall, n_turns = best
-    return {
-        "cpus": cpus,
-        "n_turns": n_turns,
-        "wall_s": round(wall, 3),
-        "turns_per_sec": round(n_turns / wall, 1),
-    }
+
+
+def _spawn(cores: list[int], heap: str, *args: str) -> subprocess.Popen:
+    return subprocess.Popen(
+        ["taskset", "-c", ",".join(map(str, cores)), sys.executable, *args],
+        stdout=subprocess.PIPE, text=True, cwd=REPO,
+        env={**os.environ, "SPARK_DRIVER_MEMORY": heap},
+    )
+
+
+def _child(cores: list[int], heap: str, passes: int, convs: int,
+           turns_base: int) -> subprocess.Popen:
+    return _spawn(cores, heap, os.path.abspath(__file__), "--cpus",
+                  str(len(cores)), "--passes", str(passes), "--convs",
+                  str(convs), "--turns-base", str(turns_base))
+
+
+def _rows(p: subprocess.Popen) -> list[dict]:
+    out, _ = p.communicate()
+    if p.returncode != 0:
+        raise RuntimeError(f"{p.args} failed rc={p.returncode}")
+    return [json.loads(ln) for ln in out.splitlines() if ln.startswith("{")]
+
+
+def _run(pl: dict, what: str, convs: int, turns_base: int) -> list[dict]:
+    """One measurement: its children at once, each child's best pass."""
+    jobs = {
+        "alone": [(pl["slices"][0], pl["heap"])],
+        "quad": [(s, pl["heap"]) for s in pl["slices"]],
+        "wide": [(pl["wide"], pl["wide_heap"])],
+    }[what]
+    procs = [_child(c, heap, 2, convs, turns_base) for c, heap in jobs]
+    return [max(_rows(p), key=lambda r: r["turns_per_sec"]) for p in procs]
+
+
+def _triad_gbs(cores: list[int]) -> float:
+    procs = [_spawn([c], "1g", "-c", TRIAD) for c in cores]
+    return round(sum(float(p.communicate()[0]) for p in procs) / 1e9, 2)
+
+
+def orchestrate(passes: int, convs: int, turns_base: int) -> None:
+    cores = sorted(os.sched_getaffinity(0))
+    if len(cores) < 4:
+        sys.exit("the N -> 4N comparison needs at least 4 cores")
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    pl = plan(cores, ram)
+    # stage the shared input once: concurrent children would race on it
+    _rows(_child(pl["wide"], pl["wide_heap"], 0, convs, turns_base))
+    recs = []
+    for p in range(passes):
+        order = ("alone", "quad", "wide")[:: 1 if p % 2 == 0 else -1]
+        rec: dict = {"pass": p, "order": list(order)}
+        rec["bw_gbs_n"] = _triad_gbs(pl["slices"][0])
+        rec["bw_gbs_4n"] = _triad_gbs(pl["wide"])
+        rec["bw_scale"] = round(rec["bw_gbs_4n"] / (4 * rec["bw_gbs_n"]), 3)
+        for what in order:
+            runs = _run(pl, what, convs, turns_base)
+            rec[what] = round(sum(r["turns_per_sec"] for r in runs), 1)
+            rec[f"{what}_runs"] = runs
+        rec["E_total"] = round(rec["wide"] / (4 * rec["alone"]), 3)
+        rec["E_hw"] = round(rec["quad"] / (4 * rec["alone"]), 3)
+        rec["E_spark"] = round(rec["wide"] / rec["quad"], 3)
+        recs.append(rec)
+        print(json.dumps(rec), flush=True)
+    write_reports({
+        "host": f"{os.cpu_count()} cores, {ram / (1 << 30):.1f} GiB RAM",
+        "n": pl["n"], "convs": convs, "turns_base": turns_base,
+        "input_turns": recs[0]["wide_runs"][0]["n_turns"],
+        "heaps": {"alone_quad": pl["heap"], "wide": pl["wide_heap"]},
+        "passes": recs,
+        "median": {k: round(statistics.median(r[k] for r in recs), 3)
+                   for k in ("E_total", "E_hw", "E_spark")},
+    })
+
+
+def write_reports(report: dict) -> None:
+    """SCALING_DECOMP.json (everything) and BENCH_SCALING.md (the table)."""
+    with open(os.path.join(REPO, "SCALING_DECOMP.json"), "w") as f:
+        json.dump(report, f, indent=1)
+    med = report["median"]
+    rows = "".join(
+        f"| {r['pass']} | {','.join(r['order'])} | {r['alone']:.0f} "
+        f"| {r['quad']:.0f} | {r['wide']:.0f} | **{r['E_total']}** "
+        f"| {r['E_hw']} | {r['E_spark']} | {r['bw_scale']} |\n"
+        for r in report["passes"]
+    )
+    with open(os.path.join(REPO, "BENCH_SCALING.md"), "w") as f:
+        f.write(
+            "# BENCH_SCALING — latest N -> 4N scaling run\n\n"
+            "Written by `tools/scaling_bench.py` (method in its docstring). "
+            "It times `TierPipeline.run` (raw -> series -> segments -> "
+            "1m/1h/1d tiers, CLI defaults, a fresh 32-bucket warehouse per "
+            "build) on one staged input at N and 4N taskset-pinned cores; "
+            "each child keeps the best of two in-session builds.\n\n"
+            f"Host: {report['host']}. N = {report['n']}. Input: "
+            f"{report['input_turns']} turns ({report['convs']} conversations, "
+            f"turns_base {report['turns_base']}). Heaps: "
+            f"{report['heaps']['alone_quad']} per alone/quad child, "
+            f"{report['heaps']['wide']} for wide.\n\n"
+            "| pass | order | alone turns/s | quad turns/s (sum of 4) "
+            "| wide turns/s | E_total | E_hw | E_spark | triad bw_scale |\n"
+            "|---|---|---|---|---|---|---|---|---|\n" + rows +
+            f"\nMedian over passes: **E_total {med['E_total']}** (paired: "
+            f"wide / (4 * alone) within one pass), E_hw {med['E_hw']}, "
+            f"E_spark {med['E_spark']}. Per-run walls and steal fractions "
+            "are in SCALING_DECOMP.json.\n"
+        )
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--convs", type=int, default=400_000)
-    ap.add_argument("--turns-base", type=int, default=40_000)
-    ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--base", type=int, default=4,
-                    help="N of the N-vs-4N comparison (pinned cores)")
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="child mode: one session on this many cores")
+    ap.add_argument("--passes", type=int, default=2)
+    ap.add_argument("--convs", type=int, default=128)
+    ap.add_argument("--turns-base", type=int, default=1000)
     args = ap.parse_args()
-
+    # shuffle files on tmpfs, as bench.py (session.build_session gates it)
+    os.environ.setdefault("MDBS_TMPFS_LOCAL_DIR", "1")
     if args.cpus is not None:
-        print(json.dumps(measure(args.cpus, args.convs, args.turns_base, args.repeats)))
-        return
-
-    # alternate the two levels across passes so sandbox noise (CPU steal
-    # swings up to 5x) hits both equally; keep the best pass per level
-    best: dict[int, dict] = {}
-    all_passes: list[dict] = []
-    for _pass in range(args.repeats):
-        for cpus in (args.base, 4 * args.base):
-            out = subprocess.run(
-                [
-                    "taskset", "-c", f"0-{cpus - 1}",
-                    sys.executable, os.path.abspath(__file__),
-                    "--cpus", str(cpus), "--convs", str(args.convs),
-                    "--turns-base", str(args.turns_base),
-                    "--repeats", "2",  # in-session: cold + warm, best kept
-                ],
-                capture_output=True, text=True, cwd=REPO, check=True,
-            )
-            r = json.loads(out.stdout.strip().splitlines()[-1])
-            all_passes.append({"pass": _pass, **r})
-            print(json.dumps(all_passes[-1]), flush=True)
-            if cpus not in best or r["wall_s"] < best[cpus]["wall_s"]:
-                best[cpus] = r
-    results = [best[args.base], best[4 * args.base]]
-
-    lo, hi = results[0], results[1]
-    eff_xpass = hi["turns_per_sec"] / (4 * lo["turns_per_sec"])
-    # PAIRED efficiency: within one pass the two levels run back-to-back,
-    # so sandbox noise (CPU steal) hits both under near-identical
-    # conditions — the ratio is meaningful per pass. Cross-pass best-of
-    # pairing is NOT (a lucky small-N pass paired with an unlucky big-N
-    # pass understates scaling, and vice versa). Headline = best pair.
-    pair_effs = []
-    for p in range(args.repeats):
-        by_cpu = {r["cpus"]: r for r in all_passes if r["pass"] == p}
-        if args.base in by_cpu and 4 * args.base in by_cpu:
-            pair_effs.append(
-                round(
-                    by_cpu[4 * args.base]["turns_per_sec"]
-                    / (4 * by_cpu[args.base]["turns_per_sec"]),
-                    3,
-                )
-            )
-    eff = max(pair_effs) if pair_effs else eff_xpass
-    report = {
-        "runs": results,
-        "scaling_efficiency_N_to_4N": round(eff, 3),
-        "paired_pass_efficiencies": pair_effs,
-        "cross_pass_bestof_efficiency": round(eff_xpass, 3),
-    }
-    print(json.dumps(report))
-    # best-of-N per level: the sandbox VM shows up to 5x run-to-run noise
-    # (CPU steal), so the best run is the honest estimate of each
-    # configuration's capability
-    # BENCH_SCALING.md, not BENCH.md: the hand-maintained BENCH.md keeps
-    # the cross-round analysis and references this regenerated table
-    with open(os.path.join(REPO, "BENCH_SCALING.md"), "w") as f:
-        f.write(
-            "# BENCH_SCALING — latest two-size scaling run\n\n"
-            "Identical transcript tier pipeline (synthesize -> series -> "
-            "compress (PMC/Swing/Gorilla cascade, error 10%) -> 1m/1h/1d "
-            "tiers + gap-fill) on the SAME deterministic input at two "
-            "parallelism levels (in-sandbox stand-in for N vs 4N "
-            "executors, per BASELINE.json north_rule).\n\n"
-            "| master | input turns | wall (s) | turns/sec |\n"
-            "|---|---|---|---|\n"
-            + "".join(
-                f"| local[{r['cpus']}] | {r['n_turns']} | {r['wall_s']} "
-                f"| {r['turns_per_sec']} |\n"
-                for r in results
-            )
-            + f"\n**Scaling efficiency (N={lo['cpus']} -> 4N={hi['cpus']} pinned cores): {eff:.3f}** "
-            "(target >= 0.8; efficiency = thr(4N) / (4 * thr(N)); each run "
-            "taskset-pinned to exactly its core budget). Methodology: the "
-            "headline is the best PAIRED per-pass efficiency — within a "
-            "pass the two levels run back-to-back under near-identical "
-            "sandbox-noise conditions, so their ratio is meaningful; "
-            "pairing a lucky small-N pass with an unlucky big-N pass "
-            "across passes is not. Per-pass paired efficiencies: "
-            f"{pair_effs}; cross-pass best-of ratio (throughput "
-            f"capability, not a paired measurement): {eff_xpass:.3f}.\n\n"
-            "All passes (alternating levels; best-of kept above — the "
-            "sandbox VM shows multi-x run-to-run noise, so per-level best "
-            "is the honest capability estimate):\n\n"
-            "| pass | cores | wall (s) | turns/sec |\n|---|---|---|---|\n"
-            + "".join(
-                f"| {p['pass']} | {p['cpus']} | {p['wall_s']} "
-                f"| {p['turns_per_sec']} |\n"
-                for p in all_passes
-            )
-            + "\nCluster deployment: `tools/submit.sh` runs the same "
-            "pipeline via `spark-submit --py-files`; partitioning is by "
-            "hash(conv_id) with optional time-range salting for hot "
-            "conversations, so the plan is executor-count-agnostic.\n"
-        )
+        child(args.cpus, args.passes, args.convs, args.turns_base)
+    else:
+        orchestrate(args.passes, args.convs, args.turns_base)
 
 
 if __name__ == "__main__":
