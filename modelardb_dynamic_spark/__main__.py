@@ -66,11 +66,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="after the build, compact TABLE's bucket dirs "
                          "down to N files each (default 1); crash-safe, "
                          "rows and lineage unchanged")
-    ap.add_argument("--segment-layout", default="bucket",
-                    choices=["bucket", "zorder"],
-                    help="zorder: Morton-cluster segment files on "
-                         "(series rank, start_ts) for two-dimensional "
-                         "row-group pruning")
     ap.add_argument("--overlap-days", default=None, metavar="DAY_A:DAY_B",
                     help="after a --sketches build, estimate the "
                          "active-conversation-set overlap between two "
@@ -132,7 +127,6 @@ def main(argv: list[str] | None = None) -> None:
         spark, wh, cfg,
         chunk_buckets=args.chunk_buckets,
         salt_span_points=args.salt_span_points,
-        segment_layout=args.segment_layout,
     )
     t0 = time.time()
     out: dict = {}

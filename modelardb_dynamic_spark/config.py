@@ -2,28 +2,22 @@
 
 Mirrors the knobs of the reference configuration file
 (/root/reference/modelardb.conf): error bound (percent), length bound for the
-lossless fallback models, sampling interval, and the model cascade order.
+lossless fallback models, and sampling interval. The model cascade is fixed
+at the reference default, PMC-Mean, Swing, Gorilla (modelardb.conf:50-52).
 
 Model-type ids follow the reference convention that mtid 1 is always the
-Uncompressed fallback (core/models/ModelTypeFactory.java:25-28) and
-user-configured models get ids 2.. in cascade order.
+Uncompressed fallback (core/models/ModelTypeFactory.java:25-28) and the
+cascade's models get ids 2.. in cascade order.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 MTID_UNCOMPRESSED = 1
 MTID_PMC_MEAN = 2
 MTID_SWING = 3
 MTID_GORILLA = 4
-
-MODEL_NAMES = {
-    MTID_UNCOMPRESSED: "uncompressed",
-    MTID_PMC_MEAN: "pmc_mean",
-    MTID_SWING: "swing",
-    MTID_GORILLA: "gorilla",
-}
 
 
 @dataclass(frozen=True)
@@ -36,16 +30,11 @@ class EngineConfig:
     sampling_interval_ms: the regular grid of the derived series
         (modelardb.conf:68 default 100 in the reference; our transcript
         series default to 60_000 = 1 minute buckets).
-    models: cascade order; the reference default is PMC-Mean, Swing, Gorilla
-        (modelardb.conf:50-52).
     """
 
     error_bound: float = 10.0
     length_bound: int = 50
     sampling_interval_ms: int = 60_000
-    models: tuple[int, ...] = field(
-        default=(MTID_PMC_MEAN, MTID_SWING, MTID_GORILLA)
-    )
 
     def __post_init__(self) -> None:
         if not (0.0 <= self.error_bound <= 100.0):

@@ -27,16 +27,6 @@ import numpy as np
 _MASK32 = 0xFFFFFFFF
 
 
-def _nlz32(x: int) -> int:
-    """Integer.numberOfLeadingZeros for a 32-bit value (x > 0)."""
-    return 32 - x.bit_length()
-
-
-def _ntz32(x: int) -> int:
-    """Integer.numberOfTrailingZeros for a 32-bit value (x > 0)."""
-    return (x & -x).bit_length() - 1
-
-
 def _xor_lz_tz(bits: np.ndarray) -> tuple[list, list, list]:
     """Vectorized per-value xor with predecessor plus leading/trailing zero
     counts (Integer.numberOfLeading/TrailingZeros semantics). log2 of an

@@ -44,7 +44,7 @@ check between passes (SegmentGenerator.java:109-136).
 from __future__ import annotations
 
 import struct
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -877,8 +877,6 @@ class GroupEngine:
             self._win_ok = (
                 self.use_windows
                 and self.maximum_latency == 0
-                and self.cfg.models
-                == (MTID_PMC_MEAN, MTID_SWING, MTID_GORILLA)
                 and ckernel.load() is not None
             )
         return self._win_ok
@@ -1467,8 +1465,6 @@ def _compress_group_c(
 
     lib = ckernel.load()
     if lib is None:
-        return None
-    if cfg.models != (MTID_PMC_MEAN, MTID_SWING, MTID_GORILLA):
         return None
     if not _group_fast_eligible(ts, V, cfg):
         return None

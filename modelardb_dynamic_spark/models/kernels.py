@@ -327,9 +327,6 @@ def _compress_core_py(
     B* = max(pmc_prefix, swing_prefix, length_bound) + 1 <= rem depends
     only on the first B* points because the cascade is greedy and
     fail-sticky, SegmentGenerator.java:190-211)."""
-    assert cfg.models == (MTID_PMC_MEAN, MTID_SWING, MTID_GORILLA), (
-        "v1 implements the reference's default cascade"
-    )
     eb = cfg.error_bound
     lb = cfg.length_bound
     n = len(v)
@@ -455,7 +452,7 @@ def _compress_core(
     from modelardb_dynamic_spark.models import ckernel
 
     lib = ckernel.load()
-    if lib is None or cfg.models != (MTID_PMC_MEAN, MTID_SWING, MTID_GORILLA):
+    if lib is None:
         return _compress_core_py(t, v, cfg, allow_flush)
     n = len(v)
     if n == 0:
@@ -516,7 +513,7 @@ def compress_series(
     t = np.ascontiguousarray(t, dtype=np.int64)
     v = np.ascontiguousarray(v, dtype=np.float32)
     lib = ckernel.load()
-    if lib is None or cfg.models != (MTID_PMC_MEAN, MTID_SWING, MTID_GORILLA):
+    if lib is None:
         out: list[Segment] = []
         for a, b in split_runs(t, cfg.sampling_interval_ms):
             out.extend(

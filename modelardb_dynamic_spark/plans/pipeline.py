@@ -174,23 +174,12 @@ class TierPipeline:
         cfg: EngineConfig,
         chunk_buckets: int = 16,
         salt_span_points: int | None = 1 << 20,
-        segment_layout: str = "bucket",
-        zorder_partitions: int | None = None,
     ):
-        if segment_layout not in ("bucket", "zorder"):
-            raise ValueError(f"unknown segment_layout {segment_layout!r}")
         self.spark = spark
         self.wh = warehouse
         self.cfg = cfg
         self.chunk_buckets = chunk_buckets
         self.salt_span_points = salt_span_points
-        # "bucket": files land as the compress shuffle produced them
-        # (hash(sid)-mixed). "zorder": one extra repartitionByRange on a
-        # Morton key of (series rank, start_ts) so file/row-group min-max
-        # stats prune per-series scans AND time-window rollups
-        # (operators/zorder.py; same idea as Delta OPTIMIZE ZORDER).
-        self.segment_layout = segment_layout
-        self.zorder_partitions = zorder_partitions
 
     # -- stage plumbing ------------------------------------------------------
 
@@ -410,26 +399,13 @@ class TierPipeline:
             _join_python_workers(self.spark)
             series = self._read_buckets("series", bucket_ids)
             segs = compress(series, self.cfg, salt_span_points=self.salt_span_points)
-            segs = segs.withColumn(
+            return segs.withColumn(
                 "sbucket", sid_bucket(F.col("sid"), self.wh.n_buckets)
             )
-            if self.segment_layout == "zorder":
-                from modelardb_dynamic_spark.operators.zorder import zorder_keys
-
-                keyed = zorder_keys(segs, "sid", "start_ts", bits=10)
-                parts = ["sbucket", "zval"]
-                keyed = (
-                    keyed.repartitionByRange(self.zorder_partitions, *parts)
-                    if self.zorder_partitions
-                    else keyed.repartitionByRange(*parts)
-                )
-                segs = keyed.sortWithinPartitions(*parts).drop("zval")
-            return segs
 
         self._run_stage(
-            "segments",
-            fingerprint + ("+zorder" if self.segment_layout == "zorder" else ""),
-            build, fail_after_chunks=fail_after_chunks, only_buckets=only_buckets,
+            "segments", fingerprint, build,
+            fail_after_chunks=fail_after_chunks, only_buckets=only_buckets,
         )
 
     def build_tiers(
@@ -1004,24 +980,13 @@ class TierPipeline:
 
     # -- maintenance -----------------------------------------------------------
 
-    def compact(
-        self,
-        table: str,
-        target_files: int = 1,
-        sort_cols: list[str] | None = None,
-        zorder_on: tuple[str, str] | None = None,
-    ) -> dict:
+    def compact(self, table: str, target_files: int = 1) -> dict:
         """Small-file compaction for a stage table: rewrite each bucket
         dir holding more than `target_files` parquet files down to
-        `target_files` (optionally re-sorted), leaving rows, manifests,
-        and resume state untouched. The in-sandbox twin of Iceberg
-        `rewrite_data_files` (reference: compaction with crash recovery,
+        `target_files`, leaving rows, manifests, and resume state
+        untouched. The in-sandbox twin of Iceberg `rewrite_data_files`
+        (reference: compaction with crash recovery,
         storage/FileStorage.scala:126-165).
-
-        `zorder_on=(sid_col, ts_col)` re-clusters each rewritten bucket
-        on the Morton key while compacting (Iceberg's
-        `rewrite_data_files(strategy => 'sort')` with a z-order);
-        `sort_cols` is the plain-sort alternative.
 
         Crash-safe via the same rename journal as every stage rewrite
         (checkpoint.swap_in; recover_swaps at entry repairs an interrupted
@@ -1042,20 +1007,11 @@ class TierPipeline:
             if len(files) <= target_files:
                 continue
             m = lineage.get(b)
-            df = self.wh.read(self.spark, table, buckets=[b]).drop("sbucket")
-            if zorder_on is not None:
-                from modelardb_dynamic_spark.operators.zorder import zorder_keys
-
-                df = (
-                    zorder_keys(df, zorder_on[0], zorder_on[1], bits=10)
-                    .coalesce(target_files)
-                    .sortWithinPartitions("zval")
-                    .drop("zval")
-                )
-            else:
-                df = df.coalesce(target_files)
-                if sort_cols:
-                    df = df.sortWithinPartitions(*sort_cols)
+            df = (
+                self.wh.read(self.spark, table, buckets=[b])
+                .drop("sbucket")
+                .coalesce(target_files)
+            )
             tmp = dst + "." + uuid.uuid4().hex[:8] + ".tmp"
             unannotated(df).write.mode("overwrite").parquet(tmp)
             got = footer_rows(tmp)

@@ -1391,44 +1391,6 @@ def q_m4_downsample(spark, sf_dir):
     return m4_downsample(pts, bucket_ms=6 * HOUR_MS)
 
 
-def q_zorder_scan(spark, sf_dir):
-    """Z-order clustered layout round-trip (operators/zorder.py): the
-    reconstructed minute points are rewritten as a Morton-clustered
-    parquet dataset (series-rank x time-rank bit interleave, one
-    repartitionByRange shuffle) and scanned back through a selective
-    two-dimensional predicate. The value gate proves the re-layout is
-    lossless under a real mixed filter; the two-dimensional row-group
-    pruning the layout exists for is pinned separately by footer-stat
-    tests (tests/test_zorder.py). The staging dir lives under /tmp for
-    the session's lifetime (the returned frame reads from it lazily)."""
-    import tempfile
-
-    from modelardb_dynamic_spark.operators.dedup import _materialize
-    from modelardb_dynamic_spark.operators.zorder import zorder_write
-
-    segs = _event_segments(spark, sf_dir)
-    # zorder_write runs THREE actions over its input (sid-rank window,
-    # ts min/max, the write itself): materialize the decoded points once
-    # instead of re-running the segment decode per action
-    pts = _materialize(
-        datapoint_view(segs).select(
-            "sid", "ts_ms", F.col("value").cast("long").alias("v")
-        )
-    )
-    d = tempfile.mkdtemp(prefix="mdbs_zorder_")
-    zorder_write(pts, d, bits=8, n_files=8)
-    lo, hi = RANGE_LO + 2 * DAY_MS, RANGE_LO + 4 * DAY_MS
-    return (
-        spark.read.parquet(d)
-        .where(
-            (F.col("ts_ms") >= lo)
-            & (F.col("ts_ms") < hi)
-            & (F.expr("CAST(sid AS BIGINT) % 7") == 3)
-        )
-        .select("sid", "ts_ms", "v")
-    )
-
-
 def q_gap_audit(spark, sf_dir):
     """Segment-native data-quality gap audit (operators/analytics.py
     gap_audit): per series, observed vs expected grid points and the
@@ -3200,7 +3162,6 @@ QUERIES = {
     "cohort_retention": q_cohort_retention,
     "funnel_daily": q_funnel_daily,
     "m4_downsample": q_m4_downsample,
-    "zorder_scan": q_zorder_scan,
     "gap_audit": q_gap_audit,
     "acf_turnrate": q_acf_turnrate,
     "sax_words": q_sax_words,
@@ -4564,14 +4525,6 @@ ORACLES["gap_audit"] = f"""
                AS missing_pts,
            n_gaps, gap_ms_sum, longest_gap_ms
     FROM base JOIN g USING (sid)
-"""
-
-ORACLES["zorder_scan"] = f"""
-    WITH b AS ({_MINUTE_BUCKETS})
-    SELECT sid, m AS ts_ms, CAST(v AS BIGINT) AS v
-    FROM b
-    WHERE m >= {RANGE_LO + 2 * DAY_MS} AND m < {RANGE_LO + 4 * DAY_MS}
-      AND CAST(sid AS BIGINT) % 7 = 3
 """
 
 ORACLES["m4_downsample"] = f"""

@@ -8,9 +8,9 @@ Iceberg tables — `bucket(N, sid)` partition transform, sorted by
 (storage/FileStorage.scala:126-259). The sandbox image ships no Iceberg
 jars, so this module provides the same layout and commit discipline on
 plain parquet: hash-bucket directories (`sbucket=K`), sort within files,
-and write-to-temp + atomic rename. The Iceberg path is attempted first and
-falls back cleanly, so the same code switches over when the runtime has
-iceberg-spark on the classpath.
+and write-to-temp + atomic rename. The Iceberg wiring itself lives in
+`sources/iceberg.py`; nothing here attempts it, so a runtime with
+iceberg-spark on the classpath still writes these parquet tables.
 
 The bucket layout mirrors the reference's Cassandra physical model —
 PRIMARY KEY (gid, start_time): all segments of one series live in one
@@ -141,16 +141,6 @@ def file_stats(chunk_dir: str) -> dict[int, tuple[int, int]]:
     return out
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def sid_bucket(col, n_buckets: int = DEFAULT_BUCKETS):
     """Deterministic bucket id for a series id column (hash-partitioning;
     the query side recomputes this for partition pruning)."""
@@ -180,23 +170,18 @@ class Warehouse:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def exists(self, table: str) -> bool:
-        return os.path.exists(os.path.join(self.path(table), "_SUCCESS")) or (
-            os.path.isdir(self.path(table)) and any(os.scandir(self.path(table)))
-        )
-
     def write(
         self,
         df: DataFrame,
         table: str,
         bucket_by: str | None = None,
         sort_by: list[str] | None = None,
-        mode: str = "overwrite",
         format: str = "parquet",
     ) -> str:
-        """Write a table; if bucket_by is given, hash-bucket into sbucket=K
-        directories and sort within files (co-locates each series, enables
-        partition pruning + near-sequential scans per series).
+        """Write (or replace) a table; if bucket_by is given, hash-bucket
+        into sbucket=K directories and sort within files (co-locates each
+        series, enables partition pruning + near-sequential scans per
+        series).
 
         format: "parquet" (default) or "orc" — the reference's two file
         storage backends (storage/ParquetStorage.scala,
@@ -219,7 +204,7 @@ class Warehouse:
                 ).save(tmp)
             else:
                 df.write.mode("overwrite").format(format).save(tmp)
-            if mode == "overwrite" and os.path.exists(final):
+            if os.path.exists(final):
                 shutil.rmtree(final)
             os.rename(tmp, final)
         finally:
@@ -266,7 +251,3 @@ class Warehouse:
         if "sbucket" in df.columns and "sid" in df.columns:
             df = df.withMetadata("sid", {"n_buckets": self.n_buckets})
         return df
-
-    def drop(self, table: str) -> None:
-        if os.path.exists(self.path(table)):
-            shutil.rmtree(self.path(table))

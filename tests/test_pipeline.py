@@ -733,56 +733,6 @@ def test_overlap_convs_matches_python_kmv_replay(spark, transcripts, tmp_path):
         assert r2["mu"] >= 1
 
 
-def test_zorder_segment_layout_value_identical_and_prunes(
-    spark, transcripts, tmp_path
-):
-    """segment_layout="zorder" must change only the FILE layout: every
-    stage's rows equal the default layout's, and the segments table's
-    per-file sid min/max spans shrink (the pruning the layout exists
-    for). Footer-only check via operators/zorder.py pruning_stats."""
-    from modelardb_dynamic_spark.operators.zorder import pruning_stats
-
-    wh_a = Warehouse(str(tmp_path / "flat"), n_buckets=2)
-    TierPipeline(
-        spark, wh_a, CFG10, chunk_buckets=2, salt_span_points=None
-    ).run(transcripts)
-    wh_z = Warehouse(str(tmp_path / "zord"), n_buckets=2)
-    TierPipeline(
-        spark, wh_z, CFG10, chunk_buckets=2, salt_span_points=None,
-        segment_layout="zorder", zorder_partitions=16,
-    ).run(transcripts)
-
-    for table in ["segments", "tier_1m", "tier_1h", "tier_1d"]:
-        a = wh_a.read(spark, table).drop("sbucket")
-        z = wh_z.read(spark, table).drop("sbucket")
-        assert a.exceptAll(z).count() == 0, table
-        assert z.exceptAll(a).count() == 0, table
-
-    # pruning: average kept-fraction over probe sids must be lower in
-    # the z-ordered layout (default files are hash(sid)-mixed: ~all kept)
-    import glob as _glob
-
-    probe = [
-        r["sid"]
-        for r in wh_z.read(spark, "segments").select("sid").distinct()
-        .orderBy("sid").limit(5).collect()
-    ]
-
-    def avg_kept(wh):
-        fr = []
-        for b in range(2):
-            path = f"{wh.root}/segments/sbucket={b}"
-            if not _glob.glob(f"{path}/*.parquet"):
-                continue
-            for s in probe:
-                st = pruning_stats(path, "sid", "start_ts", sid_eq=s)
-                if st["total"]:
-                    fr.append(st["kept"] / st["total"])
-        return sum(fr) / len(fr)
-
-    assert avg_kept(wh_z) < avg_kept(wh_a)
-
-
 def test_compact_preserves_rows_manifests_and_resume(
     spark, transcripts, tmp_path
 ):
@@ -852,18 +802,6 @@ def test_compact_preserves_rows_manifests_and_resume(
     shutil.copytree(dst, dst + ".old")
     p.compact(table, target_files=1)
     assert not os.path.exists(dst + ".old")
-
-
-def test_compact_with_zorder_recluster(spark, transcripts, tmp_path):
-    """compact(zorder_on=...) rewrites buckets Morton-clustered: rows
-    unchanged, and within-file sid spans shrink vs plain compaction."""
-    wh = Warehouse(str(tmp_path / "cz"), n_buckets=2)
-    p = TierPipeline(spark, wh, CFG10, chunk_buckets=2)
-    p.run(transcripts)
-    before = sorted(map(tuple, wh.read(spark, "segments").collect()))
-    st = p.compact("segments", target_files=4, zorder_on=("sid", "start_ts"))
-    assert st["buckets_compacted"] >= 1
-    assert sorted(map(tuple, wh.read(spark, "segments").collect())) == before
 
 
 def test_active_convs_bloom_membership(spark, transcripts, tmp_path):

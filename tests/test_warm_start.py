@@ -79,41 +79,61 @@ def test_fresh_worker_has_kernels_imported(spark, fresh_daemon):
     assert all(r["kernels"] and r["pandas"] for r in rows), rows
 
 
-def _build_jobs(spark, root: str, inp) -> int:
-    """Spark jobs of one TierPipeline build into a new warehouse."""
+STAGES = ["ingest_raw", "build_series", "build_segments", "build_tiers"]
+
+
+def _stage_jobs(spark, root: str, inp) -> dict[str, int]:
+    """Spark jobs of each stage of one TierPipeline build (one chunk) into a
+    new warehouse. Counted after the build: the warm-up job that
+    ingest_raw starts in its job group may be submitted after it returns."""
     sc = spark.sparkContext
-    group = uuid.uuid4().hex
-    sc.setJobGroup(group, "build")
-    try:
-        p = pl.TierPipeline(
-            spark, Warehouse(root, n_buckets=2),
-            EngineConfig(error_bound=10.0, sampling_interval_ms=60_000),
-        )
-        p.ingest_raw(inp)
-        p.build_series()
-        p.build_segments()
-        p.build_tiers()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    p = pl.TierPipeline(
+        spark, Warehouse(root, n_buckets=2),
+        EngineConfig(error_bound=10.0, sampling_interval_ms=60_000),
+    )
+    groups = {}
+    for stage in STAGES:
+        groups[stage] = uuid.uuid4().hex
+        sc.setJobGroup(groups[stage], stage)
+        try:
+            getattr(p, stage)(*([inp] if stage == "ingest_raw" else []))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    return {s: len(sc.statusTracker().getJobIdsForGroup(g)) for s, g in groups.items()}
+
+
+def _staged_input(spark, tmp_path):
+    path = str(tmp_path / "in")
+    generate_transcripts(spark, n_convs=8, turns_base=24).write.parquet(path)
+    return spark.read.parquet(path)
 
 
 def test_build_starts_workers_once(spark, fresh_daemon, monkeypatch, tmp_path):
     """The first build of a SparkContext runs one warm-up job more than a
-    second build, and starts exactly one daemon: the warm-up's is the one
-    compress and a later mapInArrow use."""
-    inp_path = str(tmp_path / "in")
-    generate_transcripts(spark, n_convs=8, turns_base=24).write.parquet(inp_path)
-    inp = spark.read.parquet(inp_path)
+    second build, in ingest_raw, and starts exactly one daemon: the
+    warm-up's is the one compress and a later mapInArrow use."""
+    inp = _staged_input(spark, tmp_path)
     monkeypatch.setattr(pl, "_WARMUPS", {})
     before = _daemons(spark)
-    first = _build_jobs(spark, str(tmp_path / "a"), inp)
+    first = _stage_jobs(spark, str(tmp_path / "a"), inp)
     new = _daemons(spark) - before
     assert len(new) == 1
     assert list(pl._WARMUPS) == [spark.sparkContext.applicationId]
-    second = _build_jobs(spark, str(tmp_path / "b"), inp)
-    assert first == second + 1, (first, second)
+    second = _stage_jobs(spark, str(tmp_path / "b"), inp)
+    assert first == {**second, "ingest_raw": second["ingest_raw"] + 1}, (first, second)
     assert {r["ppid"] for r in _probe(spark, 1)} == new
+
+
+def test_build_stage_job_counts(spark, tmp_path):
+    """Spark jobs per build stage, pinned once the workers are warm: a
+    layout step that re-runs compress, or a job that re-reads what a
+    stage wrote, adds jobs here."""
+    pl._start_python_workers(spark)
+    pl._join_python_workers(spark)
+    jobs = _stage_jobs(spark, str(tmp_path / "wh"), _staged_input(spark, tmp_path))
+    assert jobs == {
+        "ingest_raw": 2, "build_series": 2, "build_segments": 2, "build_tiers": 5,
+    }
 
 
 def test_warm_up_failure_surfaces_once_at_the_join(spark, monkeypatch):
