@@ -8,11 +8,14 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS   (default os.cpu_count()).
 
 Each timed query is forced end-to-end with a noop-format write (full
-computation on executors, no driver collect). The `pipeline` entry times
-the product's ingestion path, TierPipeline.run (transcripts -> raw ->
-series -> segments -> 1m/1h/1d tiers) into a fresh warehouse; its
-turns/sec is reported separately. Scaling, N vs 4N pinned cores on the
-same pipeline, is measured by tools/scaling_bench.py (BENCH_SCALING.md).
+computation on executors, no driver collect). The `warehouse` entry times
+the one TierPipeline build over the events table that the registry's
+segment, datapoint and tier queries read (queries._warehouse). The
+`pipeline` entry times the product's ingestion path, TierPipeline.run
+(transcripts -> raw -> series -> segments -> 1m/1h/1d tiers) into a fresh
+warehouse; its turns/sec is reported separately. Scaling, N vs 4N pinned
+cores on the same pipeline, is measured by tools/scaling_bench.py
+(BENCH_SCALING.md).
 """
 
 from __future__ import annotations
@@ -107,8 +110,9 @@ def main() -> None:
     spark = build_session("bench")
 
     registry = Q.QUERIES
-    # warm the JVM/Arrow path once so q1 doesn't pay session startup
-    _force(registry["seg_count_s"](spark, sf_dir))
+    # warm the JVM/Arrow path once so q1 doesn't pay session startup; this
+    # query compresses its own series and does not touch the warehouse
+    _force(registry["agg_second"](spark, sf_dir))
     # best-of-2 per query: the sandbox VM has a bursty noisy neighbor
     # (sustained 10-33% CPU-steal windows, measured in BENCH.md) and a
     # single contaminated pass misreports capability by multiple x.
@@ -136,22 +140,17 @@ def main() -> None:
             out[name] = round(min(ss), 3)
         return out
 
-    # COLD: every query self-contained (re-derives its own segment table
-    # from the events parquet), timed over the whole registry in its order.
-    timings = run_passes(repeats)
-    # WARM: the shared events->segments derivation memoized behind a
-    # localCheckpoint (queries.memoize_segments) — steady-state per-query
-    # cost with the ~1.5 s/query fixed re-compression removed (r4 VERDICT
-    # #4). Queries that don't touch the segment table are unaffected;
-    # their warm number is just one more repetition. ONE pass (memoized
-    # timings vary far less than cold ones, and the suite already ran 2x
-    # by now — the JVM is hot). With one sample per query the 1.6x
-    # tiebreak never fires, so a noise-hit warm query stays noisy.
-    Q.memoize_segments(spark, sf_dir)
-    try:
-        warm_timings = run_passes(1)
-    finally:
-        Q.clear_segment_memo()
+    # COLD: the registry's one TierPipeline warehouse (queries._warehouse),
+    # timed as its own entry, then every query over the whole registry in
+    # its order; the segment, datapoint and tier queries read that
+    # warehouse. WARM: ONE more pass over the built warehouse, the
+    # steady-state per-query cost (the suite already ran 2x by now, so the
+    # JVM is hot). With one sample per query the 1.6x tiebreak never
+    # fires, so a noise-hit warm query stays noisy.
+    t0 = time.time()
+    Q._warehouse(spark, sf_dir)
+    timings = {"warehouse": round(time.time() - t0, 3), **run_passes(repeats)}
+    warm_timings = run_passes(1)
 
     pipe_best = None
     for _ in range(repeats):

@@ -306,8 +306,9 @@ def ivf_kmeans_topk(
     per-partition partial top-k (the cosine_topk shuffle shape: the
     shuffle carries O(k * queries * partitions) rows, never candidates).
 
-    Output is data-dependent through the trained centroids, so the driver
-    gate for this query is rows-only (documented); quality is pinned by
+    Output is data-dependent through the sampled centroids, so the value
+    gate checks the exact-trained twin (ivf_kmeans_topk_exact, registry
+    query ann_ivf_kmeans) instead; quality is pinned by
     tests/test_training_ops.py recall@5 >= 0.9 vs cosine_topk on a 1e5
     x 32 clustered fixture with C=256."""
     spark = corpus.sparkSession

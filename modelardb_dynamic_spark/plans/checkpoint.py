@@ -1,7 +1,7 @@
 """Per-partition lineage checkpoints.
 
 Every pipeline stage commits one manifest per series-hash bucket after that
-bucket's output is durably in place:
+bucket's output is in place:
 
     <warehouse>/<table>/_lineage/bucket=<K>.json
     {"bucket": K, "rows": n, "high_water_ts": ms, "input_fingerprint": ...,
@@ -33,6 +33,12 @@ redoes the bucket, whose manifest still carries the old fingerprint; every
 such rebuild is idempotent on its own output. On an Iceberg deployment the
 swap becomes overwrite-by-filter on the bucket partition and the manifest
 doubles as the job's own progress/metrics record.
+
+Durability: neither swap_in nor Lineage.commit calls fsync, so the journal
+and the manifests survive a crash of the process (the OS still holds every
+completed write and rename), but not a power loss or an OS crash, after
+which a rename or a manifest may be lost or reach the disk before the data
+it names.
 """
 
 from __future__ import annotations

@@ -279,14 +279,7 @@ class TierPipeline:
         """Buckets that actually hold parquet part files. A fully-retained
         or never-written bucket leaves an empty dir (or none), which holds
         no rows to read, so every reader of a bucket subset filters through
-        this first. Stage tables are parquet-only (footers carry their
-        schema and lineage stats): an ORC table raises instead of reading
-        as all-empty."""
-        if self.wh._detect_format(table) != "parquet":
-            raise ValueError(
-                f"stage table {table!r} is not parquet; pipeline stages "
-                "read and write parquet only"
-            )
+        this first."""
         root = self.wh.path(table)
         out = []
         for b in bucket_ids:

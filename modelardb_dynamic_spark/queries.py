@@ -2,27 +2,33 @@
 (spark, sf_dir) -> DataFrame callable plus, where expressible, the
 equivalent ANSI SQL a DuckDB oracle can run on the same parquet tables.
 
-Engine queries derive a regular event-count series from the `events` table
-(one series per user_id, 1-minute sampling interval — the testdata analog
-of the transcript turn_rate series), compress it with error bound 0, and
-answer everything from the segment table; the oracles compute the same
-answers directly from the raw rows. With error bound 0 every value is an
-exact small integer in float32, so Spark and DuckDB agree bit-for-bit.
+Engine queries read ONE warehouse that TierPipeline builds per
+(application, sf_dir) from the events table mapped to transcripts (one
+conversation per user_id, 1-minute sampling interval, error bound 0):
+segment, datapoint and tier queries answer from its tables through
+Warehouse.read, ModelarEngine.datapoints and TierPipeline.range_agg, so
+the oracles, which compute the same answers directly from the raw rows,
+gate the product's own build and read paths. With error bound 0 every
+value is an exact small integer in float32, so Spark and DuckDB agree
+bit-for-bit.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from modelardb_dynamic_spark.config import EngineConfig
 from modelardb_dynamic_spark.operators import dedup, similarity, textstats
-from modelardb_dynamic_spark.operators.compress import compress
 from modelardb_dynamic_spark.operators.reconstruct import datapoint_view
-from modelardb_dynamic_spark.operators.rollup import downsample, gap_fill, rollup
-from modelardb_dynamic_spark.sources.timeseries import event_series
+from modelardb_dynamic_spark.plans.pipeline import TIERS, TierPipeline
+from modelardb_dynamic_spark.sources.catalog import Warehouse
+from modelardb_dynamic_spark.sources.timeseries import TURN_RATE
 
 SI_MS = 60_000
 HOUR_MS = 3_600_000
@@ -32,6 +38,9 @@ CFG0 = EngineConfig(error_bound=0.0, sampling_interval_ms=SI_MS)
 # a fixed window inside the events span (2024-01-05 .. 2024-01-12 UTC)
 RANGE_LO = 1_704_412_800_000
 RANGE_HI = 1_705_017_600_000
+# the events span at every sf: 2024-01-01 .. 2024-01-31 UTC
+EVENTS_LO = 1_704_067_200_000
+EVENTS_HI = EVENTS_LO + 30 * DAY_MS
 
 
 _ROW_GROUPS: dict[str, int] = {}
@@ -69,33 +78,51 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_SEG_MEMO: dict[tuple[str, str], DataFrame] = {}
+_WAREHOUSES: dict[tuple[str, str], TierPipeline] = {}
 
 
-def memoize_segments(spark: SparkSession, sf_dir: str) -> None:
-    """Make _event_segments answer from ONE localCheckpoint of the segment
-    table of (this application, sf_dir) until clear_segment_memo(), so a
-    benchmark pass over the registry measures each query's own work
-    instead of re-compressing the identical events table per query
-    (~1.5 s/query of fixed cost at sf0.1, r4 VERDICT #4)."""
+def _warehouse(spark: SparkSession, sf_dir: str) -> TierPipeline:
+    """The one TierPipeline warehouse of (this application, sf_dir): the
+    product's events -> raw -> series -> segments -> tier build with the
+    CLI defaults at error bound 0, over _events_as_transcripts, built on
+    first use in a temporary directory removed at interpreter exit. Every
+    segment, datapoint and tier query reads it, so the oracles gate
+    Warehouse.read, ModelarEngine.datapoints and range_agg, and a pass
+    over the registry pays the build once, not a compress per query."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    _SEG_MEMO[key] = _event_segments(spark, sf_dir).localCheckpoint()
+    if key not in _WAREHOUSES:
+        d = tempfile.mkdtemp(prefix="mdbs_registry_")
+        atexit.register(shutil.rmtree, d, True)
+        p = TierPipeline(spark, Warehouse(d), CFG0)
+        p.run(_events_as_transcripts(spark, sf_dir))
+        _WAREHOUSES[key] = p
+    return _WAREHOUSES[key]
 
 
-def clear_segment_memo() -> None:
-    """Forget every memoize_segments table."""
-    _SEG_MEMO.clear()
+def _as_events(df: DataFrame) -> DataFrame:
+    """A warehouse table's turn_rate rows as the events' per-user
+    event_rate series: conv<id> -> <id>. turn_rate per minute IS the event
+    count per minute, so the values are event_series' unchanged."""
+    return (
+        df.where(F.col("metric") == TURN_RATE)
+        .drop("sbucket")
+        .withColumn("sid", F.expr("substring(sid, 5)"))
+        .withColumn("metric", F.lit("event_rate"))
+    )
 
 
 def _event_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events->series->segments derivation ~60 registry queries start
-    from. Queries stay SELF-CONTAINED (the oracle checks time nothing
-    and want no cross-query coupling) unless memoize_segments made a
-    memo for (application, sf_dir)."""
-    memo = _SEG_MEMO.get((spark.sparkContext.applicationId, sf_dir))
-    if memo is not None:
-        return memo
-    return compress(event_series(_t(spark, sf_dir, "events"), SI_MS), CFG0)
+    """The events' per-minute event_rate segments at error bound 0, read
+    from the warehouse's segments table: what the registry's segment and
+    datapoint queries start from."""
+    return _as_events(_warehouse(spark, sf_dir).wh.read(spark, "segments"))
+
+
+def _event_tier(
+    spark: SparkSession, sf_dir: str, name: str, gap_filled: bool = False
+) -> DataFrame:
+    """The warehouse's tier_1m/tier_1h/tier_1d over the events series."""
+    return _as_events(_warehouse(spark, sf_dir).tier(name, gap_filled))
 
 
 # --- engine: segment-native aggregates (SparkUDAF.scala family) --------------
@@ -125,18 +152,21 @@ def q_seg_agg_s(spark, sf_dir):
 
 
 def q_dp_restore_range(spark, sf_dir):
-    """DataPoint view with a timestamp range predicate: overlap-prune
-    segments, grid, exact re-filter (ViewDataPoint.scala two-phase shape)."""
-    segs = _event_segments(spark, sf_dir)
-    pts = datapoint_view(segs, lo_ms=RANGE_LO, hi_ms=RANGE_HI - 1)
+    """DataPoint view with a timestamp range predicate through
+    ModelarEngine.datapoints: overlap-prune segments, grid (on the driver
+    when the pruned scan is small), exact re-filter (ViewDataPoint.scala
+    two-phase shape)."""
+    from modelardb_dynamic_spark.engine import ModelarEngine
+
+    eng = ModelarEngine(spark, _event_segments(spark, sf_dir), CFG0)
+    pts = eng.datapoints(RANGE_LO, RANGE_HI - 1)
     return pts.select("sid", "ts_ms", F.col("value").cast("double").alias("value"))
 
 
 def q_rollup_1h_gapfill(spark, sf_dir):
     """Continuous aggregate: hourly count/sum/min/max of the per-minute
     series, with missing hours materialized (cnt=0, NULL aggregates)."""
-    segs = _event_segments(spark, sf_dir)
-    tier = gap_fill(rollup(segs, HOUR_MS), HOUR_MS)
+    tier = _event_tier(spark, sf_dir, "tier_1h", gap_filled=True)
     return tier.select(
         "sid",
         "bucket_ts",
@@ -148,10 +178,13 @@ def q_rollup_1h_gapfill(spark, sf_dir):
 
 
 def q_tier_1d(spark, sf_dir):
-    """Tier composition: 1d tier downsampled from the 1h tier (aggregates
-    compose columnar; equals direct daily aggregation)."""
-    segs = _event_segments(spark, sf_dir)
-    day = downsample(rollup(segs, HOUR_MS), DAY_MS)
+    """Daily aggregates over the events span through TierPipeline.range_agg:
+    the coarsest exact tier cover its lineage marks allow (1d interior,
+    finer tiers and series rows for the unsealed tail), equal to direct
+    daily aggregation."""
+    day = _as_events(
+        _warehouse(spark, sf_dir).range_agg(EVENTS_LO, EVENTS_HI, DAY_MS)
+    )
     return day.select(
         "sid",
         "bucket_ts",
@@ -162,45 +195,14 @@ def q_tier_1d(spark, sf_dir):
     )
 
 
-def q_agg_hour_of_day(spark, sf_dir):
-    """Cyclic calendar aggregate ({AGG}_HOUR_OF_DAY UDAF family,
-    SparkUDAF.scala:189-342): hourly tier partials composed by
-    hour-of-day, no model decode at query time."""
-    from modelardb_dynamic_spark.operators.rollup import calendar_agg
-
-    segs = _event_segments(spark, sf_dir)
-    out = calendar_agg(rollup(segs, HOUR_MS), "hour_of_day")
-    return out.select(
-        "sid", "hour_of_day", "cnt", "vsum",
-        F.col("vmin").cast("double").alias("vmin"),
-        F.col("vmax").cast("double").alias("vmax"),
-        "vavg",
-    )
-
-
-def q_agg_day_of_month(spark, sf_dir):
-    """Calendar aggregate ({AGG}_DAY_OF_MONTH): daily tier composed by
-    day-of-month."""
-    from modelardb_dynamic_spark.operators.rollup import calendar_agg
-
-    segs = _event_segments(spark, sf_dir)
-    day = downsample(rollup(segs, HOUR_MS), DAY_MS)
-    out = calendar_agg(day, "day_of_month")
-    return out.select(
-        "sid", "day_of_month", "cnt", "vsum",
-        F.col("vmin").cast("double").alias("vmin"),
-        F.col("vmax").cast("double").alias("vmax"),
-        "vavg",
-    )
-
-
-def _calendar_query(field: str, tier_builder):
-    """Shared shape for the {AGG}_{FIELD} calendar query family."""
+def _calendar_query(field: str, tier: str, tz: str = "UTC"):
+    """Shared shape for the {AGG}_{FIELD} calendar query family
+    (SparkUDAF.scala:189-342): the finest warehouse tier the field needs,
+    composed by calendar field, no model decode at query time."""
     from modelardb_dynamic_spark.operators.rollup import calendar_agg
 
     def q(spark, sf_dir):
-        segs = _event_segments(spark, sf_dir)
-        out = calendar_agg(tier_builder(segs), field)
+        out = calendar_agg(_event_tier(spark, sf_dir, tier), field, tz=tz)
         return out.select(
             "sid", field, "cnt", "vsum",
             F.col("vmin").cast("double").alias("vmin"),
@@ -211,48 +213,27 @@ def _calendar_query(field: str, tier_builder):
     return q
 
 
-def _hour_tier(segs):
-    return rollup(segs, HOUR_MS)
-
-
-def _day_tier(segs):
-    return downsample(rollup(segs, HOUR_MS), DAY_MS)
-
-
-def _minute_tier(segs):
-    return rollup(segs, SI_MS, grid_ms=SI_MS)
-
-
-q_agg_year = _calendar_query("year", _day_tier)
-q_agg_month = _calendar_query("month", _day_tier)
-q_agg_minute = _calendar_query("minute", _minute_tier)
-q_agg_am_pm = _calendar_query("am_pm", _hour_tier)
-
-
-def q_agg_hour_of_day_nyc(spark, sf_dir):
-    """hour_of_day bucketed in America/New_York — the reference's UDAFs
-    inherit the JVM default Calendar zone (core/models/Segment.java:135);
-    calendar_agg takes the zone explicitly. Hourly partials stay exact
-    because NY's UTC offset (-05/-04, incl. the DST shift) is a whole
-    number of hours."""
-    from modelardb_dynamic_spark.operators.rollup import calendar_agg
-
-    segs = _event_segments(spark, sf_dir)
-    out = calendar_agg(
-        rollup(segs, HOUR_MS), "hour_of_day", tz="America/New_York"
-    )
-    return out.select(
-        "sid", "hour_of_day", "cnt", "vsum",
-        F.col("vmin").cast("double").alias("vmin"),
-        F.col("vmax").cast("double").alias("vmax"),
-        "vavg",
-    )
+q_agg_hour_of_day = _calendar_query("hour_of_day", "tier_1h")
+q_agg_day_of_month = _calendar_query("day_of_month", "tier_1d")
+q_agg_year = _calendar_query("year", "tier_1d")
+q_agg_month = _calendar_query("month", "tier_1d")
+q_agg_minute = _calendar_query("minute", "tier_1m")
+q_agg_am_pm = _calendar_query("am_pm", "tier_1h")
+# hour_of_day bucketed in America/New_York: the reference's UDAFs inherit
+# the JVM default Calendar zone (core/models/Segment.java:135); hourly
+# partials stay exact because NY's UTC offset (-05/-04, incl. the DST
+# shift) is a whole number of hours
+q_agg_hour_of_day_nyc = _calendar_query(
+    "hour_of_day", "tier_1h", tz="America/New_York"
+)
 
 
 def q_agg_second(spark, sf_dir):
     """SECOND-field calendar aggregate over a 15 s-grid series (a 1 m grid
-    would make every bucket's second 0, a degenerate test)."""
-    from modelardb_dynamic_spark.operators.rollup import calendar_agg
+    would make every bucket's second 0, a degenerate test). It compresses
+    its own series: the warehouse's grid is 1 m."""
+    from modelardb_dynamic_spark.operators.compress import compress
+    from modelardb_dynamic_spark.operators.rollup import calendar_agg, rollup
     from modelardb_dynamic_spark.sources.timeseries import event_series
 
     si = 15_000
@@ -751,16 +732,11 @@ def _events_as_transcripts(spark, sf_dir):
 
 
 def q_transcript_tiers(spark, sf_dir):
-    """Full transcript tier pipeline under the value-level oracle gate:
-    transcripts -> per-minute turn_rate/token_rate series -> compress
-    (error bound 0: every value an exact small integer) -> 1h rollup ->
-    gap-fill. The oracle recomputes the same tiers from raw rows."""
-    from modelardb_dynamic_spark.sources.timeseries import transcript_series
-
-    tr = _events_as_transcripts(spark, sf_dir)
-    series = transcript_series(tr, SI_MS)
-    segs = compress(series, CFG0)
-    tier = gap_fill(rollup(segs, HOUR_MS), HOUR_MS)
+    """Full transcript tier pipeline under the value-level oracle gate: the
+    warehouse's gap-filled 1h tier (TierPipeline.tier) of both per-minute
+    series, turn_rate and token_rate, per conversation. The oracle
+    recomputes the same tiers from raw rows."""
+    tier = _warehouse(spark, sf_dir).tier("tier_1h", gap_filled=True)
     return tier.select(
         "sid", "metric", "bucket_ts", "cnt", "vsum",
         F.col("vmin").cast("double").alias("vmin"),
@@ -1677,37 +1653,25 @@ def q_stream_sessions(spark, sf_dir):
 
 
 def q_tiered_agg(spark, sf_dir):
-    """Tier-selection planner (plans/planner.py) under the value gate:
-    transcripts -> minute series -> compress (eb 0) -> 1m/1h/1d tiers,
-    then a day-bucket aggregate over an UNALIGNED range [lo, hi) with all
-    tiers' high-water capped a day early — so the plan must compose
-    1d-interior + 1h/1m edges + a raw-series tail, and the result must
-    still equal aggregating the raw series directly (which is exactly
-    what the DuckDB oracle does)."""
-    from modelardb_dynamic_spark.operators.rollup import downsample
+    """Tier-selection planner (plans/planner.py) under the value gate over
+    the warehouse's series and 1m/1h/1d tiers: a day-bucket aggregate
+    over an UNALIGNED range [lo, hi) with all tiers' high-water capped a
+    day early — so the plan must compose 1d-interior + 1h/1m edges + a
+    raw-series tail, and the result must still equal aggregating the raw
+    series directly (which is exactly what the DuckDB oracle does). The
+    warehouse's own lineage marks seal every day of the window, which
+    would leave the raw-tail branch unchecked."""
     from modelardb_dynamic_spark.plans.planner import tiered_agg
-    from modelardb_dynamic_spark.sources.timeseries import transcript_series
 
-    from modelardb_dynamic_spark.operators.dedup import _materialize
-
-    tr = _events_as_transcripts(spark, sf_dir)
-    # series, t1m, t1h each feed TWO consumers (compress + the routed
-    # cover's raw tail; the next tier's downsample + the cover's edge
-    # branch) — materialize so each upstream runs once per tier instead
-    # of once per consumer
-    series = _materialize(transcript_series(tr, SI_MS))
-    segs = compress(series, CFG0)
-    t1m = _materialize(rollup(segs, SI_MS, grid_ms=SI_MS))
-    t1h = _materialize(downsample(t1m, HOUR_MS))
-    t1d = downsample(t1h, DAY_MS)
+    p = _warehouse(spark, sf_dir)
+    series = p.wh.read(spark, "series")
+    tiers = [(p.tier(name).drop("sbucket"), ms) for name, ms in TIERS]
     lo = RANGE_LO + 90 * SI_MS + 30_000
     hi = RANGE_HI - 90 * SI_MS - 30_000
     cut = RANGE_HI - DAY_MS  # tiers lag a day behind the raw series
     out = tiered_agg(
-        series,
-        [(t1m, SI_MS), (t1h, HOUR_MS), (t1d, DAY_MS)],
-        lo, hi, DAY_MS,
-        high_water={SI_MS: cut, HOUR_MS: cut, DAY_MS: cut},
+        series, tiers, lo, hi, DAY_MS,
+        high_water={ms: cut for _, ms in TIERS},
     )
     return out.select(
         "sid", "metric", "bucket_ts", "cnt", "vsum",
@@ -1749,16 +1713,12 @@ def q_sax_words(spark, sf_dir):
 
 def _hourly_points(spark, sf_dir):
     """Shared hourly rebucket of the compressed store — input to the
-    acf/burst/interarrival trio. Served by the engine's own rollup
-    operator (shuffle-minimal interior-bucket bypass, batched C decode)
-    rather than decode-all-points + re-groupBy: at eb0 the count-valued
-    series sums are exact integers in float64, so CAST(vsum AS LONG) is
-    lossless and the tier path is value-identical to the point path
-    (the oracles replay the point-level definition and stay green)."""
-    from modelardb_dynamic_spark.operators.rollup import rollup
-
-    segs = _event_segments(spark, sf_dir)
-    return rollup(segs, HOUR_MS).select(
+    acf/burst/interarrival trio. Served by the warehouse's 1h tier rather
+    than decode-all-points + re-groupBy: at eb0 the count-valued series
+    sums are exact integers in float64, so CAST(vsum AS LONG) is lossless
+    and the tier path is value-identical to the point path (the oracles
+    replay the point-level definition and stay green)."""
+    return _event_tier(spark, sf_dir, "tier_1h").select(
         "sid",
         F.col("bucket_ts").alias("ts_ms"),
         F.col("vsum").cast("long").alias("v"),
@@ -1810,10 +1770,8 @@ def q_sliding_24h(spark, sf_dir):
     window (eb0 count sums are exact ints) so every column value-gates;
     the oracle replays the identical hourly rebucket + RANGE frame."""
     from modelardb_dynamic_spark.operators.analytics import sliding_agg
-    from modelardb_dynamic_spark.operators.rollup import rollup
 
-    segs = _event_segments(spark, sf_dir)
-    tier = rollup(segs, HOUR_MS).select(
+    tier = _event_tier(spark, sf_dir, "tier_1h").select(
         "sid", "bucket_ts", "cnt",
         F.col("vsum").cast("long").alias("vsum"),
         F.col("vmin").cast("long").alias("vmin"),
@@ -1944,10 +1902,8 @@ def q_theil_sen(spark, sf_dir):
     oracle replays the identical daily aggregation, pairwise slope
     divisions, and the (m+1)//2 / (m+2)//2 rank average."""
     from modelardb_dynamic_spark.operators.analytics import theil_sen
-    from modelardb_dynamic_spark.operators.rollup import rollup
 
-    segs = _event_segments(spark, sf_dir)
-    daily = rollup(segs, DAY_MS).select(
+    daily = _event_tier(spark, sf_dir, "tier_1d").select(
         "sid",
         F.col("bucket_ts").alias("ts_ms"),
         F.col("vsum").cast("long").alias("v"),
@@ -2305,12 +2261,9 @@ def q_mann_kendall(spark, sf_dir):
     store. Exact int64 pair signs + ONE shared IEEE closing tree."""
     from modelardb_dynamic_spark.operators.analytics import mann_kendall
 
-    # tier path: the 1d tier composed from segments serves the daily
-    # sums directly (exact ints at eb0; oracle replays the point path)
-    from modelardb_dynamic_spark.operators.rollup import rollup
-
-    segs = _event_segments(spark, sf_dir)
-    daily = rollup(segs, DAY_MS).select(
+    # tier path: the warehouse's 1d tier serves the daily sums directly
+    # (exact ints at eb0; oracle replays the point path)
+    daily = _event_tier(spark, sf_dir, "tier_1d").select(
         "sid",
         F.col("bucket_ts").alias("ts_ms"),
         F.col("vsum").cast("long").alias("v"),
@@ -4850,19 +4803,21 @@ ORACLES["stream_sessions"] = f"""
 """
 
 
+def _oracle_sf_dir() -> str:
+    """The data dir the generated oracles train on: SPARK_GRAFT_ORACLE_SF_DIR
+    (tools/check_oracles.py sets it to the dir it checks), else the
+    driver's sf0.01 gate."""
+    return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+
+
 def _kmeans_oracle_sql() -> str:
     """Generated (not static) oracle for ann_ivf_kmeans: trains the same
     centroids as q_ann_ivf_kmeans — similarity.train_kmeans_exact is a
     pure function of the parquet contents — and embeds them as SQL list
     literals, replaying assignment (argmax raw fold-dot), probing (top
-    n_probe cells by fold-dot) and exact fold-cosine re-rank. The data
-    dir defaults to the driver's sf0.01 gate and is overridable via
-    SPARK_GRAFT_ORACLE_SF_DIR (tools/check_oracles.py sets it)."""
-    import os
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    n_probe cells by fold-dot) and exact fold-cosine re-rank over the
+    _oracle_sf_dir() parquet."""
+    sf_dir = _oracle_sf_dir()
     _, X = similarity.load_embeddings_sorted(f"{sf_dir}/embeddings.parquet")
     cent = similarity.train_kmeans_exact(
         X, similarity.kmeans_cells_for(len(X))
@@ -5711,15 +5666,11 @@ def _bpe_oracle_sql() -> str:
     (curation.bpe_reference — an independent implementation sharing only
     the merge-application rule) over the same parquet and embeds the
     expected merge table as VALUES literals."""
-    import os
-
     import duckdb
 
     from modelardb_dynamic_spark.operators.curation import bpe_reference
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     texts = [
         r[0]
         for r in duckdb.sql(
@@ -5750,8 +5701,6 @@ def _bpe_encode_oracle_sql() -> str:
     parquet, then replays the IDENTICAL closed-form replace chain
     (curation.bpe_merge_replace_steps — one home for the framing) in
     DuckDB over the distinct-word table."""
-    import os
-
     import duckdb
 
     from modelardb_dynamic_spark.operators.curation import (
@@ -5760,9 +5709,7 @@ def _bpe_encode_oracle_sql() -> str:
         bpe_reference,
     )
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     texts = [
         r[0]
         for r in duckdb.sql(
@@ -5816,13 +5763,9 @@ def _bm25_oracle_sql() -> str:
     idf double literals in the SAME Python math.log call the Spark query
     uses, and replays the scoring tree term by term in sorted order."""
     import math
-    import os
-
     import duckdb
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     con = duckdb.connect()
     con.sql(
         f"CREATE VIEW d AS SELECT * FROM '{sf_dir}/documents.parquet'"
@@ -5919,30 +5862,23 @@ def _rrf_oracle_sql() -> str:
 
 def build_oracles() -> dict[str, str]:
     """The static ORACLES plus entries generated from the data itself
-    (kmeans centroid literals). __spark_entry__.oracle_sql() calls this so
-    the driver's value gate covers ann_ivf_kmeans too (36/36)."""
+    (kmeans/PQ centroid literals, BPE merges, BM25 idf).
+    __spark_entry__.oracle_sql() calls this so the driver's value gate
+    covers those queries too. A generator is skipped only when the parquet
+    it trains on is absent; any other error propagates instead of turning
+    its query into an unchecked one."""
+    sf_dir = _oracle_sf_dir()
     out = dict(ORACLES)
-    try:
-        out["ann_ivf_kmeans"] = _kmeans_oracle_sql()
-        out["ann_pq"] = _pq_oracle_sql()
-    except Exception:
-        pass  # embeddings parquet unavailable -> rows-only fallback
-    try:
-        out["bpe_merges"] = _bpe_oracle_sql()
-    except Exception:
-        pass  # documents parquet unavailable -> rows-only fallback
-    try:
-        out["bm25_search"] = _bm25_oracle_sql()
-    except Exception:
-        pass  # documents parquet unavailable -> rows-only fallback
-    try:
-        out["hybrid_rrf"] = _rrf_oracle_sql()
-    except Exception:
-        pass  # documents parquet unavailable -> rows-only fallback
-    try:
-        out["bpe_encode"] = _bpe_encode_oracle_sql()
-    except Exception:
-        pass  # documents parquet unavailable -> rows-only fallback
+    for name, table, gen in (
+        ("ann_ivf_kmeans", "embeddings", _kmeans_oracle_sql),
+        ("ann_pq", "embeddings", _pq_oracle_sql),
+        ("bpe_merges", "documents", _bpe_oracle_sql),
+        ("bm25_search", "documents", _bm25_oracle_sql),
+        ("hybrid_rrf", "documents", _rrf_oracle_sql),
+        ("bpe_encode", "documents", _bpe_encode_oracle_sql),
+    ):
+        if os.path.exists(f"{sf_dir}/{table}.parquet"):
+            out[name] = gen()
     return out
 
 
@@ -8192,11 +8128,7 @@ def _pq_oracle_sql() -> str:
     codebooks from the same parquet and replays encode (argmin
     fold-sqdist, ties to lowest code) + subspace-ascending ADC fold +
     (adc ASC, id ASC) ranking as DuckDB SQL over codeword literals."""
-    import os
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir()
     _, X = similarity.load_embeddings_sorted(f"{sf_dir}/embeddings.parquet")
     books = similarity.train_pq_codebooks(X, m=8, ksub=16)
     m, ksub, d = books.shape

@@ -1,16 +1,18 @@
-"""Warehouse catalog: bucketed, sorted parquet tables with atomic-rename
-commits.
+"""Warehouse catalog: bucketed parquet tables with atomic-rename commits.
 
 Deployment note (the Iceberg story): at cluster scale these tables are
 Iceberg tables — `bucket(N, sid)` partition transform, sorted by
 (sid, metric, start_ts), snapshot-isolated commits, and
 `rewrite_data_files` replacing the reference's hand-rolled compaction
 (storage/FileStorage.scala:126-259). The sandbox image ships no Iceberg
-jars, so this module provides the same layout and commit discipline on
-plain parquet: hash-bucket directories (`sbucket=K`), sort within files,
-and write-to-temp + atomic rename. The Iceberg wiring itself lives in
-`sources/iceberg.py`; nothing here attempts it, so a runtime with
-iceberg-spark on the classpath still writes these parquet tables.
+jars, so the warehouse keeps the same layout and commit discipline on
+plain parquet: hash-bucket directories (`sbucket=K`), each written to a
+temp directory and installed by the journaled rename of
+plans/checkpoint.py (TierPipeline._run_stage). Every table is parquet;
+ORC is an input format only (readers.series_from_orc). The Iceberg
+wiring itself lives in `sources/iceberg.py`; nothing here attempts it,
+so a runtime with iceberg-spark on the classpath still writes these
+parquet tables.
 
 The bucket layout mirrors the reference's Cassandra physical model —
 PRIMARY KEY (gid, start_time): all segments of one series live in one
@@ -29,8 +31,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -170,62 +170,11 @@ class Warehouse:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def write(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_by: str | None = None,
-        sort_by: list[str] | None = None,
-        format: str = "parquet",
-    ) -> str:
-        """Write (or replace) a table; if bucket_by is given, hash-bucket
-        into sbucket=K directories and sort within files (co-locates each
-        series, enables partition pruning + near-sequential scans per
-        series).
-
-        format: "parquet" (default) or "orc" — the reference's two file
-        storage backends (storage/ParquetStorage.scala,
-        storage/ORCStorage.scala share one segment schema); read()
-        auto-detects from the part files, so mixed-format warehouses
-        round-trip without callers tracking the format."""
-        if format not in ("parquet", "orc"):
-            raise ValueError(f"unknown warehouse format {format!r}")
-        final = self.path(table)
-        tmp = final + "." + uuid.uuid4().hex[:8] + ".tmp"
-        df = unannotated(df)
-        try:
-            if bucket_by is not None:
-                out = df.withColumn("sbucket", sid_bucket(F.col(bucket_by), self.n_buckets))
-                out = out.repartition(self.n_buckets, "sbucket")
-                if sort_by:
-                    out = out.sortWithinPartitions("sbucket", *sort_by)
-                out.write.mode("overwrite").partitionBy("sbucket").format(
-                    format
-                ).save(tmp)
-            else:
-                df.write.mode("overwrite").format(format).save(tmp)
-            if os.path.exists(final):
-                shutil.rmtree(final)
-            os.rename(tmp, final)
-        finally:
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
-        return final
-
-    def _detect_format(self, table: str) -> str:
-        for dirpath, _dirs, files in os.walk(self.path(table)):
-            for f in files:
-                if f.endswith(".orc"):
-                    return "orc"
-                if f.endswith(".parquet"):
-                    return "parquet"
-        return "parquet"
-
     def read(
         self, spark: SparkSession, table: str, buckets: list[int] | None = None
     ) -> DataFrame:
         """The table, or only its sbucket=K directories for K in buckets
-        (sbucket still a column). Parquet reads take their schema from the
+        (sbucket still a column). Reads take their schema from the
         footers (footer_schema), so no Spark job infers it. On a bucketed
         table the `sid` column carries {"n_buckets": N} metadata: sbucket
         is sid_bucket(sid, N), so a reader holding only the DataFrame
@@ -233,21 +182,14 @@ class Warehouse:
         Spark's file source drops metadata on the partition column itself,
         so it sits on sid, where it survives where() and select()."""
         root = self.path(table)
-        if self._detect_format(table) == "orc":
-            if buckets is not None:
-                raise ValueError(
-                    f"table {table!r} is ORC; bucket reads are parquet-only"
-                )
-            df = spark.read.orc(root)
-        else:
-            reader = spark.read.option("basePath", root)
-            schema = footer_schema(root)
-            if schema is not None:
-                reader = reader.schema(schema)
-            paths = [root] if buckets is None else [
-                os.path.join(root, f"sbucket={b}") for b in buckets
-            ]
-            df = reader.parquet(*paths)
+        reader = spark.read.option("basePath", root)
+        schema = footer_schema(root)
+        if schema is not None:
+            reader = reader.schema(schema)
+        paths = [root] if buckets is None else [
+            os.path.join(root, f"sbucket={b}") for b in buckets
+        ]
+        df = reader.parquet(*paths)
         if "sbucket" in df.columns and "sid" in df.columns:
             df = df.withMetadata("sid", {"n_buckets": self.n_buckets})
         return df

@@ -27,7 +27,7 @@ from modelardb_dynamic_spark.operators.reconstruct import (
     decoded_nbytes,
     overlapping,
 )
-from modelardb_dynamic_spark.sources.catalog import Warehouse
+from modelardb_dynamic_spark.sources.catalog import Warehouse, sid_bucket
 
 SI = 1_000
 CFG = EngineConfig(error_bound=1.0, sampling_interval_ms=SI)
@@ -60,6 +60,13 @@ def _segment_rows() -> list[tuple]:
     return rows
 
 
+def _write_segments(w: Warehouse, segs) -> None:
+    """segs as w's segments table, one sbucket=K directory per sid hash
+    bucket (the layout TierPipeline writes)."""
+    segs.withColumn("sbucket", sid_bucket(F.col("sid"), w.n_buckets)).write \
+        .partitionBy("sbucket").parquet(w.path("segments"))
+
+
 @pytest.fixture(scope="module")
 def wh(spark, tmp_path_factory):
     segs = spark.createDataFrame(_segment_rows(), SEGMENT_SCHEMA)
@@ -67,7 +74,7 @@ def wh(spark, tmp_path_factory):
         MTID_PMC_MEAN, MTID_SWING, MTID_GORILLA, MTID_UNCOMPRESSED
     }
     w = Warehouse(str(tmp_path_factory.mktemp("dp") / "wh"), n_buckets=4)
-    w.write(segs, "segments", bucket_by="sid", sort_by=["start_ts"])
+    _write_segments(w, segs)
     return w
 
 
@@ -176,7 +183,7 @@ def test_compress_output_decodes_distributed(spark, wh):
     fresh = ModelarEngine(spark, segs, cfg).datapoints()
     assert _decodes_in_spark(fresh)
     w = Warehouse(wh.root + "_c", n_buckets=4)
-    w.write(segs, "segments", bucket_by="sid")
+    _write_segments(w, segs)
     stored = ModelarEngine(spark, w.read(spark, "segments"), cfg)
     assert _rows(fresh) == _both(spark, stored)
     sid = _rows(fresh)[0][0]

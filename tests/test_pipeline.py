@@ -1282,7 +1282,7 @@ def test_footers_equal_scan_and_build_never_scans(spark, transcripts, tmp_path,
         assert r["mismatches"] == [], table
 
     # an unbucketed table: the footer schema has no sbucket column
-    wh.write(transcripts, "flat")
+    transcripts.write.parquet(wh.path("flat"))
     assert "sbucket" not in footer_schema(wh.path("flat")).fieldNames()
     assert wh.read(spark, "flat").schema == spark.read.parquet(wh.path("flat")).schema
 
@@ -1381,23 +1381,6 @@ def test_int96_raw_stage_falls_back_to_scan(spark, transcripts, tmp_path):
         for b in lin.completed_buckets()
     } == scanned
     assert p.fsck(tables=["raw"])["raw"]["mismatches"] == []
-
-
-def test_orc_stage_table_fails_loudly(spark, transcripts, tmp_path):
-    """Stage tables are parquet-only: an ORC raw table must raise naming
-    the table, not read as empty buckets (purge would report removed=0)."""
-    wh = Warehouse(str(tmp_path / "orcstage"), n_buckets=2)
-    wh.write(transcripts, "raw", bucket_by="conv_id", format="orc")
-    p = TierPipeline(spark, wh, CFG10, chunk_buckets=2, salt_span_points=None)
-    with pytest.raises(ValueError, match="'raw'"):
-        p._live_buckets("raw", [0, 1])
-    with pytest.raises(ValueError, match="'raw'"):
-        p._read_buckets("raw", [0])
-    victim = transcripts.select("conv_id").first()[0]
-    with pytest.raises(ValueError, match="'raw'"):
-        p.purge([victim], batch_id="orc")
-    with pytest.raises(ValueError, match="'raw'"):
-        wh.read(spark, "raw", buckets=[0])
 
 
 def test_purge_sketch_rebuild_drops_straddling_day(spark, tmp_path):
@@ -1529,26 +1512,6 @@ def test_fsck_flags_corrupted_high_water(spark, transcripts, tmp_path):
     assert len(mm) == 1 and mm[0]["bucket"] == 1
     assert mm[0]["manifest_rows"] == mm[0]["actual_rows"]
     assert mm[0]["manifest_hw"] != mm[0]["actual_hw"]
-
-
-def test_warehouse_orc_segment_sink_roundtrip(spark, series, tmp_path):
-    """ORC segment sink (ORCStorage.scala parity): segments written with
-    format='orc' read back row-identical to the parquet sink, including
-    the binary model payloads; read() auto-detects the format."""
-    segs = compress(series, CFG10)
-    wh = Warehouse(str(tmp_path / "orcwh"), n_buckets=4)
-    wh.write(segs, "segments_pq", bucket_by="sid", sort_by=["start_ts"])
-    wh.write(segs, "segments_orc", bucket_by="sid", sort_by=["start_ts"],
-             format="orc")
-    a = wh.read(spark, "segments_pq").drop("sbucket")
-    b = wh.read(spark, "segments_orc").drop("sbucket")
-    assert wh._detect_format("segments_orc") == "orc"
-    assert a.schema == b.schema
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    assert b.count() == segs.count() > 0
-    with pytest.raises(ValueError, match="format"):
-        wh.write(segs, "bad", format="avro")
 
 
 def _warehouse_state(spark, wh):

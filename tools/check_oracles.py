@@ -51,9 +51,9 @@ def to_sorted_rows(cols, rows):
 def check(spark, sf_dir, names=()):
     """Run each named queries() entry (every entry when names is empty) on
     Spark and its oracle_sql() on DuckDB over sf_dir's parquet tables,
-    print one verdict line per query, and return the names that failed.
-    Generated oracles train on SPARK_GRAFT_ORACLE_SF_DIR, which must name
-    sf_dir."""
+    print one verdict line per query, and return the names that failed; a
+    query without an oracle fails. Generated oracles train on
+    SPARK_GRAFT_ORACLE_SF_DIR, which must name sf_dir."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
@@ -67,6 +67,10 @@ def check(spark, sf_dir, names=()):
     for name, fn in qs.items():
         if names and name not in names:
             continue
+        if name not in oracles:
+            print(f"[FAIL] {name}: no oracle")
+            failures.append(name)
+            continue
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -74,9 +78,6 @@ def check(spark, sf_dir, names=()):
         except Exception as e:
             print(f"[FAIL] {name}: spark error {type(e).__name__}: {e}")
             failures.append(name)
-            continue
-        if name not in oracles:
-            print(f"[rows-only] {name}: {len(srows)} rows, cols {scols}")
             continue
         try:
             # fetch via Arrow like the driver: HUGEINT sum() surfaces as
