@@ -1,12 +1,17 @@
-/* Single-series segmentation cascade (PMC-Mean -> Swing -> Gorilla with
- * Uncompressed fallback) as a C kernel.
+/* The segmentation cascade (PMC-Mean -> Swing -> Gorilla with the
+ * Uncompressed fallback) as a C kernel: one cascade, widened bound.
  *
- * This is an exact restatement of the Python/numpy reference implementation
- * in models/kernels.py (itself pinned bit-identical to the Java engine's
- * core/SegmentGenerator.java:152-304 by the golden fixtures): every float
- * operation runs in the same IEEE type and the same order, so the emitted
- * segment stream is byte-identical.  Compile with -ffp-contract=off (no FMA
- * contraction: `y0 - ua*t0` must round twice, exactly like numpy/Java).
+ * One routine, mdbs_compress_group, segments a group of G aligned series;
+ * a single series is a group of one (G = 1), as in the reference, whose
+ * SegmentGenerator also compresses one series as a TimeSeriesGroup of
+ * one.  It is an exact restatement of two Python references:
+ * models/kernels.py for G = 1 (itself pinned bit-identical to the Java
+ * engine's core/SegmentGenerator.java:152-304 by the golden fixtures)
+ * and the models/grouped.py engine for its never-splitting groups (the
+ * grouped goldens).  Every float operation runs in the same IEEE type
+ * and the same order, so the emitted segment stream is byte-identical.
+ * Compile with -ffp-contract=off (no FMA contraction: `y0 - ua*t0` must
+ * round twice, exactly like numpy/Java).
  *
  * Float discipline (the bit-match-sensitive spots, same as kernels.py):
  *  - percentage error: exact-equality short circuit, real==0 -> +inf,
@@ -25,6 +30,15 @@
  *  - selection: compressionRatio = 16L/(24+size) in float32; the literal
  *    `best = (ratio(m) < ratio(best)) ? best : m` loop sends ties and NaNs
  *    to the LATER model (SegmentGenerator.java:266-279).
+ *
+ * Rows append value-at-a-time (PMC joint min/max/sum row-major, Gorilla
+ * interleaves members row-major with the length bound counting ROWS);
+ * at G = 1 a row is a point.  Two grouped twists remain, both no-ops at
+ * G = 1:
+ *  - ratio = f32(16)*f32(rows) / (f32(24)+f32(size)+f32(4)*f32(gaps)) —
+ *    rows, not points (_ratio_g, ModelType.java:65-70);
+ *  - Swing row 0 collapses to the f32 member average, summed from the
+ *    first member (all members must be within bound of it).
  */
 
 #include <math.h>
@@ -55,8 +69,9 @@ static inline float jmaxf(float a, float b) {
     return signbit(a) ? b : a;
 }
 
-/* percentage_error(approx, real) > bound, all double (Static.java:105-118).
- * NaN operands compare false everywhere -> "inside", matching numpy. */
+/* percentage_error(approx, real) > bound, all double (Static.java:105-118);
+ * bound is the float32 error bound widened to double.  NaN operands
+ * compare false everywhere -> "inside", matching numpy. */
 static inline int outside(double bound, double approx, double real) {
     if (approx == real) return 0;
     double err;
@@ -84,89 +99,6 @@ static inline int f32_roundtrips(double x) {
     return (double)f == x;
 }
 
-/* ---------- PMC-Mean prefix ---------- */
-
-/* Maximal accepted prefix length and its float32 mean (NaN if prefix 0). */
-static int64_t pmc_prefix(const float *v, int64_t n, double bound,
-                          float *mean_out) {
-    double sum = 0.0;
-    float mn = INFINITY, mx = -INFINITY;
-    for (int64_t i = 0; i < n; i++) {
-        float nmn = jminf(mn, v[i]);
-        float nmx = jmaxf(mx, v[i]);
-        double nsum = sum + (double)v[i];
-        double avg = (double)(float)(nsum / (double)(i + 1));
-        if (outside(bound, avg, (double)nmn) ||
-            outside(bound, avg, (double)nmx)) {
-            *mean_out = i > 0 ? (float)(sum / (double)i) : NAN;
-            return i;
-        }
-        mn = nmn; mx = nmx; sum = nsum;
-    }
-    *mean_out = n > 0 ? (float)(sum / (double)n) : NAN;
-    return n;
-}
-
-/* ---------- Swing prefix ---------- */
-
-/* Maximal accepted prefix; final (ua,ub,la,lb) double bounds.
- * have_bounds=0 while the prefix is < 2 points. */
-static int64_t swing_prefix(const int64_t *t, const float *v, int64_t n,
-                            double ebdiv, double *oua, double *oub,
-                            double *ola, double *olb, int *have_bounds) {
-    *have_bounds = 0;
-    if (n == 0) return 0;
-    double y0 = (double)v[0];
-    double t0 = (double)t[0];
-    if (n == 1) return 1;
-    double t1 = (double)t[1];
-    double v1 = (double)v[1];
-    double dev = fabs(v1 * ebdiv);
-    double ua = (v1 + dev - y0) / (t1 - t0);
-    double ub = y0 - ua * t0;
-    double la = (v1 - dev - y0) / (t1 - t0);
-    double lb = y0 - la * t0;
-    int64_t i = 2;
-    for (; i < n; i++) {
-        double ti = (double)t[i];
-        double vi = (double)v[i];
-        dev = fabs(vi * ebdiv);
-        double uba = ua * ti + ub;
-        double lba = la * ti + lb;
-        if (uba + dev < vi || lba - dev > vi) break;
-        if (uba - dev > vi) {
-            ua = (vi + dev - y0) / (ti - t0);
-            ub = y0 - ua * t0;
-        }
-        if (lba + dev < vi) {
-            la = (vi - dev - y0) / (ti - t0);
-            lb = y0 - la * t0;
-        }
-    }
-    *oua = ua; *oub = ub; *ola = la; *olb = lb; *have_bounds = 1;
-    return i;
-}
-
-/* Swing size(): NaN if the float32-cast midline violates the bound at any
- * gridded point, else the encoded byte width (8/12/16). */
-static double swing_size(double ua, double ub, double la, double lb,
-                         const int64_t *t, const float *v, int64_t len,
-                         double bound, double *a_out, double *b_out) {
-    double a = (la + ua) / 2.0;
-    double b = (lb + ub) / 2.0;
-    *a_out = a; *b_out = b;
-    for (int64_t i = 0; i < len; i++) {
-        double approx = (double)(float)(a * (double)t[i] + b);
-        if (outside(bound, approx, (double)v[i])) return NAN;
-    }
-    int rta = f32_roundtrips(a), rtb = f32_roundtrips(b);
-    if (rta && rtb) return 8.0;
-    if (rta) return 12.0;
-    return 16.0;
-}
-
-/* ---------- Gorilla ---------- */
-
 typedef struct { uint8_t *buf; int64_t nbits; } bw_t;
 
 /* OR k bits (MSB-first) into the pre-zeroed buffer with one unaligned
@@ -182,50 +114,6 @@ static inline void bw_put(bw_t *w, uint32_t val, int k) {
     memcpy(&cur, at, 8);
     cur |= __builtin_bswap64(x);
     memcpy(at, &cur, 8);
-}
-
-/* Encode len float32 values into buf (caller zeroes it); returns byte size
- * (partial final byte counts as one, BitBuffer.size()). */
-static int64_t gorilla_encode(const float *v, int64_t len, uint8_t *buf) {
-    bw_t w = {buf, 0};
-    uint32_t last = f32_bits(v[0]);
-    bw_put(&w, last, 32);
-    int64_t stored_lz = ((int64_t)1) << 30; /* Integer.MAX_VALUE sentinel */
-    int64_t stored_tz = 0;
-    for (int64_t i = 1; i < len; i++) {
-        uint32_t bits = f32_bits(v[i]);
-        uint32_t xor = bits ^ last;
-        last = bits;
-        if (xor == 0) {
-            w.nbits++; /* single 0 bit (buffer pre-zeroed) */
-            continue;
-        }
-        int lz = __builtin_clz(xor);
-        int tz = __builtin_ctz(xor);
-        if (lz >= stored_lz && tz >= stored_tz) {
-            int sig = (int)(32 - stored_lz - stored_tz);
-            bw_put(&w, 0x2u, 2);
-            bw_put(&w, (xor >> stored_tz) & (uint32_t)((1ull << sig) - 1), sig);
-        } else {
-            int sig = 32 - lz - tz;
-            bw_put(&w, 0x3u, 2);
-            bw_put(&w, (uint32_t)lz, 5);
-            bw_put(&w, (uint32_t)(sig & 0x3F), 6);
-            bw_put(&w, (xor >> tz) & (uint32_t)((1ull << sig) - 1), sig);
-            stored_lz = lz;
-            stored_tz = tz;
-        }
-    }
-    return (w.nbits + 7) / 8;
-}
-
-/* ---------- ratio / summaries ---------- */
-
-static inline float ratio32(int64_t len, double size) {
-    if (len == 0 || isnan(size)) return NAN;
-    float num = (float)(16.0 * (double)len);
-    float den = 24.0f + (float)size;
-    return num / den;
 }
 
 /* Left-to-right double accumulation of float32 values (Java `double+=float`,
@@ -245,196 +133,26 @@ static void minmax32(const float *v, int64_t len, double *mn, double *mx) {
     *mn = (double)a; *mx = (double)b;
 }
 
-/* ---------- cascade driver ---------- */
+/* ---------- model prefixes ---------- */
 
-/* Returns number of segments emitted, or -1 if the model arena is too
- * small (caller grows and retries).  Output arrays must hold >= n entries.
- * consumed_out = points consumed (== n unless allow_flush=0 stops early).
- */
-int64_t mdbs_compress_run(
-    const int64_t *t, const float *v, int64_t n,
-    double error_bound, int64_t length_bound, int allow_flush,
-    int64_t *seg_start_idx, int64_t *seg_len, int32_t *seg_mtid,
-    int64_t *seg_model_off, int64_t *seg_model_len,
-    double *seg_vmin, double *seg_vmax, double *seg_vsum,
-    uint8_t *arena, int64_t arena_cap,
-    uint8_t *gscratch, /* caller-zeroed, >= 6*min(length_bound,n)+16 bytes */
-    int64_t *consumed_out)
-{
-    if (length_bound < 1) return -2; /* see mdbs_compress_group */
-    double bound = (double)(float)error_bound;
-    double ebdiv = ((double)(float)error_bound) / 100.1;
-    int64_t i = 0, nseg = 0, used = 0;
-    while (i < n) {
-        int64_t rem = n - i;
-        const int64_t *tw = t + i;
-        const float *vw = v + i;
-
-        float pmc_mean;
-        int64_t p = pmc_prefix(vw, rem, bound, &pmc_mean);
-        double ua, ub, la, lb;
-        int have_bounds;
-        int64_t s = swing_prefix(tw, vw, rem, ebdiv,
-                                 &ua, &ub, &la, &lb, &have_bounds);
-
-        int64_t m = p > s ? p : s;
-        if (length_bound > m) m = length_bound;
-        int64_t bsize;
-        if (m + 1 <= rem) bsize = m + 1;        /* all models stuck */
-        else if (allow_flush) bsize = rem;       /* run ended: flush */
-        else break;                              /* unstable: stop */
-
-        int64_t len_p = p < bsize ? p : bsize;
-        int64_t len_s = s < bsize ? s : bsize;
-        int64_t len_g = length_bound < bsize ? length_bound : bsize;
-
-        double size_p = len_p > 0 ? 4.0 : NAN;
-        double sa = 0.0, sb = 0.0, size_s = NAN;
-        if (len_s >= 2 && have_bounds)
-            size_s = swing_size(ua, ub, la, lb, tw, vw, len_s, bound,
-                                &sa, &sb);
-        int64_t gbytes_cap = 6 * len_g + 16;
-        memset(gscratch, 0, (size_t)gbytes_cap);
-        int64_t g_bytes = gorilla_encode(vw, len_g, gscratch);
-        double size_g = (double)g_bytes;
-
-        /* literal reference selection loop: later model wins ties/NaNs */
-        float rp = ratio32(len_p, size_p);
-        float rs = ratio32(len_s, size_s);
-        float rg = ratio32(len_g, size_g);
-        int best = 0;
-        float rbest = rp;
-        const float rr[3] = {rp, rs, rg};
-        for (int c = 0; c < 3; c++) {
-            if (!(rr[c] < rbest)) { best = c; rbest = rr[c]; }
-        }
-        int mtid;
-        int64_t blen, mlen;
-        int64_t off = used;
-        if (isnan(rbest) ||
-            (best == 0 && len_p == 0) || (best == 1 && len_s == 0) ||
-            (best == 2 && len_g == 0)) {
-            /* Uncompressed fallback fitted to the whole buffer */
-            mtid = MTID_UNCOMPRESSED;
-            blen = length_bound < bsize ? length_bound : bsize;
-            mlen = 4 * blen;
-            if (used + mlen > arena_cap) return -1;
-            for (int64_t k = 0; k < blen; k++)
-                put_be_f32(arena + off + 4 * k, vw[k]);
-        } else if (best == 0) {
-            mtid = MTID_PMC;
-            blen = len_p;
-            mlen = 4;
-            if (used + mlen > arena_cap) return -1;
-            put_be_f32(arena + off, pmc_mean);
-        } else if (best == 1) {
-            mtid = MTID_SWING;
-            blen = len_s;
-            int rta = f32_roundtrips(sa), rtb = f32_roundtrips(sb);
-            if (rta && rtb) {
-                mlen = 8;
-                if (used + mlen > arena_cap) return -1;
-                put_be_f32(arena + off, (float)sa);
-                put_be_f32(arena + off + 4, (float)sb);
-            } else if (rta) {
-                mlen = 12;
-                if (used + mlen > arena_cap) return -1;
-                put_be_f32(arena + off, (float)sa);
-                put_be_f64(arena + off + 4, sb);
-            } else {
-                mlen = 16;
-                if (used + mlen > arena_cap) return -1;
-                put_be_f64(arena + off, sa);
-                put_be_f64(arena + off + 8, sb);
-            }
-        } else {
-            mtid = MTID_GORILLA;
-            blen = len_g;
-            mlen = g_bytes;
-            if (used + mlen > arena_cap) return -1;
-            memcpy(arena + off, gscratch, (size_t)mlen);
-        }
-        used += mlen;
-
-        /* summaries via the decompress-side closed forms (_emit) */
-        double vmin, vmax, vsum;
-        if (mtid == MTID_PMC) {
-            float m32 = pmc_mean;
-            vmin = vmax = (double)m32;
-            vsum = (double)((float)blen * m32);
-        } else if (mtid == MTID_SWING) {
-            /* stored widths round-trip, so sa/sb ARE the decoded values */
-            double start_ts = (double)tw[0];
-            double end_ts = (double)tw[blen - 1];
-            double first = sa * start_ts + sb;
-            double last = sa * end_ts + sb;
-            vsum = (first + last) / 2.0 * (double)blen;
-            double f_start = (double)(float)first;
-            double f_end = (double)(float)last;
-            if (sa == 0.0) { vmin = vmax = (double)(float)sb; }
-            else if (sa > 0.0) { vmin = f_start; vmax = f_end; }
-            else { vmin = f_end; vmax = f_start; }
-        } else {
-            minmax32(vw, blen, &vmin, &vmax);
-            vsum = seq_sum64(vw, blen);
-        }
-
-        seg_start_idx[nseg] = i;
-        seg_len[nseg] = blen;
-        seg_mtid[nseg] = mtid;
-        seg_model_off[nseg] = off;
-        seg_model_len[nseg] = mlen;
-        seg_vmin[nseg] = vmin;
-        seg_vmax[nseg] = vmax;
-        seg_vsum[nseg] = vsum;
-        nseg++;
-        i += blen;
-    }
-    *consumed_out = i;
-    return nseg;
-}
-
-/* ================= grouped (multi-series) fast path =================
- *
- * Exact C restatement of the models/grouped.py cascade for the ELIGIBLE
- * case the Python caller pre-checks: no NaN, no timestamp gap > si, all
- * member pairs within 2*eb at every row (so the dynamic split can never
- * fire — models/grouped.py _split returns without splitting when every
- * pair stays within bound), and maximum_latency == 0.  Under those
- * conditions the online engine is a single _SubGen whose cascade reduces
- * to the same prefix semantics as the single-series kernel (the module
- * docstring's derivation), with three grouped twists replicated here:
- *  - bound checks use the RAW double error bound (_out_of_bound), not
- *    the float32-widened one;
- *  - ratio = f32(16)*f32(rows) / (f32(24)+f32(size)) — rows, not points
- *    (_ratio_g, ModelType.java:65-70);
- *  - rows append value-at-a-time: PMC joint min/max/sum row-major,
- *    Swing row 0 collapses to the f32 member average, Gorilla
- *    interleaves members row-major with the length bound counting ROWS.
- */
-
-/* percentage_error(approx, real) > eb with eb as a raw double
- * (models/grouped.py _out_of_bound). */
-static inline int outside_raw(double eb, double approx, double real) {
-    return outside(eb, approx, real);
-}
-
-/* Maximal accepted row prefix for grouped PMC; sum over accepted rows
- * out for get_model. */
+/* Maximal accepted row prefix for PMC-Mean; sum over accepted rows out
+ * for the stored mean. */
 static int64_t pmc_prefix_grp(const float *v, int64_t n, int64_t G,
-                              double eb, double *sum_out) {
-    double sum = 0.0, mn = INFINITY, mx = -INFINITY;
+                              double bound, double *sum_out) {
+    double sum = 0.0;
+    float mn = INFINITY, mx = -INFINITY;
     for (int64_t i = 0; i < n; i++) {
-        double nmn = mn, nmx = mx, nsum = sum;
+        double nsum = sum;
+        float nmn = mn, nmx = mx;
         const float *row = v + i * G;
         for (int64_t c = 0; c < G; c++) {
-            double val = (double)row[c];
-            nsum += val;
-            if (val < nmn) nmn = val;
-            if (val > nmx) nmx = val;
+            nsum += (double)row[c];
+            nmn = jminf(nmn, row[c]);
+            nmx = jmaxf(nmx, row[c]);
         }
         double avg = (double)(float)(nsum / (double)((i + 1) * G));
-        if (outside_raw(eb, avg, nmn) || outside_raw(eb, avg, nmx)) {
+        if (outside(bound, avg, (double)nmn) ||
+            outside(bound, avg, (double)nmx)) {
             *sum_out = sum;
             return i;
         }
@@ -444,25 +162,28 @@ static int64_t pmc_prefix_grp(const float *v, int64_t n, int64_t G,
     return n;
 }
 
-/* Grouped Swing: row 0 is the f32 member average (all members must be
- * within bound of it); later rows append value-at-a-time to the shared
- * line.  On a mid-row fail the bounds KEEP the partial updates from the
- * failing row's earlier values, exactly like _Swing.append. */
+/* Swing: row 0 is the f32 member average (all members must be within
+ * bound of it); later rows append value-at-a-time to the shared line.
+ * On a mid-row fail the bounds KEEP the partial updates from the failing
+ * row's earlier values, exactly like _Swing.append. */
 static int64_t swing_prefix_grp(const int64_t *t, const float *v,
-                                int64_t n, int64_t G, double eb,
-                                double ebdiv, double *oua, double *oub,
+                                int64_t n, int64_t G, double bound,
+                                double *oua, double *oub,
                                 double *ola, double *olb) {
     *oua = *oub = *ola = *olb = 0.0;
     if (n == 0) return 0;
-    double vmin = (double)v[0], vmax = vmin, s = 0.0;
-    for (int64_t c = 0; c < G; c++) {
+    double ebdiv = bound / 100.1;
+    /* summed from the first member: a group of one anchors at its value
+     * exactly, -0.0 included */
+    double vmin = (double)v[0], vmax = vmin, s = vmin;
+    for (int64_t c = 1; c < G; c++) {
         double val = (double)v[c];
         if (val < vmin) vmin = val;
         if (val > vmax) vmax = val;
         s += val;
     }
     double avg = (double)(float)(s / (double)G);
-    if (outside_raw(eb, avg, vmin) || outside_raw(eb, avg, vmax)) return 0;
+    if (outside(bound, avg, vmin) || outside(bound, avg, vmax)) return 0;
     double y0 = avg, t0 = (double)t[0];
     double ua = 0.0, ub = 0.0, la = 0.0, lb = 0.0;
     int64_t sz = 1;
@@ -500,11 +221,11 @@ static int64_t swing_prefix_grp(const int64_t *t, const float *v,
     return n;
 }
 
-/* _Swing.size_bytes: NaN if the f32 midline misses any member value,
- * else the encoded width. */
+/* Swing size(): NaN if the f32 midline misses any member value, else
+ * the encoded width (8/12/16). */
 static double swing_size_grp(double ua, double ub, double la, double lb,
                              const int64_t *t, const float *v, int64_t len,
-                             int64_t G, double eb,
+                             int64_t G, double bound,
                              double *a_out, double *b_out) {
     double a = (la + ua) / 2.0;
     double b = (lb + ub) / 2.0;
@@ -513,7 +234,7 @@ static double swing_size_grp(double ua, double ub, double la, double lb,
         double approx = (double)(float)(a * (double)t[i] + b);
         const float *row = v + i * G;
         for (int64_t c = 0; c < G; c++)
-            if (outside_raw(eb, approx, (double)row[c])) return NAN;
+            if (outside(bound, approx, (double)row[c])) return NAN;
     }
     int rta = f32_roundtrips(a), rtb = f32_roundtrips(b);
     if (rta && rtb) return 8.0;
@@ -521,20 +242,22 @@ static double swing_size_grp(double ua, double ub, double la, double lb,
     return 16.0;
 }
 
-/* Gorilla over rows: members interleave row-major into one stream. */
+/* Gorilla over rows: members interleave row-major into one stream; buf
+ * is caller-zeroed.  Returns the byte size (a partial final byte counts
+ * as one, BitBuffer.size()). */
 static int64_t gorilla_encode_rows(const float *v, int64_t rows, int64_t G,
                                    uint8_t *buf) {
     bw_t w = {buf, 0};
     uint32_t last = f32_bits(v[0]);
     bw_put(&w, last, 32);
-    int64_t stored_lz = ((int64_t)1) << 30;
+    int64_t stored_lz = ((int64_t)1) << 30; /* Integer.MAX_VALUE sentinel */
     int64_t stored_tz = 0;
     int64_t total = rows * G;
     for (int64_t k = 1; k < total; k++) {
         uint32_t bits = f32_bits(v[k]);
         uint32_t xor = bits ^ last;
         last = bits;
-        if (xor == 0) { w.nbits++; continue; }
+        if (xor == 0) { w.nbits++; continue; } /* single 0 bit */
         int lz = __builtin_clz(xor);
         int tz = __builtin_ctz(xor);
         if (lz >= stored_lz && tz >= stored_tz) {
@@ -564,20 +287,30 @@ static inline float ratio_grp32(int64_t rows, double size, int64_t n_gaps) {
     return num / den;
 }
 
-/* Grouped cascade driver; same output layout as mdbs_compress_run minus
- * the summary columns (GroupSegment carries none).  Caller guarantees
- * eligibility (see header comment); gscratch >= 6*min(lb,n)*G+16 bytes.
- * allow_flush=0 stops before an incomplete trailing segment (windowed
- * mode: the tail re-seeds the Python engine's open buffer); n_gaps is
- * the constant gaps-set size feeding the ratio denominator (a split
- * sub-generator counts the group members it does NOT carry);
- * seg_emit_row[j] = input row index whose CONSUME emits segment j in the
- * sequential engine — the pass-order sort key. This is NOT simply the
- * row that sticks the last model: after an emission the engine's reset
- * cascade may find models already stuck inside the leftover buffer, and
- * each stuck model costs one further consume to advance past (one
- * model-append attempt per consumed row, models/grouped.py
- * _append_to_cascade). The exact recurrence, seeded with cur=prev_row0:
+/* ---------- cascade driver ---------- */
+
+/* The one cascade.  Segments n rows of G aligned values (row-major v).
+ * For G > 1 the caller guarantees the rows never split (no NaN, no
+ * timestamp gap > si, all member pairs within 2*eb at every row — so
+ * models/grouped.py _split never fires) and maximum_latency == 0; the
+ * online engine is then a single _SubGen whose cascade reduces to these
+ * prefix semantics.  gscratch >= 6*min(lb,n)*G+16 bytes; output arrays
+ * hold >= n entries.
+ * allow_flush=0 stops before an incomplete trailing segment (streaming
+ * ingest and the windowed grouped mode: the tail stays open);
+ * consumed_out = rows consumed (== n when flushing).  n_gaps is the
+ * constant gaps-set size feeding the ratio denominator (a split
+ * sub-generator counts the group members it does NOT carry).
+ * seg_vmin/vmax/vsum (NULL to skip; G = 1 only) get the decompress-side
+ * closed-form summaries of kernels._emit.
+ * seg_emit_row (NULL to skip) [j] = input row index whose CONSUME emits
+ * segment j in the sequential engine — the pass-order sort key. This is
+ * NOT simply the row that sticks the last model: after an emission the
+ * engine's reset cascade may find models already stuck inside the
+ * leftover buffer, and each stuck model costs one further consume to
+ * advance past (one model-append attempt per consumed row,
+ * models/grouped.py _append_to_cascade). The exact recurrence, seeded
+ * with cur=prev_row0:
  *   PMC advance    cur = max(i + p, cur + 1)   (skipped for the first
  *                  segment when model_idx0 >= 1: it happened pre-call)
  *   Swing advance  cur = max(i + s, cur + 1)   (skipped when >= 2)
@@ -585,7 +318,8 @@ static inline float ratio_grp32(int64_t rows, double size, int64_t n_gaps) {
  * model_idx0/prev_row0 describe the engine state at input row 0: the
  * whole-buffer entry passes (0, -1); the windowed caller passes the
  * open-buffer cascade depth and nb-1.
- * Returns segment count or -1 on arena overflow. */
+ * Returns segment count, -1 on arena overflow (caller grows and
+ * retries), -2 on invalid arguments. */
 int64_t mdbs_compress_group(
     const int64_t *t, const float *v, int64_t n, int64_t G,
     double error_bound, int64_t length_bound, int allow_flush,
@@ -593,6 +327,7 @@ int64_t mdbs_compress_group(
     int64_t *seg_start_idx, int64_t *seg_len, int32_t *seg_mtid,
     int64_t *seg_model_off, int64_t *seg_model_len,
     int64_t *seg_emit_row,
+    double *seg_vmin, double *seg_vmax, double *seg_vsum,
     uint8_t *arena, int64_t arena_cap, uint8_t *gscratch,
     int64_t *consumed_out)
 {
@@ -600,7 +335,7 @@ int64_t mdbs_compress_group(
      * fallback's blen=0 never advance i). EngineConfig already rejects
      * it; this keeps the kernel safe standalone. -1 stays "arena full". */
     if (length_bound < 1) return -2;
-    double ebdiv = ((double)(float)error_bound) / 100.1;
+    double bound = (double)(float)error_bound;
     int64_t i = 0, nseg = 0, used = 0;
     int64_t cur = prev_row0; /* last consumed row of the trigger recurrence */
     while (i < n) {
@@ -609,9 +344,9 @@ int64_t mdbs_compress_group(
         const float *vw = v + i * G;
 
         double psum;
-        int64_t p = pmc_prefix_grp(vw, rem, G, error_bound, &psum);
+        int64_t p = pmc_prefix_grp(vw, rem, G, bound, &psum);
         double ua, ub, la, lb;
-        int64_t s = swing_prefix_grp(tw, vw, rem, G, error_bound, ebdiv,
+        int64_t s = swing_prefix_grp(tw, vw, rem, G, bound,
                                      &ua, &ub, &la, &lb);
         int64_t m = p > s ? p : s;
         if (length_bound > m) m = length_bound;
@@ -621,7 +356,7 @@ int64_t mdbs_compress_group(
         else break;                              /* open tail: stop */
         int64_t len_g = length_bound < bsize ? length_bound : bsize;
 
-        /* engine emit-trigger recurrence (see header) */
+        /* engine emit-trigger recurrence (see above) */
         {
             int64_t c2;
             if (!(nseg == 0 && model_idx0 >= 1)) {
@@ -640,10 +375,11 @@ int64_t mdbs_compress_group(
         double sa = 0.0, sb = 0.0, size_s = NAN;
         if (s >= 2)
             size_s = swing_size_grp(ua, ub, la, lb, tw, vw, s, G,
-                                    error_bound, &sa, &sb);
+                                    bound, &sa, &sb);
         memset(gscratch, 0, (size_t)(6 * len_g * G + 16));
         int64_t g_bytes = gorilla_encode_rows(vw, len_g, G, gscratch);
 
+        /* literal reference selection loop: later model wins ties/NaNs */
         float rr[3] = {ratio_grp32(p, size_p, n_gaps),
                        ratio_grp32(s, size_s, n_gaps),
                        ratio_grp32(len_g, (double)g_bytes, n_gaps)};
@@ -655,6 +391,7 @@ int64_t mdbs_compress_group(
         int mtid;
         int64_t blen, mlen;
         int64_t off = used;
+        float pmc_mean = 0.0f;
         if (isnan(rbest)) {
             /* Uncompressed fallback: unreachable when rem >= 1 (Gorilla's
              * ratio is always finite) but kept for parity — serializes
@@ -671,7 +408,8 @@ int64_t mdbs_compress_group(
             blen = p;
             mlen = 4;
             if (used + mlen > arena_cap) return -1;
-            put_be_f32(arena + off, (float)(psum / (double)(p * G)));
+            pmc_mean = (float)(psum / (double)(p * G));
+            put_be_f32(arena + off, pmc_mean);
         } else if (best == 1) {
             mtid = MTID_SWING;
             blen = s;
@@ -700,12 +438,38 @@ int64_t mdbs_compress_group(
             memcpy(arena + off, gscratch, (size_t)mlen);
         }
         used += mlen;
+
+        if (seg_vmin) {
+            /* summaries via the decompress-side closed forms (_emit) */
+            double vmin, vmax, vsum;
+            if (mtid == MTID_PMC) {
+                vmin = vmax = (double)pmc_mean;
+                vsum = (double)((float)blen * pmc_mean);
+            } else if (mtid == MTID_SWING) {
+                /* stored widths round-trip, so sa/sb ARE the decoded
+                 * values */
+                double first = sa * (double)tw[0] + sb;
+                double last = sa * (double)tw[blen - 1] + sb;
+                vsum = (first + last) / 2.0 * (double)blen;
+                double f_start = (double)(float)first;
+                double f_end = (double)(float)last;
+                if (sa == 0.0) { vmin = vmax = (double)(float)sb; }
+                else if (sa > 0.0) { vmin = f_start; vmax = f_end; }
+                else { vmin = f_end; vmax = f_start; }
+            } else {
+                minmax32(vw, blen, &vmin, &vmax);
+                vsum = seq_sum64(vw, blen);
+            }
+            seg_vmin[nseg] = vmin;
+            seg_vmax[nseg] = vmax;
+            seg_vsum[nseg] = vsum;
+        }
         seg_start_idx[nseg] = i;
         seg_len[nseg] = blen;
         seg_mtid[nseg] = mtid;
         seg_model_off[nseg] = off;
         seg_model_len[nseg] = mlen;
-        seg_emit_row[nseg] = cur;
+        if (seg_emit_row) seg_emit_row[nseg] = cur;
         nseg++;
         i += blen;
     }
@@ -718,20 +482,20 @@ int64_t mdbs_compress_group(
  * internals) from these instead of re-feeding long tails row-by-row. */
 int64_t mdbs_pmc_prefix_grp(const float *v, int64_t n, int64_t G,
                             double error_bound, double *sum_out) {
-    return pmc_prefix_grp(v, n, G, error_bound, sum_out);
+    return pmc_prefix_grp(v, n, G, (double)(float)error_bound, sum_out);
 }
 
 int64_t mdbs_swing_prefix_grp(const int64_t *t, const float *v, int64_t n,
                               int64_t G, double error_bound,
                               double *oua, double *oub,
                               double *ola, double *olb) {
-    double ebdiv = ((double)(float)error_bound) / 100.1;
-    return swing_prefix_grp(t, v, n, G, error_bound, ebdiv,
+    return swing_prefix_grp(t, v, n, G, (double)(float)error_bound,
                             oua, oub, ola, olb);
 }
 
 /* Whole-series entry: splits into gap-free runs (timestamp delta != si)
- * and compresses each with flush semantics, one C call per series. */
+ * and compresses each as a group of one with flush semantics, one C call
+ * per series. */
 int64_t mdbs_compress_series(
     const int64_t *t, const float *v, int64_t n, int64_t si_ms,
     double error_bound, int64_t length_bound,
@@ -749,10 +513,10 @@ int64_t mdbs_compress_series(
         int64_t b = a + 1;
         while (b < n && t[b] - t[b - 1] == si_ms) b++;
         int64_t run_consumed = 0;
-        int64_t k = mdbs_compress_run(
-            t + a, v + a, b - a, error_bound, length_bound, 1,
+        int64_t k = mdbs_compress_group(
+            t + a, v + a, b - a, 1, error_bound, length_bound, 1, 0, 0, -1,
             seg_start_idx + nseg, seg_len + nseg, seg_mtid + nseg,
-            seg_model_off + nseg, seg_model_len + nseg,
+            seg_model_off + nseg, seg_model_len + nseg, NULL,
             seg_vmin + nseg, seg_vmax + nseg, seg_vsum + nseg,
             arena + used, arena_cap - used, gscratch, &run_consumed);
         if (k < 0) return -1;
@@ -794,7 +558,7 @@ static inline uint32_t br_get(br_t *r, int k) {
 }
 
 /* Decode n float32 values (as uint32 bit patterns) from one Gorilla
- * stream — exact inverse of gorilla_encode above, same window-reuse
+ * stream — exact inverse of gorilla_encode_rows at G = 1, same window-reuse
  * semantics as the Python models/gorilla.py gorilla_decode. */
 int64_t mdbs_gorilla_decode(const uint8_t *buf, int64_t nbytes,
                             int64_t n, uint32_t *out) {

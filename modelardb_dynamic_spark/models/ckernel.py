@@ -12,6 +12,9 @@ and models/kernels.py falls back to the pure-Python/numpy implementation —
 same results (the differential tests in tests/test_ckernel.py pin the two
 byte-identical), lower throughput.
 
+cascade() is the one Python entry to the C cascade: single series (the
+build, streaming ingest) and never-splitting groups alike.
+
 Compile flags: -O2 -ffp-contract=off.  fp-contract MUST be off: the kernel
 re-runs the reference's double recurrences op for op, and a fused
 multiply-add in e.g. `y0 - ua*t0` would round once where numpy/Java round
@@ -26,6 +29,9 @@ import os
 import pkgutil
 import subprocess
 import tempfile
+from typing import NamedTuple
+
+import numpy as np
 
 _CFLAGS = ["-O2", "-shared", "-fPIC", "-ffp-contract=off", "-fno-math-errno"]
 
@@ -94,31 +100,26 @@ def load() -> ctypes.CDLL | None:
     p_f32 = ctypes.POINTER(ctypes.c_float)
     p_f64 = ctypes.POINTER(ctypes.c_double)
     p_u8 = ctypes.POINTER(ctypes.c_uint8)
-    common_out = [
-        p_i64, p_i64, p_i32, p_i64, p_i64,  # start_idx, len, mtid, off, mlen
-        p_f64, p_f64, p_f64,                # vmin, vmax, vsum
-        p_u8, i64,                          # arena, arena_cap
-        p_u8,                               # gscratch
-        p_i64,                              # consumed_out
-    ]
-    lib.mdbs_compress_run.restype = i64
-    lib.mdbs_compress_run.argtypes = [
-        p_i64, p_f32, i64, ctypes.c_double, i64, ctypes.c_int, *common_out
-    ]
+    # the cascade entries take raw addresses (one workspace per call, see
+    # cascade()): per-array ctypes pointer objects cost more than the
+    # kernel on short series
+    vp = ctypes.c_void_p
     lib.mdbs_compress_series.restype = i64
     lib.mdbs_compress_series.argtypes = [
-        p_i64, p_f32, i64, i64, ctypes.c_double, i64, *common_out
+        vp, vp, i64, i64, ctypes.c_double, i64,  # t, v, n, si, eb, lb
+        vp, vp, vp, vp, vp,                 # start_idx, len, mtid, off, mlen
+        vp, vp, vp,                         # vmin, vmax, vsum
+        vp, i64, vp, vp,                    # arena, cap, gscratch, consumed
     ]
     lib.mdbs_compress_group.restype = i64
     lib.mdbs_compress_group.argtypes = [
-        p_i64, p_f32, i64, i64, ctypes.c_double, i64,
+        vp, vp, i64, i64, ctypes.c_double, i64,  # t, v, n, G, eb, lb
         ctypes.c_int, i64,                  # allow_flush, n_gaps
         i64, i64,                           # model_idx0, prev_row0
-        p_i64, p_i64, p_i32, p_i64, p_i64,  # start_idx, len, mtid, off, mlen
-        p_i64,                              # emit_row (pass-order sort key)
-        p_u8, i64,                          # arena, arena_cap
-        p_u8,                               # gscratch
-        p_i64,                              # consumed_out
+        vp, vp, vp, vp, vp,                 # start_idx, len, mtid, off, mlen
+        vp,                                 # emit_row (pass-order sort key)
+        vp, vp, vp,                         # vmin, vmax, vsum
+        vp, i64, vp, vp,                    # arena, cap, gscratch, consumed
     ]
     lib.mdbs_pmc_prefix_grp.restype = i64
     lib.mdbs_pmc_prefix_grp.argtypes = [
@@ -137,3 +138,95 @@ def load() -> ctypes.CDLL | None:
     ]
     _lib = lib
     return _lib
+
+
+class Cascade(NamedTuple):
+    """What one C cascade call emitted, one list entry per segment."""
+
+    start: list[int]  # input row of the segment's first row
+    cnt: list[int]  # rows the segment represents
+    start_ts: list[int]
+    end_ts: list[int]
+    mtid: list[int]
+    model: list[bytes]
+    emit_row: list[int]  # engine emit row (group entry), else empty
+    vmin: list[float]  # closed-form summaries (G == 1), else empty
+    vmax: list[float]
+    vsum: list[float]
+    consumed: int  # input rows consumed
+
+
+def cascade(
+    t: np.ndarray,
+    v: np.ndarray,
+    error_bound: float,
+    length_bound: int,
+    *,
+    si_ms: int | None = None,
+    allow_flush: bool = True,
+    n_gaps: int = 0,
+    model_idx0: int = 0,
+    prev_row0: int = -1,
+) -> Cascade:
+    """Run the C cascade over t (n,) int64 and v (n,) or (n, G) float32.
+
+    With si_ms, v is one series that mdbs_compress_series splits into
+    gap-free runs and flushes run by run; otherwise mdbs_compress_group
+    segments the rows as given (see its comment for allow_flush, n_gaps,
+    model_idx0 and prev_row0).  Summaries are computed for G == 1.
+
+    Retries with a doubled model arena on overflow (the 8nG+1k initial
+    cap already exceeds the worst case — Gorilla <= 6 B/value — so the
+    retry loop is a belt-and-braces path, not a hot one), then copies
+    only the used prefix of the arena."""
+    lib = load()
+    assert lib is not None, "C kernel unavailable"
+    t = np.ascontiguousarray(t, dtype=np.int64)
+    v = np.ascontiguousarray(v, dtype=np.float32)
+    n = len(t)
+    G = 1 if v.ndim == 1 else v.shape[1]
+    # one workspace: eight 8-byte columns (start, len, off, mlen, emit_row,
+    # vmin, vmax, vsum), the int32 mtid column, the Gorilla scratch, then
+    # the model arena
+    gs = 6 * min(length_bound, n) * G + 32
+    head = 68 * n + gs
+    arena_cap = 8 * n * G + 1024
+    consumed = ctypes.c_int64(0)
+    if si_ms is None:
+        fn = lib.mdbs_compress_group
+        args = [G, float(error_bound), int(length_bound), int(allow_flush),
+                n_gaps, model_idx0, prev_row0]
+    else:
+        fn = lib.mdbs_compress_series
+        args = [int(si_ms), float(error_bound), int(length_bound)]
+    while True:
+        ws = np.empty(head + arena_cap, dtype=np.uint8)
+        col = [ws.ctypes.data + 8 * n * j for j in range(9)]
+        outs = [col[0], col[1], col[8], col[2], col[3]]
+        if si_ms is None:
+            outs.append(col[4])
+        outs += col[5:8] if G == 1 else [None] * 3
+        k = fn(t.ctypes.data, v.ctypes.data, n, *args, *outs,
+               col[0] + head, arena_cap, col[0] + 68 * n,
+               ctypes.byref(consumed))
+        if k >= 0:
+            break
+        if k != -1:
+            raise ValueError(f"C kernel rejected its arguments (rc={k})")
+        arena_cap *= 2
+    ints = ws[: 64 * n].view(np.int64).reshape(8, n)[:, :k]
+    start, cnt, off, mlen, erow = ints[:5]
+    ends = off + mlen
+    ab = ws[head : head + (int(ends.max()) if k else 0)].tobytes()
+    summ = ints[5:].view(np.float64).tolist() if G == 1 else ([], [], [])
+    return Cascade(
+        start.tolist(),
+        cnt.tolist(),
+        t[start].tolist(),
+        t[start + cnt - 1].tolist(),
+        ws[64 * n : 68 * n].view(np.int32)[:k].tolist(),
+        [ab[a:b] for a, b in zip(off.tolist(), ends.tolist())],
+        erow.tolist() if si_ms is None else [],
+        *summ,
+        int(consumed.value),
+    )

@@ -16,6 +16,12 @@ tools/goldengen/GroupHarness.java):
     * Gorilla: member values interleave row-major into one XOR stream,
       length bound counts ROWS (FacebookGorillaModelType.java:46-64)
     * Uncompressed fallback: raw row-major floats
+- One cascade, widened bound: every model compares percentage errors
+  against the float32 error bound widened to double, like the
+  single-series path (Static.java:105-107); a group of one emits the
+  single series' segments. Never-splitting groups and stretches run
+  through the one C cascade (_ckernel.c mdbs_compress_group, via
+  ckernel.cascade); this engine is its differential reference.
 - Gap semantics: a NaN marks gap START for that member (flush, member
   leaves the active set); a timestamp jump > samplingInterval after
   real values resume marks gap END (flush, member re-enters)
@@ -74,6 +80,8 @@ class GroupSegment:
 
 
 def _out_of_bound(eb: float, approx: float, real: float) -> bool:
+    """eb is the float32 error bound widened to double, as the reference
+    compares it (Static.java:105-107); the models widen it once."""
     return percentage_error(approx, real) > eb
 
 
@@ -84,7 +92,7 @@ class _PMC:
     mtid = MTID_PMC_MEAN
 
     def __init__(self, eb: float):
-        self.eb = eb
+        self.eb = float(np.float32(eb))
 
     def initialize(self, buffer: list[list[float]]) -> None:
         self.sum = 0.0
@@ -128,8 +136,8 @@ class _Swing:
     mtid = MTID_SWING
 
     def __init__(self, eb: float):
-        self.eb = eb
-        self.ebdiv = float(np.float32(eb)) / 100.1
+        self.eb = float(np.float32(eb))
+        self.ebdiv = self.eb / 100.1
 
     def initialize(self, buffer: list[list[float]], ts: list[int]) -> None:
         self.size = 0
@@ -148,8 +156,10 @@ class _Swing:
         if cur == 0:
             vmin = min(row)
             vmax = max(row)
-            s = 0.0
-            for val in row:
+            # summed from the first member, so a group of one anchors at
+            # its value exactly (-0.0 included) like kernels.swing_prefix
+            s = row[0]
+            for val in row[1:]:
                 s += val
             avg = float(np.float32(s / len(row)))
             if _out_of_bound(self.eb, avg, vmin) or _out_of_bound(self.eb, avg, vmax):
@@ -195,7 +205,7 @@ class _Swing:
         nvals = self.size * (len(buffer[0]) if buffer else 0)
         if nvals >= 32:
             # vectorized re-verify (the final-flush path): same op
-            # sequence — f32 midline per row, raw-double bound,
+            # sequence — f32 midline per row, widened bound,
             # percentage_error semantics. Cutoff 32: below that the
             # array setup costs more than the scalar loop; above, the
             # scalar path's per-value np.float32 boxing dominates
@@ -1041,17 +1051,6 @@ class GroupEngine:
             v_in[:nb] = sub.buffer
         t_in[nb:] = self.ts[c0 : c0 + W]
         v_in[nb:] = self.V[c0 : c0 + W][:, cols]
-        seg_idx = np.empty(n, dtype=np.int64)
-        seg_len = np.empty(n, dtype=np.int64)
-        seg_mtid = np.empty(n, dtype=np.int32)
-        seg_off = np.empty(n, dtype=np.int64)
-        seg_mlen = np.empty(n, dtype=np.int64)
-        seg_erow = np.empty(n, dtype=np.int64)
-        gscratch = np.empty(
-            6 * min(cfg.length_bound, n) * w + 32, dtype=np.uint8
-        )
-        arena_cap = 8 * n * w + 1024
-        consumed = ctypes.c_int64(0)
         n_gaps = len(sub.gaps)
 
         def ptr(a, ct):
@@ -1079,61 +1078,40 @@ class GroupEngine:
                 )
                 m0 = 1 if (s0 if s0 > p0 else p0 + 1) >= nb else 2
 
-        while True:
-            arena = np.empty(arena_cap, dtype=np.uint8)
-            k = lib.mdbs_compress_group(
-                ptr(t_in, ctypes.c_int64), ptr(v_in, ctypes.c_float), n, w,
-                float(cfg.error_bound), int(cfg.length_bound), 0, n_gaps,
-                m0, nb - 1,
-                ptr(seg_idx, ctypes.c_int64), ptr(seg_len, ctypes.c_int64),
-                ptr(seg_mtid, ctypes.c_int32), ptr(seg_off, ctypes.c_int64),
-                ptr(seg_mlen, ctypes.c_int64), ptr(seg_erow, ctypes.c_int64),
-                ptr(arena, ctypes.c_uint8), arena_cap,
-                ptr(gscratch, ctypes.c_uint8), ctypes.byref(consumed),
-            )
-            if k >= 0:
-                break
-            if k != -1:
-                raise ValueError(f"C kernel rejected its arguments (rc={k})")
-            arena_cap *= 2
+        res = ckernel.cascade(
+            t_in, v_in, cfg.error_bound, cfg.length_bound, allow_flush=False,
+            n_gaps=n_gaps, model_idx0=m0, prev_row0=nb - 1,
+        )
         # a segment whose ENGINE trigger row (emit recurrence, incl. the
         # one-consume-per-stuck-model lag) falls beyond the window must
         # NOT be emitted here: the sequential engine emits it at a
         # post-window row, with post-window (possibly out-of-band) rows
         # in the buffer — where a split attempt can be real. Return its
         # rows to the open tail; the per-row path emits it later.
-        k = int(k)
-        ncut = k
-        while ncut > 0 and int(seg_erow[ncut - 1]) >= n:
-            ncut -= 1
-        cons = int(seg_idx[ncut]) if ncut < k else int(consumed.value)
-        k = ncut
-        consumed = type(consumed)(cons)
-        used = int((seg_off[:k] + seg_mlen[:k]).max()) if k else 0
-        ab = arena[:used].tobytes()
-        members = tuple(sorted(self.tid_of[c] for c in cols))
+        k = len(res.start)
+        while k > 0 and res.emit_row[k - 1] >= n:
+            k -= 1
+        consumed = res.start[k] if k < len(res.start) else res.consumed
+        members = tuple(sorted(self.tid_of[col] for col in cols))
         gaps_t = tuple(sorted(sub.gaps))
         out = []
         for j in range(k):
-            a = int(seg_idx[j])
-            ln = int(seg_len[j])
-            off = int(seg_off[j])
-            mtid = int(seg_mtid[j])
-            mlen = int(seg_mlen[j])
+            mtid = res.mtid[j]
+            ln = res.cnt[j]
             if mtid == MTID_PMC_MEAN:
                 size = 4.0
             elif mtid == MTID_UNCOMPRESSED:
                 size = 4.0 * ln
             else:
-                size = float(mlen)
+                size = float(len(res.model[j]))
             out.append(
                 (
-                    c0 + int(seg_erow[j]) - nb,
+                    c0 + res.emit_row[j] - nb,
                     GroupSegment(
-                        start_ts=int(t_in[a]),
-                        end_ts=int(t_in[a + ln - 1]),
+                        start_ts=res.start_ts[j],
+                        end_ts=res.end_ts[j],
                         mtid=mtid,
-                        model=ab[off : off + mlen],
+                        model=res.model[j],
                         cnt=ln,
                         members=members,
                         gaps=gaps_t,
@@ -1141,11 +1119,10 @@ class GroupEngine:
                     _ratio_g(ln, size, n_gaps),
                 )
             )
-        self._reseed_sub(sub, t_in[int(consumed.value) :],
-                         v_in[int(consumed.value) :])
+        self._reseed_sub(sub, t_in[consumed:], v_in[consumed:])
         last_ts = int(t_in[-1])
-        for c in cols:
-            sub.prev_ts[c] = last_ts
+        for col in cols:
+            sub.prev_ts[col] = last_ts
         sub.cursor = c0 + W
         return out
 
@@ -1238,8 +1215,9 @@ class GroupEngine:
             )
             if s >= 1:
                 swing.t0 = int(tail_t[0])
-                ssum = 0.0
-                for val in sub.buffer[0]:
+                row0 = sub.buffer[0]
+                ssum = row0[0]
+                for val in row0[1:]:
                     ssum += val
                 swing.y0 = float(np.float32(ssum / w))
             else:
@@ -1463,67 +1441,15 @@ def _compress_group_c(
     tests/test_grouped.py::test_group_fast_path_matches_engine."""
     from modelardb_dynamic_spark.models import ckernel
 
-    lib = ckernel.load()
-    if lib is None:
+    if ckernel.load() is None or not _group_fast_eligible(ts, V, cfg):
         return None
-    if not _group_fast_eligible(ts, V, cfg):
-        return None
-    import ctypes
-
-    n, G = V.shape
-    t = np.ascontiguousarray(ts, dtype=np.int64)
-    v = np.ascontiguousarray(V, dtype=np.float32)
-    seg_idx = np.empty(n, dtype=np.int64)
-    seg_len = np.empty(n, dtype=np.int64)
-    seg_mtid = np.empty(n, dtype=np.int32)
-    seg_off = np.empty(n, dtype=np.int64)
-    seg_mlen = np.empty(n, dtype=np.int64)
-    seg_erow = np.empty(n, dtype=np.int64)
-    gscratch = np.empty(
-        6 * min(cfg.length_bound, n) * G + 32, dtype=np.uint8
-    )
-    arena_cap = 8 * n * G + 1024
-    consumed = ctypes.c_int64(0)
-
-    def ptr(a, ct):
-        return a.ctypes.data_as(ctypes.POINTER(ct))
-
-    while True:
-        arena = np.empty(arena_cap, dtype=np.uint8)
-        k = lib.mdbs_compress_group(
-            ptr(t, ctypes.c_int64), ptr(v, ctypes.c_float), n, G,
-            float(cfg.error_bound), int(cfg.length_bound), 1, 0, 0, -1,
-            ptr(seg_idx, ctypes.c_int64), ptr(seg_len, ctypes.c_int64),
-            ptr(seg_mtid, ctypes.c_int32), ptr(seg_off, ctypes.c_int64),
-            ptr(seg_mlen, ctypes.c_int64), ptr(seg_erow, ctypes.c_int64),
-            ptr(arena, ctypes.c_uint8), arena_cap,
-            ptr(gscratch, ctypes.c_uint8), ctypes.byref(consumed),
-        )
-        if k >= 0:
-            break
-        if k != -1:
-            raise ValueError(f"C kernel rejected its arguments (rc={k})")
-        arena_cap *= 2
-    used = int((seg_off[:k] + seg_mlen[:k]).max()) if k else 0
-    ab = arena[:used].tobytes()
-    members = tuple(range(1, G + 1))
-    out: list[GroupSegment] = []
-    for j in range(k):
-        a = int(seg_idx[j])
-        ln = int(seg_len[j])
-        off = int(seg_off[j])
-        out.append(
-            GroupSegment(
-                start_ts=int(t[a]),
-                end_ts=int(t[a + ln - 1]),
-                mtid=int(seg_mtid[j]),
-                model=ab[off : off + int(seg_mlen[j])],
-                cnt=ln,
-                members=members,
-                gaps=(),
-            )
-        )
-    return out
+    c = ckernel.cascade(ts, V, cfg.error_bound, cfg.length_bound)
+    members = tuple(range(1, V.shape[1] + 1))
+    return [
+        GroupSegment(start_ts=s, end_ts=e, mtid=m, model=b, cnt=ln,
+                     members=members, gaps=())
+        for s, e, m, b, ln in zip(c.start_ts, c.end_ts, c.mtid, c.model, c.cnt)
+    ]
 
 
 def compress_group(

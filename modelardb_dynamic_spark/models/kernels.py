@@ -21,6 +21,13 @@ Therefore, per gap-free run of regularly-sampled points:
 - exactly `length(best)` points are dropped from the buffer head and the
   cascade restarts (SegmentGenerator.java:281-283).
 
+One cascade, widened bound: with the C kernel loaded, every entry here
+runs _ckernel.c's mdbs_compress_group on the series as a group of one (as
+the reference does; the grouped engine in models/grouped.py is the same
+cascade over G members). This numpy module is its differential reference,
+and the fallback without a C compiler. Percentage errors are compared
+against the float32 error bound widened to double (Static.java:105-107).
+
 Float discipline notes (the bit-match-sensitive spots):
 - PMC-Mean keeps float32 min/max, float64 sum, and casts avg = (float)(sum/n)
   before the error check (PMC_MeanModelType.java:48-75); the stored model is
@@ -272,11 +279,26 @@ def _seq_sum64(v: np.ndarray) -> float:
     return float(np.cumsum(v.astype(np.float64))[-1])
 
 
+def _minmax32(w: np.ndarray) -> tuple[float, float]:
+    """Java Math.min/max folded over float32 values: NaN-propagating, and
+    -0.0 < +0.0 (numpy's min/max pick a signed zero by position)."""
+    vmin = float(w.min())
+    vmax = float(w.max())
+    if vmin == 0.0 or vmax == 0.0:
+        neg = np.signbit(w[w == 0])
+        if vmin == 0.0:
+            vmin = -0.0 if neg.any() else 0.0
+        if vmax == 0.0:
+            vmax = -0.0 if neg.all() else 0.0
+    return vmin, vmax
+
+
 def _emit(
     mtid: int,
     model: bytes,
-    t: np.ndarray,
-    v: np.ndarray,
+    start_ts: int,
+    end_ts: int,
+    v: np.ndarray | None,
     length: int,
 ) -> Segment:
     """Build the segment row incl. pre-computed summary columns.
@@ -286,10 +308,9 @@ def _emit(
     PMC min=max=value, sum=(double)(length*value) as float math
     (PMC_MeanModelType.java:137-150); Swing endpoint min/max by slope sign
     and sum=(f(start)+f(end))/2*length in doubles (SwingFilterModelType.java:
-    220-248); Gorilla/Uncompressed loop over the (losslessly stored) floats.
+    220-248); Gorilla/Uncompressed loop over the (losslessly stored) floats
+    in v (unused for PMC and Swing).
     """
-    start_ts = int(t[0])
-    end_ts = int(t[length - 1])
     if mtid == MTID_PMC_MEAN:
         value = struct.unpack(">f", model)[0]
         vmin = vmax = float(np.float32(value))
@@ -309,8 +330,7 @@ def _emit(
             vmin, vmax = f_end, f_start
     else:  # Gorilla / Uncompressed store the exact float32 values
         w = v[:length]
-        vmin = float(w.min())
-        vmax = float(w.max())
+        vmin, vmax = _minmax32(w)
         vsum = _seq_sum64(w)
     return Segment(start_ts, end_ts, mtid, model, length, vmin, vmax, vsum)
 
@@ -380,89 +400,39 @@ def _compress_core_py(
             model = _swing_encode(swing_bounds)
         else:
             model = g_model
-        segments.append(_emit(mtid, model, tw, vw, blen))
+        segments.append(
+            _emit(mtid, model, int(tw[0]), int(tw[blen - 1]), vw, blen)
+        )
         i += blen
     return segments, i
 
 
-def _c_call(fn, t, v, cfg, extra_args, n) -> tuple[list[Segment], int]:
-    """Invoke a C cascade entry point and materialize Segment rows.
+def _c_segments(
+    t: np.ndarray, v: np.ndarray, cfg: EngineConfig, **kw
+) -> tuple[list[Segment], int]:
+    """Segments of one series from the C cascade (a group of one, ~10-30x
+    the numpy throughput, identical output); returns (segments, points
+    consumed)."""
+    from modelardb_dynamic_spark.models import ckernel
 
-    Retries with a doubled model arena on overflow (the 8n+1k initial cap
-    already exceeds the worst case — Gorilla <= 6 B/pt — so the retry loop
-    is a belt-and-braces path, not a hot one)."""
-    import ctypes
-
-    seg_idx = np.empty(n, dtype=np.int64)
-    seg_len = np.empty(n, dtype=np.int64)
-    seg_mtid = np.empty(n, dtype=np.int32)
-    seg_off = np.empty(n, dtype=np.int64)
-    seg_mlen = np.empty(n, dtype=np.int64)
-    seg_vmin = np.empty(n, dtype=np.float64)
-    seg_vmax = np.empty(n, dtype=np.float64)
-    seg_vsum = np.empty(n, dtype=np.float64)
-    gscratch = np.empty(6 * min(cfg.length_bound, n) + 32, dtype=np.uint8)
-    arena_cap = 8 * n + 1024
-    consumed = ctypes.c_int64(0)
-
-    def ptr(a, ct):
-        return a.ctypes.data_as(ctypes.POINTER(ct))
-
-    while True:
-        arena = np.empty(arena_cap, dtype=np.uint8)
-        k = fn(
-            ptr(t, ctypes.c_int64), ptr(v, ctypes.c_float), n, *extra_args,
-            ptr(seg_idx, ctypes.c_int64), ptr(seg_len, ctypes.c_int64),
-            ptr(seg_mtid, ctypes.c_int32), ptr(seg_off, ctypes.c_int64),
-            ptr(seg_mlen, ctypes.c_int64), ptr(seg_vmin, ctypes.c_double),
-            ptr(seg_vmax, ctypes.c_double), ptr(seg_vsum, ctypes.c_double),
-            ptr(arena, ctypes.c_uint8), arena_cap,
-            ptr(gscratch, ctypes.c_uint8), ctypes.byref(consumed),
-        )
-        if k >= 0:
-            break
-        if k != -1:
-            raise ValueError(f"C kernel rejected its arguments (rc={k})")
-        arena_cap *= 2
-    # copy only the used prefix: the arena is 8n+1k but the model bytes
-    # occupy max(off+mlen) of it (ADVICE r3 — avoids a transient copy
-    # several times the payload on large series)
-    used = int((seg_off[:k] + seg_mlen[:k]).max()) if k else 0
-    ab = arena[:used].tobytes()
-    out = []
-    for j in range(k):
-        a = int(seg_idx[j])
-        ln = int(seg_len[j])
-        off = int(seg_off[j])
-        out.append(
-            Segment(
-                int(t[a]), int(t[a + ln - 1]), int(seg_mtid[j]),
-                ab[off : off + int(seg_mlen[j])], ln,
-                float(seg_vmin[j]), float(seg_vmax[j]), float(seg_vsum[j]),
-            )
-        )
-    return out, int(consumed.value)
+    c = ckernel.cascade(t, v, cfg.error_bound, cfg.length_bound, **kw)
+    segs = list(
+        map(Segment, c.start_ts, c.end_ts, c.mtid, c.model, c.cnt,
+            c.vmin, c.vmax, c.vsum)
+    )
+    return segs, c.consumed
 
 
 def _compress_core(
     t: np.ndarray, v: np.ndarray, cfg: EngineConfig, allow_flush: bool
 ) -> tuple[list[Segment], int]:
-    """Dispatch one gap-free run to the C kernel when available (identical
-    output, ~10-30x the throughput), else the numpy implementation."""
+    """Dispatch one gap-free run to the C kernel when available, else the
+    numpy implementation."""
     from modelardb_dynamic_spark.models import ckernel
 
-    lib = ckernel.load()
-    if lib is None:
+    if ckernel.load() is None:
         return _compress_core_py(t, v, cfg, allow_flush)
-    n = len(v)
-    if n == 0:
-        return [], 0
-    t = np.ascontiguousarray(t, dtype=np.int64)
-    v = np.ascontiguousarray(v, dtype=np.float32)
-    return _c_call(
-        lib.mdbs_compress_run, t, v, cfg,
-        (float(cfg.error_bound), int(cfg.length_bound), int(allow_flush)), n,
-    )
+    return _c_segments(t, v, cfg, allow_flush=allow_flush)
 
 
 def compress_run(
@@ -512,22 +482,11 @@ def compress_series(
 
     t = np.ascontiguousarray(t, dtype=np.int64)
     v = np.ascontiguousarray(v, dtype=np.float32)
-    lib = ckernel.load()
-    if lib is None:
+    if ckernel.load() is None:
         out: list[Segment] = []
         for a, b in split_runs(t, cfg.sampling_interval_ms):
             out.extend(
                 _compress_core_py(t[a:b], v[a:b], cfg, allow_flush=True)[0]
             )
         return out
-    n = len(v)
-    if n == 0:
-        return []
-    return _c_call(
-        lib.mdbs_compress_series, t, v, cfg,
-        (
-            int(cfg.sampling_interval_ms),
-            float(cfg.error_bound),
-            int(cfg.length_bound),
-        ), n,
-    )[0]
+    return _c_segments(t, v, cfg, si_ms=int(cfg.sampling_interval_ms))[0]

@@ -242,51 +242,31 @@ def grouped_to_segments(segments: DataFrame) -> DataFrame:
     stream (decode interleaved once, re-encode per member); summaries use
     the same formulas as the single-series compressor so tier rollups over
     the converted table match exactly."""
-    import struct
-
-    from modelardb_dynamic_spark.config import (
-        MTID_GORILLA,
-        MTID_PMC_MEAN,
-        MTID_SWING,
-        MTID_UNCOMPRESSED,
-    )
+    from modelardb_dynamic_spark.config import MTID_GORILLA, MTID_UNCOMPRESSED
     from modelardb_dynamic_spark.models.gorilla import gorilla_decode, gorilla_encode
-    from modelardb_dynamic_spark.models.kernels import _seq_sum64, swing_decode
+    from modelardb_dynamic_spark.models.kernels import _emit
     from modelardb_dynamic_spark.operators.compress import SEGMENT_SCHEMA
+
+    cols = (
+        "sid", "metric", "start_ts", "end_ts", "si", "mtid", "model", "cnt",
+        "vmin", "vmax", "vsum",
+    )
 
     def fn(batches):
         for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "sid", "metric", "start_ts", "end_ts", "si", "mtid",
-                    "model", "cnt", "vmin", "vmax", "vsum",
-                )
-            }
+            rows = {k: [] for k in cols}
             for r in pdf.itertuples(index=False):
                 members = list(r.members)
                 g = len(members)
                 n = int(r.cnt)
-                if r.mtid == MTID_PMC_MEAN:
-                    value = struct.unpack(">f", bytes(r.model))[0]
-                    vmin = vmax = float(np.float32(value))
-                    vsum = float(np.float32(n) * np.float32(value))
-                    per_member = [(bytes(r.model), vmin, vmax, vsum)] * g
-                elif r.mtid == MTID_SWING:
-                    a, b = swing_decode(bytes(r.model))
-                    first = a * r.start_ts + b
-                    last = a * r.end_ts + b
-                    vsum = (first + last) / 2.0 * n
-                    f_s, f_e = float(np.float32(first)), float(np.float32(last))
-                    if a == 0:
-                        vmin = vmax = float(np.float32(b))
-                    elif a > 0:
-                        vmin, vmax = f_s, f_e
-                    else:
-                        vmin, vmax = f_e, f_s
-                    per_member = [(bytes(r.model), vmin, vmax, vsum)] * g
+                mtid = int(r.mtid)
+                if mtid not in (MTID_GORILLA, MTID_UNCOMPRESSED):
+                    seg = _emit(
+                        mtid, bytes(r.model), r.start_ts, r.end_ts, None, n
+                    )
+                    per_member = [seg] * g
                 else:
-                    if r.mtid == MTID_GORILLA:
+                    if mtid == MTID_GORILLA:
                         flat = gorilla_decode(bytes(r.model), n * g)
                     else:
                         flat = np.frombuffer(bytes(r.model), dtype=">f4")[
@@ -296,30 +276,19 @@ def grouped_to_segments(segments: DataFrame) -> DataFrame:
                     per_member = []
                     for j in range(g):
                         col = np.ascontiguousarray(V[:, j])
-                        if r.mtid == MTID_GORILLA:
+                        if mtid == MTID_GORILLA:
                             m, _ = gorilla_encode(col)
                         else:
                             m = col.astype(">f4").tobytes()
                         per_member.append(
-                            (
-                                m,
-                                float(col.min()),
-                                float(col.max()),
-                                _seq_sum64(col),
-                            )
+                            _emit(mtid, m, r.start_ts, r.end_ts, col, n)
                         )
-                for sid, (m, vmin, vmax, vsum) in zip(members, per_member):
-                    rows["sid"].append(sid)
-                    rows["metric"].append(r.metric)
-                    rows["start_ts"].append(r.start_ts)
-                    rows["end_ts"].append(r.end_ts)
-                    rows["si"].append(r.si)
-                    rows["mtid"].append(int(r.mtid))
-                    rows["model"].append(m)
-                    rows["cnt"].append(n)
-                    rows["vmin"].append(vmin)
-                    rows["vmax"].append(vmax)
-                    rows["vsum"].append(vsum)
+                for sid, seg in zip(members, per_member):
+                    for k, x in zip(cols, (
+                        sid, r.metric, r.start_ts, r.end_ts, r.si, mtid,
+                        seg.model, n, seg.vmin, seg.vmax, seg.vsum,
+                    )):
+                        rows[k].append(x)
             if rows["sid"]:
                 yield pd.DataFrame(rows)
 

@@ -23,7 +23,8 @@ finalized segments == compress_grouped's batch output at the frontier
 maximum_latency temporaries: the engine's own cadence emits kind="T"
 segments covering its unfinalized buffer; they publish with is_final =
 false and a strictly-growing temp_gen, read back through
-grouped_latest_view (the read-time twin of the reference's cache trim).
+streaming.ingest.latest_view(appended, ("gid", "metric")) (the
+read-time twin of the reference's cache trim).
 Note the mutable sub-watermark tail (rows still waiting for member
 values) is NOT covered by temporaries — visibility lags ingest by at most
 the watermark delay, a bound the single-series path does not have because
@@ -34,7 +35,6 @@ from __future__ import annotations
 
 import pickle
 from collections.abc import Iterator
-from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -171,7 +171,7 @@ def _make_handler(
             # sub supersede each other, and a pre-split master temp is
             # superseded by its children's re-announcements. Cross-batch
             # replacement is the strictly-growing temp_gen + the
-            # grouped_latest_view live-generation filter.
+            # latest_view live-generation filter.
             last_of: dict[int, int] = {}
             for i, s in enumerate(segs):
                 if s.kind != "F":
@@ -233,23 +233,3 @@ def grouped_segment_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-def grouped_latest_view(appended: DataFrame) -> DataFrame:
-    """Queryable state of an append-mode grouped sink: finalized segments
-    plus only the newest temporary generation per (gid, metric), minus
-    temporaries already covered by finalization — the grouped twin of
-    streaming.ingest.latest_view (SparkCache.scala:166-212 read-time
-    equivalent)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("gid", "metric")
-    fin = F.col("is_final")
-    df = appended.withColumn(
-        "live_gen", F.max(F.when(~fin, F.col("temp_gen"))).over(w)
-    ).withColumn("fin_end", F.max(F.when(fin, F.col("end_ts"))).over(w))
-    keep = fin | (
-        (F.col("temp_gen") == F.col("live_gen"))
-        & (F.col("fin_end").isNull() | (F.col("start_ts") > F.col("fin_end")))
-    )
-    return df.where(keep).drop("live_gen", "fin_end")

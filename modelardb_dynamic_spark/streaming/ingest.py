@@ -196,21 +196,25 @@ def segment_stream(
     )
 
 
-def latest_view(appended: DataFrame) -> DataFrame:
-    """Queryable state of an append-mode segment_stream sink: all
-    finalized segments plus only the LIVE temporaries — the newest
-    temporary generation per key, minus any already covered by a finalized
-    segment (the read-time equivalent of the reference's temporary-segment
-    cache trim, SparkCache.scala:166-212). A temporary PARTIALLY covered by
-    later finalization is dropped whole (conservative: the view never
-    double-represents a point; the uncovered remainder reappears when the
-    next generation or finalized segment lands)."""
+def latest_view(
+    appended: DataFrame, keys: tuple[str, ...] = ("sid", "metric")
+) -> DataFrame:
+    """Queryable state of an append-mode segment sink: all finalized
+    segments plus only the LIVE temporaries — the newest temporary
+    generation per key (("sid", "metric") for segment_stream,
+    ("gid", "metric") for streaming.grouped), minus any already covered
+    by a finalized segment (the read-time equivalent of the reference's
+    temporary-segment cache trim, SparkCache.scala:166-212). A temporary
+    PARTIALLY covered by later finalization is dropped whole
+    (conservative: the view never double-represents a point; the
+    uncovered remainder reappears when the next generation or finalized
+    segment lands)."""
 
     from pyspark.sql import Window
 
     # window form (no self-join: append sinks raise conflicting-reference
     # errors when joined with themselves, and one pass is cheaper anyway)
-    w = Window.partitionBy("sid", "metric")
+    w = Window.partitionBy(*keys)
     fin = F.col("is_final")
     df = appended.withColumn(
         "live_gen", F.max(F.when(~fin, F.col("temp_gen"))).over(w)

@@ -26,6 +26,7 @@ from modelardb_dynamic_spark.models.kernels import (
     compress_run_stable,
     compress_series,
     split_runs,
+    swing_decode,
 )
 
 from kernel_bench import gen_mixed, gen_noise, gen_ramp, gen_smooth
@@ -85,6 +86,111 @@ def test_c_run_and_stable_match_python_with_nans(eb):
         pseg, pcon = _compress_core_py(t, v, cfg, False)
         assert ccon == pcon, trial
         assert [_key(s) for s in cseg] == [_key(s) for s in pseg], trial
+
+
+def _group_of_one(t, v, cfg, flush):
+    """The C group cascade at G = 1 over one gap-free run, as _key rows."""
+    c = ckernel.cascade(
+        t, v[:, None], cfg.error_bound, cfg.length_bound, allow_flush=flush
+    )
+    rows = [
+        (a, b, m, mb, n, struct.pack(">ddd", lo, hi, sm))
+        for a, b, m, mb, n, lo, hi, sm in zip(
+            c.start_ts, c.end_ts, c.mtid, c.model, c.cnt, c.vmin, c.vmax,
+            c.vsum,
+        )
+    ]
+    return rows, c.consumed
+
+
+def assert_series_is_a_group_of_one(t, v, cfg):
+    """compress_series equals the C group cascade at G = 1 run by run; on
+    every run the group entry equals the numpy reference in flush and
+    stable mode; without NaN or gaps the Python GroupEngine agrees."""
+    from modelardb_dynamic_spark.models.grouped import GroupEngine
+
+    grouped = []
+    for a, b in split_runs(t, cfg.sampling_interval_ms):
+        for flush in (True, False):
+            rows, consumed = _group_of_one(t[a:b], v[a:b], cfg, flush)
+            ref, ref_consumed = _compress_core_py(t[a:b], v[a:b], cfg, flush)
+            assert rows == [_key(s) for s in ref]
+            assert consumed == ref_consumed
+            if flush:
+                grouped += rows
+    series = compress_series(t, v, cfg)
+    assert [_key(s) for s in series] == grouped
+    if len(split_runs(t, cfg.sampling_interval_ms)) == 1 and not np.isnan(
+        v
+    ).any():
+        eng = GroupEngine(t, v[:, None], cfg, use_windows=False).run()
+        assert [(s.start_ts, s.end_ts, s.mtid, s.model, s.cnt) for s in eng] \
+            == [k[:5] for k in grouped]
+
+
+@pytest.mark.parametrize("eb", [0.0, 0.3, 1.0, 10.0])
+@pytest.mark.parametrize("lb", [3, 50, 256])
+def test_series_is_a_group_of_one(eb, lb):
+    """One cascade: a single series compresses as a group of one. gen_mixed
+    with NaN, +/-inf, +/-0 and a subnormal injected, with and without
+    timestamp gaps."""
+    rng = np.random.default_rng(int(eb * 10) + lb)
+    cfg = EngineConfig(
+        error_bound=eb, sampling_interval_ms=SI, length_bound=lb
+    )
+    specials = np.array(
+        [np.nan, np.inf, -np.inf, 0.0, -0.0, 1e-40], dtype=np.float32
+    )
+    for trial in range(6):
+        n = int(rng.integers(1, 1500))
+        v = gen_mixed(n, seed=trial)
+        t = np.arange(n, dtype=np.int64) * SI
+        if trial % 3 == 1:
+            idx = rng.integers(0, n, size=max(1, n // 40))
+            v[idx] = rng.choice(specials[1:], size=len(idx))
+        elif trial % 3 == 2:
+            idx = rng.integers(0, n, size=max(1, n // 40))
+            v[idx] = rng.choice(specials, size=len(idx))
+            keep = rng.random(n) > 0.01
+            keep[0] = True
+            t, v = t[keep], v[keep]
+        assert_series_is_a_group_of_one(t, v, cfg)
+
+
+def test_group_of_one_widens_the_error_bound():
+    """0.3 is not float32-exact: the percentage error of the PMC mean here
+    (0.3000000110) lies between 0.3 and float32(0.3). The reference
+    widens the float32 bound, so the series and the group of one both
+    accept PMC-Mean (the grouped copy once compared the raw double bound
+    and fell back to Gorilla)."""
+    from modelardb_dynamic_spark.models.grouped import (
+        GroupEngine, compress_group)
+
+    t = np.array([0, SI], dtype=np.int64)
+    v = np.array([8838.216, 8891.245], dtype=np.float32)
+    cfg = EngineConfig(error_bound=0.3, sampling_interval_ms=SI)
+    expect = [(2, bytes.fromhex("460a82ec"))]
+    for segs in (
+        compress_series(t, v, cfg),
+        compress_group(t, v[:, None], cfg),
+        GroupEngine(t, v[:, None], cfg, use_windows=False).run(),
+    ):
+        assert [(s.mtid, s.model) for s in segs] == expect
+    assert_series_is_a_group_of_one(t, v, cfg)
+
+
+def test_group_of_one_anchors_swing_at_its_value():
+    """Swing's row 0 is the member average summed from the first member,
+    so a group of one anchors at -0.0 exactly like the series (a sum
+    started at +0.0 would store a +0.0 intercept)."""
+    t = np.arange(50, dtype=np.int64) * SI
+    v = np.arange(50, dtype=np.float32)
+    v[0] = -0.0
+    cfg = EngineConfig(error_bound=10.0, sampling_interval_ms=SI)
+    segs = compress_series(t, v, cfg)
+    assert segs[0].mtid == 3
+    assert np.signbit(swing_decode(segs[0].model)[1])
+    assert_series_is_a_group_of_one(t, v, cfg)
 
 
 def test_c_kernel_handles_tiny_inputs():

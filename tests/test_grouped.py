@@ -403,7 +403,9 @@ class TestGroupFastPath:
             for a, b in zip(fast, ref)
         )
 
-    @pytest.mark.parametrize("eb,lb", [(0.0, 50), (10.0, 50), (1.0, 1000)])
+    @pytest.mark.parametrize(
+        "eb,lb", [(0.0, 50), (0.3, 50), (10.0, 50), (1.0, 1000)]
+    )
     def test_group_fast_path_matches_engine(self, eb, lb):
         rng = np.random.default_rng(11)
         cfg = EngineConfig(
@@ -513,7 +515,7 @@ class TestWindowedFastPath:
             s.gaps, s.kind,
         )
 
-    @pytest.mark.parametrize("eb", [0.0, 1.0, 10.0])
+    @pytest.mark.parametrize("eb", [0.0, 0.3, 1.0, 10.0])
     def test_windowed_matches_per_row_engine(self, eb):
         from modelardb_dynamic_spark.models.grouped import GroupEngine
 

@@ -33,8 +33,10 @@ from modelardb_dynamic_spark.models.gorilla import (
     gorilla_decode,
     gorilla_encode,
 )
+from modelardb_dynamic_spark.models.grouped import GroupEngine
 from modelardb_dynamic_spark.models.kernels import (
     _compress_core_py,
+    compress_run_stable,
     compress_series,
     split_runs,
 )
@@ -85,7 +87,7 @@ series_st = st.tuples(
     st.lists(_block, min_size=1, max_size=8),
     st.integers(min_value=0, max_value=2**16),  # nan seed; 0 = no NaNs
     st.integers(min_value=0, max_value=2**16),  # gap seed; 0 = no gaps
-    st.sampled_from([0.0, 1.0, 10.0]),
+    st.sampled_from([0.0, 0.3, 1.0, 10.0]),
     st.sampled_from([3, 50, 256]),
 )
 
@@ -118,9 +120,19 @@ def test_cascade_c_matches_python_fuzz(case):
     cfg = EngineConfig(error_bound=eb, sampling_interval_ms=SI, length_bound=lb)
     cs = compress_series(t, v, cfg)
     ps = []
-    for a, b in split_runs(t, SI):
+    runs = split_runs(t, SI)
+    for a, b in runs:
         ps.extend(_compress_core_py(t[a:b], v[a:b], cfg, True)[0])
+        cseg, ccon = compress_run_stable(t[a:b], v[a:b], cfg)
+        pseg, pcon = _compress_core_py(t[a:b], v[a:b], cfg, False)
+        assert [_key(s) for s in cseg] == [_key(s) for s in pseg]
+        assert ccon == pcon
     assert [_key(s) for s in cs] == [_key(s) for s in ps]
+    if len(runs) == 1 and not np.isnan(v).any():
+        # one cascade: the Python grouped engine on a group of one
+        eng = GroupEngine(t, v[:, None], cfg, use_windows=False).run()
+        assert [(s.start_ts, s.end_ts, s.mtid, s.model, s.cnt) for s in eng] \
+            == [_key(s)[:5] for s in cs]
 
 
 @settings(max_examples=100, deadline=None)

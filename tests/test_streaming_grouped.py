@@ -19,11 +19,11 @@ from modelardb_dynamic_spark.operators.grouped import (
     correlation_groups,
     grouped_datapoints,
 )
-from modelardb_dynamic_spark.streaming.grouped import (
-    grouped_latest_view,
-    grouped_segment_stream,
+from modelardb_dynamic_spark.streaming.grouped import grouped_segment_stream
+from modelardb_dynamic_spark.streaming.ingest import (
+    latest_view,
+    run_to_memory_sink,
 )
-from modelardb_dynamic_spark.streaming.ingest import run_to_memory_sink
 
 SI = 60_000
 CFG = EngineConfig(error_bound=10.0, length_bound=50, sampling_interval_ms=SI)
@@ -132,8 +132,9 @@ def test_streamed_grouped_segments_match_batch_at_frontier(
 
 def test_grouped_temporaries_and_latest_view(spark, grouped_chunks):
     """maximum_latency in the grouped stream: temporaries publish the
-    unfinalized buffer; grouped_latest_view never double-represents a
-    point and reproduces values within the error bound."""
+    unfinalized buffer; latest_view over (gid, metric) never
+    double-represents a point and reproduces values within the error
+    bound."""
     chunk_dir, series, groups = grouped_chunks
     q = run_to_memory_sink(
         _stream(
@@ -147,7 +148,9 @@ def test_grouped_temporaries_and_latest_view(spark, grouped_chunks):
     appended = spark.table("grouped_latency_segs")
     assert appended.where("NOT is_final").count() > 0
 
-    view = grouped_latest_view(appended).drop("is_final", "temp_gen")
+    view = latest_view(appended, ("gid", "metric")).drop(
+        "is_final", "temp_gen"
+    )
     rec = grouped_datapoints(view)
     dup = rec.groupBy("sid", "metric", "ts_ms").count().where("count > 1")
     assert dup.count() == 0
