@@ -7,10 +7,10 @@ Python workers) compile at most once per host and reuse the cached .so
 afterwards.  On a real cluster the cache dir is per-node local disk; the
 compile is a one-time ~1 s cost per node, amortized over every task.
 
-If no C compiler is available (or MDBS_NO_CKERNEL=1), load() returns None
-and models/kernels.py falls back to the pure-Python/numpy implementation —
-same results (the differential tests in tests/test_ckernel.py pin the two
-byte-identical), lower throughput.
+If no C compiler is available, load() returns None and models/kernels.py
+falls back to the pure-Python/numpy implementation — same results (the
+differential tests in tests/test_ckernel.py pin the two byte-identical),
+lower throughput.
 
 cascade() is the one Python entry to the C cascade: single series (the
 build, streaming ingest) and never-splitting groups alike.
@@ -85,8 +85,6 @@ def load() -> ctypes.CDLL | None:
     if _tried:
         return _lib
     _tried = True
-    if os.environ.get("MDBS_NO_CKERNEL"):
-        return None
     so = _compile()
     if so is None:
         return None

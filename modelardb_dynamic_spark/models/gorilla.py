@@ -138,36 +138,41 @@ def gorilla_decode(model: bytes, n: int) -> np.ndarray:
 
 
 def gorilla_decode_batch(
-    models: list[bytes],
+    buf: np.ndarray,
+    offs: np.ndarray,
+    lens: np.ndarray,
     counts: np.ndarray,
     out: np.ndarray,
     out_offs: np.ndarray,
 ) -> None:
     """Decode many Gorilla streams into slices of a preallocated float32
-    array: stream j fills out[out_offs[j] : out_offs[j] + counts[j]].
+    array: stream j is buf[offs[j] : offs[j] + lens[j]] and fills
+    out[out_offs[j] : out_offs[j] + counts[j]].
 
-    One C call for the whole batch — rollup/reconstruction decode millions
-    of ~15-70-point segments, so a per-segment ctypes (or Python-loop)
-    hop dominates the actual bit-twiddling. Falls back to the Python
+    buf is a uint8 array over every stream, typically the data buffer of
+    an Arrow binary column, so no stream is copied out of it. One C call
+    for the whole batch: rollup and reconstruction decode millions of
+    ~15-70-point segments, so a per-segment ctypes (or Python-loop) hop
+    would dominate the actual bit-twiddling. Falls back to the Python
     decoder per stream when no C kernel is available."""
     import ctypes
 
     from modelardb_dynamic_spark.models import ckernel
 
-    if len(models) == 0:
+    if len(offs) == 0:
         return
+    offs, lens, counts, out_offs = (
+        np.ascontiguousarray(a, dtype=np.int64)
+        for a in (offs, lens, counts, out_offs)
+    )
+    buf = np.ascontiguousarray(buf, dtype=np.uint8)
+    if ((out_offs < 0) | (out_offs + counts > len(out))).any():
+        raise ValueError("gorilla_decode_batch: output slice out of range")
     lib = ckernel.load()
     if lib is None:
-        for mdl, c, o in zip(models, counts.tolist(), out_offs.tolist()):
-            out[o : o + c] = _gorilla_decode_py(mdl, c)
+        for o, k, c, oo in zip(*(a.tolist() for a in (offs, lens, counts, out_offs))):
+            out[oo : oo + c] = _gorilla_decode_py(buf[o : o + k].tobytes(), c)
         return
-    buf = np.frombuffer(b"".join(models), dtype=np.uint8)
-    lens = np.fromiter((len(m) for m in models), np.int64, len(models))
-    offs = np.empty(len(models), dtype=np.int64)
-    offs[0] = 0
-    np.cumsum(lens[:-1], out=offs[1:])
-    counts = np.ascontiguousarray(counts, dtype=np.int64)
-    out_offs = np.ascontiguousarray(out_offs, dtype=np.int64)
     out_u32 = out.view(np.uint32)
 
     def p(a, ct):
@@ -177,7 +182,7 @@ def gorilla_decode_batch(
         p(buf, ctypes.c_uint8), len(buf),
         p(offs, ctypes.c_int64), p(lens, ctypes.c_int64),
         p(counts, ctypes.c_int64), p(out_offs, ctypes.c_int64),
-        len(models), p(out_u32, ctypes.c_uint32),
+        len(offs), p(out_u32, ctypes.c_uint32),
     )
     if rc != 0:
         raise ValueError("gorilla_decode_batch: inconsistent offsets")

@@ -360,8 +360,8 @@ def _rows_inband_vec(V64: np.ndarray, bound: float) -> np.ndarray:
     keeps the full width together (_within_2eb is True for every pair
     over any sub-range), so an in-window split attempt is a no-op.
     Cheap sufficient row filter first, exact ordered-pair check only on
-    rows it can't clear (the _group_fast_eligible shape, kept per-row).
-    NaN rows come out False."""
+    rows it can't clear. NaN rows come out False. _group_fast_eligible
+    asks it of every row of a whole group."""
     n, w = V64.shape
     if n == 0:
         return np.zeros(0, dtype=bool)
@@ -1392,45 +1392,15 @@ def _group_fast_eligible(
     - no NaN (a NaN is a gap start -> flush + member-set change);
     - no timestamp jump > sampling interval (gap end -> flush);
     - every ordered member pair within 2*eb percentage error at every
-      row: _split's partition then always keeps the full width together
-      (take == width -> no split), joins never arise without splits.
-
-    The pairwise check runs a cheap sufficient row filter first
-    ((rmax-rmin)*100 < bound*min|row|) and the exact ordered-pair check
-    only on rows the filter can't clear."""
-    n, G = V.shape
-    if n == 0:
+      row (_rows_inband_vec): _split's partition then always keeps the
+      full width together (take == width -> no split), joins never arise
+      without splits."""
+    if len(ts) == 0 or np.isnan(V).any():
         return False
-    if np.isnan(V).any():
+    if (np.diff(ts) > cfg.sampling_interval_ms).any():
         return False
-    if n > 1 and (np.diff(ts) > cfg.sampling_interval_ms).any():
-        return False
-    if G == 1:
-        return True
     bound = 2.0 * float(np.float32(cfg.error_bound))
-    Vd = V.astype(np.float64)
-    rmin = Vd.min(axis=1)
-    rmax = Vd.max(axis=1)
-    minabs = np.abs(Vd).min(axis=1)
-    cleared = (rmax - rmin) * 100.0 < bound * minabs
-    if cleared.all():
-        return True
-    bad = Vd[~cleared]
-    for i in range(G):
-        a = bad[:, i]
-        for j in range(G):
-            if i == j:
-                continue
-            real = bad[:, j]
-            zero = real == 0.0
-            err = (
-                np.abs((real - a) / np.where(zero, 1.0, real)) * 100.0
-            )
-            err = np.where(zero, np.inf, err)
-            err = np.where(a == real, 0.0, err)
-            if not (err < bound).all():
-                return False
-    return True
+    return bool(_rows_inband_vec(V.astype(np.float64), bound).all())
 
 
 def _compress_group_c(

@@ -24,11 +24,28 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from modelardb_dynamic_spark.config import EngineConfig
+from modelardb_dynamic_spark.config import (
+    MTID_GORILLA,
+    MTID_UNCOMPRESSED,
+    EngineConfig,
+)
+from modelardb_dynamic_spark.models.gorilla import gorilla_encode
 from modelardb_dynamic_spark.models.grouped import compress_group
+from modelardb_dynamic_spark.models.kernels import _minmax32, _seq_sum64
+from modelardb_dynamic_spark.operators.compress import _ARROW_SCHEMA, SEGMENT_SCHEMA
+from modelardb_dynamic_spark.operators.reconstruct import (
+    _OUT_SCHEMA,
+    DATAPOINT_SCHEMA,
+    decode_models,
+    int64_columns,
+    point_values,
+)
+from modelardb_dynamic_spark.operators.rollup import span_aggregates
 
 GROUP_SEGMENT_SCHEMA = (
     "gid long, metric string, start_ts long, end_ts long, si int, mtid int, "
@@ -172,62 +189,50 @@ def compress_grouped(
     return df.groupBy(*keys).applyInPandas(fn, schema=GROUP_SEGMENT_SCHEMA)
 
 
+def _decode_grouped(rb: pa.RecordBatch, n: np.ndarray, mtid: np.ndarray) -> tuple:
+    """A grouped batch of n rows per segment decoded: per (segment, member)
+    entry, in member-list order, its segment and its column in the
+    segment's interleaved rows; per segment its member count; and
+    decode_models of the batch."""
+    seg = pc.list_parent_indices(rb.column("members")).to_numpy()
+    g = np.bincount(seg, minlength=rb.num_rows)
+    col = np.arange(len(seg)) - np.repeat(np.cumsum(g) - g, g)
+    return seg, col, g, decode_models(rb.column("model"), mtid, n * g)
+
+
 def grouped_datapoints(segments: DataFrame) -> DataFrame:
     """Reconstruct (sid, metric, ts_ms, value) from grouped segments.
 
     PMC/Swing models are member-shared closed forms; Gorilla/Uncompressed
-    streams interleave members row-major and de-interleave here. Decoding
-    is per-segment vectorized numpy inside mapInPandas."""
-    from modelardb_dynamic_spark.config import (
-        MTID_GORILLA,
-        MTID_PMC_MEAN,
-        MTID_SWING,
-        MTID_UNCOMPRESSED,
-    )
-    from modelardb_dynamic_spark.models.gorilla import gorilla_decode
-    from modelardb_dynamic_spark.models.kernels import swing_decode
+    streams interleave members row-major, so member j of a g-member
+    segment reads value r * g + j at row r. A batch decodes through
+    reconstruct.decode_models and de-interleaves by index arithmetic inside
+    one mapInArrow."""
 
     def fn(batches):
-        for pdf in batches:
-            sid_out, met_out, ts_out, val_out = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                members = list(row.members)
-                g = len(members)
-                n = int(row.cnt)
-                ts = np.arange(n, dtype=np.int64) * row.si + row.start_ts
-                if row.mtid == MTID_PMC_MEAN:
-                    val = np.frombuffer(row.model, dtype=">f4")[0]
-                    V = np.full((n, g), val, dtype=np.float32)
-                elif row.mtid == MTID_SWING:
-                    a, b = swing_decode(bytes(row.model))
-                    line = (a * ts.astype(np.float64) + b).astype(np.float32)
-                    V = np.repeat(line[:, None], g, axis=1)
-                elif row.mtid == MTID_GORILLA:
-                    flat = gorilla_decode(bytes(row.model), n * g)
-                    V = flat.reshape(n, g)
-                elif row.mtid == MTID_UNCOMPRESSED:
-                    flat = np.frombuffer(row.model, dtype=">f4")[: n * g]
-                    V = flat.reshape(n, g).astype(np.float32)
-                else:  # pragma: no cover
-                    raise ValueError(f"unknown mtid {row.mtid}")
-                for j, sid in enumerate(members):
-                    sid_out.append(np.repeat(sid, n))
-                    met_out.append(np.repeat(row.metric, n))
-                    ts_out.append(ts)
-                    val_out.append(V[:, j])
-            if sid_out:
-                yield pd.DataFrame(
-                    {
-                        "sid": np.concatenate(sid_out),
-                        "metric": np.concatenate(met_out),
-                        "ts_ms": np.concatenate(ts_out),
-                        "value": np.concatenate(val_out),
-                    }
-                )
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            start, si, n, mtid = int64_columns(rb, "start_ts", "si", "cnt", "mtid")
+            owner, col, g, dec = _decode_grouped(rb, n, mtid)
+            # one point per (member, row), member-major within a segment
+            rows = n[owner]
+            pm = np.repeat(np.arange(len(owner)), rows)
+            seg = owner[pm]
+            row = np.arange(len(pm)) - np.repeat(np.cumsum(rows) - rows, rows)
+            ts = start[seg] + row * si[seg]
+            slot = dec.offs[seg] + row * g[seg] + col[pm]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pc.list_flatten(rb.column("members")).take(pa.array(pm)),
+                    rb.column("metric").take(pa.array(seg)),
+                    pa.array(ts, type=pa.int64()),
+                    pa.array(point_values(dec, mtid, seg, ts, slot)),
+                ],
+                schema=_OUT_SCHEMA,
+            )
 
-    return segments.mapInPandas(
-        fn, schema="sid string, metric string, ts_ms long, value float"
-    )
+    return segments.mapInArrow(fn, schema=DATAPOINT_SCHEMA)
 
 
 def grouped_to_segments(segments: DataFrame) -> DataFrame:
@@ -236,63 +241,57 @@ def grouped_to_segments(segments: DataFrame) -> DataFrame:
     tiers, datapoint view, segment-native aggregates, SQL views) runs over
     grouped storage unchanged.
 
-    PMC/Swing models are member-shared closed forms — the model bytes copy
-    through verbatim, one row per member. Gorilla/Uncompressed streams
-    interleave members, so each member's column is TRANSCODED into its own
-    stream (decode interleaved once, re-encode per member); summaries use
-    the same formulas as the single-series compressor so tier rollups over
-    the converted table match exactly."""
-    from modelardb_dynamic_spark.config import MTID_GORILLA, MTID_UNCOMPRESSED
-    from modelardb_dynamic_spark.models.gorilla import gorilla_decode, gorilla_encode
-    from modelardb_dynamic_spark.models.kernels import _emit
-    from modelardb_dynamic_spark.operators.compress import SEGMENT_SCHEMA
-
-    cols = (
-        "sid", "metric", "start_ts", "end_ts", "si", "mtid", "model", "cnt",
-        "vmin", "vmax", "vsum",
-    )
+    PMC/Swing models are member-shared closed forms: the model bytes copy
+    through verbatim, one row per member, and the summaries are the
+    rollup's closed forms over the whole segment. Gorilla/Uncompressed
+    streams interleave members, so each member's column is TRANSCODED into
+    its own stream (decode the batch once, re-encode per member) with the
+    single-series compressor's summaries (_minmax32, _seq_sum64), so tier
+    rollups over the converted table match exactly."""
 
     def fn(batches):
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for r in pdf.itertuples(index=False):
-                members = list(r.members)
-                g = len(members)
-                n = int(r.cnt)
-                mtid = int(r.mtid)
-                if mtid not in (MTID_GORILLA, MTID_UNCOMPRESSED):
-                    seg = _emit(
-                        mtid, bytes(r.model), r.start_ts, r.end_ts, None, n
-                    )
-                    per_member = [seg] * g
-                else:
-                    if mtid == MTID_GORILLA:
-                        flat = gorilla_decode(bytes(r.model), n * g)
-                    else:
-                        flat = np.frombuffer(bytes(r.model), dtype=">f4")[
-                            : n * g
-                        ].astype(np.float32)
-                    V = flat.reshape(n, g)
-                    per_member = []
-                    for j in range(g):
-                        col = np.ascontiguousarray(V[:, j])
-                        if mtid == MTID_GORILLA:
-                            m, _ = gorilla_encode(col)
-                        else:
-                            m = col.astype(">f4").tobytes()
-                        per_member.append(
-                            _emit(mtid, m, r.start_ts, r.end_ts, col, n)
-                        )
-                for sid, seg in zip(members, per_member):
-                    for k, x in zip(cols, (
-                        sid, r.metric, r.start_ts, r.end_ts, r.si, mtid,
-                        seg.model, n, seg.vmin, seg.vmax, seg.vsum,
-                    )):
-                        rows[k].append(x)
-            if rows["sid"]:
-                yield pd.DataFrame(rows)
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            start, end, n, mtid = int64_columns(rb, "start_ts", "end_ts", "cnt", "mtid")
+            seg, col, g, dec = _decode_grouped(rb, n, mtid)
+            vmin, vmax, vsum = span_aggregates(
+                dec, mtid, seg, start[seg], end[seg], n[seg]
+            )
+            m = mtid[seg]
+            own = (m == MTID_GORILLA) | (m == MTID_UNCOMPRESSED)
+            models = []
+            for k in np.flatnonzero(own).tolist():
+                i = seg[k]
+                rows = dec.values[dec.offs[i] : dec.offs[i + 1]].reshape(n[i], g[i])
+                v = np.ascontiguousarray(rows[:, col[k]])
+                models.append(
+                    gorilla_encode(v)[0]
+                    if m[k] == MTID_GORILLA
+                    else v.astype(">f4").tobytes()
+                )
+                vmin[k], vmax[k] = _minmax32(v)
+                vsum[k] = _seq_sum64(v)
+            # member-shared rows first, then the transcoded ones
+            order = np.concatenate([np.flatnonzero(~own), np.flatnonzero(own)])
+            idx = pa.array(seg[order])
+            shared = rb.column("model").take(pa.array(seg[~own]))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pc.list_flatten(rb.column("members")).take(pa.array(order)),
+                    *(rb.column(c).take(idx) for c in (
+                        "metric", "start_ts", "end_ts", "si", "mtid",
+                    )),
+                    pa.concat_arrays([shared, pa.array(models, pa.binary())]),
+                    rb.column("cnt").take(idx),
+                    pa.array(vmin[order]),
+                    pa.array(vmax[order]),
+                    pa.array(vsum[order]),
+                ],
+                schema=_ARROW_SCHEMA,
+            )
 
-    return segments.mapInPandas(fn, schema=SEGMENT_SCHEMA)
+    return segments.mapInArrow(fn, schema=SEGMENT_SCHEMA)
 
 
 def grouped_compression_stats(segments: DataFrame) -> DataFrame:

@@ -1,4 +1,14 @@
-"""Reconstruction: segment table -> virtual DataPoint view.
+"""Reconstruction: segment table -> virtual DataPoint view, and the one
+segment decoder.
+
+decode_models is the only reader of model bytes on the query side, as
+core/models/Segment.java is in the reference: the datapoint view
+(_grid_batch), the rollup (operators/rollup.py) and the grouped views
+(operators/grouped.py) decode a batch's model column through it. It reads
+the Arrow column's offsets and data buffer directly: PMC-Mean values and
+Swing (a, b) at every width are gathered by numpy views, and every Gorilla
+stream of the batch decodes in one C call on the data buffer itself.
+models/segment.py stays the per-segment scalar reference.
 
 Two-phase prune-then-exact shape of the reference's point view
 (engines/spark/ViewDataPoint.scala:37-78): timestamp predicates are mapped
@@ -8,25 +18,20 @@ min/max), segments are gridded, and the exact point-level filter is
 re-applied afterwards (the reference reports unhandledFilters = all for
 the same reason, ViewDataPoint.scala:35).
 
-There is one decoder, _grid_batch, and two places it runs: distributed,
-inside a mapInArrow (datapoint_view), or on the driver over segments a
-JVM-only toArrow() job collected (decode_on_driver), which saves the
-Python-worker round trip a small read would otherwise pay. The caller
-picks (ModelarEngine.datapoints, a broadcast-style size threshold).
-Decoding expands a segment up to length_bound times, so decode_on_driver
-first sizes the decoded points from start_ts, end_ts and si alone and,
-above its byte limit, ships the collected segments back through the
-mapInArrow instead.
-
-The gridding itself is vectorized ACROSS segments per Arrow batch: PMC and
-Swing values for every segment in the batch are produced by a single
-np.repeat / fused multiply-add; only Gorilla/Uncompressed payloads decode
-per segment (<= length_bound points each).
+_grid_batch runs in two places: distributed, inside a mapInArrow
+(datapoint_view), or on the driver over segments a JVM-only toArrow() job
+collected (decode_on_driver), which saves the Python-worker round trip a
+small read would otherwise pay. The caller picks (ModelarEngine.datapoints,
+a broadcast-style size threshold). Decoding expands a segment up to
+length_bound times, so decode_on_driver first sizes the decoded points
+from start_ts, end_ts and si alone and, above its byte limit, ships the
+collected segments back through the mapInArrow instead.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -41,7 +46,6 @@ from modelardb_dynamic_spark.config import (
     MTID_UNCOMPRESSED,
 )
 from modelardb_dynamic_spark.models.gorilla import gorilla_decode_batch
-from modelardb_dynamic_spark.models.kernels import swing_decode
 
 DATAPOINT_SCHEMA = "sid string, metric string, ts_ms long, value float"
 _DECODE_COLS = ("sid", "metric", "start_ts", "end_ts", "si", "mtid", "model")
@@ -56,56 +60,105 @@ _OUT_SCHEMA = pa.schema(
     ]
 )
 
+class Models(NamedTuple):
+    """A batch's decoded model column, one entry per segment unless noted;
+    entries of other model types are 0."""
+
+    pmc: np.ndarray  # float32 PMC-Mean value
+    a: np.ndarray  # float64 Swing slope
+    b: np.ndarray  # float64 Swing intercept
+    values: np.ndarray  # float32 Gorilla and Uncompressed streams, concatenated
+    offs: np.ndarray  # int64, n + 1: segment i owns values[offs[i] : offs[i + 1]]
+
+
+def int64_columns(rb: pa.RecordBatch, *names: str) -> list[np.ndarray]:
+    return [
+        rb.column(c).to_numpy(zero_copy_only=False).astype(np.int64) for c in names
+    ]
+
+
+def _gather(buf: np.ndarray, starts: np.ndarray, dtype: str) -> np.ndarray:
+    """The big-endian dtype value at each byte offset in starts."""
+    width = np.dtype(dtype).itemsize
+    return buf[starts[:, None] + np.arange(width)].view(dtype)[:, 0]
+
+
+def decode_models(model: pa.Array, mtid: np.ndarray, counts: np.ndarray) -> Models:
+    """Decode every model of a batch: model is its binary column, mtid its
+    model types, counts the values a Gorilla or Uncompressed segment
+    holds (its points times its members; ignored for PMC-Mean and Swing).
+    Raises on a model type it does not know or a model too short for its
+    type."""
+    n = len(model)
+    _, offsets, data = model.buffers()
+    width = np.int64 if pa.types.is_large_binary(model.type) else np.int32
+    o = np.frombuffer(offsets, width)[model.offset : model.offset + n + 1]
+    start = o[:-1].astype(np.int64)
+    size = np.diff(o).astype(np.int64)
+    buf = np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8)
+    is_pmc, is_swing, is_g, is_u = (
+        mtid == t for t in (MTID_PMC_MEAN, MTID_SWING, MTID_GORILLA, MTID_UNCOMPRESSED)
+    )
+    cnt = np.where(is_g | is_u, counts, 0).astype(np.int64)
+    bad = ~(is_pmc | is_swing | is_g | is_u) | (is_pmc & (size < 4))
+    bad |= (is_swing & ~np.isin(size, (8, 12, 16))) | (is_u & (size < 4 * cnt))
+    if bad.any():
+        i = int(np.flatnonzero(bad)[0])
+        raise ValueError(f"undecodable model: mtid {mtid[i]}, {size[i]} bytes")
+
+    pmc = np.zeros(n, np.float32)
+    pmc[is_pmc] = _gather(buf, start[is_pmc], ">f4")
+    a = np.zeros(n)
+    b = np.zeros(n)
+    # the 8/12/16-byte Swing forms of SwingFilterModelType.java:131-143
+    for nbytes, adt, bdt in ((8, ">f4", ">f4"), (12, ">f4", ">f8"), (16, ">f8", ">f8")):
+        sel = is_swing & (size == nbytes)
+        a[sel] = _gather(buf, start[sel], adt)
+        b[sel] = _gather(buf, start[sel] + np.dtype(adt).itemsize, bdt)
+
+    offs = np.zeros(n + 1, np.int64)
+    np.cumsum(cnt, out=offs[1:])
+    values = np.empty(int(offs[-1]), np.float32)
+    gorilla_decode_batch(
+        buf, start[is_g], size[is_g], cnt[is_g], values, offs[:-1][is_g]
+    )
+    # Uncompressed: value k of segment i is the big-endian f32 at byte
+    # start[i] + 4k
+    u_seg = np.repeat(np.flatnonzero(is_u), cnt[is_u])
+    u_slot = np.flatnonzero(np.repeat(is_u, cnt))
+    values[u_slot] = _gather(buf, start[u_seg] + 4 * (u_slot - offs[u_seg]), ">f4")
+    return Models(pmc, a, b, values, offs)
+
+
+def point_values(
+    dec: Models, mtid: np.ndarray, seg: np.ndarray, ts: np.ndarray, slot: np.ndarray
+) -> np.ndarray:
+    """float32 value of each point: point k lies at ts[k] in segment
+    seg[k] and, when that segment is Gorilla or Uncompressed, at
+    dec.values[slot[k]]."""
+    m = mtid[seg]
+    out = np.empty(len(seg), np.float32)
+    sel = m == MTID_PMC_MEAN
+    out[sel] = dec.pmc[seg[sel]]
+    sel = m == MTID_SWING
+    s = seg[sel]
+    out[sel] = (dec.a[s] * ts[sel].astype(np.float64) + dec.b[s]).astype(np.float32)
+    sel = (m == MTID_GORILLA) | (m == MTID_UNCOMPRESSED)
+    out[sel] = dec.values[slot[sel]]
+    return out
+
 
 def _grid_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
-    n_seg = rb.num_rows
-    start = rb.column("start_ts").to_numpy(zero_copy_only=False).astype(np.int64)
-    end = rb.column("end_ts").to_numpy(zero_copy_only=False).astype(np.int64)
-    si = rb.column("si").to_numpy(zero_copy_only=False).astype(np.int64)
-    mtid = rb.column("mtid").to_numpy(zero_copy_only=False)
-    models = rb.column("model").to_pylist()
-    lens = ((end - start) // si + 1).astype(np.int64)
-    total = int(lens.sum())
-    seg_idx = np.repeat(np.arange(n_seg), lens)
+    start, end, si, mtid = int64_columns(rb, "start_ts", "end_ts", "si", "mtid")
+    lens = (end - start) // si + 1
+    dec = decode_models(rb.column("model"), mtid, lens)
+    seg = np.repeat(np.arange(rb.num_rows), lens)
     # per-point index within its segment
-    offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    pt_idx = np.arange(total) - np.repeat(offs, lens)
-    ts = np.repeat(start, lens) + pt_idx * np.repeat(si, lens)
-    values = np.empty(total, dtype=np.float32)
-
-    is_pmc = mtid == MTID_PMC_MEAN
-    if is_pmc.any():
-        pmc_vals = np.array(
-            [
-                np.frombuffer(m, dtype=">f4")[0] if p else np.float32(0)
-                for m, p in zip(models, is_pmc)
-            ],
-            dtype=np.float32,
-        )
-        mask = is_pmc[seg_idx]
-        values[mask] = pmc_vals[seg_idx[mask]]
-    is_swing = mtid == MTID_SWING
-    if is_swing.any():
-        ab = np.zeros((n_seg, 2), dtype=np.float64)
-        for i in np.flatnonzero(is_swing):
-            ab[i] = swing_decode(models[i])
-        mask = is_swing[seg_idx]
-        sidx = seg_idx[mask]
-        values[mask] = (
-            ab[sidx, 0] * ts[mask].astype(np.float64) + ab[sidx, 1]
-        ).astype(np.float32)
-    g_ids = np.flatnonzero(mtid == MTID_GORILLA)
-    if len(g_ids):
-        # one C call decodes every Gorilla stream of the batch straight
-        # into its values[] slice (per-segment decode hops dominated here)
-        gorilla_decode_batch(
-            [models[i] for i in g_ids], lens[g_ids], values, offs[g_ids]
-        )
-    for i in np.flatnonzero(mtid == MTID_UNCOMPRESSED).tolist():
-        a, b = offs[i], offs[i] + lens[i]
-        values[a:b] = np.frombuffer(models[i], dtype=">f4")[: lens[i]]
+    row = np.arange(len(seg)) - np.repeat(np.cumsum(lens) - lens, lens)
+    ts = start[seg] + row * si[seg]
+    values = point_values(dec, mtid, seg, ts, dec.offs[seg] + row)
     # string columns fan out via Arrow take (C++), never via Python objects
-    idx = pa.array(seg_idx, type=pa.int64())
+    idx = pa.array(seg, type=pa.int64())
     return pa.RecordBatch.from_arrays(
         [
             rb.column("sid").take(idx),

@@ -42,8 +42,11 @@ from modelardb_dynamic_spark.config import (
     MTID_SWING,
     MTID_UNCOMPRESSED,
 )
-from modelardb_dynamic_spark.models.gorilla import gorilla_decode_batch
-from modelardb_dynamic_spark.models.kernels import swing_decode
+from modelardb_dynamic_spark.operators.reconstruct import (
+    Models,
+    decode_models,
+    int64_columns,
+)
 
 TIER_SCHEMA = (
     "sid string, metric string, bucket_ts long, cnt long, vsum double, "
@@ -68,22 +71,47 @@ _PARTIAL_SCHEMA = pa.schema(
 )
 
 
-def _bucket_partials(
-    rb: pa.RecordBatch, bucket_ms: int, keep: str = "all"
-) -> pa.RecordBatch:
+def span_aggregates(
+    dec: Models, mtid: np.ndarray, seg: np.ndarray,
+    lo: np.ndarray, hi: np.ndarray, cnt: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(vmin, vmax, vsum) of row k over the cnt[k] grid points lo[k]..hi[k]
+    of segment seg[k], in closed form for PMC-Mean and Swing rows
+    (PMC_MeanModelType.java:137-150, SwingFilterModelType.java:220-248);
+    Gorilla and Uncompressed rows are left for the caller to fill."""
+    m = mtid[seg]
+    vmin, vmax = np.empty((2, len(seg)), dtype=np.float32)
+    vsum = np.empty(len(seg), dtype=np.float64)
+    mask = m == MTID_PMC_MEAN
+    v = dec.pmc[seg[mask]]
+    vmin[mask] = v
+    vmax[mask] = v
+    # (double)(length * value) in float32 math, PMC_MeanModelType.java:148-150
+    vsum[mask] = (cnt[mask].astype(np.float32) * v).astype(np.float64)
+    mask = m == MTID_SWING
+    a = dec.a[seg[mask]]
+    b = dec.b[seg[mask]]
+    fst = a * lo[mask] + b
+    lst = a * hi[mask] + b
+    vsum[mask] = (fst + lst) / 2.0 * cnt[mask]
+    f_lo = fst.astype(np.float32)
+    f_hi = lst.astype(np.float32)
+    b32 = b.astype(np.float32)
+    vmin[mask] = np.where(a == 0, b32, np.where(a > 0, f_lo, f_hi))
+    vmax[mask] = np.where(a == 0, b32, np.where(a > 0, f_hi, f_lo))
+    return vmin, vmax, vsum
+
+
+def _bucket_partials(rb: pa.RecordBatch, bucket_ms: int, keep: str) -> pa.RecordBatch:
     n_seg = rb.num_rows
-    start = rb.column("start_ts").to_numpy(zero_copy_only=False).astype(np.int64)
-    end = rb.column("end_ts").to_numpy(zero_copy_only=False).astype(np.int64)
-    si = rb.column("si").to_numpy(zero_copy_only=False).astype(np.int64)
-    mtid = rb.column("mtid").to_numpy(zero_copy_only=False)
-    models = rb.column("model").to_pylist()
+    start, end, si, mtid = int64_columns(rb, "start_ts", "end_ts", "si", "mtid")
+    dec = decode_models(rb.column("model"), mtid, (end - start) // si + 1)
 
     first_b = (start // bucket_ms) * bucket_ms
     last_b = (end // bucket_ms) * bucket_ms
     k = ((last_b - first_b) // bucket_ms + 1).astype(np.int64)
     seg_idx = np.repeat(np.arange(n_seg), k)
-    offs = np.concatenate(([0], np.cumsum(k)[:-1]))
-    j = np.arange(int(k.sum())) - np.repeat(offs, k)
+    j = np.arange(len(seg_idx)) - np.repeat(np.cumsum(k) - k, k)
     bucket_ts = np.repeat(first_b, k) + j * bucket_ms
 
     st = start[seg_idx]
@@ -97,73 +125,22 @@ def _bucket_partials(
     cnt = (hi_g - lo_g) // s_i + 1
     valid = cnt > 0
 
+    vmin, vmax, vsum = span_aggregates(dec, mtid, seg_idx, lo_g, hi_g, cnt)
+    # Gorilla/Uncompressed: every bucket of every segment aggregates with
+    # ONE reduceat per statistic over the decoded streams. Rows of those
+    # segments, valid buckets only, in (segment, bucket) order; within one
+    # segment the buckets partition the grid, so reduceat slice
+    # [pos_j, pos_{j+1}) is exactly bucket j: the last bucket of a segment
+    # runs to the segment end, whose value index + 1 is the NEXT segment's
+    # offset in dec.values
     m = mtid[seg_idx]
-    vmin = np.empty(len(seg_idx), dtype=np.float32)
-    vmax = np.empty(len(seg_idx), dtype=np.float32)
-    vsum = np.empty(len(seg_idx), dtype=np.float64)
-
-    is_pmc_seg = mtid == MTID_PMC_MEAN
-    if is_pmc_seg.any():
-        pmc_vals = np.zeros(n_seg, dtype=np.float32)
-        for i in np.flatnonzero(is_pmc_seg):
-            pmc_vals[i] = np.frombuffer(models[i], dtype=">f4")[0]
-        mask = m == MTID_PMC_MEAN
-        v = pmc_vals[seg_idx[mask]]
-        vmin[mask] = v
-        vmax[mask] = v
-        # (double)(length * value) in float32 math, PMC_MeanModelType.java:148-150
-        vsum[mask] = (cnt[mask].astype(np.float32) * v).astype(np.float64)
-    is_swing_seg = mtid == MTID_SWING
-    if is_swing_seg.any():
-        ab = np.zeros((n_seg, 2), dtype=np.float64)
-        for i in np.flatnonzero(is_swing_seg):
-            ab[i] = swing_decode(models[i])
-        mask = m == MTID_SWING
-        sidx = seg_idx[mask]
-        a = ab[sidx, 0]
-        b = ab[sidx, 1]
-        fst = a * lo_g[mask] + b
-        lst = a * hi_g[mask] + b
-        vsum[mask] = (fst + lst) / 2.0 * cnt[mask]
-        f_lo = fst.astype(np.float32)
-        f_hi = lst.astype(np.float32)
-        b32 = b.astype(np.float32)
-        vmin[mask] = np.where(a == 0, b32, np.where(a > 0, f_lo, f_hi))
-        vmax[mask] = np.where(a == 0, b32, np.where(a > 0, f_hi, f_lo))
-    gu_segs = np.flatnonzero((mtid == MTID_GORILLA) | (mtid == MTID_UNCOMPRESSED))
-    if len(gu_segs):
-        # decode EVERY payload-carrying segment of the batch into one
-        # concatenated value array (single C call for all Gorilla streams
-        # — a per-segment decode hop dominated this loop), then aggregate
-        # every bucket of every segment with ONE reduceat per statistic.
-        n_pts = (end[gu_segs] - start[gu_segs]) // si[gu_segs] + 1
-        seg_out = np.zeros(n_seg, dtype=np.int64)  # value offset per segment
-        seg_out[gu_segs] = np.concatenate(([0], np.cumsum(n_pts)[:-1]))
-        vals = np.empty(int(n_pts.sum()), dtype=np.float32)
-        g_sel = mtid[gu_segs] == MTID_GORILLA
-        g_ids = gu_segs[g_sel]
-        gorilla_decode_batch(
-            [models[i] for i in g_ids], n_pts[g_sel], vals, seg_out[g_ids]
-        )
-        for i in gu_segs[~g_sel].tolist():
-            o = seg_out[i]
-            c = int((end[i] - start[i]) // si[i]) + 1
-            vals[o : o + c] = np.frombuffer(models[i], dtype=">f4")[:c]
-        # rows of gu segments, valid buckets only, in (segment, bucket)
-        # order; within one segment the buckets partition the grid, so
-        # reduceat slice [pos_j, pos_{j+1}) is exactly bucket j: the last
-        # bucket of a segment runs to the segment end, whose value index
-        # + 1 is the NEXT segment's offset by construction of seg_out
-        rows = np.flatnonzero(
-            ((m == MTID_GORILLA) | (m == MTID_UNCOMPRESSED)) & valid
-        )
-        if len(rows):
-            sor = seg_idx[rows]
-            pos = seg_out[sor] + (lo_g[rows] - start[sor]) // si[sor]
-            vals64 = vals.astype(np.float64)
-            vsum[rows] = np.add.reduceat(vals64, pos)
-            vmin[rows] = np.minimum.reduceat(vals, pos)
-            vmax[rows] = np.maximum.reduceat(vals, pos)
+    rows = np.flatnonzero(((m == MTID_GORILLA) | (m == MTID_UNCOMPRESSED)) & valid)
+    if len(rows):
+        sor = seg_idx[rows]
+        pos = dec.offs[sor] + (lo_g[rows] - start[sor]) // si[sor]
+        vsum[rows] = np.add.reduceat(dec.values.astype(np.float64), pos)
+        vmin[rows] = np.minimum.reduceat(dec.values, pos)
+        vmax[rows] = np.maximum.reduceat(dec.values, pos)
     # exclusivity: every grid slot of the bucket inside [start, end]
     excl = (bucket_ts >= st) & (bucket_ts + bucket_ms - s_i <= en)
     # keep only valid rows; string keys fan out via Arrow take (C++)
@@ -183,10 +160,8 @@ def _bucket_partials(
         vrows = np.flatnonzero(valid)
     elif keep == "interior":
         vrows = np.flatnonzero(valid & excl)
-    elif keep == "boundary":
+    else:  # "boundary"
         vrows = np.flatnonzero(valid & ~excl)
-    else:
-        vrows = np.flatnonzero(valid)
     idx = pa.array(seg_idx[vrows], type=pa.int64())
     return pa.RecordBatch.from_arrays(
         [

@@ -324,12 +324,7 @@ class TierPipeline:
 
     # -- stages --------------------------------------------------------------
 
-    def ingest_raw(
-        self,
-        transcripts: DataFrame,
-        fingerprint: str = "raw-v1",
-        only_buckets: list[int] | None = None,
-    ) -> None:
+    def ingest_raw(self, transcripts: DataFrame, fingerprint: str = "raw-v1") -> None:
         """Persist the raw tier bucketed by conv_id (per-turn text survives
         byte-identically; verified by tests under ORDER BY conv_id, turn_idx)."""
 
@@ -355,7 +350,7 @@ class TierPipeline:
                 .sortWithinPartitions("sbucket")
             )
 
-        self._run_stage("raw", fingerprint, build, only_buckets=only_buckets)
+        self._run_stage("raw", fingerprint, build)
 
     def build_series(
         self,
@@ -836,9 +831,7 @@ class TierPipeline:
 
     # -- retention -----------------------------------------------------------
 
-    def retain(
-        self, table: str, horizon_ms: int, fingerprint_suffix: str = ""
-    ) -> None:
+    def retain(self, table: str, horizon_ms: int) -> None:
         """Drop a stage table's rows older than horizon (coarser tiers
         retain the aggregates). Filter-rewrite per bucket, lineage
         re-committed, and the horizon RECORDED in <table>/_retention.json
@@ -862,7 +855,7 @@ class TierPipeline:
         os.replace(marker + ".tmp", marker)
 
         ts_col = STAGE[table].ts_col
-        fingerprint = f"{table}-retained-{horizon_ms}{fingerprint_suffix}"
+        fingerprint = f"{table}-retained-{horizon_ms}"
 
         def build(bucket_ids: list[int]) -> DataFrame:
             df = self._read_buckets(table, bucket_ids)
@@ -882,8 +875,8 @@ class TierPipeline:
         with open(marker) as f:
             return int(json.load(f)["horizon_ms"])
 
-    def retain_raw(self, horizon_ms: int, fingerprint_suffix: str = "") -> None:
-        self.retain("raw", horizon_ms, fingerprint_suffix)
+    def retain_raw(self, horizon_ms: int) -> None:
+        self.retain("raw", horizon_ms)
 
     # -- cold archive (series tier) -------------------------------------------
 

@@ -208,9 +208,11 @@ def test_c_kernel_handles_tiny_inputs():
     assert [_key(s) for s in one] == [_key(s) for s in py]
 
 
-def test_c_gorilla_decode_matches_python():
+def test_c_gorilla_decode_matches_python(monkeypatch):
     """C decoder vs the Python specification, bit-for-bit, on streams with
-    zero-XOR runs, window reuse, window resets, sig==32 wrap, NaN/inf."""
+    zero-XOR runs, window reuse, window resets, sig==32 wrap, NaN/inf; the
+    batch decode reads every stream out of one buffer, in C and in the
+    no-compiler fallback."""
     from modelardb_dynamic_spark.models.gorilla import (
         _gorilla_decode_py,
         gorilla_decode,
@@ -240,7 +242,15 @@ def test_c_gorilla_decode_matches_python():
         counts.append(len(v))
     counts = np.array(counts, dtype=np.int64)
     offs = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    out = np.empty(int(counts.sum()), dtype=np.float32)
-    gorilla_decode_batch(blobs, counts, out, offs)
+    # a leading byte no stream owns: stream offsets index the whole buffer
+    buf = np.frombuffer(b"\xff" + b"".join(blobs), dtype=np.uint8)
+    lens = np.array([len(b) for b in blobs], dtype=np.int64)
+    boffs = 1 + np.concatenate(([0], np.cumsum(lens)[:-1]))
     expect = np.concatenate(corpora)
-    np.testing.assert_array_equal(out.view(np.uint32), expect.view(np.uint32))
+    for lib in (ckernel.load(), None):
+        monkeypatch.setattr(ckernel, "load", lambda lib=lib: lib)
+        out = np.empty(int(counts.sum()), dtype=np.float32)
+        gorilla_decode_batch(buf, boffs, lens, counts, out, offs)
+        np.testing.assert_array_equal(out.view(np.uint32), expect.view(np.uint32))
+        with pytest.raises(ValueError, match="out of range"):
+            gorilla_decode_batch(buf, boffs, lens, counts, out[:-1], offs)

@@ -232,6 +232,114 @@ def test_grouped_to_segments_full_query_surface(spark):
     assert per_sid == {f"s{k}": 480 for k in range(3)}
 
 
+def _hand_group_segments():
+    """Grouped segment rows (gid, metric, start_ts, end_ts, si, mtid,
+    model, cnt, members) with G > 1 of every model type, including an
+    interleaved Uncompressed segment (only temporaries produce one, so it
+    is built by hand), plus what compress_group emits for a small group."""
+    from modelardb_dynamic_spark.config import (
+        MTID_GORILLA,
+        MTID_PMC_MEAN,
+        MTID_SWING,
+        MTID_UNCOMPRESSED,
+    )
+    from modelardb_dynamic_spark.models.gorilla import gorilla_encode
+    from modelardb_dynamic_spark.models.kernels import _swing_encode
+
+    rng = np.random.default_rng(17)
+    special = np.float32([np.nan, np.inf, -np.inf, -0.0, 0.0, 1e-40])
+    inter = rng.normal(50, 20, (4, 3)).astype(np.float32)
+    inter.ravel()[:6] = special
+    unc = rng.normal(0, 5, (5, 2)).astype(np.float32)
+    unc[0, 1] = -0.0
+    rows = []
+
+    def add(mtid, model, n, members):
+        start = 1000 + len(rows) * 100 * SI
+        rows.append((1, "m", start, start + (n - 1) * SI, SI, mtid, model,
+                     n, members))
+
+    add(MTID_PMC_MEAN, np.float32([-2.5]).astype(">f4").tobytes(), 5,
+        ["p0", "p1", "p2"])
+    add(MTID_SWING, _swing_encode((0.25, 0.1, 0.25, 0.1)), 6, ["w0", "w1"])
+    add(MTID_SWING, _swing_encode((-1e-9, 3.0, -1e-9, 3.0)), 3, ["w2", "w3"])
+    add(MTID_GORILLA, gorilla_encode(inter.ravel())[0], 4, ["g0", "g1", "g2"])
+    add(MTID_UNCOMPRESSED, unc.ravel().astype(">f4").tobytes(), 5, ["u0", "u1"])
+    add(MTID_GORILLA, gorilla_encode(special)[0], 6, ["g3"])
+    t = np.arange(300, dtype=np.int64) * SI + 200_000
+    base = np.where(np.arange(300) % 60 < 30, 20.0, 60.0)
+    V = np.stack([base * (1 + 0.003 * k) for k in range(3)], axis=1)
+    V[100:160, 2] += rng.normal(0, 30, 60)
+    for s in compress_group(t, V.astype(np.float32), CFG):
+        rows.append((2, "m", s.start_ts, s.end_ts, SI, s.mtid, s.model, s.cnt,
+                     [f"c{m}" for m in s.members]))
+    return rows
+
+
+def test_grouped_views_match_a_per_segment_reference(spark):
+    """grouped_datapoints and grouped_to_segments decode a batch at once
+    and de-interleave by index arithmetic; per segment and per member they
+    equal a scalar decode (value bits included) and the single-series
+    compressor's re-encode and summaries."""
+    from modelardb_dynamic_spark.config import MTID_GORILLA, MTID_PMC_MEAN
+    from modelardb_dynamic_spark.config import MTID_SWING
+    from modelardb_dynamic_spark.models.gorilla import (
+        gorilla_decode,
+        gorilla_encode,
+    )
+    from modelardb_dynamic_spark.models.kernels import _emit, swing_decode
+    from modelardb_dynamic_spark.operators.grouped import (
+        GROUP_SEGMENT_SCHEMA,
+        grouped_datapoints,
+        grouped_to_segments,
+    )
+
+    rows = _hand_group_segments()
+    assert {r[5] for r in rows if len(r[8]) > 1} == {1, 2, 3, 4}
+    points, segments = set(), set()
+    for _, metric, start, end, si, mtid, model, n, members in rows:
+        g = len(members)
+        ts = start + si * np.arange(n, dtype=np.int64)
+        if mtid == MTID_PMC_MEAN:
+            V = np.full((n, g), np.frombuffer(model, ">f4")[0], np.float32)
+        elif mtid == MTID_SWING:
+            a, b = swing_decode(model)
+            V = np.repeat((a * ts.astype(np.float64) + b).astype(np.float32)[:, None], g, 1)
+        elif mtid == MTID_GORILLA:
+            V = gorilla_decode(model, n * g).reshape(n, g)
+        else:
+            V = np.frombuffer(model, ">f4")[: n * g].astype(np.float32).reshape(n, g)
+        for j, sid in enumerate(members):
+            col = np.ascontiguousarray(V[:, j])
+            points |= {(sid, metric, int(t), int(b)) for t, b in
+                       zip(ts, col.view(np.uint32))}
+            if mtid in (MTID_PMC_MEAN, MTID_SWING):
+                seg = _emit(mtid, model, start, end, None, n)
+            else:
+                m = (gorilla_encode(col)[0] if mtid == MTID_GORILLA
+                     else col.astype(">f4").tobytes())
+                seg = _emit(mtid, m, start, end, col, n)
+            segments.add((sid, metric, start, end, si, mtid, seg.model, n,
+                          np.float32(seg.vmin).tobytes(),
+                          np.float32(seg.vmax).tobytes(),
+                          np.float64(seg.vsum).tobytes()))
+    # two partitions, so batches start mid-table
+    df = spark.createDataFrame(rows, GROUP_SEGMENT_SCHEMA).repartition(2)
+    got = {
+        (r.sid, r.metric, r.ts_ms,
+         int(np.float32(r.value).view(np.uint32)))
+        for r in grouped_datapoints(df).collect()
+    }
+    assert got == points
+    got = {
+        (r.sid, r.metric, r.start_ts, r.end_ts, r.si, r.mtid, bytes(r.model),
+         r.cnt, np.float32(r.vmin).tobytes(), np.float32(r.vmax).tobytes(),
+         np.float64(r.vsum).tobytes())
+        for r in grouped_to_segments(df).collect()
+    }
+    assert got == segments
+
+
 LAT_CASES = sorted(
     p.stem.split(".")[0] for p in GOLDEN.glob("*.lat40.segments.csv")
 )

@@ -131,7 +131,7 @@ def test_grouped_pipeline_plan_shape(spark):
 
 
 def test_grouped_datapoints_no_extra_exchange(spark):
-    """grouped_datapoints is a pure mapInPandas over the segment stream:
+    """grouped_datapoints is a pure mapInArrow over the segment stream:
     reconstruction adds NO exchange of its own."""
     import pandas as pd
 

@@ -21,10 +21,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     reason="needs spark-submit and zip",
 )
 def test_submit_builds_from_the_zip(tmp_path):
-    env = {
-        k: v for k, v in os.environ.items()
-        if k not in ("PYTHONPATH", "MDBS_NO_CKERNEL")
-    }
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(SPARK_GRAFT_CPUS="2", XDG_CACHE_HOME=str(tmp_path / "cache"))
     out = subprocess.run(
         ["bash", os.path.join(REPO, "tools", "submit.sh"),
