@@ -35,8 +35,9 @@
  * interleaves members row-major with the length bound counting ROWS);
  * at G = 1 a row is a point.  Two grouped twists remain, both no-ops at
  * G = 1:
- *  - ratio = f32(16)*f32(rows) / (f32(24)+f32(size)+f32(4)*f32(gaps)) —
- *    rows, not points (_ratio_g, ModelType.java:65-70);
+ *  - ratio = f32(16)*f32(rows) / (f32(24)+f32(size)) — rows, not points
+ *    (_ratio_g, ModelType.java:65-70; its gaps term is zero here, since
+ *    the kernel only sees gap-free groups);
  *  - Swing row 0 collapses to the f32 member average, summed from the
  *    first member (all members must be within bound of it).
  */
@@ -277,13 +278,12 @@ static int64_t gorilla_encode_rows(const float *v, int64_t rows, int64_t G,
     return (w.nbits + 7) / 8;
 }
 
-/* _ratio_g: float32 all the way, incl. the 4*n_gaps denominator term
- * (models/grouped.py _ratio_g; ModelType.java:65-70). Left-assoc float
- * adds match numpy: (24 + size) + (4 * gaps). */
-static inline float ratio_grp32(int64_t rows, double size, int64_t n_gaps) {
+/* _ratio_g with no gaps: float32 all the way (models/grouped.py
+ * _ratio_g; ModelType.java:65-70). */
+static inline float ratio_grp32(int64_t rows, double size) {
     if (rows == 0 || isnan(size)) return NAN;
     float num = 16.0f * (float)rows;
-    float den = (24.0f + (float)size) + 4.0f * (float)n_gaps;
+    float den = 24.0f + (float)size;
     return num / den;
 }
 
@@ -297,36 +297,17 @@ static inline float ratio_grp32(int64_t rows, double size, int64_t n_gaps) {
  * prefix semantics.  gscratch >= 6*min(lb,n)*G+16 bytes; output arrays
  * hold >= n entries.
  * allow_flush=0 stops before an incomplete trailing segment (streaming
- * ingest and the windowed grouped mode: the tail stays open);
- * consumed_out = rows consumed (== n when flushing).  n_gaps is the
- * constant gaps-set size feeding the ratio denominator (a split
- * sub-generator counts the group members it does NOT carry).
+ * ingest: the tail stays open); consumed_out = rows consumed (== n when
+ * flushing).
  * seg_vmin/vmax/vsum (NULL to skip; G = 1 only) get the decompress-side
  * closed-form summaries of kernels._emit.
- * seg_emit_row (NULL to skip) [j] = input row index whose CONSUME emits
- * segment j in the sequential engine — the pass-order sort key. This is
- * NOT simply the row that sticks the last model: after an emission the
- * engine's reset cascade may find models already stuck inside the
- * leftover buffer, and each stuck model costs one further consume to
- * advance past (one model-append attempt per consumed row,
- * models/grouped.py _append_to_cascade). The exact recurrence, seeded
- * with cur=prev_row0:
- *   PMC advance    cur = max(i + p, cur + 1)   (skipped for the first
- *                  segment when model_idx0 >= 1: it happened pre-call)
- *   Swing advance  cur = max(i + s, cur + 1)   (skipped when >= 2)
- *   Gorilla full   cur = max(i + length_bound, cur + 1) -> emit at cur.
- * model_idx0/prev_row0 describe the engine state at input row 0: the
- * whole-buffer entry passes (0, -1); the windowed caller passes the
- * open-buffer cascade depth and nb-1.
  * Returns segment count, -1 on arena overflow (caller grows and
  * retries), -2 on invalid arguments. */
 int64_t mdbs_compress_group(
     const int64_t *t, const float *v, int64_t n, int64_t G,
     double error_bound, int64_t length_bound, int allow_flush,
-    int64_t n_gaps, int64_t model_idx0, int64_t prev_row0,
     int64_t *seg_start_idx, int64_t *seg_len, int32_t *seg_mtid,
     int64_t *seg_model_off, int64_t *seg_model_len,
-    int64_t *seg_emit_row,
     double *seg_vmin, double *seg_vmax, double *seg_vsum,
     uint8_t *arena, int64_t arena_cap, uint8_t *gscratch,
     int64_t *consumed_out)
@@ -337,7 +318,6 @@ int64_t mdbs_compress_group(
     if (length_bound < 1) return -2;
     double bound = (double)(float)error_bound;
     int64_t i = 0, nseg = 0, used = 0;
-    int64_t cur = prev_row0; /* last consumed row of the trigger recurrence */
     while (i < n) {
         int64_t rem = n - i;
         const int64_t *tw = t + i;
@@ -356,21 +336,6 @@ int64_t mdbs_compress_group(
         else break;                              /* open tail: stop */
         int64_t len_g = length_bound < bsize ? length_bound : bsize;
 
-        /* engine emit-trigger recurrence (see above) */
-        {
-            int64_t c2;
-            if (!(nseg == 0 && model_idx0 >= 1)) {
-                c2 = i + p;
-                cur = c2 > cur + 1 ? c2 : cur + 1;
-            }
-            if (!(nseg == 0 && model_idx0 >= 2)) {
-                c2 = i + s;
-                cur = c2 > cur + 1 ? c2 : cur + 1;
-            }
-            c2 = i + length_bound;
-            cur = c2 > cur + 1 ? c2 : cur + 1;
-        }
-
         double size_p = p > 0 ? 4.0 : NAN;
         double sa = 0.0, sb = 0.0, size_s = NAN;
         if (s >= 2)
@@ -380,9 +345,9 @@ int64_t mdbs_compress_group(
         int64_t g_bytes = gorilla_encode_rows(vw, len_g, G, gscratch);
 
         /* literal reference selection loop: later model wins ties/NaNs */
-        float rr[3] = {ratio_grp32(p, size_p, n_gaps),
-                       ratio_grp32(s, size_s, n_gaps),
-                       ratio_grp32(len_g, (double)g_bytes, n_gaps)};
+        float rr[3] = {ratio_grp32(p, size_p),
+                       ratio_grp32(s, size_s),
+                       ratio_grp32(len_g, (double)g_bytes)};
         int best = 0;
         float rbest = rr[0];
         for (int c = 0; c < 3; c++) {
@@ -469,28 +434,11 @@ int64_t mdbs_compress_group(
         seg_mtid[nseg] = mtid;
         seg_model_off[nseg] = off;
         seg_model_len[nseg] = mlen;
-        if (seg_emit_row) seg_emit_row[nseg] = cur;
         nseg++;
         i += blen;
     }
     *consumed_out = i;
     return nseg;
-}
-
-/* Prefix probes for the windowed grouped fast path: the Python engine
- * reconstructs its open-buffer cascade state (model_idx + PMC/Swing
- * internals) from these instead of re-feeding long tails row-by-row. */
-int64_t mdbs_pmc_prefix_grp(const float *v, int64_t n, int64_t G,
-                            double error_bound, double *sum_out) {
-    return pmc_prefix_grp(v, n, G, (double)(float)error_bound, sum_out);
-}
-
-int64_t mdbs_swing_prefix_grp(const int64_t *t, const float *v, int64_t n,
-                              int64_t G, double error_bound,
-                              double *oua, double *oub,
-                              double *ola, double *olb) {
-    return swing_prefix_grp(t, v, n, G, (double)(float)error_bound,
-                            oua, oub, ola, olb);
 }
 
 /* Whole-series entry: splits into gap-free runs (timestamp delta != si)
@@ -514,9 +462,9 @@ int64_t mdbs_compress_series(
         while (b < n && t[b] - t[b - 1] == si_ms) b++;
         int64_t run_consumed = 0;
         int64_t k = mdbs_compress_group(
-            t + a, v + a, b - a, 1, error_bound, length_bound, 1, 0, 0, -1,
+            t + a, v + a, b - a, 1, error_bound, length_bound, 1,
             seg_start_idx + nseg, seg_len + nseg, seg_mtid + nseg,
-            seg_model_off + nseg, seg_model_len + nseg, NULL,
+            seg_model_off + nseg, seg_model_len + nseg,
             seg_vmin + nseg, seg_vmax + nseg, seg_vsum + nseg,
             arena + used, arena_cap - used, gscratch, &run_consumed);
         if (k < 0) return -1;

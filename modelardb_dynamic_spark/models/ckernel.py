@@ -94,9 +94,6 @@ def load() -> ctypes.CDLL | None:
         return None
     i64 = ctypes.c_int64
     p_i64 = ctypes.POINTER(ctypes.c_int64)
-    p_i32 = ctypes.POINTER(ctypes.c_int32)
-    p_f32 = ctypes.POINTER(ctypes.c_float)
-    p_f64 = ctypes.POINTER(ctypes.c_double)
     p_u8 = ctypes.POINTER(ctypes.c_uint8)
     # the cascade entries take raw addresses (one workspace per call, see
     # cascade()): per-array ctypes pointer objects cost more than the
@@ -112,20 +109,10 @@ def load() -> ctypes.CDLL | None:
     lib.mdbs_compress_group.restype = i64
     lib.mdbs_compress_group.argtypes = [
         vp, vp, i64, i64, ctypes.c_double, i64,  # t, v, n, G, eb, lb
-        ctypes.c_int, i64,                  # allow_flush, n_gaps
-        i64, i64,                           # model_idx0, prev_row0
+        ctypes.c_int,                       # allow_flush
         vp, vp, vp, vp, vp,                 # start_idx, len, mtid, off, mlen
-        vp,                                 # emit_row (pass-order sort key)
         vp, vp, vp,                         # vmin, vmax, vsum
         vp, i64, vp, vp,                    # arena, cap, gscratch, consumed
-    ]
-    lib.mdbs_pmc_prefix_grp.restype = i64
-    lib.mdbs_pmc_prefix_grp.argtypes = [
-        p_f32, i64, i64, ctypes.c_double, p_f64
-    ]
-    lib.mdbs_swing_prefix_grp.restype = i64
-    lib.mdbs_swing_prefix_grp.argtypes = [
-        p_i64, p_f32, i64, i64, ctypes.c_double, p_f64, p_f64, p_f64, p_f64
     ]
     p_u32 = ctypes.POINTER(ctypes.c_uint32)
     lib.mdbs_gorilla_decode.restype = i64
@@ -141,13 +128,11 @@ def load() -> ctypes.CDLL | None:
 class Cascade(NamedTuple):
     """What one C cascade call emitted, one list entry per segment."""
 
-    start: list[int]  # input row of the segment's first row
     cnt: list[int]  # rows the segment represents
     start_ts: list[int]
     end_ts: list[int]
     mtid: list[int]
     model: list[bytes]
-    emit_row: list[int]  # engine emit row (group entry), else empty
     vmin: list[float]  # closed-form summaries (G == 1), else empty
     vmax: list[float]
     vsum: list[float]
@@ -162,69 +147,62 @@ def cascade(
     *,
     si_ms: int | None = None,
     allow_flush: bool = True,
-    n_gaps: int = 0,
-    model_idx0: int = 0,
-    prev_row0: int = -1,
 ) -> Cascade:
     """Run the C cascade over t (n,) int64 and v (n,) or (n, G) float32.
 
     With si_ms, v is one series that mdbs_compress_series splits into
     gap-free runs and flushes run by run; otherwise mdbs_compress_group
-    segments the rows as given (see its comment for allow_flush, n_gaps,
-    model_idx0 and prev_row0).  Summaries are computed for G == 1.
+    segments the rows as given (see its comment for allow_flush).
+    Summaries are computed for G == 1.
 
     Retries with a doubled model arena on overflow (the 8nG+1k initial
     cap already exceeds the worst case — Gorilla <= 6 B/value — so the
     retry loop is a belt-and-braces path, not a hot one), then copies
     only the used prefix of the arena."""
     lib = load()
-    assert lib is not None, "C kernel unavailable"
+    if lib is None:
+        raise RuntimeError("C kernel unavailable")
     t = np.ascontiguousarray(t, dtype=np.int64)
     v = np.ascontiguousarray(v, dtype=np.float32)
     n = len(t)
     G = 1 if v.ndim == 1 else v.shape[1]
-    # one workspace: eight 8-byte columns (start, len, off, mlen, emit_row,
-    # vmin, vmax, vsum), the int32 mtid column, the Gorilla scratch, then
-    # the model arena
+    # one workspace: seven 8-byte columns (start, len, off, mlen, vmin,
+    # vmax, vsum), the int32 mtid column, the Gorilla scratch, then the
+    # model arena
     gs = 6 * min(length_bound, n) * G + 32
-    head = 68 * n + gs
+    head = 60 * n + gs
     arena_cap = 8 * n * G + 1024
     consumed = ctypes.c_int64(0)
     if si_ms is None:
         fn = lib.mdbs_compress_group
-        args = [G, float(error_bound), int(length_bound), int(allow_flush),
-                n_gaps, model_idx0, prev_row0]
+        args = [G, float(error_bound), int(length_bound), int(allow_flush)]
     else:
         fn = lib.mdbs_compress_series
         args = [int(si_ms), float(error_bound), int(length_bound)]
     while True:
         ws = np.empty(head + arena_cap, dtype=np.uint8)
-        col = [ws.ctypes.data + 8 * n * j for j in range(9)]
-        outs = [col[0], col[1], col[8], col[2], col[3]]
-        if si_ms is None:
-            outs.append(col[4])
-        outs += col[5:8] if G == 1 else [None] * 3
+        col = [ws.ctypes.data + 8 * n * j for j in range(8)]
+        outs = [col[0], col[1], col[7], col[2], col[3]]
+        outs += col[4:7] if G == 1 else [None] * 3
         k = fn(t.ctypes.data, v.ctypes.data, n, *args, *outs,
-               col[0] + head, arena_cap, col[0] + 68 * n,
+               col[0] + head, arena_cap, col[0] + 60 * n,
                ctypes.byref(consumed))
         if k >= 0:
             break
         if k != -1:
             raise ValueError(f"C kernel rejected its arguments (rc={k})")
         arena_cap *= 2
-    ints = ws[: 64 * n].view(np.int64).reshape(8, n)[:, :k]
-    start, cnt, off, mlen, erow = ints[:5]
+    ints = ws[: 56 * n].view(np.int64).reshape(7, n)[:, :k]
+    start, cnt, off, mlen = ints[:4]
     ends = off + mlen
     ab = ws[head : head + (int(ends.max()) if k else 0)].tobytes()
-    summ = ints[5:].view(np.float64).tolist() if G == 1 else ([], [], [])
+    summ = ints[4:].view(np.float64).tolist() if G == 1 else ([], [], [])
     return Cascade(
-        start.tolist(),
         cnt.tolist(),
         t[start].tolist(),
         t[start + cnt - 1].tolist(),
-        ws[64 * n : 68 * n].view(np.int32)[:k].tolist(),
+        ws[56 * n : 60 * n].view(np.int32)[:k].tolist(),
         [ab[a:b] for a, b in zip(off.tolist(), ends.tolist())],
-        erow.tolist() if si_ms is None else [],
         *summ,
         int(consumed.value),
     )

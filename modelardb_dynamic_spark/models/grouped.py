@@ -19,9 +19,10 @@ tools/goldengen/GroupHarness.java):
 - One cascade, widened bound: every model compares percentage errors
   against the float32 error bound widened to double, like the
   single-series path (Static.java:105-107); a group of one emits the
-  single series' segments. Never-splitting groups and stretches run
+  single series' segments. Groups that provably never split run
   through the one C cascade (_ckernel.c mdbs_compress_group, via
-  ckernel.cascade); this engine is its differential reference.
+  ckernel.cascade); this engine runs every other group and is the C
+  path's differential reference.
 - Gap semantics: a NaN marks gap START for that member (flush, member
   leaves the active set); a timestamp jump > samplingInterval after
   real values resume marks gap END (flush, member re-enters)
@@ -341,24 +342,11 @@ def _ratio_g(length: int, size: float, n_gaps: int) -> float:
     return float(np.float32(num / den))
 
 
-# --- windowed fast-path row eligibility (vectorized) ---------------------------
-
-_WINDOW_MIN = 16  # below this, per-row Python beats the C call overhead
-# Eligibility vectors are built over a CAPPED chunk that grows x64 per
-# fully-consumed window and resets on every split/join: a topology-churn
-# corpus (the flapping adversary) pays O(chunk) per event instead of
-# O(remaining suffix) per event — the suffix-wide build, cache-invalidated
-# by each _topo_gen bump, was the real cost there, not the C call — while
-# a long stable stretch grows back to suffix-wide windows in 2 builds
-# (1024 * 64^2 > 10^6).
-_WINDOW_CHUNK0 = 1 << 10
-
-
 def _rows_inband_vec(V64: np.ndarray, bound: float) -> np.ndarray:
     """Per-row bool: every ordered member pair strictly within `bound`
-    percentage error — on such rows a dynamic-split partition provably
-    keeps the full width together (_within_2eb is True for every pair
-    over any sub-range), so an in-window split attempt is a no-op.
+    percentage error — when every row of a group is, a dynamic-split
+    partition provably keeps the full width together (_within_2eb is True
+    for every pair over any sub-range), so no split ever happens.
     Cheap sufficient row filter first, exact ordered-pair check only on
     rows it can't clear. NaN rows come out False. _group_fast_eligible
     asks it of every row of a whole group."""
@@ -385,24 +373,6 @@ def _rows_inband_vec(V64: np.ndarray, bound: float) -> np.ndarray:
                 good &= (err < bound).all(axis=1)
         ok[rest] = good
     return ok
-
-
-def _pairs_blocked_vec(A64: np.ndarray, bound: float) -> np.ndarray:
-    """Per-row bool: every ordered pair of columns (the sub-generators'
-    first active members, the values _tail_within_2eb compares) is OUT of
-    the band in BOTH directions (percentage_error >= bound) — on such
-    rows every dynamic-join tail check provably fails at its newest
-    compared row, whichever sub triggers it."""
-    n, S = A64.shape
-    out = np.ones(n, dtype=bool)
-    for i in range(S):
-        for j in range(S):
-            if i == j:
-                continue
-            err = percentage_error_vec(A64[:, i], A64[:, j])
-            with np.errstate(invalid="ignore"):
-                out &= err >= bound
-    return out
 
 
 # --- the (sub-)generator ------------------------------------------------------
@@ -518,17 +488,6 @@ class _SubGen:
         if not current:
             return
         self.active = tuple(active)
-        self._append_to_cascade(ts, current)
-        # temporary segment after maximum_latency unemitted points
-        # (SegmentGenerator.java:207-211)
-        if self.e.maximum_latency > 0 and self.yet_emitted == self.e.maximum_latency:
-            self._emit_temporary()
-            self.yet_emitted = 0
-
-    def _append_to_cascade(self, ts: int, current: list[float]) -> None:
-        """Buffer one row and run the model cascade on it (the model-append
-        half of consume_next, shared with the windowed fast path's tail
-        replay)."""
         self.buffer_ts.append(ts)
         self.buffer.append(current)
         self.yet_emitted += 1
@@ -543,6 +502,11 @@ class _SubGen:
                 self._reset_cascade()
             else:
                 self._init_model(self.models[self.model_idx])
+        # temporary segment after maximum_latency unemitted points
+        # (SegmentGenerator.java:207-211)
+        if self.e.maximum_latency > 0 and self.yet_emitted == self.e.maximum_latency:
+            self._emit_temporary()
+            self.yet_emitted = 0
 
     def _flush(self) -> None:
         if not self.buffer:
@@ -629,30 +593,6 @@ class _SubGen:
             )
         )
 
-    def _absorb_c_segment(self, seg: GroupSegment, ratio: float) -> None:
-        """Record one windowed-C-emitted segment with _emit_final's exact
-        bookkeeping (ratio running average, split/join scheduling). The
-        window preconditions make the side branches provable no-ops: an
-        in-band window means a below-average split attempt keeps the full
-        width together (_split returns without splitting), and an
-        out-of-band window means every join tail check fails — so only
-        the counters are replayed here. The post-emit buffer is always
-        non-empty mid-window (the model-rejecting row stays buffered),
-        which stands in for _emit_final's `self.buffer` guard."""
-        self.e.out.append(seg)
-        below = ratio < self.e.split_fraction * self.ratio_avg
-        self.ratio_avg = (
-            self.ratio_avg * self.emitted + ratio
-        ) / (self.emitted + 1)
-        self.emitted += 1
-        if below and len(self.cols) > 1:
-            pass  # split attempt: provably a no-op in an in-band window
-        elif self.e.splits and self.emitted == self.next_join_check:
-            # the scheduled join check runs against out-of-band tails and
-            # fails; the engine still resets the doubling schedule
-            self.emitted = 0
-            self.next_join_check *= 2
-
     # --- dynamic split --------------------------------------------------------
 
     def _within_2eb(self, i: int, j: int) -> bool:
@@ -707,7 +647,6 @@ class _SubGen:
         if self in self.e.splits:
             self.e.splits[self.e.splits.index(self)] = None
         self.e.splits.append(sg)
-        self.e._topo_gen += 1
         # each split child re-announces its buffer as a temporary segment
         # (SegmentGenerator.java:412-417)
         if self.e.maximum_latency > 0:
@@ -741,20 +680,12 @@ class GroupEngine:
         tids: list[int] | None = None,
         maximum_latency: int = 0,
         n_series: int | None = None,
-        use_windows: bool = True,
     ):
         self.maximum_latency = int(maximum_latency)
-        self.use_windows = use_windows
-        self._win_ok: bool | None = None  # lazy gate (needs ckernel.load)
-        self._topo_gen = 0  # bumped on split/join: invalidates window cache
-        self._win_cap = _WINDOW_CHUNK0  # eligibility-build chunk (doubles)
-        self._win_cap_tag = 0  # _topo_gen the cap belongs to
         self._drive_gen = 0
-        self._elig_cache: dict = {}
-        self.windows_hit = 0  # diagnostics: windowed C runs executed
-        self.window_rows = 0  # diagnostics: rows consumed via windows
         if ts is None:
-            assert n_series is not None, "incremental mode needs n_series"
+            if n_series is None:
+                raise ValueError("incremental mode needs n_series")
             ts = np.empty(0, dtype=np.int64)
             V = np.empty((0, n_series), dtype=np.float32)
         self.ts = ts
@@ -792,8 +723,7 @@ class GroupEngine:
         self._drive_gen += 1
         while True:
             while not self.splits and master.has_next():
-                if not self._try_master_window(master):
-                    master.consume_next()
+                master.consume_next()
             if not self.splits:
                 return
             while True:
@@ -822,8 +752,6 @@ class GroupEngine:
                     if alive[0].cursor >= len(self.ts):
                         return  # await more rows
                     tickers = alive
-                if self._try_split_windows(alive):
-                    continue  # no split/join can occur inside a window
                 tick_ids = {id(s) for s in tickers}
                 for sg in list(self.splits):
                     if (
@@ -855,385 +783,6 @@ class GroupEngine:
         for g in gens:
             g.cursor = max(0, g.cursor - offset)
 
-    # --- windowed C fast path (VERDICT r3 'Next' #2) ---------------------------
-    #
-    # The per-row Python state machine is required only around the events
-    # the goldens pin: split attempts that actually partition, join checks
-    # that actually merge, gap open/close flushes, and temporaries. On
-    # maximal stretches where those are PROVABLY absent, the cascade is
-    # order-equivalent to the C grouped kernel (the same derivation the
-    # whole-group fast path rests on), so each (sub-)generator batch-
-    # consumes the stretch at C speed and the open-buffer state is
-    # reconstructed from prefix probes. Proof obligations per stretch:
-    #  - no NaN in any consumed column and no timestamp jump > si
-    #    (incl. at entry) -> no gap flush, gaps-set constant;
-    #  - every in-sub ordered pair within 2*eb at every row, including
-    #    the rows already buffered -> _split always keeps the full width;
-    #  - every cross-sub first-member pair OUT of 2*eb both ways at every
-    #    row -> _tail_within_2eb fails at its newest compared row, so
-    #    every scheduled join check fails whichever sub triggers it
-    #    (counters are still replayed on their doubling schedule);
-    #  - all sub cursors equal and advancing in lockstep (no all-NaN rows
-    #    for any sub inside the stretch) -> pass alignment preserved;
-    #  - maximum_latency == 0 (temporaries stay on the per-row path).
-    # Emissions are re-interleaved by (emit-trigger row, splits order) —
-    # exactly the per-pass order the sequential engine produces, which the
-    # order-sensitive golden comparisons require.
-
-    def _windows_on(self) -> bool:
-        if self._win_ok is None:
-            from modelardb_dynamic_spark.models import ckernel
-
-            self._win_ok = (
-                self.use_windows
-                and self.maximum_latency == 0
-                and ckernel.load() is not None
-            )
-        return self._win_ok
-
-    def _elig_suffix(self, key, c0: int, build) -> np.ndarray:
-        """Row-eligibility vector for rows >= c0, cached per drive pass
-        and split/join topology (arrays are stable within one _drive;
-        feed() re-drives with a new generation after append/prune)."""
-        tag = (self._drive_gen, self._topo_gen)
-        hit = self._elig_cache.get(key)
-        # reuse only while c0 is inside the cached chunk's coverage — a
-        # cursor past the (capped) build must trigger a fresh build, not
-        # return an empty slice that silently disables windows
-        if (
-            hit is not None
-            and hit[0] == tag
-            and hit[1] <= c0 < hit[1] + len(hit[2])
-        ):
-            return hit[2][c0 - hit[1] :]
-        vec = build()
-        self._elig_cache = {key: (tag, c0, vec)}
-        return vec
-
-    def _window_cap(self) -> int:
-        """Current eligibility-build chunk; resets on topology change."""
-        if self._win_cap_tag != self._topo_gen:
-            self._win_cap_tag = self._topo_gen
-            self._win_cap = _WINDOW_CHUNK0
-        return self._win_cap
-
-    def _grow_window_cap(self, c0: int, vec: np.ndarray, W: int) -> None:
-        """After a window consumed its WHOLE built vector and rows remain,
-        the stable stretch outruns the chunk: grow it (x64 reaches a 10^6
-        suffix in 2 builds) so long stretches converge to one C call."""
-        if W == len(vec) and c0 + W < len(self.ts):
-            self._win_cap = self._win_cap * 64
-
-    def _entry_ok(self, sub: _SubGen, c0: int, bound2: float) -> bool:
-        """Per-sub window entry conditions that depend on mutable state:
-        no gap-end jump pending on any column, a full-width open buffer,
-        and (multi-member) an open buffer that is itself pairwise in-band
-        — a pre-window out-of-band buffered row would make an in-window
-        split attempt real instead of a no-op."""
-        ts0 = int(self.ts[c0])
-        si = self.cfg.sampling_interval_ms
-        for c in sub.cols:
-            if ts0 - sub.prev_ts[c] > si:
-                return False
-        if sub.buffer and len(sub.buffer[0]) != len(sub.cols):
-            return False
-        if sub.buffer and len(sub.cols) > 1:
-            B = np.array(sub.buffer, dtype=np.float64)
-            if not _rows_inband_vec(B, bound2).all():
-                return False
-        return True
-
-    def _spacing_suffix(self, c0: int, limit: int) -> np.ndarray:
-        sp = np.ones(min(len(self.ts) - c0, limit), dtype=bool)
-        if len(sp) > 1:
-            sp[1:] = (
-                np.diff(self.ts[c0 : c0 + len(sp)])
-                <= self.cfg.sampling_interval_ms
-            )
-        return sp
-
-    def _try_master_window(self, master: _SubGen) -> bool:
-        if not self._windows_on():
-            return False
-        c0 = master.cursor
-        if len(self.ts) - c0 < _WINDOW_MIN:
-            return False
-        bound2 = 2.0 * float(np.float32(self.cfg.error_bound))
-        if not self._entry_ok(master, c0, bound2):
-            return False
-
-        def build():
-            cap = self._window_cap()
-            Vw = self.V[c0 : c0 + cap, list(master.cols)].astype(np.float64)
-            return _rows_inband_vec(Vw, bound2) & self._spacing_suffix(
-                c0, cap
-            )
-
-        vec = self._elig_suffix("m", c0, build)
-        W = len(vec) if vec.all() else int(np.argmin(vec))
-        if W < _WINDOW_MIN:
-            return False
-        for _, seg, ratio in self._run_window_c(master, c0, W):
-            master._absorb_c_segment(seg, ratio)
-        self._grow_window_cap(c0, vec, W)
-        return True
-
-    def _try_split_windows(self, alive: list[_SubGen]) -> bool:
-        if not self._windows_on() or self.to_join:
-            return False
-        c0 = alive[0].cursor
-        if any(s.cursor != c0 for s in alive):
-            return False
-        if len(self.ts) - c0 < _WINDOW_MIN:
-            return False
-        bound2 = 2.0 * float(np.float32(self.cfg.error_bound))
-        for s in alive:
-            if not self._entry_ok(s, c0, bound2):
-                return False
-
-        def build():
-            cap = self._window_cap()
-            allcols = sorted({c for s in alive for c in s.cols})
-            Vw = self.V[c0 : c0 + cap][:, allcols].astype(np.float64)
-            ok = ~np.isnan(Vw).any(axis=1) & self._spacing_suffix(c0, cap)
-            for s in alive:
-                if len(s.cols) > 1:
-                    ok &= _rows_inband_vec(
-                        self.V[c0 : c0 + cap][:, list(s.cols)].astype(
-                            np.float64
-                        ),
-                        bound2,
-                    )
-            firsts = [s.cols[0] for s in alive]
-            ok &= _pairs_blocked_vec(
-                self.V[c0 : c0 + cap][:, firsts].astype(np.float64), bound2
-            )
-            return ok
-
-        key = ("s", tuple(id(s) for s in alive))
-        vec = self._elig_suffix(key, c0, build)
-        W = len(vec) if vec.all() else int(np.argmin(vec))
-        if W < _WINDOW_MIN:
-            return False
-        emits = []
-        for order, s in enumerate(alive):
-            for erow, seg, ratio in self._run_window_c(s, c0, W):
-                emits.append((erow, order, s, seg, ratio))
-        # pass order: within a pass (one row), subs emit in splits order
-        emits.sort(key=lambda e: (e[0], e[1]))
-        for _, _, s, seg, ratio in emits:
-            s._absorb_c_segment(seg, ratio)
-        self._grow_window_cap(c0, vec, W)
-        return True
-
-    def _run_window_c(self, sub: _SubGen, c0: int, W: int):
-        """Batch-consume rows [c0, c0+W) for one (sub-)generator through
-        the C grouped cascade (open buffer rows prepended; allow_flush=0
-        so the kernel stops at the open tail) and reseed the cascade
-        state from the unconsumed tail. Returns
-        [(emit_row_global, GroupSegment, ratio)] in emission order."""
-        import ctypes
-
-        from modelardb_dynamic_spark.models import ckernel
-
-        self.windows_hit += 1
-        self.window_rows += W
-        lib = ckernel.load()
-        cols = list(sub.cols)
-        w = len(cols)
-        nb = len(sub.buffer)
-        n = nb + W
-        cfg = self.cfg
-        t_in = np.empty(n, dtype=np.int64)
-        v_in = np.empty((n, w), dtype=np.float32)
-        if nb:
-            t_in[:nb] = sub.buffer_ts
-            v_in[:nb] = sub.buffer
-        t_in[nb:] = self.ts[c0 : c0 + W]
-        v_in[nb:] = self.V[c0 : c0 + W][:, cols]
-        n_gaps = len(sub.gaps)
-
-        def ptr(a, ct):
-            return a.ctypes.data_as(ctypes.POINTER(ct))
-
-        # cascade depth at window entry (for the emit-trigger recurrence):
-        # how many models are already stuck inside the open buffer
-        m0 = 0
-        if nb:
-            psum0 = ctypes.c_double(0.0)
-            p0 = int(
-                lib.mdbs_pmc_prefix_grp(
-                    ptr(v_in, ctypes.c_float), nb, w,
-                    float(cfg.error_bound), ctypes.byref(psum0),
-                )
-            )
-            if p0 < nb:
-                b0 = [ctypes.c_double(0.0) for _ in range(4)]
-                s0 = int(
-                    lib.mdbs_swing_prefix_grp(
-                        ptr(t_in, ctypes.c_int64), ptr(v_in, ctypes.c_float),
-                        nb, w, float(cfg.error_bound),
-                        *[ctypes.byref(b) for b in b0],
-                    )
-                )
-                m0 = 1 if (s0 if s0 > p0 else p0 + 1) >= nb else 2
-
-        res = ckernel.cascade(
-            t_in, v_in, cfg.error_bound, cfg.length_bound, allow_flush=False,
-            n_gaps=n_gaps, model_idx0=m0, prev_row0=nb - 1,
-        )
-        # a segment whose ENGINE trigger row (emit recurrence, incl. the
-        # one-consume-per-stuck-model lag) falls beyond the window must
-        # NOT be emitted here: the sequential engine emits it at a
-        # post-window row, with post-window (possibly out-of-band) rows
-        # in the buffer — where a split attempt can be real. Return its
-        # rows to the open tail; the per-row path emits it later.
-        k = len(res.start)
-        while k > 0 and res.emit_row[k - 1] >= n:
-            k -= 1
-        consumed = res.start[k] if k < len(res.start) else res.consumed
-        members = tuple(sorted(self.tid_of[col] for col in cols))
-        gaps_t = tuple(sorted(sub.gaps))
-        out = []
-        for j in range(k):
-            mtid = res.mtid[j]
-            ln = res.cnt[j]
-            if mtid == MTID_PMC_MEAN:
-                size = 4.0
-            elif mtid == MTID_UNCOMPRESSED:
-                size = 4.0 * ln
-            else:
-                size = float(len(res.model[j]))
-            out.append(
-                (
-                    c0 + res.emit_row[j] - nb,
-                    GroupSegment(
-                        start_ts=res.start_ts[j],
-                        end_ts=res.end_ts[j],
-                        mtid=mtid,
-                        model=res.model[j],
-                        cnt=ln,
-                        members=members,
-                        gaps=gaps_t,
-                    ),
-                    _ratio_g(ln, size, n_gaps),
-                )
-            )
-        self._reseed_sub(sub, t_in[consumed:], v_in[consumed:])
-        last_ts = int(t_in[-1])
-        for col in cols:
-            sub.prev_ts[col] = last_ts
-        sub.cursor = c0 + W
-        return out
-
-    def _reseed_sub(
-        self, sub: _SubGen, tail_t: np.ndarray, tail_v: np.ndarray
-    ) -> None:
-        """Rebuild the open-buffer cascade state after a windowed C run.
-        With no emission inside the tail, the engine's state is a pure
-        function of the buffered rows (models re-initialize FROM the
-        buffer on every reset/advance), so prefix probes reconstruct it:
-         - PMC still accepting (p == n): model_idx 0, PMC carries the
-           left-fold sum/min/max; Swing and Gorilla stay lazily
-           uninitialized exactly like the sequential engine.
-         - PMC dead, Swing alive-or-dead-at-the-last-row: model_idx 1,
-           Swing carries the prefix bounds (incl. the kept mid-row
-           partial updates on a rejection).
-         - Gorilla active: per-row replay through _append_to_cascade
-           rebuilds the bit stream. Usually <= length_bound rows; a tail
-           holding a trigger-truncated segment can be longer, and the
-           replay stays exact either way (it IS the engine's append
-           path, and the emit-trigger recurrence guarantees no emission
-           fires inside the tail)."""
-        import ctypes
-
-        from modelardb_dynamic_spark.models import ckernel
-
-        n = len(tail_t)
-        # ndarray.tolist() materializes the Python-list buffers at C speed
-        # (a per-element comprehension dominated the never-emitting
-        # constant-series case); float64-widened float32 values match what
-        # consume_next's float(val) stores
-        sub.buffer_ts = np.asarray(tail_t, dtype=np.int64).tolist()
-        sub.buffer = np.asarray(tail_v, dtype=np.float64).tolist()
-        sub.active = tuple(sub.cols)
-        sub.yet_emitted = len(sub.buffer)
-        sub.models = sub._fresh_models()
-        sub.model_idx = 0
-        pmc, swing, _gor = sub.models
-        if n == 0:
-            pmc.initialize([])
-            return
-        lib = ckernel.load()
-        cfg = self.cfg
-        w = tail_v.shape[1]
-        tv = np.ascontiguousarray(tail_t, dtype=np.int64)
-        vv = np.ascontiguousarray(tail_v, dtype=np.float32)
-
-        def ptr(a, ct):
-            return a.ctypes.data_as(ctypes.POINTER(ct))
-
-        psum = ctypes.c_double(0.0)
-        p = int(
-            lib.mdbs_pmc_prefix_grp(
-                ptr(vv, ctypes.c_float), n, w, float(cfg.error_bound),
-                ctypes.byref(psum),
-            )
-        )
-        flat = vv.astype(np.float64).ravel()
-        if p >= n:
-            pmc.sum = float(psum.value)
-            pmc.size = n
-            pmc.min = float(flat.min())
-            pmc.max = float(flat.max())
-            pmc.within = True
-            return
-        bounds = [ctypes.c_double(0.0) for _ in range(4)]
-        s = int(
-            lib.mdbs_swing_prefix_grp(
-                ptr(tv, ctypes.c_int64), ptr(vv, ctypes.c_float), n, w,
-                float(cfg.error_bound), *[ctypes.byref(b) for b in bounds],
-            )
-        )
-        gorilla_at = s if s > p else p + 1  # row whose consume advances to 2
-        if gorilla_at >= n:
-            sub.model_idx = 1
-            pmc.within = False
-            pmc.size = p
-            pmc.sum = float(psum.value)
-            if p > 0:
-                head = flat[: p * w]
-                pmc.min = float(head.min())
-                pmc.max = float(head.max())
-            else:
-                pmc.min = float("inf")
-                pmc.max = float("-inf")
-            swing.within = s >= n
-            swing.size = n if s >= n else s
-            swing.ua, swing.ub, swing.la, swing.lb = (
-                b.value for b in bounds
-            )
-            if s >= 1:
-                swing.t0 = int(tail_t[0])
-                row0 = sub.buffer[0]
-                ssum = row0[0]
-                for val in row0[1:]:
-                    ssum += val
-                swing.y0 = float(np.float32(ssum / w))
-            else:
-                swing.t0 = 0
-                swing.y0 = 0.0
-            return
-        # Gorilla active: bounded per-row replay (n <= length_bound here)
-        sub.buffer = []
-        sub.buffer_ts = []
-        sub._reset_cascade()
-        for i in range(n):
-            sub._append_to_cascade(
-                int(tail_t[i]), [float(x) for x in tail_v[i]]
-            )
-        sub.yet_emitted = len(sub.buffer)
-
     def feed(self, ts_chunk: np.ndarray, V_chunk: np.ndarray) -> list[GroupSegment]:
         """Append rows (grid-aligned, strictly increasing across feeds) and
         drive until quiescent; returns the segments emitted by this call."""
@@ -1244,7 +793,6 @@ class GroupEngine:
         )
         self._drive(flush=False)
         self._prune()
-        self._elig_cache = {}  # per-drive cache; keep pickled state small
         return self.out[mark:]
 
     def finish(self) -> list[GroupSegment]:
@@ -1315,7 +863,6 @@ class GroupEngine:
         joined: list[_SubGen],
         master: _SubGen,
     ) -> None:
-        self._topo_gen += 1
         all_cols = tuple(sorted(c for sg in sgs for c in sg.cols))
         active_cols = tuple(
             sorted(

@@ -139,11 +139,13 @@ def compress_grouped(
     only co-group, never lose data.
 
     Skew / hot groups: one (gid, metric) is always ONE task — the
-    sequential split/join state machine cannot parallelize. The measured
-    per-task ceiling is high (windowed C fast path: 1.5-13 M member-rows
-    per second per core, so a 16-member group with a year of minute
-    buckets is ~5s), but a group whose HISTORY is unboundedly long can
-    still pin a task. salt_span_points splits each group on disjoint time
+    sequential split/join state machine cannot parallelize. Groups that
+    provably never split run the C cascade; every other group runs the
+    per-row engine at ~10-30 k member values per second per core
+    (measured on the grouped_tiers and corr_grouped_tiers inputs at
+    sf0.1, one core), so a 16-member group with a year of minute buckets
+    takes minutes, and a group whose HISTORY is unboundedly long can pin
+    a task. salt_span_points splits each group on disjoint time
     ranges (salt = ts_ms // span) that compress independently, like the
     single-series salting in operators/compress.py. Semantics: a salt
     boundary cold-starts the group engine — every member flushes (the
@@ -163,7 +165,8 @@ def compress_grouped(
             (F.col("ts_ms") / span_ms).cast("long").alias("salt")
         ]
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated: pyspark warns when only some parameters carry hints
+    def fn(key, pdf):
         gid, metric = int(key[0]), key[1]
         sids = sorted(pdf["sid"].unique())
         col_of = {s: j for j, s in enumerate(sids)}

@@ -123,7 +123,7 @@ def assert_series_is_a_group_of_one(t, v, cfg):
     if len(split_runs(t, cfg.sampling_interval_ms)) == 1 and not np.isnan(
         v
     ).any():
-        eng = GroupEngine(t, v[:, None], cfg, use_windows=False).run()
+        eng = GroupEngine(t, v[:, None], cfg).run()
         assert [(s.start_ts, s.end_ts, s.mtid, s.model, s.cnt) for s in eng] \
             == [k[:5] for k in grouped]
 
@@ -173,7 +173,7 @@ def test_group_of_one_widens_the_error_bound():
     for segs in (
         compress_series(t, v, cfg),
         compress_group(t, v[:, None], cfg),
-        GroupEngine(t, v[:, None], cfg, use_windows=False).run(),
+        GroupEngine(t, v[:, None], cfg).run(),
     ):
         assert [(s.mtid, s.model) for s in segs] == expect
     assert_series_is_a_group_of_one(t, v, cfg)
@@ -206,6 +206,13 @@ def test_c_kernel_handles_tiny_inputs():
         cfg, True,
     )[0]
     assert [_key(s) for s in one] == [_key(s) for s in py]
+
+
+def test_cascade_without_a_kernel_raises(monkeypatch):
+    monkeypatch.setattr(ckernel, "load", lambda: None)
+    t = np.arange(4, dtype=np.int64) * SI
+    with pytest.raises(RuntimeError, match="C kernel unavailable"):
+        ckernel.cascade(t, np.ones(4, dtype=np.float32), 1.0, 50)
 
 
 def test_c_gorilla_decode_matches_python(monkeypatch):

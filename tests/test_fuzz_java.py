@@ -9,7 +9,7 @@ cases), and asserts the Python/C engines emit the byte- and
 order-identical segment stream:
 
 - grouped cases (G >= 2) -> models.grouped.compress_group (the shipping
-  path: whole-group C fast path + windowed C fast path + per-row engine);
+  path: whole-group C fast path + per-row engine);
 - single-series cases    -> models.kernels.compress_series.
 
 Grouped comparison is order-insensitive (sorted by a canonical key):

@@ -101,6 +101,28 @@ def test_correlation_groups_cluster_by_value(spark):
     assert gid_of["z"] not in {gid_of["a0"], gid_of["b0"]}
 
 
+def test_compress_grouped_gives_pyspark_no_partial_type_hints(spark):
+    """pyspark infers applyInPandas' eval type from type hints and warns
+    TYPE_HINT_SHOULD_BE_SPECIFIED when only some parameters carry one."""
+    import warnings
+
+    from pyspark.sql import functions as F
+
+    from modelardb_dynamic_spark.operators.grouped import compress_grouped
+
+    series = _correlated_series(spark)
+    groups = series.select("sid", "metric").distinct().withColumn(
+        "gid", F.lit(1).cast("long")
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        compress_grouped(series, groups, CFG)
+    assert [
+        str(w.message) for w in caught
+        if "TYPE_HINT_SHOULD_BE_SPECIFIED" in str(w.message)
+    ] == []
+
+
 def test_grouped_roundtrip_within_bound_and_ratio_wins(spark):
     from modelardb_dynamic_spark.models.error import percentage_error
     from modelardb_dynamic_spark.operators.compress import (
@@ -365,9 +387,18 @@ def test_grouped_temporary_segments_bit_match_java(name):
     assert got == expected
 
 
+# maximum_latency 40 keeps the plain chunk ids; 0 (no temporaries, and
+# the batch side may take the whole-group C path) adds a "lat0" id
+FEED_CASES = [
+    pytest.param(chunk, lat, id=str(chunk) if lat else f"{chunk}-lat0")
+    for lat in (40, 0)
+    for chunk in (1, 7, 64)
+]
+
+
 @pytest.mark.parametrize("name", CASES)
-@pytest.mark.parametrize("chunk", [1, 7, 64])
-def test_grouped_incremental_feed_equals_batch(name, chunk):
+@pytest.mark.parametrize("chunk,maximum_latency", FEED_CASES)
+def test_grouped_incremental_feed_equals_batch(name, chunk, maximum_latency):
     """Streaming mode: feeding the rows in arbitrary chunk sizes (down to
     one row per feed) produces the exact batch segment stream, including
     split/join decisions and temporary segments — the state machine never
@@ -375,10 +406,12 @@ def test_grouped_incremental_feed_equals_batch(name, chunk):
     from modelardb_dynamic_spark.models.grouped import GroupEngine
 
     ts, V, _ = _load_case(name)
-    batch = compress_group(ts, V, CFG, split_fraction=10.0, maximum_latency=40)
+    batch = compress_group(
+        ts, V, CFG, split_fraction=10.0, maximum_latency=maximum_latency
+    )
     eng = GroupEngine(
-        None, None, CFG, split_fraction=10.0, maximum_latency=40,
-        n_series=V.shape[1],
+        None, None, CFG, split_fraction=10.0,
+        maximum_latency=maximum_latency, n_series=V.shape[1],
     )
     streamed: list = []
     for i in range(0, len(ts), chunk):
@@ -386,6 +419,13 @@ def test_grouped_incremental_feed_equals_batch(name, chunk):
     streamed.extend(eng.finish()[len(streamed):])
     key = lambda s: (s.kind, s.start_ts, s.end_ts, s.mtid, s.cnt, s.model, s.gaps)
     assert [key(s) for s in streamed] == [key(s) for s in batch]
+
+
+def test_incremental_mode_needs_n_series():
+    from modelardb_dynamic_spark.models.grouped import GroupEngine
+
+    with pytest.raises(ValueError, match="n_series"):
+        GroupEngine(None, None, CFG)
 
 
 def _coverage(segs, si=SI):
@@ -581,99 +621,6 @@ class TestGroupFastPath:
         monkeypatch.setattr(grouped_mod, "_compress_group_c", lambda *a: None)
         ref = compress_group(ts, V, CFG, split_fraction=10.0)
         assert self._same(got, ref)
-
-
-# --- windowed C fast path (split/join-aware): differential fuzz ---------------
-
-
-class TestWindowedFastPath:
-    """The windowed grouped fast path (GroupEngine use_windows=True, the
-    default) batch-consumes stretches where splits/joins/gaps provably
-    cannot fire. These fuzz corpora are built to stress exactly the
-    machinery around it: split-churn between divergent clusters, forced
-    convergence stretches (join pressure), per-member NaN gaps, and all
-    three error-bound regimes. Output must be byte- AND order-identical
-    to the pure per-row engine (the goldens pin that engine to Java)."""
-
-    @staticmethod
-    def _fuzz_case(rng):
-        n = int(rng.integers(200, 3000))
-        G = int(rng.integers(2, 6))
-        ts = np.arange(n, dtype=np.int64) * SI
-        base = np.where(np.arange(G) % 2 == 0, 10.0, 1000.0)[None, :]
-        drift = np.cumsum(rng.normal(0, 0.05, size=(n, G)), axis=0)
-        V = (base + drift + rng.normal(0, 0.2, size=(n, G))).astype(
-            np.float32
-        )
-        for _ in range(int(rng.integers(0, 3))):
-            a = int(rng.integers(0, n - 50))
-            b = a + int(rng.integers(20, 120))
-            V[a:b] = V[a:b, :1]  # convergence stretch: join pressure
-        for _ in range(int(rng.integers(0, 4))):
-            g = int(rng.integers(1, G + 1)) - 1
-            a = int(rng.integers(0, n - 10))
-            b = a + int(rng.integers(2, 30))
-            V[a:b, g] = np.nan  # per-member gap
-        return ts, V
-
-    @staticmethod
-    def _key(s):
-        return (
-            s.start_ts, s.end_ts, s.mtid, s.cnt, s.model, s.members,
-            s.gaps, s.kind,
-        )
-
-    @pytest.mark.parametrize("eb", [0.0, 0.3, 1.0, 10.0])
-    def test_windowed_matches_per_row_engine(self, eb):
-        from modelardb_dynamic_spark.models.grouped import GroupEngine
-
-        cfg = EngineConfig(
-            error_bound=eb, length_bound=50, sampling_interval_ms=SI
-        )
-        rng = np.random.default_rng(int(eb * 10) + 11)
-        fired = 0
-        for _ in range(12):
-            ts, V = self._fuzz_case(rng)
-            e1 = GroupEngine(
-                ts.copy(), V.copy(), cfg, split_fraction=10.0,
-                use_windows=True,
-            )
-            s1 = e1.run()
-            s2 = GroupEngine(
-                ts.copy(), V.copy(), cfg, split_fraction=10.0,
-                use_windows=False,
-            ).run()
-            assert [self._key(s) for s in s1] == [self._key(s) for s in s2]
-            fired += e1.windows_hit
-        assert fired > 0, "windowed fast path never fired on fuzz corpora"
-
-    def test_windowed_matches_incremental_feed(self):
-        """Window + streaming feed() compose: chunked feeds with windows
-        enabled equal the batch per-row engine at the frontier."""
-        from modelardb_dynamic_spark.models.grouped import GroupEngine
-
-        cfg = EngineConfig(
-            error_bound=10.0, length_bound=50, sampling_interval_ms=SI
-        )
-        rng = np.random.default_rng(101)
-        ts, V = self._fuzz_case(rng)
-        batch = GroupEngine(
-            ts.copy(), V.copy(), cfg, split_fraction=10.0,
-            use_windows=False,
-        ).run()
-        eng = GroupEngine(
-            None, None, cfg, split_fraction=10.0, n_series=V.shape[1],
-            use_windows=True,
-        )
-        got = []
-        step = 257
-        for a in range(0, len(ts), step):
-            got.extend(eng.feed(ts[a : a + step], V[a : a + step]))
-        done = len(eng.out)
-        eng.finish()
-        got.extend(eng.out[done:])
-        assert eng.windows_hit > 0
-        assert [self._key(s) for s in got] == [self._key(s) for s in batch]
 
 
 def test_grouped_salting_reconstructs_identically(spark):

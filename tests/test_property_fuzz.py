@@ -130,7 +130,7 @@ def test_cascade_c_matches_python_fuzz(case):
     assert [_key(s) for s in cs] == [_key(s) for s in ps]
     if len(runs) == 1 and not np.isnan(v).any():
         # one cascade: the Python grouped engine on a group of one
-        eng = GroupEngine(t, v[:, None], cfg, use_windows=False).run()
+        eng = GroupEngine(t, v[:, None], cfg).run()
         assert [(s.start_ts, s.end_ts, s.mtid, s.model, s.cnt) for s in eng] \
             == [_key(s)[:5] for s in cs]
 

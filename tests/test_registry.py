@@ -1,7 +1,7 @@
 """Registry-level gates at sf0.001: the stream replay queries, the
-one-pass minute rollups and the queries over the registry's warehouse
-against their DuckDB oracles (the same compare tools/check_oracles.py
-runs), every query having an oracle, and the warehouse's segments and
+one-pass minute rollups, the grouped-compression queries and the queries
+over the registry's warehouse against their DuckDB oracles (the same
+compare tools/check_oracles.py runs), every query having an oracle, and the warehouse's segments and
 tiers equal to compressing and rolling up the events series directly."""
 
 from __future__ import annotations
@@ -32,6 +32,10 @@ WAREHOUSE_QUERIES = [
     "agg_day_of_month", "transcript_tiers", "embedded_dp_range",
 ]
 
+# the dynamic split/join engine on registry data: duplicate pairs and
+# correlation-derived groups, both at error bound 0
+GROUPED_QUERIES = ["grouped_tiers", "corr_grouped_tiers"]
+
 
 def _check(spark, monkeypatch, names):
     sys.path.insert(0, TOOLS)
@@ -50,6 +54,10 @@ def test_stream_and_minute_rollup_queries_match_oracles(spark, monkeypatch):
 
 def test_warehouse_queries_match_oracles(spark, monkeypatch):
     assert _check(spark, monkeypatch, WAREHOUSE_QUERIES) == []
+
+
+def test_grouped_queries_match_oracles(spark, monkeypatch):
+    assert _check(spark, monkeypatch, GROUPED_QUERIES) == []
 
 
 def test_every_query_has_an_oracle(monkeypatch):
